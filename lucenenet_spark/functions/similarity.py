@@ -42,9 +42,6 @@ class BM25Similarity:
     def idf(self, df: int, n: int) -> float:
         return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
-    def idf_col(self, df_col: Column, n: int) -> Column:
-        return bm25.idf(df_col, float(n))
-
     def term_score(self, tf_col: Column, dl_col: Column, df_col: Column,
                    n: float, avgdl: float,
                    boost: Column | float = 1.0) -> Column:
@@ -88,10 +85,6 @@ class ClassicSimilarity:
 
     def idf(self, df: int, n: int) -> float:
         return math.log(n / (df + 1.0)) + 1.0
-
-    def idf_col(self, df_col: Column, n: int) -> Column:
-        return (F.log(F.lit(float(n)) / (df_col.cast("double") + F.lit(1.0)))
-                + F.lit(1.0))
 
     def term_score(self, tf_col: Column, dl_col: Column, df_col: Column,
                    n: float, avgdl: float,

@@ -86,22 +86,6 @@ class InvertedIndex:
             )
         return self._term_stats
 
-    def term_dfs(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """Global df for specific (field, term) pairs — the CachedDfSource
-        analogue (src/Lucene.Net/Search/MultiSearcher.cs:87-118)."""
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
-        rows = (
-            self.postings.where(
-                F.col("field").isin(fields) & F.col("term").isin(terms)
-            )
-            .groupBy("field", "term")
-            .agg(F.count("*").alias("df"))
-            .collect()
-        )
-        got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
-        return {p: got.get(p, 0) for p in pairs}
-
     def term_vectors(self) -> DataFrame:
         """Forward index (doc_id, field, vec: array<struct<term, tf>>) —
         the .tvx/.tvd/.tvf analogue (src/Lucene.Net/Index/

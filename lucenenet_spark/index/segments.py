@@ -697,20 +697,6 @@ class SegmentedIndex:
         return joined.withColumn(
             "vec", F.coalesce(F.col("vec"), F.array()))
 
-    def term_dfs(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """df lookup from segment-row metadata — no blob decode (the .tis
-        dictionary-seek analogue, TermInfosReader.cs:243-308)."""
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
-        rows = (
-            self.segments.where(
-                F.col("field").isin(fields) & F.col("term").isin(terms))
-            .groupBy("field", "term").agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
-        return {p: got.get(p, 0) for p in pairs}
-
     def with_deletes(self, tombstones: DataFrame) -> "SegmentedIndex":
         """Register deletes: the relational paths anti-join the tombstone
         frame; blob-kernel paths (WAND, expunge) consume the per-segment

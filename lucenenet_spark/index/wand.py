@@ -160,11 +160,15 @@ def wand_topk(index, term_boosts: list[tuple[str, float]], k: int = 10,
     and is applied INSIDE the kernel at decode time — the deletedDocs.Get
     check of SegmentTermDocs.cs — so dead docs never enter the scoring
     passes and each segment emits an exact live top-k (no over-fetch, no
-    global tombstone count anywhere in the plan).
+    global tombstone count anywhere in the plan).  Global df comes from
+    the same term-dictionary lookup the Searcher scores with
+    (Searcher.term_dfs).
     """
+    from ..plans.lowering import Searcher
+
     field = field or index.fields[0]
     pairs = [(field, t) for t, _ in term_boosts]
-    dfs = index.term_dfs(pairs)
+    dfs = Searcher(index).term_dfs(pairs)
     n, avgdl = index.n_docs, index.avgdl
     weights = {
         t: boost * _idf(dfs[(field, t)], n)

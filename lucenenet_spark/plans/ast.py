@@ -14,7 +14,7 @@ applied by `rewrite()`.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field, fields, replace
 
 DEFAULT_FIELD = "text"
 MAX_CLAUSE_COUNT = 1024  # src/Lucene.Net/Search/BooleanQuery.cs:63
@@ -411,6 +411,25 @@ def span_leaves(q: Query) -> list[SpanTerm]:
     if isinstance(q, FieldMaskingSpan):
         return span_leaves(q.inner)  # terms keep their real field
     raise TypeError(f"not a span query: {type(q).__name__}")
+
+
+def term_leaves(q: Query) -> set[tuple[str, str]]:
+    """Every (field, term) whose df some node of the tree scores with —
+    the term gathering of MultiSearcher.CreateWeight (MultiSearcher.cs:
+    355-390), so a searcher can resolve them all in one lookup."""
+    if isinstance(q, (Term, SpanTerm, PayloadTerm)):
+        return {(q.field, q.term)}
+    if isinstance(q, (Phrase, PayloadNear)):
+        return {(q.field, t) for t in q.terms}
+    if isinstance(q, MultiPhrase):
+        return {(q.field, t) for alts in q.terms_at for t in alts}
+    out: set[tuple[str, str]] = set()
+    for f in fields(q):
+        v = getattr(q, f.name)
+        for c in (v if isinstance(v, tuple) else (v,)):
+            if isinstance(c, Query):
+                out |= term_leaves(c)
+    return out
 
 
 def rewrite(q: Query) -> Query:

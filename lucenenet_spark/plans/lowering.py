@@ -5,16 +5,21 @@ set-oriented:
 
 - TermQuery/TermScorer  -> postings filter on (field,term) [parquet pushdown]
                            + literal (df, N, avgdl) folded into the score
-                           expression (global-stats broadcast lemma,
-                           src/Lucene.Net/Search/MultiSearcher.cs:355-390)
-- BooleanScorer2        -> union of clause frames + ONE groupBy(doc_id):
+                           expression; every leaf's df comes from ONE
+                           driver lookup per query (Searcher.term_dfs, the
+                           CachedDfSource of MultiSearcher.cs:87-118,355-390)
+- BooleanScorer2        -> tagged clause rows + ONE groupBy(doc_id):
                            MUST = HAVING n_must == #musts (ConjunctionScorer),
                            SHOULD = sum + HAVING n_should >= minShouldMatch
                            (DisjunctionSumScorer), MUST_NOT = left_anti
-                           (ReqExclScorer).  BM25 drops coord.
+                           (ReqExclScorer).  BM25 drops coord.  When every
+                           MUST/SHOULD clause is a distinct Term the rows
+                           come from ONE posting scan; otherwise from the
+                           union of the clause frames.
 - PhraseQuery           -> positions-array alignment with higher-order
                            functions (array_intersect of offset-shifted
-                           position lists) — all JVM-side.
+                           position lists) — all JVM-side; idf sum and the
+                           all-terms-present gate come from the driver.
 - MultiTermQuery family -> term-dictionary predicate; CONSTANT_SCORE
                            rewrite = semi-join (no term enumeration),
                            SCORING_BOOLEAN (fuzzy) = driver-collected
@@ -33,6 +38,7 @@ from __future__ import annotations
 
 import math
 import re
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -84,6 +90,7 @@ class Searcher:
         self.spark = index.spark
         self.sim = similarity if similarity is not None else BM25Similarity()
         self._filter_cache: dict = {}
+        self._df_memo: dict[tuple[str, str], int] = {}
 
     @property
     def _postings_nopos(self) -> DataFrame:
@@ -104,13 +111,40 @@ class Searcher:
             return frame
         return frame.join(t, "doc_id", "left_anti")
 
+    def term_dfs(self, pairs) -> dict[tuple[str, str], int]:
+        """Global df per (field, term), 0 when absent — the CachedDfSource
+        analogue (MultiSearcher.cs:87-118).  Pairs not seen before are
+        fetched with ONE collect over the cached term dictionary
+        (index.term_stats(): segment-row metadata, no blob decode) and
+        memoized.  The memo is safe because a Searcher is bound to one
+        index generation: update/add_indexes/expunge derive a new index
+        object, so a new Searcher sees the new df."""
+        pairs = set(pairs)
+        missing = pairs - self._df_memo.keys()
+        if missing:
+            rows = (self.index.term_stats()
+                    .where(F.col("field").isin(sorted({f for f, _ in missing}))
+                           & F.col("term").isin(sorted({t for _, t in missing})))
+                    .select("field", "term", "df").collect())
+            got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+            self._df_memo.update({p: got.get(p, 0) for p in missing})
+        return {p: self._df_memo[p] for p in pairs}
+
+    def _hits(self, q: ast.Query) -> DataFrame:
+        """Live (doc_id, score) rows of a query: rewrite, resolve every
+        leaf df in one lookup (MultiSearcher.CreateWeight,
+        MultiSearcher.cs:355-390), lower, apply deletes."""
+        q = ast.rewrite(q)
+        self.term_dfs(ast.term_leaves(q))
+        return self._live(self.score_frame(q))
+
     def search(self, q: ast.Query, k: int = 10,
                positive_only: bool = False) -> DataFrame:
         """TopDocs analogue: (doc_id, score) rows, score desc, ties by
         ascending doc_id (HitQueue.cs:87-93).  positive_only drops
         score <= 0 hits (PositiveScoresOnlyCollector,
         src/Lucene.Net/Search/PositiveScoresOnlyCollector.cs)."""
-        frame = self._live(self.score_frame(ast.rewrite(q)))
+        frame = self._hits(q)
         s = bm25.rounded(F.col("score"))
         out = frame.select(F.col("doc_id"), s.alias("score"))
         if positive_only:
@@ -236,7 +270,7 @@ class Searcher:
 
     def count(self, q: ast.Query) -> int:
         """totalHits analogue."""
-        return self._live(self.score_frame(ast.rewrite(q))).count()
+        return self._hits(q).count()
 
     def more_like_this(self, doc_id: int, max_terms: int = 5, k: int = 10,
                        field: str | None = None,
@@ -271,7 +305,7 @@ class Searcher:
             )
         if not doc_terms:
             return self._empty_frame()
-        dfs = self._term_df_map([(field, r["term"]) for r in doc_terms])
+        dfs = self.term_dfs([(field, r["term"]) for r in doc_terms])
         ranked = sorted(
             ((r["tf"] * _idf(dfs[(field, r["term"])], n), r["term"])
              for r in doc_terms),
@@ -317,7 +351,7 @@ class Searcher:
             if not row:
                 return leaf(0.0, f"no match on term {q.field}:{q.term}")
             tf, dl = int(row[0]["tf"]), int(row[0]["dl"])
-            df = self._term_df_map([(q.field, q.term)])[(q.field, q.term)]
+            df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
             n, avgdl = self.index.n_docs, self.index.avgdl
             from ..functions.similarity import ClassicSimilarity
             if isinstance(self.sim, ClassicSimilarity):
@@ -388,7 +422,7 @@ class Searcher:
     def facet_counts(self, q: ast.Query, facet_col: str) -> DataFrame:
         """SimpleFacetedSearch analogue: facet counts over matching docs
         (src/contrib/SimpleFacetedSearch/SimpleFacetedSearch.cs)."""
-        hits = self._live(self.score_frame(ast.rewrite(q))).select("doc_id")
+        hits = self._hits(q).select("doc_id")
         stored = self.index.stored
         return (
             stored.join(hits, stored[self.index.id_col] == hits["doc_id"], "left_semi")
@@ -399,7 +433,7 @@ class Searcher:
     def search_sorted(self, q: ast.Query, sort_exprs: list, k: int = 10) -> DataFrame:
         """TopFieldCollector analogue: sort hits by stored-field expressions
         (src/Lucene.Net/Search/TopFieldCollector.cs)."""
-        hits = self._live(self.score_frame(ast.rewrite(q))).select("doc_id")
+        hits = self._hits(q).select("doc_id")
         stored = self.index.stored
         joined = stored.join(
             hits, stored[self.index.id_col] == hits["doc_id"], "left_semi"
@@ -493,29 +527,18 @@ class Searcher:
 
     # ---- leaves
 
-    def _term_df_map(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """Collect global df for the query terms (one tiny job; the
-        CachedDfSource analogue, MultiSearcher.cs:87-118). Delegated to the
-        index so the segmented path answers from term-dictionary metadata
-        without decoding blobs."""
-        return self.index.term_dfs(pairs)
-
     def _term_frame(self, q: ast.Term) -> DataFrame:
-        """TermScorer: postings filter + global df folded in-plan via a
-        broadcast join on the term dictionary — NO driver round-trip per
-        clause (a collected-df design costs one Spark job per query term;
-        the broadcast subquery rides inside the search job). An absent
-        term joins to nothing, which IS the empty result."""
-        stats = (
-            self.index.term_stats()
-            .where((F.col("field") == q.field) & (F.col("term") == q.term))
-            .select("field", "term", "df")
-        )
+        """TermScorer: postings filter on (field, term), pushed below the
+        decode UDF, with the df from the once-per-query driver lookup
+        (term_dfs) folded in as a literal.  An absent term (df 0) is the
+        empty result, built without a scan."""
+        df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
+        if df == 0:
+            return self._empty_frame()
         p = self._postings_nopos.where(
-            (F.col("field") == q.field) & (F.col("term") == q.term)
-        ).join(F.broadcast(stats), ["field", "term"])
+            (F.col("field") == q.field) & (F.col("term") == q.term))
         score = self.sim.term_score(
-            F.col("tf"), F.col("dl"), F.col("df"),
+            F.col("tf"), F.col("dl"), F.lit(df),
             self.index.n_docs, self.index.avgdl, q.boost,
         )
         return p.select(F.col("doc_id"), score.alias("score"))
@@ -528,29 +551,22 @@ class Searcher:
             ids = self._postings_nopos.select("doc_id").distinct()
         return ids.select("doc_id", F.lit(float(q.boost)).alias("score"))
 
-    # ---- boolean composition: ONE union + ONE groupBy(doc_id)
+    # ---- boolean composition: ONE groupBy(doc_id) over tagged clause rows
 
     def _bool_frame(self, q: ast.Bool) -> DataFrame:
-        tagged = []
-        for c in q.must:
-            tagged.append(
-                self.score_frame(c).select(
-                    "doc_id", "score",
-                    F.lit(1).alias("m"), F.lit(0).alias("s"),
-                )
-            )
-        for c in q.should:
-            tagged.append(
-                self.score_frame(c).select(
-                    "doc_id", "score",
-                    F.lit(0).alias("m"), F.lit(1).alias("s"),
-                )
-            )
-        if not tagged:
+        clauses = [(c, 1, 0) for c in q.must] + [(c, 0, 1) for c in q.should]
+        if not clauses:
             return self._empty_frame()
-        u = tagged[0]
-        for t in tagged[1:]:
-            u = u.unionByName(t)
+        keys = {(c.field, c.term) for c, _, _ in clauses
+                if isinstance(c, ast.Term)}
+        if len(keys) == len(clauses):
+            u = self._term_clause_rows(clauses)
+            if u is None:
+                return self._empty_frame()
+        else:
+            u = reduce(DataFrame.unionByName, [self.score_frame(c).select(
+                "doc_id", "score", F.lit(m).alias("m"), F.lit(s).alias("s"))
+                for c, m, s in clauses])
         g = u.groupBy("doc_id").agg(
             F.sum("score").alias("score"),
             F.sum("m").alias("n_must"),
@@ -570,6 +586,39 @@ class Searcher:
             )
         return out
 
+    def _term_clause_rows(self, clauses: list) -> DataFrame | None:
+        """Tagged (doc_id, score, m, s) rows for MUST/SHOULD clauses that
+        are all distinct Terms, from ONE postings scan: the OR'd
+        (field, term) predicate still lands below the decode UDF, and a
+        literal (field, term) -> (df, boost, m, s) map gives each posting
+        row its clause's df, boost and MUST/SHOULD tag.  None when a MUST
+        term is absent (nothing can match); absent SHOULD terms drop out."""
+        dfs = self.term_dfs([(c.field, c.term) for c, _, _ in clauses])
+        entries, pred = [], None
+        for c, m, s in clauses:
+            df = dfs[(c.field, c.term)]
+            if df == 0:
+                if m:
+                    return None
+                continue
+            entries += [
+                F.struct(F.lit(c.field).alias("field"),
+                         F.lit(c.term).alias("term")),
+                F.struct(F.lit(float(df)).alias("df"),
+                         F.lit(float(c.boost)).alias("boost"),
+                         F.lit(m).alias("m"), F.lit(s).alias("s"))]
+            hit = (F.col("field") == c.field) & (F.col("term") == c.term)
+            pred = hit if pred is None else pred | hit
+        if pred is None:
+            return None
+        meta = F.create_map(*entries)[F.struct("field", "term")]
+        score = self.sim.term_score(
+            F.col("tf"), F.col("dl"), meta["df"],
+            self.index.n_docs, self.index.avgdl, meta["boost"])
+        return self._postings_nopos.where(pred).select(
+            "doc_id", score.alias("score"), meta["m"].alias("m"),
+            meta["s"].alias("s"))
+
     def _dismax_frame(self, q: ast.DisMax) -> DataFrame:
         frames = [self.score_frame(c).select("doc_id", "score") for c in q.queries]
         if not frames:
@@ -587,71 +636,66 @@ class Searcher:
 
     # ---- phrase
 
-    def _query_stats(self, offdf: DataFrame, field: str,
-                     terms: set[str]) -> DataFrame:
-        """One-row broadcastable frame (idf_sum, n_present) for a query's
-        (field, term, qoff) rows — the CachedDfSource lookup folded
-        IN-PLAN: no driver round-trip per query (the stats subquery rides
-        inside the search job; MultiSearcher.cs:87-118 semantics, df from
-        the term-dictionary metadata only)."""
-        fields = (sorted(field) if isinstance(field, (set, frozenset))
-                  else [field])  # span leaves may mix fields (FieldMasking)
-        stats = (self.index.term_stats()
-                 .where(F.col("field").isin(fields)
-                        & F.col("term").isin(sorted(terms)))
-                 .select("field", "term", "df"))
-        return (offdf.join(stats, ["field", "term"])
-                .agg(F.sum(self.sim.idf_col(F.col("df"),
-                                            self.index.n_docs))
-                     .alias("idf_sum"),
-                     F.countDistinct("qoff").alias("n_present")))
+    def _leaf_stats(self, leaves: list[tuple[str, str, int]]
+                    ) -> tuple[float, int]:
+        """(idf_sum, n_present) of a query's (field, term, qoff) leaves
+        from the driver-resolved dfs: idf sums over every present leaf
+        (a term repeated at two offsets counts twice; PhraseWeight /
+        MultiPhraseWeight / SpanWeight.ExtractTerms), n_present counts the
+        query positions holding at least one present term."""
+        dfs = self.term_dfs([(f, t) for f, t, _ in leaves])
+        present = [(dfs[(f, t)], o) for f, t, o in leaves if dfs[(f, t)]]
+        n = self.index.n_docs
+        return (sum(self.sim.idf(df, n) for df, _ in present),
+                len({o for _, o in present}))
+
+    def _with_qoff(self, field: str, pairs: list[tuple[str, int]]
+                   ) -> DataFrame:
+        """Positional postings of a query's (term, qoff) pairs with qoff
+        attached.  The static (field, term IN ...) predicate comes FIRST so
+        Catalyst pushes it below the decode UDF (only the query terms'
+        blobs decompress); a literal term -> array<qoff> map + explode
+        then gives a term at k query positions k rows."""
+        qoffs: dict[str, list[int]] = {}
+        for t, o in pairs:
+            qoffs.setdefault(t, []).append(int(o))
+        m = F.create_map(*[x for t, os in sorted(qoffs.items())
+                           for x in (F.lit(t), F.array(*map(F.lit, os)))])
+        return (self.index.postings
+                .where((F.col("field") == field)
+                       & F.col("term").isin(sorted(qoffs)))
+                .withColumn("qoff", F.explode(m[F.col("term")])))
 
     def _phrase_frame(self, q: ast.Phrase) -> DataFrame:
+        """PhraseScorer: the query terms' positions aligned by their query
+        offsets in one positional scan + one groupBy(doc_id).  idf_sum and
+        the all-terms-present gate come from the driver-resolved dfs, so a
+        phrase with an absent term is the empty result without a scan."""
         offsets = q.resolved_offsets()
-        pairs = [(q.field, t, int(o)) for t, o in zip(q.terms, offsets)]
-
-        offdf = self.spark.createDataFrame(
-            pairs, "field string, term string, qoff int"
-        )
-        qstats = self._query_stats(offdf, q.field, {t for _, t, _ in pairs})
-        # Static (field, term IN ...) predicate FIRST so Catalyst pushes it
-        # below the segmented view's decode UDF + explode (term-dictionary
-        # seek: only the query terms' blobs decompress); the broadcast join
-        # then only attaches qoff to the already-tiny frame. A bare join
-        # would evaluate after a full-index decode.
-        p = (
-            self.index.postings
-            .where((F.col("field") == q.field)
-                   & F.col("term").isin(sorted({t for _, t, _ in pairs})))
-            .join(F.broadcast(offdf), ["field", "term"])
-        )
+        pairs = list(zip(q.terms, offsets))
+        idf_sum, n_present = self._leaf_stats(
+            [(q.field, t, o) for t, o in pairs])
+        if n_present != len(offsets):
+            return self._empty_frame()
+        p = self._with_qoff(q.field, pairs)
+        # distinct offsets counted from the collected list, not with
+        # countDistinct, whose distinct-aggregate rewrite adds a shuffle
         per_doc = (
             p.groupBy("doc_id", "dl")
-            .agg(
-                F.countDistinct("qoff").alias("n_off"),
-                F.collect_list(F.struct("qoff", "positions")).alias("plists"),
-            )
-            .where(F.col("n_off") == len(pairs))
+            .agg(F.collect_list(F.struct("qoff", "positions")).alias("plists"))
+            .where(F.size(F.array_distinct(F.col("plists.qoff")))
+                   == len(pairs))
         )
-        # sort struct list by qoff, shift each positions list by its offset
-        shifted = F.transform(
-            F.sort_array(F.col("plists")),
-            lambda s: F.transform(s["positions"], lambda x: x - s["qoff"]),
-        )
+        shifted, exact = self._aligned(len(pairs))
         if q.slop == 0:
-            inter = F.aggregate(
-                F.slice(shifted, 2, len(pairs) - 1) if len(pairs) > 1 else F.array(),
-                F.element_at(shifted, 1),
-                lambda acc, xs: F.array_intersect(acc, xs),
-            )
-            freq = F.size(inter).cast("double")
+            freq = exact
         elif q.slop_spec == "lucene":
             # reference semantics: the greedy minimal-window walk of
             # SloppyPhraseScorer.cs:56-96 (repeats included) — a stateful
             # priority-queue traversal no declarative fold expresses, so
             # it runs as an Arrow-batched kernel over the per-doc
             # position lists.  Only docs containing ALL query terms reach
-            # this point (n_off gate above), so the Python cost is
+            # this point (offset gate above), so the Python cost is
             # per-candidate, not per-corpus-row.
             from ..functions.sloppy import lucene_sloppy_freq
 
@@ -695,15 +739,31 @@ class Searcher:
             freq = F.aggregate(
                 arrays[0], F.lit(0.0),
                 lambda acc, p: acc + fold(1, p, p))
-        scored = per_doc.crossJoin(F.broadcast(qstats)).select(
+        return self._freq_scored(per_doc, freq, idf_sum, q.boost)
+
+    @staticmethod
+    def _aligned(n: int):
+        """(shifted, exact freq) over a doc's `plists`: the struct list
+        sorted by qoff with each positions list shifted by its offset, and
+        the count of positions common to all n shifted lists."""
+        shifted = F.transform(
+            F.sort_array(F.col("plists")),
+            lambda s: F.transform(s["positions"], lambda x: x - s["qoff"]))
+        inter = F.aggregate(
+            F.slice(shifted, 2, n - 1) if n > 1 else F.array(),
+            F.element_at(shifted, 1),
+            lambda acc, xs: F.array_intersect(acc, xs))
+        return shifted, F.size(inter).cast("double")
+
+    def _freq_scored(self, per_doc: DataFrame, freq, idf_sum: float,
+                     boost: float) -> DataFrame:
+        """(doc_id, score) of the candidate docs with freq > 0."""
+        return per_doc.select(
             "doc_id",
-            self.sim.freq_score(freq, F.col("dl"), F.col("idf_sum"),
-                                self.index.avgdl, q.boost).alias("score"),
+            self.sim.freq_score(freq, F.col("dl"), idf_sum,
+                                self.index.avgdl, boost).alias("score"),
             freq.alias("freq"),
-            "n_present",
-        ).where((F.col("freq") > 0)
-                & (F.col("n_present") == len(offsets)))
-        return scored.select("doc_id", "score")
+        ).where(F.col("freq") > 0).select("doc_id", "score")
 
     def _multiphrase_frame(self, q: ast.MultiPhrase) -> DataFrame:
         """MultiPhraseQuery (src/Lucene.Net/Search/MultiPhraseQuery.cs):
@@ -712,21 +772,14 @@ class Searcher:
         exactly like the exact-phrase intersection. idf sums over every
         alternative term (MultiPhraseWeight)."""
         offsets = q.resolved_offsets()
-        pairs = [(q.field, t, int(o))
-                 for alts, o in zip(q.terms_at, offsets) for t in alts]
-
-        offdf = self.spark.createDataFrame(
-            pairs, "field string, term string, qoff int")
+        pairs = [(t, o) for alts, o in zip(q.terms_at, offsets) for t in alts]
         # idf sums over the PRESENT alternative terms; n_present counts
-        # positions with >=1 present alternative (MultiPhraseWeight) —
-        # in-plan, no driver round-trip
-        qstats = self._query_stats(offdf, q.field, {t for _, t, _ in pairs})
-        p = (
-            self.index.postings
-            .where((F.col("field") == q.field)
-                   & F.col("term").isin(sorted({t for _, t, _ in pairs})))
-            .join(F.broadcast(offdf), ["field", "term"])
-        )
+        # positions with >=1 present alternative (MultiPhraseWeight)
+        idf_sum, n_present = self._leaf_stats(
+            [(q.field, t, o) for t, o in pairs])
+        if n_present != len(offsets):
+            return self._empty_frame()
+        p = self._with_qoff(q.field, pairs)
         # union the alternatives' positions per (doc, qoff) first
         per_off = (
             p.groupBy("doc_id", "dl", "qoff")
@@ -739,26 +792,8 @@ class Searcher:
                  F.collect_list(F.struct("qoff", "positions")).alias("plists"))
             .where(F.col("n_off") == len(offsets))
         )
-        shifted = F.transform(
-            F.sort_array(F.col("plists")),
-            lambda s: F.transform(s["positions"], lambda x: x - s["qoff"]),
-        )
-        inter = F.aggregate(
-            F.slice(shifted, 2, len(offsets) - 1) if len(offsets) > 1
-            else F.array(),
-            F.element_at(shifted, 1),
-            lambda acc, xs: F.array_intersect(acc, xs),
-        )
-        freq = F.size(inter).cast("double")
-        scored = per_doc.crossJoin(F.broadcast(qstats)).select(
-            "doc_id",
-            self.sim.freq_score(freq, F.col("dl"), F.col("idf_sum"),
-                                self.index.avgdl, q.boost).alias("score"),
-            freq.alias("freq"),
-            "n_present",
-        ).where((F.col("freq") > 0)
-                & (F.col("n_present") == len(offsets)))
-        return scored.select("doc_id", "score")
+        _, freq = self._aligned(len(offsets))
+        return self._freq_scored(per_doc, freq, idf_sum, q.boost)
 
     def _numeric_range_frame(self, q: ast.NumericRange) -> DataFrame:
         """Native BETWEEN on the stored column (NumericRangeQuery ->
@@ -1010,21 +1045,12 @@ class Searcher:
         """SpanScorer analogue: freq(doc) = Σ_spans 1/(1 + (e - s))
         (sloppyFreq of the span width, SpanScorer.cs SetFreqCurrentDoc);
         idf sums over the leaf terms (SpanWeight.ExtractTerms)."""
-        leaves = ast.span_leaves(q)
-        leafdf = self.spark.createDataFrame(
-            [(t.field, t.term, i) for i, t in enumerate(leaves)],
-            "field string, term string, qoff int")
-        qstats = self._query_stats(leafdf, {t.field for t in leaves},
-                                   {t.term for t in leaves})
-        spans = self._spans(q)
+        idf_sum, _ = self._leaf_stats(
+            [(t.field, t.term, i) for i, t in enumerate(ast.span_leaves(q))])
         contrib = 1.0 / (1.0 + (F.col("e") - F.col("s")).cast("double"))
-        per_doc = (spans.groupBy("doc_id", "dl")
+        per_doc = (self._spans(q).groupBy("doc_id", "dl")
                    .agg(F.sum(contrib).alias("freq")))
-        score = self.sim.freq_score(F.col("freq"), F.col("dl"),
-                                    F.col("idf_sum"), self.index.avgdl,
-                                    q.boost)
-        return (per_doc.crossJoin(F.broadcast(qstats))
-                .select("doc_id", score.alias("score")))
+        return self._freq_scored(per_doc, F.col("freq"), idf_sum, q.boost)
 
     # ---- payload queries (SURVEY §2.4, Search/Payloads/)
 
@@ -1048,17 +1074,24 @@ class Searcher:
         return pview.where((F.col("field") == field)
                            & (F.col("term") == term))
 
+    def _payload_positions(self, field: str, term: str) -> DataFrame:
+        """(doc_id, dl, pos, pay) per occurrence of a term."""
+        z = F.explode(F.arrays_zip(F.col("positions").alias("pos"),
+                                   F.col("payloads").alias("pay"))).alias("_z")
+        return (self._payload_postings(field, term)
+                .select("doc_id", "dl", z)
+                .select("doc_id", "dl", F.col("_z.pos").alias("pos"),
+                        F.col("_z.pay").cast("double").alias("pay")))
+
     def _payload_term_frame(self, q: ast.PayloadTerm) -> DataFrame:
         """PayloadTermQuery (PayloadTermQuery.cs:124-199): span-term freq
         (each occurrence is a width-1 span -> sloppyFreq contribution
         1/(1+1) per the engine's span convention, _span_score_frame) times
         the PayloadFunction aggregate of the occurrences' payloads."""
-        stats = (self.index.term_stats()
-                 .where((F.col("field") == q.field)
-                        & (F.col("term") == q.term))
-                 .select("field", "term", "df"))
-        p = (self._payload_postings(q.field, q.term)
-             .join(F.broadcast(stats), ["field", "term"]))
+        p = self._payload_postings(q.field, q.term)
+        df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
+        if df == 0:
+            return self._empty_frame()
         pays = F.col("payloads")
         has = pays.isNotNull() & (F.size(pays) > 0)
         pay_cnt = F.when(has, F.size(pays)).otherwise(F.lit(0))
@@ -1070,8 +1103,7 @@ class Searcher:
             F.array_max(pays).cast("double"), pay_cnt)
         span_score = self.sim.freq_score(
             F.col("tf").cast("double") * F.lit(0.5), F.col("dl"),
-            self.sim.idf_col(F.col("df"), self.index.n_docs),
-            self.index.avgdl, q.boost)
+            self.sim.idf(df, self.index.n_docs), self.index.avgdl, q.boost)
         score = (span_score * pay_score if q.include_span_score
                  else pay_score * F.lit(float(q.boost)))
         return p.select("doc_id", score.alias("score"))
@@ -1088,17 +1120,10 @@ class Searcher:
         if q.in_order and q.spec == "lucene":
             return self._payload_near_walk(q)
         n = len(q.terms)
-        frames = []
-        for i, t in enumerate(q.terms):
-            zp = F.explode(F.arrays_zip(
-                F.col("positions").alias("pos"),
-                F.col("payloads").alias("pay"))).alias("_z")
-            fr = (self._payload_postings(q.field, t)
-                  .select("doc_id", *(["dl"] if i == 0 else []), zp)
-                  .select("doc_id", *(["dl"] if i == 0 else []),
-                          F.col("_z.pos").alias(f"s{i}"),
-                          F.col("_z.pay").cast("double").alias(f"p{i}")))
-            frames.append(fr)
+        frames = [self._payload_positions(q.field, t).select(
+            "doc_id", *(["dl"] if i == 0 else []),
+            F.col("pos").alias(f"s{i}"), F.col("pay").alias(f"p{i}"))
+            for i, t in enumerate(q.terms)]
         j = frames[0]
         for i in range(1, n):
             j = j.join(frames[i], "doc_id")
@@ -1122,20 +1147,23 @@ class Searcher:
             (F.least(*mins) if n > 1 else mins[0]).alias("pay_min"),
             (F.greatest(*maxs) if n > 1 else maxs[0]).alias("pay_max"),
             (F.count(F.lit(1)) * n).alias("pay_cnt")))
-        leafdf = self.spark.createDataFrame(
-            [(q.field, t, i) for i, t in enumerate(q.terms)],
-            "field string, term string, qoff int")
-        qstats = self._query_stats(leafdf, q.field, set(q.terms))
+        return self._payload_near_scored(q, per_doc)
+
+    def _payload_near_scored(self, q: ast.PayloadNear,
+                             per_doc: DataFrame) -> DataFrame:
+        """score = span score x PayloadFunction DocScore of the per-doc
+        (freq, dl, pay_sum, pay_min, pay_max, pay_cnt) rows; idf sums over
+        the query terms from the driver-resolved dfs."""
+        idf_sum, _ = self._leaf_stats(
+            [(q.field, t, i) for i, t in enumerate(q.terms)])
         pay_score = self._payload_doc_score(
             q.fn, F.col("pay_sum"), F.col("pay_min"), F.col("pay_max"),
             F.col("pay_cnt"))
         span_score = self.sim.freq_score(
-            F.col("freq"), F.col("dl"), F.col("idf_sum"),
-            self.index.avgdl, q.boost)
+            F.col("freq"), F.col("dl"), idf_sum, self.index.avgdl, q.boost)
         score = (span_score * pay_score if q.include_span_score
                  else pay_score * F.lit(float(q.boost)))
-        return (per_doc.crossJoin(F.broadcast(qstats))
-                .select("doc_id", score.alias("score")))
+        return per_doc.select("doc_id", score.alias("score"))
 
     def _payload_near_walk(self, q: ast.PayloadNear) -> DataFrame:
         """NearSpansOrdered-sourced PayloadNear: per doc, run the walk
@@ -1144,22 +1172,12 @@ class Searcher:
         from ..functions.spanwalk import ordered_spans
         n = len(q.terms)
         slop = int(q.slop)
-        frames = []
-        for i, t in enumerate(q.terms):
-            zp = F.explode(F.arrays_zip(
-                F.col("positions").alias("pos"),
-                F.col("payloads").alias("pay"))).alias("_z")
-            frames.append(
-                self._payload_postings(q.field, t)
-                .select("doc_id", *(["dl"] if i == 0 else []), zp)
-                .select("doc_id", *(["dl"] if i == 0 else []),
-                        F.lit(i).alias("ci"),
-                        F.col("_z.pos").alias("pos"),
-                        F.col("_z.pay").cast("double").alias("pay")))
+        frames = [self._payload_positions(q.field, t).select(
+            "doc_id", *(["dl"] if i == 0 else []), F.lit(i).alias("ci"),
+            "pos", "pay")
+            for i, t in enumerate(q.terms)]
         dl_map = frames[0].select("doc_id", "dl").distinct()
-        u = frames[0].drop("dl")
-        for fr in frames[1:]:
-            u = u.unionByName(fr)
+        u = reduce(DataFrame.unionByName, [frames[0].drop("dl"), *frames[1:]])
 
         @F.pandas_udf(T.StructType([
             T.StructField("freq", T.DoubleType()),
@@ -1201,20 +1219,7 @@ class Searcher:
                    .select("doc_id", "w.*")
                    .where(F.col("freq") > 0)
                    .join(dl_map, "doc_id"))
-        leafdf = self.spark.createDataFrame(
-            [(q.field, t, i) for i, t in enumerate(q.terms)],
-            "field string, term string, qoff int")
-        qstats = self._query_stats(leafdf, q.field, set(q.terms))
-        pay_score = self._payload_doc_score(
-            q.fn, F.col("pay_sum"), F.col("pay_min"), F.col("pay_max"),
-            F.col("pay_cnt"))
-        span_score = self.sim.freq_score(
-            F.col("freq"), F.col("dl"), F.col("idf_sum"),
-            self.index.avgdl, q.boost)
-        score = (span_score * pay_score if q.include_span_score
-                 else pay_score * F.lit(float(q.boost)))
-        return (grouped.crossJoin(F.broadcast(qstats))
-                .select("doc_id", score.alias("score")))
+        return self._payload_near_scored(q, grouped)
 
     # ---- function queries (score from field values)
 
@@ -1318,4 +1323,8 @@ class Searcher:
         return ids
 
     def _empty_frame(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        """No hits, as a plan the optimizer folds to an empty local
+        relation: collecting it (sorted, limited) runs no Spark job."""
+        return self.spark.range(1).select(
+            F.lit(None).cast("long").alias("doc_id"),
+            F.lit(None).cast("double").alias("score")).where(F.lit(False))

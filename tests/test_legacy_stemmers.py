@@ -229,6 +229,7 @@ def _parse_de(path):
     return out
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="no reference tree")
 def test_german_legacy_reference_goldens():
     """Every case from the reference's own
     test/contrib/Analyzers/De/data.txt (TestGermanStemFilter.cs)."""
@@ -240,6 +241,7 @@ def test_german_legacy_reference_goldens():
     assert not bad, bad
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="no reference tree")
 def test_german_din2_reference_goldens():
     from lucenenet_spark.analysis.german import german_din2_stem
     cases = _parse_de(GERMAN_DIN2)
