@@ -5,9 +5,9 @@ A from-scratch re-expression of the capabilities of Lucene.Net 3.0.3
 
 - analysis/   : StandardAnalyzer-equivalent + code-aware tokenizers
                 (JVM column expressions AND Arrow pandas_udfs, proven equal)
-- index/      : inverted-index build (postings, doc stats), delta+varint
-                segment codec with block-max metadata, salted merge waves
-                with lineage + resume
+- index/      : inverted-index build (postings, doc stats), columnar
+                segments (posting lists as array columns) with block-max
+                metadata, salted JVM merge waves with lineage + resume
 - plans/      : Query AST + lowering to DataFrame plans (the "Weight/Scorer"
                 layer re-expressed as joins/aggregations)
 - functions/  : BM25 scoring kernel (column expressions), text statistics

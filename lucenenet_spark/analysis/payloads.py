@@ -11,9 +11,9 @@ PayloadHelper.cs) — the form every Payload*Query scorer consumes through
 Similarity.ScorePayload.
 
 Spark mapping: analyzers may emit (term, position, payload: float)
-triples; the segmented index stores the floats in a fixed-width blob
-aligned with the position stream (index/segments.py pay_blob), and
-Payload*Query lowering decodes them beside positions.
+triples; the segmented index stores the floats in a per-doc array
+column aligned with the positions (index/segments.py pay), and
+Payload*Query lowering reads them beside positions.
 """
 
 from __future__ import annotations

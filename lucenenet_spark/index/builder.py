@@ -22,7 +22,7 @@ scoring lemma of MultiSearcher.CreateWeight
 (src/Lucene.Net/Search/MultiSearcher.cs:355-390): rank-identity under
 sharding requires globally-aggregated (df, N, avgdl) before scoring.
 
-The compressed segment/blob path (delta+varint, block-max metadata, salted
+The columnar segment path (posting arrays, block-max metadata, salted
 merge waves) lives in index/segments.py; both paths answer queries through
 plans/lowering.py with identical results.
 """

@@ -1,12 +1,13 @@
 """CheckIndex — full-index integrity scan (src/Lucene.Net/Index/CheckIndex.cs).
 
 Relational re-expression: every invariant the reference walks posting-by-
-posting becomes one distributed aggregate over the decoded segment rows.
+posting becomes one distributed aggregate over the segment rows' posting
+arrays.
 
 Checked invariants (CheckIndex.cs's term/postings pass):
   I1  docIDs within a posting list are strictly ascending, no duplicates
-  I2  df metadata == decoded posting count
-  I3  ttf metadata == sum of decoded tfs
+  I2  df metadata == posting count
+  I3  ttf metadata == sum of tfs
   I4  tf >= 1 and dl >= tf for every posting (a doc can't have more
       occurrences of one term than tokens)
   I5  block metadata consistent: last block's last_doc == last docID;
@@ -15,14 +16,14 @@ Checked invariants (CheckIndex.cs's term/postings pass):
   I7  doc partitioning: each doc_id appears in exactly one seg_id
   I8  [vs source] content sha256 rollup equality (north-rule per-row
       invariant) via segments.content_sha_rollup
-  I9  payload stream alignment: a non-empty pay_blob is exactly one
-      float32 per position (len == 4*ttf) — the fixed-width analogue of
+  I9  payload alignment: a non-null pay holds one list per posting and
+      one float per occurrence (tf of them) — the analogue of
       CheckIndex's payload-length walk (CheckIndex.cs term pass)
   I10 payload coverage is homogeneous per (field, term): if some of a
       term's segments carry payloads and others don't (e.g. add_indexes
       of a payload index with a plain one), the NEXT merge of that term
-      will discard its payloads (codec.merge_postings has_pay rule) —
-      flagged here so the degrade is visible before it happens
+      will discard its payloads (merge_wave nulls pay unless every part
+      has it) — flagged here so the degrade is visible before it happens
 """
 
 from __future__ import annotations
@@ -31,8 +32,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-
-from . import codec
 
 _ISSUE_SCHEMA = T.StructType([
     T.StructField("field", T.StringType()),
@@ -46,23 +45,24 @@ def _check_rows(pdf_iter):
     for pdf in pdf_iter:
         issues = []
         for r in pdf.itertuples(index=False):
-            docs, tfs, dls, _ = codec.decode_postings(
-                bytes(r.docs_blob), bytes(r.tfs_blob), bytes(r.dls_blob), b"")
+            docs = np.asarray(r.docs, np.int64)
+            tfs = np.asarray(r.tfs, np.int64)
+            dls = np.asarray(r.dls, np.int64)
             key = (r.field, r.term, int(r.seg_id))
             if len(docs) > 1 and not (np.diff(docs) > 0).all():
                 issues.append((*key, "I1:docids_not_strictly_ascending"))
             if int(r.df) != len(docs):
-                issues.append((*key, f"I2:df={r.df}!=decoded={len(docs)}"))
+                issues.append((*key, f"I2:df={r.df}!=postings={len(docs)}"))
             if int(r.ttf) != int(tfs.sum()):
                 issues.append((*key, f"I3:ttf={r.ttf}!=sum_tf={int(tfs.sum())}"))
             if len(tfs) and (tfs < 1).any():
                 issues.append((*key, "I4:tf<1"))
             if len(tfs) and (dls < tfs).any():
                 issues.append((*key, "I4:dl<tf"))
-            pay = bytes(r.pay_blob) if getattr(r, "pay_blob", None) else b""
-            if pay and len(pay) != 4 * int(tfs.sum()):
-                issues.append(
-                    (*key, f"I9:pay_blob_{len(pay)}B!=4*ttf_{int(tfs.sum())}"))
+            if r.pay is not None:
+                n_pay = [0 if p is None else len(p) for p in r.pay]
+                if len(n_pay) != len(docs) or (np.asarray(n_pay) != tfs).any():
+                    issues.append((*key, "I9:payloads_not_aligned_with_tfs"))
             blocks = r.blocks
             if blocks is not None and len(docs):
                 if int(blocks[-1]["last_doc"]) != int(docs[-1]):
@@ -95,7 +95,8 @@ def check_index(index, source: DataFrame | None = None,
     """
     seg = index.segments
     issues = [tuple(r) for r in
-              seg.mapInPandas(_check_rows, _ISSUE_SCHEMA).collect()]
+              seg.drop("pos").mapInPandas(_check_rows, _ISSUE_SCHEMA)
+              .collect()]
 
     dup = (seg.groupBy("field", "term", "seg_id").count()
            .where(F.col("count") > 1).count())
@@ -104,25 +105,8 @@ def check_index(index, source: DataFrame | None = None,
 
     # I7: every doc lives in exactly one segment (the invariant that makes
     # per-segment top-k complete — see wand.py)
-    def _emit_pairs(pdf_iter):
-        for pdf in pdf_iter:
-            segs, ds = [], []
-            for r in pdf.itertuples(index=False):
-                docs = codec.delta_decode(
-                    codec.varint_decode(bytes(r.docs_blob)))
-                segs.append(np.full(len(docs), int(r.seg_id), np.int64))
-                ds.append(docs)
-            if ds:
-                yield pd.DataFrame({
-                    "seg_id": np.concatenate(segs),
-                    "doc_id": np.concatenate(ds)})
-            else:
-                yield pd.DataFrame({"seg_id": [], "doc_id": []})
-
-    pair_schema = "seg_id long, doc_id long"
     cross = (
-        seg.select("seg_id", "docs_blob")
-        .mapInPandas(_emit_pairs, pair_schema)
+        seg.select("seg_id", F.explode("docs").alias("doc_id"))
         .distinct()
         .groupBy("doc_id")
         .agg(F.countDistinct("seg_id").alias("ns"))
@@ -136,7 +120,7 @@ def check_index(index, source: DataFrame | None = None,
     mixed = (
         seg.where(F.col("ttf") > 0)
         .groupBy("field", "term")
-        .agg(F.sum(F.when(F.octet_length("pay_blob") > 0, 1)
+        .agg(F.sum(F.when(F.col("pay").isNotNull(), 1)
                    .otherwise(0)).alias("with_pay"),
              F.count("*").alias("n"))
         .where((F.col("with_pay") > 0) & (F.col("with_pay") < F.col("n")))

@@ -1,321 +1,89 @@
-"""Postings codec — delta + VInt compression with block-max metadata.
+"""Block-max metadata of a posting list — the skip-list datum.
 
-Re-creates the reference's postings format family in numpy (no per-element
-Python): the .frq layout is delta-encoded docIDs in 7-bit little-endian
-varints (reference VInt: src/Lucene.Net/Store/IndexOutput.cs:79-87; docs
-writer src/Lucene.Net/Index/FormatPostingsDocsWriter.cs:76-99), the .prx
-layout is per-doc delta-encoded positions
-(src/Lucene.Net/Index/FormatPostingsPositionsWriter.cs:55-79), and the
-skip-list metadata (src/Lucene.Net/Index/DefaultSkipListWriter.cs:90-130,
-every 16th doc) becomes per-block (last_doc, max_tf, min_dl) rows that serve
-both skipping (Advance -> block pruning) and Block-Max-WAND upper bounds.
+Postings themselves are native array columns of the segment rows
+(index/segments.py SEGMENT_SCHEMA); Parquet's own encoding and the
+columnar cache replace the reference's delta + VInt .frq/.prx streams.
+What remains format-specific is the skip-list metadata
+(src/Lucene.Net/Index/DefaultSkipListWriter.cs:90-130, every 16th doc),
+kept as per-block (last_doc, max_tf, min_dl) rows that serve both
+skipping (Advance -> block pruning) and Block-Max-WAND upper bounds.
 
-A posting list for one (field, term) within one segment:
-
-    docs_blob : varint(delta(doc_ids)), doc_ids strictly ascending
-    tfs_blob  : varint(tf per doc)
-    dls_blob  : varint(dl per doc)   -- denormalized norm (.nrm analogue)
-    pos_blob  : varint(delta(positions)) per doc, concatenated; tf gives
-                the per-doc position counts (may be empty if positions off)
-    blocks    : list of (last_doc, max_tf, min_dl) per BLOCK_SIZE docs
-
-All encode/decode paths are numpy-vectorized; max 10 bytes/varint (uint64).
+The block layout is computed in two forms — numpy over the flat posting
+vectors (the invert kernel, all terms of a segment at once; the expunge
+rewrite) and a Spark SQL expression (the doc-ordered merge of overlapping
+segments) — and both live here so they cannot drift apart.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128  # docs per block-max block (16 in the reference; 128 suits
-                  # vectorized decode granularity better at Spark scale)
+                  # vectorized block passes better at Spark scale)
 
-_U64 = np.uint64
-_SEVEN = _U64(7)
-
-
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128/VInt encode a non-negative int array (vectorized)."""
-    a = np.ascontiguousarray(values, dtype=_U64)
-    n = len(a)
-    if n == 0:
-        return b""
-    # bytes needed per value (1..10)
-    nb = np.ones(n, np.int64)
-    tmp = a >> _SEVEN
-    while tmp.any():
-        nb += (tmp > 0)
-        tmp >>= _SEVEN
-    ends = np.cumsum(nb)
-    out = np.zeros(ends[-1], np.uint8)
-    pos = ends - nb  # start offset per value
-    rem = a.copy()
-    alive = np.ones(n, bool)
-    while True:
-        idx = np.flatnonzero(alive)
-        if idx.size == 0:
-            break
-        b = (rem[idx] & _U64(0x7F)).astype(np.uint8)
-        more = (rem[idx] >> _SEVEN) > 0
-        b[more] |= 0x80
-        out[pos[idx]] = b
-        pos[idx] += 1
-        rem[idx] >>= _SEVEN
-        alive[idx] = more
-    return out.tobytes()
-
-
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Inverse of varint_encode -> uint64 array (vectorized)."""
-    b = np.frombuffer(buf, np.uint8)
-    if b.size == 0:
-        return np.empty(0, _U64)
-    term = (b & 0x80) == 0  # last byte of each value
-    starts = np.empty(int(term.sum()), np.int64)
-    starts[0] = 0
-    starts[1:] = np.flatnonzero(term)[:-1] + 1
-    gid = np.zeros(b.size, np.int64)
-    gid[starts[1:]] = 1
-    gid = np.cumsum(gid)
-    shift = (np.arange(b.size, dtype=np.int64) - starts[gid]).astype(_U64) * _SEVEN
-    vals = (b & 0x7F).astype(_U64) << shift
-    return np.add.reduceat(vals, starts)
-
-
-def varint_nbytes(values: np.ndarray) -> np.ndarray:
-    """Encoded byte length per value (1..10), vectorized."""
-    a = np.ascontiguousarray(values, dtype=_U64)
-    nb = np.ones(len(a), np.int64)
-    tmp = a >> _SEVEN
-    while tmp.any():
-        nb += (tmp > 0)
-        tmp >>= _SEVEN
-    return nb
-
-
-def varint_encode_split(values: np.ndarray, counts: np.ndarray) -> list[bytes]:
-    """Encode a flat value array ONCE, then split the byte stream into one
-    blob per group (counts = values per group). The per-group loop is just
-    memoryview slicing — all numeric work is a single vectorized pass."""
-    buf = varint_encode(values)
-    nb = varint_nbytes(values)
-    val_ends = np.cumsum(counts)
-    byte_cum = np.concatenate([[0], np.cumsum(nb)])
-    ends = byte_cum[val_ends]
-    starts = byte_cum[val_ends - counts]
-    mv = memoryview(buf)
-    return [bytes(mv[s:e]) for s, e in zip(starts, ends)]
-
-
-def segmented_delta_encode(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Delta-encode with the delta chain RESET at each segment start
-    (segment i begins at index starts[i]; starts[0] == 0)."""
-    a = np.ascontiguousarray(values, np.int64)
-    if a.size == 0:
-        return a.astype(_U64)
-    d = np.empty_like(a)
-    d[0] = a[0]
-    np.subtract(a[1:], a[:-1], out=d[1:])
-    s = starts[(starts > 0) & (starts < a.size)]
-    d[s] = a[s]
-    return d.astype(_U64)
-
-
-def segmented_cumsum(deltas: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Inverse of segmented_delta_encode (vectorized per-segment cumsum)."""
-    d = np.ascontiguousarray(deltas, np.int64)
-    if d.size == 0:
-        return d
-    cum = np.cumsum(d)
-    seg_mark = np.zeros(d.size, np.int64)
-    s = starts[starts < d.size]
-    seg_mark[s] = 1
-    seg = np.cumsum(seg_mark) - 1
-    base = np.zeros(len(s), np.int64)
-    base[1:] = cum[s[1:] - 1]
-    return cum - base[seg]
-
-
-def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
-    a = np.ascontiguousarray(sorted_vals, dtype=np.int64)
-    if a.size == 0:
-        return a.astype(_U64)
-    d = np.empty_like(a)
-    d[0] = a[0]
-    np.subtract(a[1:], a[:-1], out=d[1:])
-    return d.astype(_U64)
-
-
-def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    return np.cumsum(deltas.astype(np.int64))
-
-
-def encode_positions(positions_flat: np.ndarray, tfs: np.ndarray) -> bytes:
-    """Per-doc delta encoding of the flattened positions array.
-
-    positions_flat holds each doc's ascending positions back-to-back; tfs
-    gives the per-doc counts. Deltas reset at doc boundaries (the .prx
-    contract, FormatPostingsPositionsWriter.cs:55-79)."""
-    p = np.ascontiguousarray(positions_flat, np.int64)
-    if p.size == 0:
-        return b""
-    d = np.empty_like(p)
-    d[0] = p[0]
-    np.subtract(p[1:], p[:-1], out=d[1:])
-    starts = np.cumsum(tfs.astype(np.int64))[:-1]
-    keep = starts[(starts > 0) & (starts < p.size)]
-    d[keep] = p[keep]  # boundary: restart delta at the doc's first position
-    return varint_encode(d.astype(_U64))
-
-
-def decode_positions(pos_blob: bytes, tfs: np.ndarray) -> np.ndarray:
-    """-> flattened positions array (split by tfs to get per-doc lists)."""
-    d = varint_decode(pos_blob).astype(np.int64)
-    if d.size == 0:
-        return d
-    out = np.empty_like(d)
-    bounds = np.zeros(d.size, np.int64)
-    starts = np.concatenate([[0], np.cumsum(tfs.astype(np.int64))[:-1]])
-    starts = starts[starts < d.size]
-    bounds[starts] = 1
-    seg = np.cumsum(bounds) - 1
-    cum = np.cumsum(d)
-    base = np.zeros(len(starts), np.int64)
-    base[1:] = cum[starts[1:] - 1]
-    out = cum - base[seg]
-    return out
+BLOCK_TYPE = pa.struct([
+    pa.field("last_doc", pa.int64(), nullable=False),
+    pa.field("max_tf", pa.int32(), nullable=False),
+    pa.field("min_dl", pa.int32(), nullable=False),
+])
 
 
 def block_maxes(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-                block: int = BLOCK_SIZE) -> list[tuple[int, int, int]]:
-    """Per-block (last_doc, max_tf, min_dl) — the skip-list datum
-    (DefaultSkipListWriter.cs:90-130) extended with the WAND score bound
-    ingredients: BM25 term score is monotone ↑ in tf and ↓ in dl, so
-    (max_tf, min_dl) upper-bounds any doc's score inside the block."""
-    n = len(doc_ids)
-    if n == 0:
-        return []
-    edges = np.arange(0, n, block)
-    out = []
-    for s in edges:
-        e = min(s + block, n)
-        out.append({"last_doc": int(doc_ids[e - 1]),
-                    "max_tf": int(tfs[s:e].max()),
-                    "min_dl": int(dls[s:e].min())})
-    return out
+                block: int = BLOCK_SIZE) -> list[dict]:
+    """Per-block (last_doc, max_tf, min_dl) of ONE posting list — the
+    skip-list datum (DefaultSkipListWriter.cs:90-130) extended with the
+    WAND score bound ingredients: BM25 term score is monotone ↑ in tf and
+    ↓ in dl, so (max_tf, min_dl) upper-bounds any doc's score inside the
+    block."""
+    return block_maxes_all(np.asarray(doc_ids), np.asarray(tfs),
+                           np.asarray(dls), np.zeros(1, np.int64),
+                           np.array([len(doc_ids)]), block).to_pylist()[0]
 
 
 def block_maxes_all(p_doc: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
                     tstart: np.ndarray, df_t: np.ndarray,
-                    block: int = BLOCK_SIZE) -> list[list[dict]]:
-    """Vectorized block_maxes for ALL terms of a segment at once.
+                    block: int = BLOCK_SIZE) -> pa.ListArray:
+    """Block maxes for ALL terms of a segment at once, as one Arrow
+    list<struct> array (one list per term).
 
     p_doc/tfs/dls are the flat per-posting arrays; term i owns the slice
     [tstart[i], tstart[i]+df_t[i]). Because the per-term blocks tile the
     whole array contiguously, one maximum.reduceat / minimum.reduceat over
-    the global block-start vector computes every block bound in two passes
-    (vs one Python loop + 3 numpy calls per term in block_maxes)."""
-    n_terms = len(tstart)
-    if n_terms == 0:
-        return []
+    the global block-start vector computes every block bound in two passes,
+    and the list offsets come from the per-term block counts."""
     tstart = np.ascontiguousarray(tstart, np.int64)
     df_t = np.ascontiguousarray(df_t, np.int64)
-    nblk = -(-df_t // block)  # ceil-div; df_t >= 1 always
-    total = int(nblk.sum())
-    first = np.zeros(n_terms, np.int64)
-    np.cumsum(nblk[:-1], out=first[1:])
-    within = (np.arange(total, dtype=np.int64) - np.repeat(first, nblk)) * block
+    nblk = -(-df_t // block)  # ceil-div
+    offs = np.zeros(len(tstart) + 1, np.int32)
+    np.cumsum(nblk, out=offs[1:])
+    first = offs[:-1].astype(np.int64)
+    within = (np.arange(offs[-1], dtype=np.int64)
+              - np.repeat(first, nblk)) * block
     starts = np.repeat(tstart, nblk) + within
     ends = np.minimum(starts + block, np.repeat(tstart + df_t, nblk))
-    max_tf = np.maximum.reduceat(tfs, starts)
-    min_dl = np.minimum.reduceat(dls, starts)
-    last_doc = p_doc[ends - 1]
-    flat = [{"last_doc": l, "max_tf": m, "min_dl": d}
-            for l, m, d in zip(last_doc.tolist(), max_tf.tolist(),
-                               min_dl.tolist())]
-    offs = np.concatenate([[0], np.cumsum(nblk)])
-    return [flat[offs[i]:offs[i + 1]] for i in range(n_terms)]
+    if len(starts):
+        max_tf = np.maximum.reduceat(tfs, starts)
+        min_dl = np.minimum.reduceat(dls, starts)
+    else:
+        max_tf = min_dl = np.empty(0, np.int64)
+    struct = pa.StructArray.from_arrays(
+        [pa.array(p_doc[ends - 1], pa.int64()),
+         pa.array(max_tf.astype(np.int32)),
+         pa.array(min_dl.astype(np.int32))],
+        fields=list(BLOCK_TYPE))
+    return pa.ListArray.from_arrays(pa.array(offs), struct)
 
 
-def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-                    positions_flat: np.ndarray | None = None):
-    """-> dict of blob fields for one (field, term) posting list."""
-    doc_ids = np.ascontiguousarray(doc_ids, np.int64)
-    tfs = np.ascontiguousarray(tfs, np.int64)
-    dls = np.ascontiguousarray(dls, np.int64)
-    return {
-        "df": int(len(doc_ids)),
-        "ttf": int(tfs.sum()),
-        "docs_blob": varint_encode(delta_encode(doc_ids)),
-        "tfs_blob": varint_encode(tfs.astype(_U64)),
-        "dls_blob": varint_encode(dls.astype(_U64)),
-        "pos_blob": (encode_positions(positions_flat, tfs)
-                     if positions_flat is not None else b""),
-        "blocks": block_maxes(doc_ids, tfs, dls),
-    }
-
-
-def decode_postings(docs_blob: bytes, tfs_blob: bytes, dls_blob: bytes,
-                    pos_blob: bytes = b""):
-    """-> (doc_ids, tfs, dls, positions_flat|None) numpy arrays."""
-    doc_ids = delta_decode(varint_decode(docs_blob))
-    tfs = varint_decode(tfs_blob).astype(np.int64)
-    dls = varint_decode(dls_blob).astype(np.int64)
-    pos = decode_positions(pos_blob, tfs) if pos_blob else None
-    return doc_ids, tfs, dls, pos
-
-
-def merge_postings(parts: list[dict]):
-    """k-way merge of already-sorted per-segment posting lists for ONE
-    (field, term): concatenate + argsort by doc_id (SegmentMerger.
-    AppendPostings analogue, src/Lucene.Net/Index/SegmentMerger.cs:801-848;
-    docIDs are globally unique here so no rebase is needed).  Payload blobs
-    (fixed-width float32 per position) reorder alongside positions."""
-    doc_l, tf_l, dl_l, pos_l, pay_l = [], [], [], [], []
-    has_pos = True
-    has_pay = True
-    for p in parts:
-        d, t, l, po = decode_postings(p["docs_blob"], p["tfs_blob"],
-                                      p["dls_blob"], p["pos_blob"] or b"")
-        doc_l.append(d)
-        tf_l.append(t)
-        dl_l.append(l)
-        if po is None:
-            has_pos = False
-        pos_l.append(po)
-        pb = p.get("pay_blob") or b""
-        if len(pb) == 0 and t.sum() > 0:
-            has_pay = False
-        pay_l.append(np.frombuffer(pb, "<f4"))
-    if not has_pay and any(len(p) > 0 for p in pay_l):
-        # heterogeneous merge: some parts carry payloads, some don't —
-        # the merged list drops them (CheckIndex I10 flags the precursor
-        # state; this warning marks the actual degrade)
-        import warnings
-        warnings.warn(
-            "merge_postings: discarding payloads for a (field, term) "
-            "because not every merged part carries a pay_blob",
-            RuntimeWarning, stacklevel=2)
-    docs = np.concatenate(doc_l)
-    tfs = np.concatenate(tf_l)
-    dls = np.concatenate(dl_l)
-    order = np.argsort(docs, kind="stable")
-    docs, tfs, dls = docs[order], tfs[order], dls[order]
-    pos_flat = None
-    pay_blob = b""
-    if has_pos and pos_l and all(p is not None for p in pos_l):
-        # reorder the flattened positions doc-wise
-        all_pos = np.concatenate(pos_l) if pos_l else np.empty(0, np.int64)
-        all_tfs = np.concatenate(tf_l)
-        starts = np.concatenate([[0], np.cumsum(all_tfs)[:-1]])
-        chunks = [all_pos[starts[i]:starts[i] + all_tfs[i]] for i in order]
-        pos_flat = (np.concatenate(chunks) if chunks
-                    else np.empty(0, np.int64))
-        if has_pay:
-            all_pay = np.concatenate(pay_l)
-            pchunks = [all_pay[starts[i]:starts[i] + all_tfs[i]]
-                       for i in order]
-            pay_blob = (np.concatenate(pchunks) if pchunks
-                        else np.empty(0, "<f4")).astype("<f4").tobytes()
-    out = encode_postings(docs, tfs, dls, pos_flat)
-    out["pay_blob"] = pay_blob
-    return out
+def block_maxes_sql(docs: str, tfs: str, dls: str,
+                    block: int = BLOCK_SIZE) -> str:
+    """The same blocks as a Spark SQL expression over three aligned array
+    expressions (1-based slice, 0-based [] indexing).  Used where a
+    posting list is rebuilt in the JVM, so the blocks are recomputed
+    without a Python worker."""
+    return (
+        f"transform(sequence(0, (size({docs}) - 1) div {block}), b -> "
+        f"named_struct("
+        f"'last_doc', {docs}[least((b + 1) * {block}, size({docs})) - 1], "
+        f"'max_tf', array_max(slice({tfs}, b * {block} + 1, {block})), "
+        f"'min_dl', array_min(slice({dls}, b * {block} + 1, {block}))))")

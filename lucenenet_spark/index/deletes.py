@@ -10,7 +10,7 @@ the driver:
   1. segment doc-ranges are disjoint (doc_ids are assigned from
      range-partitioned bases and each doc lives in exactly one segment),
      so sorting segments by their max doc — available from the block-max
-     METADATA column alone, no blob decode — partitions the doc-id space:
+     METADATA column alone, no posting read — partitions the doc-id space:
      segment i owns (hi_{i-1}, hi_i].  The bounds table is n_segments
      rows (metadata-scale, like IVF centroids), the ONLY thing that
      touches the driver.
@@ -22,9 +22,9 @@ the driver:
      whose id range vastly exceeds its delete count, e.g. NRT event
      offsets) degrade to a sorted-id blob instead ("ids" kind) so blob
      size is always O(min(range/8, 8*n_del)).
-  3. the per-segment blob rides a join on seg_id into the decode /
-     expunge / WAND kernels and is applied as a vectorized bit test over
-     the decoded doc array — the deletedDocs.Get check, batched.
+  3. the per-segment blob rides a join on seg_id into the expunge /
+     WAND kernels and is applied as a vectorized bit test over the
+     posting doc array — the deletedDocs.Get check, batched.
 
 At 100 TB: the bitmap table is n_docs/8 bytes TOTAL spread across
 segments, co-partitioned with the segment rows by the seg_id join; no
@@ -61,7 +61,7 @@ def segment_bounds(segments: DataFrame) -> tuple[np.ndarray, np.ndarray]:
 
     hi per segment = max last_doc over its rows' final blocks — the
     segment's maximum docID, read from the skip-list metadata column
-    (never the postings blobs).  n_segments rows reach the driver."""
+    (never the posting arrays).  n_segments rows reach the driver."""
     rows = (
         segments
         .where(F.col("blocks").isNotNull() & (F.size("blocks") > 0))

@@ -1,28 +1,37 @@
-"""Segmented index — compressed postings blobs, merge waves, lineage, resume.
+"""Segmented index — columnar postings, merge waves, lineage, resume.
 
 The write-side dataflow of the reference (IndexWriter -> DocumentsWriter ->
 TermsHash -> FormatPostings -> SegmentMerger; SURVEY.md §2.3/§3.1) as Spark
 stages:
 
-  1. partition invert (mapInPandas): tokenize + local hash-invert + delta/
-     VInt-encode one SEGMENT per input partition — the per-thread RAM buffer
-     + flush of DocumentsWriter.cs:120-138 (partition size = flush unit).
-  2. merge waves (groupBy + applyInPandas): geometric fan-in merge of
-     segments, mergeFactor=10 by default (LogMergePolicy.cs:51-76). The
-     groupBy key includes the wave's merge-group, so a term's postings
-     shuffle only between the segments being merged — hot terms are spread
-     over merge groups, which IS the salt (two-stage combine: wave k merges
-     <=fan_in sub-lists per term, never all of them at once).
+  1. partition invert (mapInArrow): tokenize + local hash-invert one
+     SEGMENT per input partition — the per-thread RAM buffer + flush of
+     DocumentsWriter.cs:120-138 (partition size = flush unit).  A segment
+     row holds one (field, term)'s posting list as native array columns
+     (docs / tfs / dls / pos / pay), built from offsets with no
+     per-element Python.
+  2. merge waves (groupBy in the JVM): geometric fan-in merge of segments,
+     mergeFactor=10 by default (LogMergePolicy.cs:51-76). The groupBy key
+     includes the wave's merge-group, so a term's postings shuffle only
+     between the segments being merged — hot terms are spread over merge
+     groups, which IS the salt (two-stage combine: wave k merges <=fan_in
+     sub-lists per term, never all of them at once).  Doc ids are global,
+     so disjoint segments merge by array concatenation.
   3. each wave optionally checkpoints to parquet with a lineage row
-     (wave, n_segments, rows, content-sha rollup) — the segments_N manifest
-     analogue (IndexFileNames.cs:29-37) — and a killed build resumes from
-     the last committed wave.
+     (wave, n_segments, rows, postings) — the segments_N manifest analogue
+     (IndexFileNames.cs:29-37) — and a killed build resumes from the last
+     committed wave.
 
-Query-time: `postings` exposes a lazily-decoded relational view with the
-same schema as the logical path (field, term, doc_id, tf, dl, positions),
-so plans/lowering.Searcher runs unchanged; the (field, term) filter is
-applied BEFORE blob decode (term-dictionary seek analogue,
-TermInfosReader.cs:243-308 — only matching posting lists are decompressed).
+Parquet's encoding and compression replace the reference's delta + VInt
+.frq/.prx streams, at rest and in the columnar cache; only the block-max
+skip metadata is format-specific (index/codec.py).
+
+Query-time: `postings` is an explode(arrays_zip(...)) view with the same
+schema as the logical path (field, term, doc_id, tf, dl, positions), so
+plans/lowering.Searcher runs unchanged; the (field, term) filter lands
+BELOW the explode (term-dictionary seek analogue, TermInfosReader.cs:
+243-308 — only matching posting lists are expanded) and no Python worker
+runs on the read path.
 """
 
 from __future__ import annotations
@@ -34,13 +43,21 @@ from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..analysis.tokenizers import tokenize
 from . import codec
 from .builder import IndexStats
+
+_BLOCK = T.StructType([
+    T.StructField("last_doc", T.LongType(), False),
+    T.StructField("max_tf", T.IntegerType(), False),
+    T.StructField("min_dl", T.IntegerType(), False),
+])
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("field", T.StringType(), False),
@@ -48,19 +65,20 @@ SEGMENT_SCHEMA = T.StructType([
     T.StructField("seg_id", T.LongType(), False),
     T.StructField("df", T.IntegerType(), False),
     T.StructField("ttf", T.LongType(), False),
-    T.StructField("docs_blob", T.BinaryType(), False),
-    T.StructField("tfs_blob", T.BinaryType(), False),
-    T.StructField("dls_blob", T.BinaryType(), False),
-    T.StructField("pos_blob", T.BinaryType(), True),
-    # per-position float32 payloads aligned with the pos stream (Payload.cs;
-    # fixed-width, so merge concat needs no re-splice); b"" when absent
-    T.StructField("pay_blob", T.BinaryType(), True),
-    T.StructField("blocks", T.ArrayType(T.StructType([
-        T.StructField("last_doc", T.LongType(), False),
-        T.StructField("max_tf", T.IntegerType(), False),
-        T.StructField("min_dl", T.IntegerType(), False),
-    ])), True),
+    # one posting list: ascending global doc ids with aligned tf and dl
+    # (the denormalized .nrm norm)
+    T.StructField("docs", T.ArrayType(T.LongType()), False),
+    T.StructField("tfs", T.ArrayType(T.IntegerType()), False),
+    T.StructField("dls", T.ArrayType(T.IntegerType()), False),
+    # per-doc positions; NULL when the field is indexed without them
+    T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType())), True),
+    # per-position float32 payloads aligned with pos (Payload.cs); NULL
+    # when the analyzer emits none
+    T.StructField("pay", T.ArrayType(T.ArrayType(T.FloatType())), True),
+    T.StructField("blocks", T.ArrayType(_BLOCK), True),
 ])
+
+_ARROW_SCHEMA = to_arrow_schema(SEGMENT_SCHEMA)
 
 MERGE_FACTOR = 10  # LogMergePolicy.cs:56
 
@@ -70,12 +88,14 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
                       keyword: bool = False, fold: bool = False,
                       analyzer=None, position_increment_gap: int = 0,
                       force_slow: bool = False):
-    """mapInPandas kernel: one segment per input partition.
+    """mapInArrow kernel: one segment per input partition.
 
     Vectorized invert — the TermsHashPerField + FreqProxTermsWriter +
     FormatPostings chain (SURVEY.md §2.3) collapsed into array passes:
     factorize terms -> lexsort (term, doc, pos) -> run-length boundaries
-    -> segmented encode, one byte-stream split per term.
+    -> Arrow list arrays over the flat posting/position vectors, whose
+    offsets are those boundaries (one list per term, nested per doc for
+    positions and payloads).
 
     FAST PATH (plain string column, built-in analyzers): the ONLY per-doc
     Python is one regex findall; the StandardFilter/length/stop transforms
@@ -186,7 +206,7 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
         dlv = np.repeat(dl_doc, counts)
         return tid, terms, keep_tok, docv, posv, dlv
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
         seg_id = TaskContext.get().partitionId()
 
@@ -196,7 +216,8 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
         std = ([], [], [])           # raw chunks, counts, doc_ids
         cod = ([], [], [])
 
-        for pdf in batches:
+        for batch in batches:
+            pdf = batch.to_pandas()
             if mode is None:
                 # decide once from the first non-null value; Spark column
                 # types are uniform, so one probe settles str vs array
@@ -266,10 +287,10 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
             posv = np.concatenate([p[4] for p in parts])[keep]
             dlv = np.concatenate([p[5] for p in parts])[keep]
             if len(tid) == 0:
-                yield pd.DataFrame(columns=[f.name for f in SEGMENT_SCHEMA])
+                yield pa.RecordBatch.from_pylist([], schema=_ARROW_SCHEMA)
                 return
         else:
-            yield pd.DataFrame(columns=[f.name for f in SEGMENT_SCHEMA])
+            yield pa.RecordBatch.from_pylist([], schema=_ARROW_SCHEMA)
             return
 
         order = np.lexsort((posv, docv, tid))
@@ -292,166 +313,61 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
         df_t = np.diff(np.concatenate([tstart, [len(pstart)]]))
         ttf_t = np.add.reduceat(tfs, tstart)
 
-        docs_blobs = codec.varint_encode_split(
-            codec.segmented_delta_encode(p_doc, tstart), df_t)
-        tfs_blobs = codec.varint_encode_split(tfs.astype(np.uint64), df_t)
-        dls_blobs = codec.varint_encode_split(p_dl.astype(np.uint64), df_t)
-        if positions:
-            pos_blobs = codec.varint_encode_split(
-                codec.segmented_delta_encode(posv, pstart), ttf_t)
-        else:
-            pos_blobs = [b""] * len(tstart)
-        if payv is not None and positions:
-            # fixed-width float32 stream aligned with the position stream:
-            # one buffer pass, memoryview slices per term
-            pay_all = payv.astype("<f4").tobytes()
-            ends4 = np.cumsum(ttf_t) * 4
-            starts4 = ends4 - ttf_t * 4
-            mv = memoryview(pay_all)
-            pay_blobs = [bytes(mv[s:e]) for s, e in zip(starts4, ends4)]
-        else:
-            pay_blobs = [b""] * len(tstart)
+        def lists(offsets, values):
+            return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                            values)
 
-        blocks = codec.block_maxes_all(p_doc, tfs, p_dl, tstart, df_t)
-        yield pd.DataFrame({
-            "field": field_name,
-            "term": uniq_terms[p_tid[tstart]],
-            "seg_id": np.full(len(tstart), seg_id, np.int64),
-            "df": df_t.astype(np.int32),
-            "ttf": ttf_t,
-            "docs_blob": docs_blobs,
-            "tfs_blob": tfs_blobs,
-            "dls_blob": dls_blobs,
-            "pos_blob": pos_blobs,
-            "pay_blob": pay_blobs,
-            "blocks": blocks,
-        })
+        n_terms = len(tstart)
+        toff = np.append(tstart, len(pstart))    # term -> its postings
+        poff = np.append(pstart, len(tid))       # posting -> its positions
+        cols = {
+            "field": pa.array([field_name] * n_terms, pa.string()),
+            "term": pa.array(uniq_terms[p_tid[tstart]], pa.string()),
+            "seg_id": pa.array(np.full(n_terms, seg_id, np.int64)),
+            "df": pa.array(df_t.astype(np.int32)),
+            "ttf": pa.array(ttf_t.astype(np.int64)),
+            "docs": lists(toff, pa.array(p_doc.astype(np.int64))),
+            "tfs": lists(toff, pa.array(tfs.astype(np.int32))),
+            "dls": lists(toff, pa.array(p_dl.astype(np.int32))),
+            "blocks": codec.block_maxes_all(p_doc, tfs, p_dl, tstart, df_t),
+        }
+        if positions:
+            cols["pos"] = lists(toff, lists(poff, pa.array(
+                posv.astype(np.int32))))
+            if payv is not None:
+                cols["pay"] = lists(toff, lists(poff, pa.array(
+                    payv.astype(np.float32))))
+        yield pa.RecordBatch.from_arrays(
+            [cols[f.name].cast(f.type) if f.name in cols
+             else pa.nulls(n_terms, f.type) for f in _ARROW_SCHEMA],
+            schema=_ARROW_SCHEMA)
 
     return fn
 
 
-def _first_varint(buf: bytes) -> tuple[int, int]:
-    """(value, encoded byte length) of the first varint in buf."""
-    v = 0
-    shift = 0
-    for i, b in enumerate(buf):
-        v |= (b & 0x7F) << shift
-        if b < 0x80:
-            return v, i + 1
-        shift += 7
-    return v, len(buf)
-
-
-def _varint1(v: int) -> bytes:
-    """Varint-encode ONE value (the spliced first doc-delta of each
-    appended blob) without the numpy round-trip codec.varint_encode
-    pays — this runs once per (term x segment) boundary in the merge."""
-    out = bytearray()
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    return bytes(out)
-
-
-def _merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: merge ALL (field, term, merge_group) runs of one
-    key-sorted shuffle partition.
-
-    Bulk-merge fast path (SegmentMerger's raw-copy append analogue,
-    SegmentMerger.cs:801-848): doc_ids are assigned from partition-offset
-    bases, so segments in seg_id order hold DISJOINT ASCENDING doc ranges
-    — a term's merged posting list is the byte CONCATENATION of its
-    per-segment blobs, with only the first doc-delta varint of each
-    subsequent blob re-spliced (new delta = first_doc - prev_last_doc).
-    tf/dl blobs and per-doc position runs concatenate unchanged; block
-    metadata lists concatenate (block sizes become irregular, which the
-    readers handle by locating blocks via last_doc, not a fixed stride).
-    No decompress/recompress of postings volume happens at all.
-
-    Groups whose segment doc ranges are NOT monotone (e.g. compaction of
-    out-of-order NRT segment sets) fall back to a full decode-merge via
-    codec.merge_postings — correctness never depends on the fast path.
-    """
-    parts = list(batches)  # an empty shuffle partition yields NO batches
-    pdf = pd.concat(parts, ignore_index=True) if parts else None
-    if pdf is None or len(pdf) == 0:
-        yield pd.DataFrame(columns=[f.name for f in SEGMENT_SCHEMA])
-        return
-
-    n_rows = len(pdf)
-    fld = pdf["field"].to_numpy()
-    trm = pdf["term"].to_numpy()
-    mg = pdf["merge_group"].to_numpy(np.int64)
-    dfs = pdf["df"].to_numpy(np.int64)
-    ttfs = pdf["ttf"].to_numpy(np.int64)
-    docs_bl = [bytes(b) for b in pdf["docs_blob"]]
-    tfs_bl = [bytes(b) for b in pdf["tfs_blob"]]
-    dls_bl = [bytes(b) for b in pdf["dls_blob"]]
-    pos_bl = [bytes(b) if b is not None else b"" for b in pdf["pos_blob"]]
-    pay_bl = ([bytes(b) if b is not None else b"" for b in pdf["pay_blob"]]
-              if "pay_blob" in pdf.columns  # pre-payload segment frames
-              else [b""] * len(pdf))
-    blocks_l = [list(b) if b is not None else [] for b in pdf["blocks"]]
-    first_doc = [(_first_varint(b)[0] if b else -1) for b in docs_bl]
-    first_len = [(_first_varint(b)[1] if b else 0) for b in docs_bl]
-    last_doc = [(bl[-1]["last_doc"] if bl else -1) for bl in blocks_l]
-
-    new_grp = np.ones(n_rows, bool)
-    new_grp[1:] = ((fld[1:] != fld[:-1]) | (trm[1:] != trm[:-1])
-                   | (mg[1:] != mg[:-1]))
-    bounds = np.flatnonzero(new_grp).tolist() + [n_rows]
-
-    out: dict[str, list] = {k: [] for k in (
-        "field", "term", "seg_id", "df", "ttf", "docs_blob", "tfs_blob",
-        "dls_blob", "pos_blob", "pay_blob", "blocks")}
-
-    for gi in range(len(bounds) - 1):
-        s, e = bounds[gi], bounds[gi + 1]
-        rows = range(s, e)
-        monotone = all(first_doc[r] > last_doc[r - 1]
-                       for r in range(s + 1, e))
-        if monotone:
-            dparts = [docs_bl[s]]
-            for r in range(s + 1, e):
-                delta = first_doc[r] - last_doc[r - 1]
-                dparts.append(_varint1(delta) + docs_bl[r][first_len[r]:])
-            has_pos = all(len(pos_bl[r]) > 0 or ttfs[r] == 0 for r in rows)
-            has_pay = all(len(pay_bl[r]) > 0 or ttfs[r] == 0 for r in rows)
-            out["docs_blob"].append(b"".join(dparts))
-            out["tfs_blob"].append(b"".join(tfs_bl[s:e]))
-            out["dls_blob"].append(b"".join(dls_bl[s:e]))
-            out["pos_blob"].append(b"".join(pos_bl[s:e]) if has_pos else b"")
-            # fixed-width payload stream: plain concat in segment order
-            out["pay_blob"].append(b"".join(pay_bl[s:e]) if has_pay else b"")
-            out["df"].append(int(dfs[s:e].sum()))
-            out["ttf"].append(int(ttfs[s:e].sum()))
-            blk: list = []
-            for r in rows:
-                blk.extend(blocks_l[r])
-            out["blocks"].append(blk)
-        else:
-            m = codec.merge_postings([
-                {"docs_blob": docs_bl[r], "tfs_blob": tfs_bl[r],
-                 "dls_blob": dls_bl[r], "pos_blob": pos_bl[r],
-                 "pay_blob": pay_bl[r]}
-                for r in rows])
-            for k in ("df", "ttf", "docs_blob", "tfs_blob", "dls_blob",
-                      "pos_blob", "pay_blob", "blocks"):
-                out[k].append(m[k])
-        out["field"].append(fld[s])
-        out["term"].append(trm[s])
-        out["seg_id"].append(int(mg[s]))
-
-    yield pd.DataFrame({
-        "field": out["field"], "term": out["term"],
-        "seg_id": np.asarray(out["seg_id"], np.int64),
-        "df": np.asarray(out["df"], np.int32),
-        "ttf": np.asarray(out["ttf"], np.int64),
-        "docs_blob": out["docs_blob"], "tfs_blob": out["tfs_blob"],
-        "dls_blob": out["dls_blob"], "pos_blob": out["pos_blob"],
-        "pay_blob": out["pay_blob"], "blocks": out["blocks"],
-    })
+# A merge group's parts, sorted by first doc.  Their doc ranges are
+# disjoint in the common case (doc ids come from range-partitioned bases
+# and each doc lives in one segment), and the merged list is then the
+# plain concatenation — SegmentMerger's raw-copy append
+# (SegmentMerger.cs:801-848).  Overlapping ranges (compaction of NRT
+# segment sets) take a doc-ordered merge and recompute their blocks.
+_DISJOINT = ("size(parts) < 2 OR forall(sequence(1, size(parts) - 1), "
+             "i -> parts[i].first > element_at(parts[i - 1].docs, -1))")
+_CONCAT = ("named_struct('docs', flatten(parts.docs), "
+           "'tfs', flatten(parts.tfs), 'dls', flatten(parts.dls), "
+           "'pos', flatten(parts.pos), 'pay', flatten(parts.pay), "
+           "'blocks', flatten(parts.blocks))")
+# one struct per posting, sorted by doc; bound once to z by a one-element
+# transform so the sort runs once per row.  A part without positions
+# (payloads) makes the merged pos (pay) NULL, as flatten does above.
+_INTERLEAVE = (
+    "element_at(transform(array(array_sort(flatten(transform(parts, p -> "
+    "transform(p.docs, (d, j) -> named_struct('doc', d, 'tf', p.tfs[j], "
+    "'dl', p.dls[j], 'pos', p.pos[j], 'pay', p.pay[j])))))), z -> "
+    "named_struct('docs', z.doc, 'tfs', z.tf, 'dls', z.dl, "
+    "'pos', if(forall(parts, p -> p.pos IS NOT NULL), z.pos, NULL), "
+    "'pay', if(forall(parts, p -> p.pay IS NOT NULL), z.pay, NULL), "
+    "'blocks', " + codec.block_maxes_sql("z.doc", "z.tf", "z.dl") + ")), 1)")
 
 
 def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
@@ -461,27 +377,39 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
     The shuffle key (field, term, merge_group) spreads every term's
     postings across partitions AND merge groups — the salted two-stage
     combine of SURVEY §4.2: no single reducer ever sees more than fan_in
-    sub-lists of a hot term. The merge itself runs one vectorized kernel
-    per shuffle partition (not per term).
+    sub-lists of a hot term.  The merge itself is a JVM aggregate: the
+    group's parts sorted by first doc, then concatenated (see _DISJOINT).
+    Block runs concatenate too, so block sizes become irregular; readers
+    locate blocks by last_doc, not by a fixed stride.
 
     num_partitions is pinned EXPLICITLY: with a bare repartition(cols),
-    AQE's partition coalescing sees a byte-small compressed-blob exchange
-    and collapses the wave onto 1-2 cores (measured: waves ran SLOWER on
-    more cores); an explicit count keeps the merge cluster-wide."""
+    AQE's partition coalescing sees a byte-small exchange and collapses
+    the wave onto 1-2 cores; an explicit count keeps the merge
+    cluster-wide."""
     if num_partitions is None:
         num_partitions = segments.sparkSession.sparkContext.defaultParallelism
-    grouped = segments.withColumn(
-        "merge_group", (F.col("seg_id") / fan_in).cast("long"))
-    return (
-        grouped.repartition(num_partitions, "field", "term", "merge_group")
-        .sortWithinPartitions("field", "term", "merge_group", "seg_id")
-        .mapInPandas(_merge_partition, SEGMENT_SCHEMA)
+    grouped = (
+        segments.withColumn("merge_group",
+                            (F.col("seg_id") / fan_in).cast("long"))
+        .repartition(num_partitions, "field", "term", "merge_group")
+        .groupBy("field", "term", "merge_group")
+        .agg(F.sort_array(F.collect_list(F.struct(
+            F.col("docs")[0].alias("first"), "seg_id", "docs", "tfs", "dls",
+            "pos", "pay", "blocks"))).alias("parts"),
+            F.sum("df").cast("int").alias("df"),
+            F.sum("ttf").alias("ttf"))
+        .withColumn("m", F.expr(
+            f"if({_DISJOINT}, {_CONCAT}, {_INTERLEAVE})"))
     )
+    return grouped.select(
+        "field", "term", F.col("merge_group").alias("seg_id"), "df", "ttf",
+        *[F.col(f"m.{c}").alias(c)
+          for c in ("docs", "tfs", "dls", "pos", "pay", "blocks")])
 
 
 @dataclass
 class SegmentedIndex:
-    """Compressed-postings index, drop-in queryable via plans/lowering.
+    """Columnar-postings index, drop-in queryable via plans/lowering.
 
     Exposes the same surface as builder.InvertedIndex (postings / n_docs /
     avgdl / stored / id_col / fields / term_stats / cache)."""
@@ -509,113 +437,57 @@ class SegmentedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        """Decoded relational view (field, term, doc_id, tf, dl, positions).
+        """Relational view (field, term, doc_id, tf, dl, positions).
 
-        Decode is a scalar Arrow UDF in the projection, so Catalyst pushes
-        (field, term) predicates below it — only matching blobs decompress."""
+        An explode over the segment rows' arrays, so Catalyst pushes
+        (field, term) predicates below the Generate — only matching
+        posting lists are expanded."""
         if self._postings is None:
-            dec = _decode_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"),
-                    F.col("dls_blob"), F.col("pos_blob"))
-            self._postings = (
-                self.segments
-                .withColumn("_p", F.explode(F.arrays_zip(
-                    z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                    z["dls"].alias("dl"), z["pos"].alias("positions"))))
-                .select("field", "term",
-                        F.col("_p.doc_id").alias("doc_id"),
-                        F.col("_p.tf").alias("tf"),
-                        F.col("_p.dl").alias("dl"),
-                        F.col("_p.positions").alias("positions"))
-            )
+            self._postings = _exploded(self.segments, _POS)
         return self._postings
 
     @property
     def postings_nopos(self) -> DataFrame:
-        """Positions-free decoded view (field, term, doc_id, tf, dl).
+        """Positions-free view (field, term, doc_id, tf, dl).
 
-        Term/boolean/range scoring never reads positions; skipping the
-        .prx decode (the nested array<array<int>> is the dominant decode +
-        Arrow-transfer cost) is the reference's omitTf/lazy-prox behavior
-        (SegmentTermDocs vs SegmentTermPositions split)."""
+        Term/boolean/range scoring never reads positions; column pruning
+        keeps the pos column out of the scan — the reference's
+        omitTf/lazy-prox behavior (SegmentTermDocs vs SegmentTermPositions
+        split)."""
         if self._postings_nopos is None:
-            dec = _decode_nopos_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"), F.col("dls_blob"))
-            self._postings_nopos = (
-                self.segments
-                .withColumn("_p", F.explode(F.arrays_zip(
-                    z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                    z["dls"].alias("dl"))))
-                .select("field", "term",
-                        F.col("_p.doc_id").alias("doc_id"),
-                        F.col("_p.tf").alias("tf"),
-                        F.col("_p.dl").alias("dl"))
-            )
+            self._postings_nopos = _exploded(self.segments, ())
         return self._postings_nopos
 
     @property
     def postings_payloads(self) -> DataFrame:
-        """Decoded view WITH per-position payloads
+        """View WITH per-position payloads
         (field, term, doc_id, tf, dl, positions, payloads) — the
-        Payload*Query read path.  Same decode-below-predicate shape as
-        `postings`; payloads is null for terms indexed without them."""
+        Payload*Query read path (TermPositions.GetPayload,
+        SegmentTermPositions.cs:213-236).  payloads is null for terms
+        indexed without them."""
         if self._postings_pay is None:
-            dec = _decode_pay_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"),
-                    F.col("dls_blob"), F.col("pos_blob"), F.col("pay_blob"))
-            self._postings_pay = (
-                self.segments
-                .withColumn("_p", F.explode(F.arrays_zip(
-                    z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                    z["dls"].alias("dl"), z["pos"].alias("positions"),
-                    z["pay"].alias("payloads"))))
-                .select("field", "term",
-                        F.col("_p.doc_id").alias("doc_id"),
-                        F.col("_p.tf").alias("tf"),
-                        F.col("_p.dl").alias("dl"),
-                        F.col("_p.positions").alias("positions"),
-                        F.col("_p.payloads").alias("payloads"))
-            )
+            self._postings_pay = _exploded(self.segments, _POS + _PAY)
         return self._postings_pay
 
     def postings_for_terms(self, term_frame: DataFrame,
                            positions: bool = False) -> DataFrame:
         """Postings for a dynamic term set with term_frame's extra columns
         riding along.  The broadcast join lands on the SEGMENT rows —
-        i.e. BELOW the decode UDF — so only the matching terms' blobs ever
-        decompress (the term-dictionary seek, TermInfosReader.cs:243-308),
+        i.e. BELOW the explode — so only the matching terms' lists are
+        expanded (the term-dictionary seek, TermInfosReader.cs:243-308),
         no matter that the term set is data-dependent."""
         extra = [c for c in term_frame.columns if c not in ("field", "term")]
-        blob_cols = ["docs_blob", "tfs_blob", "dls_blob"] + (
-            ["pos_blob"] if positions else [])
-        # project segments down to the blob columns first: metadata columns
-        # (df, ttf, blocks) would collide with term_frame extras like df
-        seg = (self.segments.select("field", "term", *blob_cols)
+        # project segments down to the posting columns first: metadata
+        # columns (df, ttf, blocks) would collide with term_frame extras
+        seg = (self.segments
+               .select("field", "term", "docs", "tfs", "dls",
+                       *(["pos"] if positions else []))
                .join(F.broadcast(term_frame), ["field", "term"]))
-        if positions:
-            dec = _decode_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"),
-                    F.col("dls_blob"), F.col("pos_blob"))
-            zipped = F.arrays_zip(
-                z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                z["dls"].alias("dl"), z["pos"].alias("positions"))
-            out_cols = ["doc_id", "tf", "dl", "positions"]
-        else:
-            dec = _decode_nopos_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"), F.col("dls_blob"))
-            zipped = F.arrays_zip(
-                z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                z["dls"].alias("dl"))
-            out_cols = ["doc_id", "tf", "dl"]
-        return (
-            seg.withColumn("_p", F.explode(zipped))
-            .select("field", "term", *extra,
-                    *[F.col(f"_p.{c}").alias(c) for c in out_cols])
-        )
+        return _exploded(seg, _POS if positions else (), keep=extra)
 
     def term_vectors(self) -> DataFrame:
         """Forward index (doc_id, field, vec: array<struct<term, tf>>) —
-        full decode + one shuffle; materialize once per index generation
+        full explode + one shuffle; materialize once per index generation
         (TermVectorsWriter.cs analogue; serves MoreLikeThis without a
         per-query posting-table scan)."""
         return (
@@ -624,7 +496,7 @@ class SegmentedIndex:
         )
 
     def term_stats(self) -> DataFrame:
-        """Term dictionary straight from segment rows — no decode needed.
+        """Term dictionary straight from segment rows — no posting read.
         Cached: vocabulary-scale rows, re-read by every multi-term
         expansion (the .tii + DoubleBarrelLRUCache analogue,
         TermInfosReader.cs:290-296)."""
@@ -644,8 +516,8 @@ class SegmentedIndex:
         (src/contrib/Core/Index/FieldEnumerator.cs: String/Int/...
         enumerators over a field's term dictionary, optionally walking
         TermDocs per term).  At Spark scale the enumerator IS a sorted
-        DataFrame, not a cursor: term-dictionary rows only (no blob
-        decode) unless include_docs pulls the posting docs, and
+        DataFrame, not a cursor: term-dictionary rows only (no posting
+        read) unless include_docs pulls the posting docs, and
         numeric= casts the term for the typed variants.
 
         Scale note: include_docs collect_lists each term's doc ids into
@@ -699,7 +571,7 @@ class SegmentedIndex:
 
     def with_deletes(self, tombstones: DataFrame) -> "SegmentedIndex":
         """Register deletes: the relational paths anti-join the tombstone
-        frame; blob-kernel paths (WAND, expunge) consume the per-segment
+        frame; the Python kernels (WAND, expunge) consume the per-segment
         delete bitmaps from delete_frames() — the .del file analogue."""
         t = tombstones.select(F.col(self.id_col).alias("doc_id")
                               if self.id_col in tombstones.columns
@@ -764,9 +636,8 @@ class SegmentedIndex:
              stored: DataFrame | None = None) -> "SegmentedIndex":
         with open(os.path.join(path, "stats.json")) as f:
             meta = json.load(f)
-        seg = spark.read.parquet(os.path.join(path, "segments"))
-        if "pay_blob" not in seg.columns:  # pre-payload on-disk layout
-            seg = seg.withColumn("pay_blob", F.lit(b""))
+        seg = _require_columnar(
+            spark.read.parquet(os.path.join(path, "segments")), path)
         return cls(spark=spark,
                    segments=seg,
                    stats=IndexStats(meta["n_docs"], meta["total_tokens"]),
@@ -774,100 +645,38 @@ class SegmentedIndex:
                    fields=tuple(meta["fields"]))
 
 
-_DECODE_NOPOS_SCHEMA = T.StructType([
-    T.StructField("docs", T.ArrayType(T.LongType())),
-    T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("dls", T.ArrayType(T.IntegerType())),
-])
+_POS = (("pos", "positions"),)
+_PAY = (("pay", "payloads"),)
 
 
-def _decode_nopos_udf():
-    @F.pandas_udf(_DECODE_NOPOS_SCHEMA)
-    def dec(docs_b: pd.Series, tfs_b: pd.Series,
-            dls_b: pd.Series) -> pd.DataFrame:
-        docs_o, tfs_o, dls_o = [], [], []
-        for db, tb, lb in zip(docs_b, tfs_b, dls_b):
-            d, t, l, _ = codec.decode_postings(bytes(db), bytes(tb),
-                                               bytes(lb), b"")
-            docs_o.append(d.tolist())
-            tfs_o.append(t.tolist())
-            dls_o.append(l.tolist())
-        return pd.DataFrame({"docs": docs_o, "tfs": tfs_o, "dls": dls_o})
-    return dec
+def _exploded(seg: DataFrame, extra: tuple = (),
+              keep: list[str] = ()) -> DataFrame:
+    """One row per posting: explode(arrays_zip(docs, tfs, dls, *extra)).
+    extra = (segment column, view name) pairs; a NULL one (a field
+    indexed without positions or payloads) is zipped as an empty array,
+    so its value is null per posting instead of the NULL zip dropping
+    the whole list."""
+    zipped = F.arrays_zip(
+        F.col("docs").alias("doc_id"), F.col("tfs").alias("tf"),
+        F.col("dls").alias("dl"),
+        *[F.coalesce(F.col(c), F.array().cast(SEGMENT_SCHEMA[c].dataType))
+          .alias(name) for c, name in extra])
+    names = ["doc_id", "tf", "dl"] + [name for _, name in extra]
+    return (seg.select("field", "term", *keep, F.explode(zipped).alias("_p"))
+            .select("field", "term", *keep,
+                    *[F.col(f"_p.{n}").alias(n) for n in names]))
 
 
-_DECODE_SCHEMA = T.StructType([
-    T.StructField("docs", T.ArrayType(T.LongType())),
-    T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("dls", T.ArrayType(T.IntegerType())),
-    T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
-])
-
-
-def _decode_udf():
-    @F.pandas_udf(_DECODE_SCHEMA)
-    def dec(docs_b: pd.Series, tfs_b: pd.Series, dls_b: pd.Series,
-            pos_b: pd.Series) -> pd.DataFrame:
-        docs_o, tfs_o, dls_o, pos_o = [], [], [], []
-        for db, tb, lb, pb in zip(docs_b, tfs_b, dls_b, pos_b):
-            d, t, l, p = codec.decode_postings(
-                bytes(db), bytes(tb), bytes(lb), bytes(pb) if pb else b"")
-            docs_o.append(d.tolist())
-            tfs_o.append(t.tolist())
-            dls_o.append(l.tolist())
-            if p is not None:
-                starts = np.concatenate([[0], np.cumsum(t)[:-1]])
-                pos_o.append([p[s:s + c].tolist()
-                              for s, c in zip(starts, t)])
-            else:
-                pos_o.append(None)
-        return pd.DataFrame({"docs": docs_o, "tfs": tfs_o,
-                             "dls": dls_o, "pos": pos_o})
-    return dec
-
-
-_DECODE_PAY_SCHEMA = T.StructType([
-    T.StructField("docs", T.ArrayType(T.LongType())),
-    T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("dls", T.ArrayType(T.IntegerType())),
-    T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
-    T.StructField("pay", T.ArrayType(T.ArrayType(T.FloatType()))),
-])
-
-
-def _decode_pay_udf():
-    """Positions + per-position payloads (the TermPositions.GetPayload
-    read path, src/Lucene.Net/Index/SegmentTermPositions.cs:213-236):
-    payload floats are a fixed-width stream aligned with the position
-    stream, sliced per doc by tf."""
-    @F.pandas_udf(_DECODE_PAY_SCHEMA)
-    def dec(docs_b: pd.Series, tfs_b: pd.Series, dls_b: pd.Series,
-            pos_b: pd.Series, pay_b: pd.Series) -> pd.DataFrame:
-        docs_o, tfs_o, dls_o, pos_o, pay_o = [], [], [], [], []
-        for db, tb, lb, pb, yb in zip(docs_b, tfs_b, dls_b, pos_b, pay_b):
-            d, t, l, p = codec.decode_postings(
-                bytes(db), bytes(tb), bytes(lb), bytes(pb) if pb else b"")
-            docs_o.append(d.tolist())
-            tfs_o.append(t.tolist())
-            dls_o.append(l.tolist())
-            # per-doc None (not a NULL top-level array) when absent:
-            # arrays_zip of a NULL array is NULL and the explode would
-            # silently drop the whole posting list
-            if p is not None:
-                starts = np.concatenate([[0], np.cumsum(t)[:-1]])
-                pos_o.append([p[s:s + c].tolist()
-                              for s, c in zip(starts, t)])
-                y = np.frombuffer(bytes(yb), "<f4") if yb else None
-                pay_o.append([y[s:s + c].tolist()
-                              for s, c in zip(starts, t)]
-                             if y is not None and len(y) == len(p)
-                             else [None] * len(d))
-            else:
-                pos_o.append([None] * len(d))
-                pay_o.append([None] * len(d))
-        return pd.DataFrame({"docs": docs_o, "tfs": tfs_o, "dls": dls_o,
-                             "pos": pos_o, "pay": pay_o})
-    return dec
+def _require_columnar(seg: DataFrame, path: str) -> DataFrame:
+    """Refuse the pre-columnar layout (VInt blobs in docs_blob/...): it
+    has no posting arrays, and reading it would fail with an opaque
+    missing-column error deep in a query plan."""
+    if "docs_blob" in seg.columns:
+        raise ValueError(
+            f"{path} holds segments in the old blob layout (docs_blob/"
+            f"tfs_blob/dls_blob/pos_blob); this version reads columnar "
+            f"postings only — rebuild the index from its source documents")
+    return seg
 
 
 # --------------------------------------------------------------- build API
@@ -894,14 +703,13 @@ def build_segmented_index(
 
     keyword_cols: {field: column} indexed NOT_ANALYZED (whole value = one
     term, tf=1, dl=1) alongside the analyzed text field — one extra
-    mapInPandas stage per keyword field over the SAME partitioning, so
-    every field's segment s covers the same doc range and the bulk-merge
-    byte-concat fast path still applies per (field, term).
+    mapInArrow stage per keyword field over the SAME partitioning, so
+    every field's segment s covers the same doc range and the merge
+    concatenates per (field, term).
 
     fan_in=None (default) merges in ONE wave straight to target_segments —
     optimal for a one-shot batch build, where every geometric wave would
-    re-decode/re-encode the full postings volume (measured: each wave
-    costs more than the invert itself). Pass fan_in (e.g. the reference's
+    re-shuffle the full postings volume. Pass fan_in (e.g. the reference's
     mergeFactor 10, LogMergePolicy.cs:56) for incremental/NRT compaction
     where bounded fan-in and intermediate commits matter.
 
@@ -922,8 +730,8 @@ def build_segmented_index(
     # Fan narrow inputs out: a single-file parquet source would otherwise
     # serialize the invert onto one core AND produce one giant segment.
     # Range-partitioning by doc_id keeps per-segment doc ranges disjoint
-    # and ascending with seg_id — the precondition for the byte-concat
-    # bulk-merge fast path (SegmentMerger.cs:801-848 analogue).
+    # — the precondition for the concatenating merge (SegmentMerger.cs:
+    # 801-848 analogue).
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartitionByRange(par, id_col)
@@ -931,14 +739,14 @@ def build_segmented_index(
     # analyzer: a callable text -> [(term, pos)] overriding the standard
     # chain (the Analyzer extension point, SURVEY §2.12 — Whitespace /
     # Letter / LowerCase tokenizers in analysis.tokenizers plug in here).
-    seg = docs.select(*cols).mapInPandas(
+    seg = docs.select(*cols).mapInArrow(
         _invert_partition(field_name, id_col, text_col, lang_col, positions,
                           fold=fold_ascii, analyzer=analyzer,
                           position_increment_gap=position_increment_gap),
         SEGMENT_SCHEMA,
     )
     for kfld, ksrc in (keyword_cols or {}).items():
-        kw = docs.select(id_col, ksrc).mapInPandas(
+        kw = docs.select(id_col, ksrc).mapInArrow(
             _invert_partition(kfld, id_col, ksrc, None, positions,
                               keyword=True),
             SEGMENT_SCHEMA,
@@ -966,9 +774,9 @@ def build_segmented_index(
             # resume at the newest committed wave; earlier waves (possibly
             # already expired by the retention policy) are never replayed
             wave = latest
-            seg = spark.read.parquet(
-                os.path.join(checkpoint_dir, f"wave_{latest:03d}",
-                             "segments"))
+            wdir = os.path.join(checkpoint_dir, f"wave_{latest:03d}")
+            seg = _require_columnar(
+                spark.read.parquet(os.path.join(wdir, "segments")), wdir)
             n = seg.select("seg_id").distinct().count()
             # When the pointer selected a generation LOWER than stale
             # committed wave dirs left behind (the snapshot-copied-over-
@@ -1033,8 +841,8 @@ def update_documents(
     ExpungeDeletes) — so the updated index answers queries exactly like
     `build_segmented_index(old_corpus ∪ new_rows).with_deletes(old_ids)`,
     which is what the test asserts.  Tombstoned postings stay in the
-    segment bytes until an explicit expunge rewrite (merge waves
-    byte-concatenate and do not filter)."""
+    segment rows until an explicit expunge rewrite (merge waves
+    concatenate and do not filter)."""
     spark = index.spark
     id_col = index.id_col
     field_name = index.fields[0]
@@ -1064,12 +872,12 @@ def update_documents(
 
     max_seg = (index.segments.agg(F.max("seg_id")).collect()[0][0] or 0)
     cols = [id_col, text_col] + ([lang_col] if lang_col else [])
-    seg2 = fresh.select(*cols).mapInPandas(
+    seg2 = fresh.select(*cols).mapInArrow(
         _invert_partition(field_name, id_col, text_col, lang_col, positions),
         SEGMENT_SCHEMA,
     )
     for kfld, ksrc in (keyword_cols or {}).items():
-        kw = fresh.select(id_col, ksrc).mapInPandas(
+        kw = fresh.select(id_col, ksrc).mapInArrow(
             _invert_partition(kfld, id_col, ksrc, None, positions,
                               keyword=True),
             SEGMENT_SCHEMA,
@@ -1244,12 +1052,12 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
     tombstoned doc_ids removed, drop posting lists that become empty,
     clear the tombstone set, and recompute stats over the LIVE set — df
     and N reflect the deletes only after this point, exactly like the
-    reference.  Deletes reach the rewrite kernel as PER-SEGMENT bitmap
-    blobs joined on seg_id (index/deletes.py — the .del design of
+    reference.  Deletes reach the rewrite kernel as PER-SEGMENT bitmaps
+    joined on seg_id (index/deletes.py — the .del design of
     src/Lucene.Net/Util/BitVector.cs:37-192); no tombstone id ever
     touches the driver.  Rows whose posting list contains no dead doc
-    pass through byte-identical (no re-encode); rows of delete-free
-    segments skip the decode entirely."""
+    pass through unchanged; rows of delete-free segments never leave the
+    JVM."""
     if index.tombstones is None:
         return index
     n_dead = index.tombstones.count()  # scalar aggregate, never the ids
@@ -1258,67 +1066,35 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
         return replace(index, tombstones=None, _del_frames=None)
     field_name = index.fields[0]
     from .deletes import keep_mask
+    names = [f.name for f in SEGMENT_SCHEMA]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in (
-                "field", "term", "seg_id", "df", "ttf", "docs_blob",
-                "tfs_blob", "dls_blob", "pos_blob", "pay_blob", "blocks")}
+            rows = []
             for row in pdf.itertuples(index=False):
-                if row.del_blob is None:  # segment holds no deletes
-                    out["field"].append(row.field)
-                    out["term"].append(row.term)
-                    out["seg_id"].append(int(row.seg_id))
-                    out["df"].append(int(row.df))
-                    out["ttf"].append(int(row.ttf))
-                    out["docs_blob"].append(bytes(row.docs_blob))
-                    out["tfs_blob"].append(bytes(row.tfs_blob))
-                    out["dls_blob"].append(bytes(row.dls_blob))
-                    out["pos_blob"].append(
-                        bytes(row.pos_blob) if row.pos_blob else b"")
-                    out["pay_blob"].append(
-                        bytes(row.pay_blob) if row.pay_blob else b"")
-                    out["blocks"].append(
-                        list(row.blocks) if row.blocks is not None else [])
-                    continue
-                docs, tfs, dls, pos = codec.decode_postings(
-                    bytes(row.docs_blob), bytes(row.tfs_blob),
-                    bytes(row.dls_blob),
-                    bytes(row.pos_blob) if row.pos_blob else b"")
-                pay = bytes(row.pay_blob) if row.pay_blob else b""
-                hit = ~keep_mask(docs, row.del_lo, row.del_kind,
+                docs = np.asarray(row.docs, np.int64)
+                keep = keep_mask(docs, row.del_lo, row.del_kind,
                                  row.del_blob)
-                if not hit.any():
-                    enc = {"df": int(row.df), "ttf": int(row.ttf),
-                           "docs_blob": bytes(row.docs_blob),
-                           "tfs_blob": bytes(row.tfs_blob),
-                           "dls_blob": bytes(row.dls_blob),
-                           "pos_blob": (bytes(row.pos_blob)
-                                        if row.pos_blob else b""),
-                           "pay_blob": pay,
-                           "blocks": (list(row.blocks)
-                                      if row.blocks is not None else [])}
-                else:
-                    keep = ~hit
-                    if not keep.any():
-                        continue  # whole posting list was deleted docs
-                    tok_keep = np.repeat(keep, tfs)
-                    pk = pos[tok_keep] if pos is not None else None
-                    enc = codec.encode_postings(
-                        docs[keep], tfs[keep], dls[keep], pk)
-                    enc["pay_blob"] = (
-                        np.frombuffer(pay, "<f4")[tok_keep]
-                        .astype("<f4").tobytes() if pay else b"")
-                out["field"].append(row.field)
-                out["term"].append(row.term)
-                out["seg_id"].append(int(row.seg_id))
-                for k in ("df", "ttf", "docs_blob", "tfs_blob",
-                          "dls_blob", "pos_blob", "pay_blob", "blocks"):
-                    out[k].append(enc[k])
-            yield pd.DataFrame(out, columns=[f.name for f in SEGMENT_SCHEMA])
+                if keep.all():
+                    rows.append(tuple(getattr(row, c) for c in names))
+                    continue
+                if not keep.any():
+                    continue  # whole posting list was deleted docs
+                tfs = np.asarray(row.tfs, np.int32)[keep]
+                dls = np.asarray(row.dls, np.int32)[keep]
+                pos, pay = (None if v is None else list(np.asarray(
+                    v, object)[keep]) for v in (row.pos, row.pay))
+                rows.append((row.field, row.term, row.seg_id,
+                             int(keep.sum()), int(tfs.sum()), docs[keep],
+                             tfs, dls, pos, pay,
+                             codec.block_maxes(docs[keep], tfs, dls)))
+            yield pd.DataFrame(rows, columns=names)
 
     joined = index.segments.join(index.delete_frames(), "seg_id", "left")
-    seg2 = joined.mapInPandas(kernel, SEGMENT_SCHEMA).cache()
+    seg2 = (joined.where(F.col("del_blob").isNull()).select(*names)
+            .unionByName(joined.where(F.col("del_blob").isNotNull())
+                         .mapInPandas(kernel, SEGMENT_SCHEMA))
+            .cache())
     tt = (seg2.where(F.col("field") == field_name)
           .agg(F.sum("ttf")).collect()[0][0])
     stats = IndexStats(n_docs=index.stats.n_docs - int(n_dead),
@@ -1350,13 +1126,11 @@ def _commit_wave(spark: SparkSession, seg: DataFrame, ckpt: str, wave: int,
     row = committed.agg(
         F.count("*").alias("rows"),
         F.countDistinct("seg_id").alias("n_segments"),
-        F.sum(F.octet_length("docs_blob") + F.octet_length("tfs_blob")
-              + F.octet_length("dls_blob")
-              + F.octet_length("pos_blob")).alias("postings_bytes"),
+        F.sum("df").alias("postings"),
     ).collect()[0]
     info = {"wave": wave, "rows": int(row["rows"]),
             "n_segments": int(row["n_segments"]),
-            "postings_bytes": int(row["postings_bytes"] or 0)}
+            "postings": int(row["postings"] or 0)}
     with open(marker, "w") as f:
         json.dump(info, f)
     # maintain the segments.gen pointer (core writes it at every commit;

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..functions.bm25 import B, K1, SCORE_DECIMALS
-from . import codec
 
 
 def _idf(df: int, n: int) -> float:
@@ -55,7 +54,7 @@ _HIT_SCHEMA = T.StructType([
 
 def _segment_kernel(term_weights: dict[str, float], avgdl: float, k: int):
     """applyInPandas kernel: WAND top-k within one segment's query-term
-    posting rows (columns: term, docs_blob, tfs_blob, dls_blob, blocks)."""
+    posting rows (columns: term, docs, tfs, dls, blocks)."""
 
     from .deletes import keep_mask
 
@@ -66,11 +65,11 @@ def _segment_kernel(term_weights: dict[str, float], avgdl: float, k: int):
             w = term_weights.get(row.term)
             if w is None:
                 continue
-            docs, tfs, dls, _ = codec.decode_postings(
-                bytes(row.docs_blob), bytes(row.tfs_blob),
-                bytes(row.dls_blob), b"")
+            docs = np.asarray(row.docs, np.int64)
+            tfs = np.asarray(row.tfs, np.int64)
+            dls = np.asarray(row.dls, np.int64)
             if has_del and row.del_blob is not None:
-                # the deletedDocs.Get check at decode time
+                # the deletedDocs.Get check at read time
                 # (SegmentTermDocs.cs) — dead docs never enter the
                 # bound/score passes, so k needs NO over-fetch
                 live = keep_mask(docs, row.del_lo, row.del_kind,
@@ -157,12 +156,12 @@ def wand_topk(index, term_boosts: list[tuple[str, float]], k: int = 10,
     SegmentedIndex. Rank-identical to Searcher.search(Bool(should=...)),
     including deletes: each segment's delete bitmap (index/deletes.py,
     the .del file analogue) joins the query-term segment rows on seg_id
-    and is applied INSIDE the kernel at decode time — the deletedDocs.Get
-    check of SegmentTermDocs.cs — so dead docs never enter the scoring
-    passes and each segment emits an exact live top-k (no over-fetch, no
-    global tombstone count anywhere in the plan).  Global df comes from
-    the same term-dictionary lookup the Searcher scores with
-    (Searcher.term_dfs).
+    and is applied INSIDE the kernel as it reads the postings — the
+    deletedDocs.Get check of SegmentTermDocs.cs — so dead docs never enter
+    the scoring passes and each segment emits an exact live top-k (no
+    over-fetch, no global tombstone count anywhere in the plan).  Global
+    df comes from the same term-dictionary lookup the Searcher scores
+    with (Searcher.term_dfs).
     """
     from ..plans.lowering import Searcher
 
@@ -178,7 +177,7 @@ def wand_topk(index, term_boosts: list[tuple[str, float]], k: int = 10,
         return index.spark.createDataFrame([], _HIT_SCHEMA)
     seg = index.segments.where(
         (F.col("field") == field) & F.col("term").isin(sorted(weights))
-    ).select("seg_id", "term", "docs_blob", "tfs_blob", "dls_blob", "blocks")
+    ).select("seg_id", "term", "docs", "tfs", "dls", "blocks")
     del_t = index.delete_frames() if hasattr(index, "delete_frames") else None
     if del_t is not None:
         seg = seg.join(del_t, "seg_id", "left")

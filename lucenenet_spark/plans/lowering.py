@@ -95,8 +95,8 @@ class Searcher:
     @property
     def _postings_nopos(self) -> DataFrame:
         """Positions-free postings view when the index offers one (the
-        segmented path skips the .prx decode entirely for term/boolean/
-        range scoring); falls back to the full view."""
+        segmented path never reads positions for term/boolean/range
+        scoring); falls back to the full view."""
         p = getattr(self.index, "postings_nopos", None)
         return p if p is not None else self.index.postings
 
@@ -115,7 +115,7 @@ class Searcher:
         """Global df per (field, term), 0 when absent — the CachedDfSource
         analogue (MultiSearcher.cs:87-118).  Pairs not seen before are
         fetched with ONE collect over the cached term dictionary
-        (index.term_stats(): segment-row metadata, no blob decode) and
+        (index.term_stats(): segment-row metadata, no posting read) and
         memoized.  The memo is safe because a Searcher is bound to one
         index generation: update/add_indexes/expunge derive a new index
         object, so a new Searcher sees the new df."""
@@ -159,7 +159,7 @@ class Searcher:
         SpanQueryFilter.cs:61-87): the DocIdSet PLUS per-doc match
         positions — one row per matching doc, ``positions`` =
         sorted [(start, end)] (SpanFilterResult.PositionInfo,
-        SpanFilterResult.cs:59-94).  Costs the position decode above a
+        SpanFilterResult.cs:59-94).  Costs the position read above a
         QueryWrapperFilter, exactly the trade the reference documents;
         deletes are applied like every filter path."""
         spans = self._live(self._spans(ast.rewrite(q)))
@@ -182,9 +182,9 @@ class Searcher:
         covered by one of the query's span matches.  The reference
         converts the query to spans (QueryToSpanQuery, :80-140 —
         ast.to_span_query here) and walks TermSpans collecting payload
-        bytes; here the span frame and the decoded payload view join on
+        bytes; here the span frame and the payload view join on
         (doc, position-inside-span) — one semi-join, positions only of
-        the query's own leaf terms ever decode.  Returns
+        the query's own leaf terms are ever read.  Returns
         (doc_id, payloads: array<float> in position order)."""
         sq = ast.to_span_query(ast.rewrite(q))
         spans = (self._live(self._spans(sq))
@@ -283,7 +283,7 @@ class Searcher:
         term_vectors: a (materialized) index.term_vectors() frame — the
         forward-index fast path: the source doc's terms come from ONE row
         lookup instead of a posting-table scan (which on the segmented
-        path would decode every blob of the field)."""
+        path would expand every posting list of the field)."""
         field = field or self.index.fields[0]
         n = self.index.n_docs
         if term_vectors is not None:
@@ -529,7 +529,7 @@ class Searcher:
 
     def _term_frame(self, q: ast.Term) -> DataFrame:
         """TermScorer: postings filter on (field, term), pushed below the
-        decode UDF, with the df from the once-per-query driver lookup
+        posting explode, with the df from the once-per-query driver lookup
         (term_dfs) folded in as a literal.  An absent term (df 0) is the
         empty result, built without a scan."""
         df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
@@ -589,9 +589,9 @@ class Searcher:
     def _term_clause_rows(self, clauses: list) -> DataFrame | None:
         """Tagged (doc_id, score, m, s) rows for MUST/SHOULD clauses that
         are all distinct Terms, from ONE postings scan: the OR'd
-        (field, term) predicate still lands below the decode UDF, and a
-        literal (field, term) -> (df, boost, m, s) map gives each posting
-        row its clause's df, boost and MUST/SHOULD tag.  None when a MUST
+        (field, term) predicate still lands below the posting explode, and
+        a literal (field, term) -> (df, boost, m, s) map gives each
+        posting row its clause's df, boost and MUST/SHOULD tag.  None when a MUST
         term is absent (nothing can match); absent SHOULD terms drop out."""
         dfs = self.term_dfs([(c.field, c.term) for c, _, _ in clauses])
         entries, pred = [], None
@@ -653,8 +653,8 @@ class Searcher:
                    ) -> DataFrame:
         """Positional postings of a query's (term, qoff) pairs with qoff
         attached.  The static (field, term IN ...) predicate comes FIRST so
-        Catalyst pushes it below the decode UDF (only the query terms'
-        blobs decompress); a literal term -> array<qoff> map + explode
+        Catalyst pushes it below the posting explode (only the query
+        terms' lists are expanded); a literal term -> array<qoff> map + explode
         then gives a term at k query positions k rows."""
         qoffs: dict[str, list[int]] = {}
         for t, o in pairs:
@@ -895,8 +895,8 @@ class Searcher:
         predicate, top-1024 by (sim desc, term asc) — broadcast-joins the
         postings ONCE, with the similarity boost riding as a column.  No
         driver collect, no per-term plan fan-out; on the segmented path
-        the join lands below the decode UDF so only candidate blobs
-        decompress (FuzzyTermEnum.cs:135-183 semantics, MultiTermQuery
+        the join lands below the posting explode so only candidate lists
+        are expanded (FuzzyTermEnum.cs:135-183 semantics, MultiTermQuery
         SCORING_BOOLEAN rewrite at plan scale)."""
         t = F.col("term")
         cand = self.index.term_stats().where(F.col("field") == q.field)
@@ -930,7 +930,7 @@ class Searcher:
     def _spans(self, q: ast.Query) -> DataFrame:
         """(doc_id, dl, s, e) span rows for a span query tree.  SpanTerm
         leaves carry a static (field, term) predicate, so on the segmented
-        path only the leaf terms' position blobs decompress; composites
+        path only the leaf terms' position lists are read; composites
         are joins/unions over those already-tiny frames."""
         if isinstance(q, ast.SpanTerm):
             p = self.index.postings.where(

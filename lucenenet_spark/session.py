@@ -44,7 +44,8 @@ def _local_dir() -> str:
 # IPIs to every core and the workers burn KERNEL time: measured on the
 # 500k-file invert at local[32] — 893 system-CPU-sec per pass (3.5x wall
 # blowup, bimodal) vs ~1 system-CPU-sec once large blocks are retained
-# and reused by the allocator (tools/diag_pids.py).
+# and reused by the allocator (per-worker system time read from
+# /proc/<pid>/stat during the invert).
 _MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": str(128 << 20),
     "MALLOC_TRIM_THRESHOLD_": str(256 << 20),

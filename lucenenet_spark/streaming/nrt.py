@@ -33,6 +33,7 @@ from ..index.segments import (
     SEGMENT_SCHEMA,
     SegmentedIndex,
     _invert_partition,
+    _require_columnar,
     merge_wave,
 )
 
@@ -56,7 +57,7 @@ def index_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
             f"batch id {batch_id} would overwrite compacted generation "
             f"{target}; compaction dirs must not share the stream id space")
     cols = [id_col, text_col] + ([lang_col] if lang_col else [])
-    seg = batch_df.select(*cols).mapInPandas(
+    seg = batch_df.select(*cols).mapInArrow(
         _invert_partition(field_name, id_col, text_col, lang_col, positions),
         SEGMENT_SCHEMA,
     ).withColumn("seg_id", F.col("seg_id") + F.lit(batch_id * SEG_STRIDE))
@@ -138,10 +139,8 @@ def load_nrt_index(spark: SparkSession, index_dir: str,
     }
     if not committed:
         raise FileNotFoundError(f"no committed batches under {index_dir}")
-    seg = spark.read.option("mergeSchema", "true").parquet(
-        *[committed[n] for n in sorted(committed)])
-    if "pay_blob" not in seg.columns:  # pre-payload on-disk layout
-        seg = seg.withColumn("pay_blob", F.lit(b""))
+    seg = _require_columnar(spark.read.option("mergeSchema", "true").parquet(
+        *[committed[n] for n in sorted(committed)]), index_dir)
     n_docs = total = 0
     field = "content"
     id_col = "doc_id"

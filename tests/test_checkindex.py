@@ -4,10 +4,8 @@ Mirrors test/Lucene.Net.Test/Index/TestCheckIndex.cs behaviorally."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
-from lucenenet_spark.index import codec
 from lucenenet_spark.index.checkindex import check_index
 
 
@@ -47,34 +45,32 @@ def test_corruption_detected(spark, seg_index):
     assert any("I2" in i[3] for i in report["issues"])
 
 
-def test_unsorted_docids_detected():
-    # codec-level: hand-build a decreasing docID list and check I1 logic
-    docs = np.array([5, 3, 1])
-    tfs = np.array([1, 1, 1])
-    dls = np.array([4, 4, 4])
-    enc = codec.encode_postings(docs, tfs, dls)
-    d, _, _, _ = codec.decode_postings(
-        enc["docs_blob"], enc["tfs_blob"], enc["dls_blob"])
-    # delta encoding of unsorted input round-trips wrapped (uint underflow),
-    # so the ascending invariant is exactly what catches it
-    assert not (np.diff(d) > 0).all() or not (d == docs).all()
+def test_unsorted_docids_detected(spark, seg_index):
+    # hand-build a segment row whose posting list is in decreasing docID
+    # order; I1 must flag it (and nothing else is wrong with it)
+    from dataclasses import replace
+
+    from lucenenet_spark.index.segments import SEGMENT_SCHEMA
+    row = {"field": "content", "term": "zzunsorted", "seg_id": 0, "df": 3,
+           "ttf": 3, "docs": [5, 3, 1], "tfs": [1, 1, 1], "dls": [4, 4, 4],
+           "pos": [[0], [0], [0]], "pay": None,
+           "blocks": [{"last_doc": 1, "max_tf": 1, "min_dl": 4}]}
+    broken = replace(seg_index, segments=spark.createDataFrame(
+        [row], SEGMENT_SCHEMA), _term_stats=None)
+    issues = [i[3] for i in check_index(broken)["issues"]]
+    assert any(i.startswith("I1") for i in issues), issues
 
 
 def test_i10_mixed_payload_coverage_flagged(spark):
     """add_indexes of a payload-carrying index with a plain one leaves a
-    term with heterogeneous pay_blob coverage; CheckIndex I10 flags it
-    (the next merge of that term would silently drop its payloads —
-    codec.merge_postings emits a RuntimeWarning when it actually does)."""
-    import warnings
-
-    import pytest as _pytest
+    term with heterogeneous payload coverage; CheckIndex I10 flags it
+    (the next merge of that term drops its payloads, as asserted below)."""
     from pyspark.sql import functions as F
 
     from lucenenet_spark.analysis.payloads import delimited_payload_analyzer
-    from lucenenet_spark.index import codec
     from lucenenet_spark.index.checkindex import check_index
     from lucenenet_spark.index.segments import (
-        add_indexes, build_segmented_index)
+        add_indexes, build_segmented_index, merge_wave)
 
     plain = build_segmented_index(
         spark, spark.createDataFrame([(0, "alpha beta")],
@@ -91,15 +87,12 @@ def test_i10_mixed_payload_coverage_flagged(spark):
     # each source index alone is homogeneous: no I10
     assert not any("I10" in i[3] for i in check_index(pay)["issues"])
 
-    # the degrade itself warns
-    parts = [{"docs_blob": bytes(r["docs_blob"]),
-              "tfs_blob": bytes(r["tfs_blob"]),
-              "dls_blob": bytes(r["dls_blob"]),
-              "pos_blob": bytes(r["pos_blob"]) if r["pos_blob"] else b"",
-              "pay_blob": bytes(r["pay_blob"]) if r["pay_blob"] else b""}
-             for r in both.segments.where(F.col("term") == "alpha")
-             .collect()]
-    with _pytest.warns(RuntimeWarning, match="discarding payloads"):
-        warnings.simplefilter("always")
-        merged = codec.merge_postings(parts)
-    assert merged["pay_blob"] == b""
+    # the degrade itself: merging the term keeps its postings and
+    # positions but not its payloads
+    alpha = F.col("term") == "alpha"
+    assert [r["pay"] is None for r in both.segments.where(alpha)
+            .orderBy("seg_id").collect()] == [True, False]
+    merged = merge_wave(both.segments, fan_in=8).where(alpha).collect()
+    assert len(merged) == 1
+    assert merged[0]["docs"] == [0, 10] and merged[0]["pos"] == [[0], [0]]
+    assert merged[0]["pay"] is None

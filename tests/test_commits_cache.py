@@ -145,7 +145,7 @@ def test_resume_drops_stale_waves_above_pointer(spark, corpus, tmp_path):
     corrupt.write.parquet(os.path.join(ck2, "wave_001", "segments"))
     with open(os.path.join(ck2, "wave_001", "_COMMITTED.json"), "w") as f:
         json.dump({"wave": 1, "rows": 0, "n_segments": 1,
-                   "postings_bytes": 0}, f)
+                   "postings": 0}, f)
     assert _latest_committed_wave(ck2) == 1
 
     resumed = build_segmented_index(spark, corpus, text_col="content",

@@ -1,5 +1,5 @@
 """Payload queries (Search/Payloads/, ~1.2k LoC in the reference):
-DelimitedPayloadTokenFilter analysis, the pay_blob codec path (build,
+DelimitedPayloadTokenFilter analysis, the pay column path (build,
 merge, expunge), and PayloadTerm/PayloadNear scoring vs hand-computed
 values on a fixture corpus."""
 
@@ -39,7 +39,7 @@ def test_delimited_parse_semantics():
 def pay_index(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     # 3 invert partitions -> 2 target segments: the build exercises the
-    # cross-segment k-way merge of pay_blob alongside pos_blob, and the
+    # cross-segment merge of pay alongside pos, and the
     # query path reads payloads across multiple segments
     return build_segmented_index(
         spark, df.repartition(3), text_col="text", id_col="doc_id",
@@ -121,7 +121,7 @@ def test_payload_near_scores(spark, pay_index):
 
 
 def test_payloads_survive_force_merge(spark, pay_index):
-    """pay_blob byte-concat / k-way merge parity: scores identical after
+    """pay concat / doc-ordered merge parity: scores identical after
     merging the 2-segment fixture down to one segment."""
     from dataclasses import replace
 
@@ -202,8 +202,9 @@ def test_checkindex_flags_misaligned_pay_blob(spark, pay_index):
     bad = replace(
         pay_index,
         segments=pay_index.segments.withColumn(
-            "pay_blob", F.when(F.col("term") == "cat",
-                               F.lit(b"\x00\x00")).otherwise(F.col("pay_blob"))),
+            "pay", F.when(F.col("term") == "cat",
+                          F.expr("transform(pay, p -> slice(p, 1, 0))"))
+            .otherwise(F.col("pay"))),
         _postings=None, _postings_nopos=None, _postings_pay=None,
         _term_stats=None)
     rep = check_index(bad)

@@ -4,8 +4,9 @@ Searcher.search resolves every (field, term) leaf's df with one lookup
 over the cached term dictionary (the CachedDfSource analogue,
 MultiSearcher.cs:87-118), memoized per Searcher; a Boolean query whose
 MUST/SHOULD clauses are all distinct Terms scores them in one posting
-scan.  These tests pin the Spark job budget of that plan and check every
-edge of the fused and driver-resolved paths against the OracleIndex."""
+scan.  These tests pin the Spark job budget of that plan, check every
+edge of the fused and driver-resolved paths against the OracleIndex, and
+check that the read path runs no Python worker."""
 
 from __future__ import annotations
 
@@ -105,6 +106,62 @@ def test_df_lookup_is_one_collect_and_memoized(spark, index, oracle):
     assert s.term_dfs(pairs) == {
         (f, t): len(oracle.post[f].get(t, {})) for f, t in pairs}
     assert jobs_of(spark, lambda: s.term_dfs(pairs[:2]), "qs-dfs-2") == 0
+
+
+# --------------------------------------------- no Python on the read path
+
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                "MapInArrow", "FlatMapGroupsInPandas", "ArrowWindowPython")
+
+
+def _plan_nodes(node):
+    """Every physical operator a query runs, depth first.  Walks through
+    adaptive plans and query stages, but not into the plan that filled a
+    cached relation (InMemoryTableScan is a leaf): that ran once, at
+    build time."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if name.endswith("QueryStage"):
+        yield from _plan_nodes(node.plan())
+        return
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.mark.parametrize("name,q", [
+    ("term", T("alpha")),
+    ("and2", ast.Bool(must=(T("alpha"), T("beta")))),
+    ("or4", ast.Bool(should=(T("alpha"), T("beta"), T("gamma"),
+                             T("delta")))),
+    ("phrase2", ast.Phrase(("alpha", "beta"), field="content")),
+    ("prefix", ast.Prefix("al", field="content")),
+    ("fuzzy", ast.Fuzzy("alpah", field="content")),
+])
+def test_read_path_runs_no_python(index, oracle, name, q):
+    """Postings are array columns exploded in the JVM: the executed plan
+    has no Python-worker node, and the (field, term) selection (a filter,
+    or the fuzzy candidate join) sits below every Generate, so only the
+    query terms' posting lists are expanded."""
+    hits = Searcher(index).search(q, 20)
+    assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
+        == oracle.top_k(q, 20)
+    nodes = list(_plan_nodes(hits._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n in nodes]
+    assert "InMemoryTableScan" in names, names
+    assert not [n for n in names
+                if any(p in n for p in PYTHON_NODES)], names
+    generates = [n for n in nodes if n.nodeName() == "Generate"]
+    assert generates, names
+    for g in generates:
+        below = [n.simpleString(1000) for n in _plan_nodes(g)][1:]
+        assert any((s.startswith("Filter") and "term#" in s
+                    and "field#" in s)
+                   or (s.startswith("BroadcastHashJoin") and "term#" in s)
+                   for s in below), below
 
 
 # ------------------------------------------------- fused Boolean path

@@ -1,73 +1,21 @@
-"""Compressed-segment path: codec round-trip, segmented==logical parity,
+"""Columnar-segment path: block metadata, segmented==logical parity,
 merge waves, checkpoint/resume, deterministic doc_ids.
 
 Mirrors the reference's index-format tests
 (test/Lucene.Net.Test/Index/TestSegmentTermDocs.cs, TestSegmentMerger.cs,
-TestMultiLevelSkipList.cs) at the behavioral level: encode/decode identity,
-merge preserves postings, query results invariant across physical layouts.
+TestMultiLevelSkipList.cs) at the behavioral level: merge preserves
+postings, block bounds hold, query results invariant across physical
+layouts and build variations.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from lucenenet_spark.index import codec
 
 # ------------------------------------------------------------------ codec
-
-
-@given(st.lists(st.integers(0, 2**62), max_size=300))
-@settings(max_examples=50, deadline=None)
-def test_varint_roundtrip(vals):
-    a = np.array(vals, dtype=np.uint64)
-    assert (codec.varint_decode(codec.varint_encode(a)) == a).all()
-
-
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 10**9), st.integers(1, 50), st.integers(1, 1000)),
-        max_size=200,
-        unique_by=lambda t: t[0],
-    )
-)
-@settings(max_examples=30, deadline=None)
-def test_postings_roundtrip(rows):
-    rows.sort()
-    docs = np.array([r[0] for r in rows], np.int64)
-    tfs = np.array([r[1] for r in rows], np.int64)
-    dls = np.array([r[2] for r in rows], np.int64)
-    rng = np.random.default_rng(int(tfs.sum()) if len(rows) else 0)
-    pos = (
-        np.concatenate([np.sort(rng.choice(5000, t, replace=False)) for t in tfs])
-        if len(rows)
-        else np.empty(0, np.int64)
-    )
-    e = codec.encode_postings(docs, tfs, dls, pos)
-    d, t, l, p = codec.decode_postings(
-        e["docs_blob"], e["tfs_blob"], e["dls_blob"], e["pos_blob"]
-    )
-    assert (d == docs).all() and (t == tfs).all() and (l == dls).all()
-    assert (p == pos).all()
-    assert e["df"] == len(rows) and e["ttf"] == int(tfs.sum())
-
-
-def test_merge_postings_interleaves():
-    a = codec.encode_postings(
-        np.array([1, 5, 9]), np.array([2, 1, 3]), np.array([10, 20, 30]),
-        np.array([0, 3, 7, 1, 2, 4]))
-    b = codec.encode_postings(
-        np.array([2, 6]), np.array([1, 1]), np.array([15, 25]),
-        np.array([5, 6]))
-    m = codec.merge_postings([a, b])
-    d, t, l, p = codec.decode_postings(
-        m["docs_blob"], m["tfs_blob"], m["dls_blob"], m["pos_blob"])
-    assert d.tolist() == [1, 2, 5, 6, 9]
-    assert t.tolist() == [2, 1, 1, 1, 3]
-    assert l.tolist() == [10, 15, 20, 25, 30]
-    assert p.tolist() == [0, 3, 5, 7, 6, 1, 2, 4]
 
 
 def test_block_maxes():
@@ -163,7 +111,7 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     a = build_segmented_index(spark, corpus, text_col="content",
                               lang_col="lang", fan_in=3, checkpoint_dir=ck)
     rows_a = sorted(
-        (r["field"], r["term"], r["seg_id"], bytes(r["docs_blob"]).hex())
+        (r["field"], r["term"], r["seg_id"], tuple(r["docs"]))
         for r in a.segments.collect()
     )
     # resume: rebuild with same checkpoint dir — must read committed waves,
@@ -171,7 +119,7 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     b = build_segmented_index(spark, corpus, text_col="content",
                               lang_col="lang", fan_in=3, checkpoint_dir=ck)
     rows_b = sorted(
-        (r["field"], r["term"], r["seg_id"], bytes(r["docs_blob"]).hex())
+        (r["field"], r["term"], r["seg_id"], tuple(r["docs"]))
         for r in b.segments.collect()
     )
     assert rows_a == rows_b
@@ -202,99 +150,200 @@ def test_content_sha_rollup(spark, corpus):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-# ------------------------------------------------- bulk-merge kernel (unit)
+# ------------------------------------------------- merge wave (unit)
 
 
-def _seg_row(field, term, mg, enc):
-    return {"field": field, "term": term, "merge_group": mg,
-            "df": enc["df"], "ttf": enc["ttf"], "seg_id": 0,
-            "docs_blob": enc["docs_blob"], "tfs_blob": enc["tfs_blob"],
-            "dls_blob": enc["dls_blob"], "pos_blob": enc["pos_blob"],
-            "blocks": enc["blocks"]}
+def _seg_row(term, seg_id, docs, tfs, dls, pos=None, pay=None):
+    return {"field": "content", "term": term, "seg_id": seg_id,
+            "df": len(docs), "ttf": int(sum(tfs)), "docs": list(docs),
+            "tfs": list(tfs), "dls": list(dls), "pos": pos, "pay": pay,
+            "blocks": codec.block_maxes(np.asarray(docs), np.asarray(tfs),
+                                        np.asarray(dls))}
 
 
-def _run_merge(rows):
-    import pandas as pd
-    from lucenenet_spark.index.segments import _merge_partition
-    out = list(_merge_partition(iter([pd.DataFrame(rows)])))
-    return pd.concat(out, ignore_index=True)
+def _run_merge(spark, rows, fan_in=8):
+    """merge_wave over hand-built segment rows -> {term: merged row}."""
+    from lucenenet_spark.index.segments import SEGMENT_SCHEMA, merge_wave
+
+    seg = spark.createDataFrame(rows, SEGMENT_SCHEMA)
+    return {r["term"]: r.asDict(recursive=True)
+            for r in merge_wave(seg, fan_in=fan_in).collect()}
 
 
-def test_bulk_merge_fastpath_equals_decode_merge():
-    """Disjoint-ascending segments: spliced byte concat must decode to the
-    same postings a full decode-merge produces (and the docs/tfs/dls blobs
-    are byte-identical to re-encoding the merged list)."""
+def _by_doc(rows):
+    """Reference merge: every part's postings re-sorted by doc."""
+    post = sorted((d, t, l, None if r["pos"] is None else r["pos"][i])
+                  for r in rows
+                  for i, (d, t, l) in enumerate(zip(r["docs"], r["tfs"],
+                                                    r["dls"])))
+    return [list(c) for c in zip(*post)]
+
+
+def test_bulk_merge_fastpath_equals_decode_merge(spark):
+    """Disjoint segments, given in scrambled seg_id order: the merge is the
+    concatenation in doc order, equal to a full re-sort, and the parts'
+    block runs concatenate unchanged (no recompute)."""
     rng = np.random.default_rng(7)
-    encs = []
-    base = 0
+    rows, base = [], 0
     for seg in range(4):
         n = int(rng.integers(1, 200))
         docs = base + np.sort(rng.choice(500, n, replace=False))
         base = int(docs[-1]) + 1 + int(rng.integers(0, 100))
         tfs = rng.integers(1, 9, n)
         dls = rng.integers(20, 400, n)
-        pos = np.concatenate(
-            [np.sort(rng.choice(4000, t, replace=False)) for t in tfs])
-        encs.append(codec.encode_postings(docs, tfs, dls, pos))
-    merged = _run_merge([_seg_row("content", "x", 0, e) for e in encs])
-    assert len(merged) == 1
-    row = merged.iloc[0]
-    ref = codec.merge_postings([
-        {k: e[k] for k in ("docs_blob", "tfs_blob", "dls_blob", "pos_blob")}
-        for e in encs])
-    d, t, l, p = codec.decode_postings(
-        row["docs_blob"], row["tfs_blob"], row["dls_blob"], row["pos_blob"])
-    rd, rt, rl, rp = codec.decode_postings(
-        ref["docs_blob"], ref["tfs_blob"], ref["dls_blob"], ref["pos_blob"])
-    assert (d == rd).all() and (t == rt).all() and (l == rl).all()
-    assert (p == rp).all()
-    assert int(row["df"]) == ref["df"] and int(row["ttf"]) == ref["ttf"]
-    # fast path concat is byte-identical for tf/dl/pos streams
-    assert bytes(row["tfs_blob"]) == ref["tfs_blob"]
-    assert bytes(row["dls_blob"]) == ref["dls_blob"]
-    assert bytes(row["pos_blob"]) == ref["pos_blob"]
-    # blocks: last_doc of final block matches, bounds cover all docs
-    assert row["blocks"][-1]["last_doc"] == int(d[-1])
+        pos = [sorted(rng.choice(4000, t, replace=False).tolist())
+               for t in tfs]
+        rows.append(_seg_row("x", 3 - seg, docs.tolist(), tfs.tolist(),
+                             dls.tolist(), pos))
+    got = _run_merge(spark, rows)["x"]
+    docs, tfs, dls, pos = _by_doc(rows)
+    assert got["docs"] == docs and got["tfs"] == tfs
+    assert got["dls"] == dls and got["pos"] == pos
+    assert got["df"] == len(docs) and got["ttf"] == sum(tfs)
+    assert got["pay"] is None
+    assert got["blocks"] == [b for r in rows for b in r["blocks"]]
+    assert got["seg_id"] == 0
 
 
-def test_bulk_merge_fallback_on_overlap():
-    """Overlapping doc ranges (out-of-order NRT compaction) take the
-    decode-merge fallback and still interleave correctly."""
-    a = codec.encode_postings(np.array([1, 50, 90]), np.array([1, 2, 1]),
-                              np.array([10, 10, 10]),
-                              np.array([3, 1, 4, 9]))
-    b = codec.encode_postings(np.array([5, 60]), np.array([1, 1]),
-                              np.array([12, 12]), np.array([2, 8]))
-    merged = _run_merge([_seg_row("content", "y", 0, a),
-                         _seg_row("content", "y", 0, b)])
-    d, t, l, p = codec.decode_postings(
-        merged.iloc[0]["docs_blob"], merged.iloc[0]["tfs_blob"],
-        merged.iloc[0]["dls_blob"], merged.iloc[0]["pos_blob"])
-    assert d.tolist() == [1, 5, 50, 60, 90]
-    assert t.tolist() == [1, 1, 2, 1, 1]
-    assert p.tolist() == [3, 2, 1, 4, 8, 9]
+def test_bulk_merge_fallback_on_overlap(spark):
+    """Overlapping doc ranges (out-of-order NRT compaction) interleave by
+    doc, positions and payloads travel with their doc, and the blocks are
+    recomputed exactly as the invert kernel lays them out."""
+    a = _seg_row("y", 0, [1, 50, 90], [1, 2, 1], [10, 10, 10],
+                 [[3], [1, 4], [9]], [[0.5], [1.0, 2.0], [3.0]])
+    b = _seg_row("y", 1, [5, 60], [1, 1], [12, 12], [[2], [8]],
+                 [[4.0], [5.0]])
+    got = _run_merge(spark, [a, b])["y"]
+    assert got["docs"] == [1, 5, 50, 60, 90]
+    assert got["tfs"] == [1, 1, 2, 1, 1]
+    assert got["dls"] == [10, 12, 10, 12, 10]
+    assert got["pos"] == [[3], [2], [1, 4], [8], [9]]
+    assert got["pay"] == [[0.5], [4.0], [1.0, 2.0], [5.0], [3.0]]
+    assert got["blocks"] == codec.block_maxes(
+        np.array(got["docs"]), np.array(got["tfs"]), np.array(got["dls"]))
+
+    # many blocks: two interleaved 300-posting lists
+    rng = np.random.default_rng(3)
+    rows = []
+    for seg, docs in enumerate((np.arange(0, 600, 2), np.arange(1, 600, 2))):
+        tfs = rng.integers(1, 9, len(docs))
+        dls = rng.integers(20, 400, len(docs))
+        rows.append(_seg_row("z", seg, docs.tolist(), tfs.tolist(),
+                             dls.tolist(), [[0]] * len(docs)))
+    got = _run_merge(spark, rows)["z"]
+    docs, tfs, dls, _ = _by_doc(rows)
+    assert got["docs"] == docs and got["tfs"] == tfs and got["dls"] == dls
+    assert len(got["blocks"]) == 5
+    assert got["blocks"] == codec.block_maxes(
+        np.array(docs), np.array(tfs), np.array(dls))
+
+    # a part indexed without positions/payloads: the merged list has none
+    c = _seg_row("y", 2, [7], [1], [9])
+    got = _run_merge(spark, [a, b, c])["y"]
+    assert got["docs"] == [1, 5, 7, 50, 60, 90]
+    assert got["pos"] is None and got["pay"] is None
 
 
-def test_bulk_merge_multi_term_groups():
-    """Rows for several (term, merge_group) keys in one partition merge
-    independently; single-row groups pass through unchanged."""
-    e1 = codec.encode_postings(np.array([2, 4]), np.array([1, 1]),
-                               np.array([5, 5]), np.array([0, 1]))
-    e2 = codec.encode_postings(np.array([10]), np.array([3]),
-                               np.array([8]), np.array([0, 2, 5]))
-    merged = _run_merge([
-        _seg_row("content", "aa", 0, e1),
-        _seg_row("content", "aa", 0, e2),
-        _seg_row("content", "bb", 1, e2),
-    ])
-    assert len(merged) == 2
-    aa = merged[merged["term"] == "aa"].iloc[0]
-    d, t, _, _ = codec.decode_postings(
-        aa["docs_blob"], aa["tfs_blob"], aa["dls_blob"], aa["pos_blob"])
-    assert d.tolist() == [2, 4, 10] and t.tolist() == [1, 1, 3]
-    bb = merged[merged["term"] == "bb"].iloc[0]
-    assert bytes(bb["docs_blob"]) == e2["docs_blob"]
-    assert int(bb["seg_id"]) == 1
+def test_bulk_merge_multi_term_groups(spark):
+    """Rows for several (term, merge_group) keys merge independently;
+    single-row groups pass through unchanged."""
+    e1 = ([2, 4], [1, 1], [5, 5], [[0], [1]])
+    e2 = ([10], [3], [8], [[0, 2, 5]])
+    got = _run_merge(spark, [_seg_row("aa", 0, *e1), _seg_row("aa", 1, *e2),
+                             _seg_row("bb", 8, *e2)])
+    assert sorted(got) == ["aa", "bb"]
+    assert got["aa"]["docs"] == [2, 4, 10] and got["aa"]["tfs"] == [1, 1, 3]
+    assert got["aa"]["pos"] == [[0], [1], [0, 2, 5]]
+    bb = _seg_row("bb", 1, *e2)
+    assert {k: got["bb"][k] for k in bb} == bb
+
+
+def _exploded(idx):
+    return sorted(tuple(r) for r in idx.postings.select(
+        "field", "term", "doc_id", "tf", "dl", "positions").collect())
+
+
+def _block_bounds_hold(idx):
+    """Every block's last_doc is its last posting's doc and its
+    (max_tf, min_dl) bound every posting inside it; df/ttf match."""
+    for r in idx.segments.collect():
+        docs, tfs, dls = (np.array(r[c]) for c in ("docs", "tfs", "dls"))
+        assert r["df"] == len(docs) and r["ttf"] == int(tfs.sum())
+        assert (np.diff(docs) > 0).all()
+        s = 0
+        for b in r["blocks"]:
+            e = int(np.searchsorted(docs, b["last_doc"], side="right"))
+            assert e > s and docs[e - 1] == b["last_doc"]
+            assert tfs[s:e].max() <= b["max_tf"]
+            assert dls[s:e].min() >= b["min_dl"]
+            s = e
+        assert s == len(docs), (r["term"], s, len(docs))
+
+
+def test_build_variations_give_identical_postings(spark, corpus, tmp_path):
+    """Metamorphic: a one-shot build, fan_in=2 merge waves and a save/load
+    round trip expose identical postings, and every block bound holds."""
+    from lucenenet_spark.index.segments import (SegmentedIndex,
+                                                build_segmented_index)
+
+    one = build_segmented_index(spark, corpus, text_col="content",
+                                lang_col="lang")
+    waves = build_segmented_index(spark, corpus, text_col="content",
+                                  lang_col="lang", fan_in=2)
+    one.save(str(tmp_path / "idx"))
+    back = SegmentedIndex.load(spark, str(tmp_path / "idx"))
+    want = _exploded(one)
+    assert len(want) > 1000
+    assert _exploded(waves) == want
+    assert _exploded(back) == want
+    for idx in (one, waves, back):
+        assert idx.n_segments() == 1
+        _block_bounds_hold(idx)
+
+
+def test_load_rejects_blob_layout(spark, tmp_path):
+    """An index saved in the pre-columnar blob layout fails fast with a
+    message naming the layout, from every reader: load, the NRT reader
+    and a checkpointed build resuming a wave."""
+    import json
+    import os
+
+    from lucenenet_spark.index.segments import (SegmentedIndex,
+                                                build_segmented_index)
+    from lucenenet_spark.streaming.nrt import load_nrt_index
+
+    old = spark.createDataFrame(
+        [("content", "x", 0, 1, 1, b"\x01", b"\x01", b"\x03", b"\x00",
+          [(1, 1, 3)])],
+        "field string, term string, seg_id long, df int, ttf long, "
+        "docs_blob binary, tfs_blob binary, dls_blob binary, "
+        "pos_blob binary, blocks array<struct<last_doc:long, max_tf:int, "
+        "min_dl:int>>")
+    path = str(tmp_path / "old")
+    old.write.parquet(os.path.join(path, "segments"))
+    with open(os.path.join(path, "stats.json"), "w") as f:
+        json.dump({"n_docs": 1, "total_tokens": 3, "fields": ["content"],
+                   "id_col": "doc_id"}, f)
+    with pytest.raises(ValueError, match="blob layout.*rebuild"):
+        SegmentedIndex.load(spark, path)
+
+    nrt = str(tmp_path / "nrt")
+    old.write.parquet(os.path.join(nrt, "segments", "batch_00000000"))
+    os.makedirs(os.path.join(nrt, "stats"))
+    with open(os.path.join(nrt, "stats", "batch_00000000.json"), "w") as f:
+        json.dump({"batch_id": 0, "n_docs": 1, "total_tokens": 3,
+                   "field": "content", "id_col": "doc_id"}, f)
+    with pytest.raises(ValueError, match="blob layout.*rebuild"):
+        load_nrt_index(spark, nrt)
+
+    # resuming a build from a blob-layout checkpoint wave
+    ck = str(tmp_path / "ckpt")
+    old.write.parquet(os.path.join(ck, "wave_000", "segments"))
+    with open(os.path.join(ck, "wave_000", "_COMMITTED.json"), "w") as f:
+        json.dump({"wave": 0, "rows": 1, "n_segments": 1}, f)
+    docs = spark.createDataFrame([(0, "x")], "doc_id long, content string")
+    with pytest.raises(ValueError, match="blob layout.*rebuild"):
+        build_segmented_index(spark, docs, checkpoint_dir=ck)
 
 
 def test_merge_shuffle_balanced_under_zipf(spark, corpus):
@@ -308,7 +357,7 @@ def test_merge_shuffle_balanced_under_zipf(spark, corpus):
     from lucenenet_spark.index.segments import (
         SEGMENT_SCHEMA, _invert_partition)
 
-    seg = corpus.select("doc_id", "content", "lang").mapInPandas(
+    seg = corpus.select("doc_id", "content", "lang").mapInArrow(
         _invert_partition("content", "doc_id", "content", "lang", True),
         SEGMENT_SCHEMA)
     n_parts = 8
@@ -327,8 +376,8 @@ def test_merge_shuffle_balanced_under_zipf(spark, corpus):
 
 def test_merge_wave_fallback_out_of_order_segments(spark, corpus):
     """Out-of-order segment sets (NRT compaction shape: a later segment
-    holds LOWER doc_ids) must take the decode-merge fallback inside a real
-    merge wave and still answer queries identically to a fresh build."""
+    holds LOWER doc_ids) must merge in doc order inside a real merge wave
+    and still answer queries identically to a fresh build."""
     from pyspark.sql import functions as F
 
     from lucenenet_spark.index.segments import (
@@ -402,14 +451,14 @@ def test_wave_retention_policy(spark, corpus, tmp_path):
     assert len(dirs) == 2  # waves 0..2 existed; only the last 2 survive
     assert dirs[-1] > dirs[0]
     rows_a = sorted(
-        (r["field"], r["term"], r["seg_id"], bytes(r["docs_blob"]).hex())
+        (r["field"], r["term"], r["seg_id"], tuple(r["docs"]))
         for r in a.segments.collect())
     # resume with the oldest wave expired: jumps to the newest commit
     b = build_segmented_index(spark, corpus, text_col="content",
                               lang_col="lang", fan_in=3, checkpoint_dir=ck,
                               retain_waves=2)
     rows_b = sorted(
-        (r["field"], r["term"], r["seg_id"], bytes(r["docs_blob"]).hex())
+        (r["field"], r["term"], r["seg_id"], tuple(r["docs"]))
         for r in b.segments.collect())
     assert rows_a == rows_b
 

@@ -14,7 +14,7 @@ TWO kernels, because the ceiling is kernel-dependent:
            optimistic ceiling (~0.79 for a 4x core jump round 1/2).
   real   — the ACTUAL _invert_partition segment kernel over the same
            deterministic corpus partitions the engine indexes: regex +
-           factorize + lexsort + varint encode, allocation-heavy. Its
+           factorize + lexsort + Arrow list build, allocation-heavy. Its
            ceiling is much lower (memory-bandwidth bound), and it — not
            the light kernel — is the honest denominator for the
            engine's 8->32 number (round-2 VERDICT compared against the
@@ -146,9 +146,12 @@ def _real_work(i: int) -> float:
 
     with open(os.path.join(CACHE_DIR, f"part_{i}.pkl"), "rb") as f:
         pdf = pickle.load(f)
+    import pyarrow as pa
+
     fn = _invert_partition("content", "doc_id", "content", "lang", True)
+    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
     t0 = time.time()
-    list(fn(iter([pdf])))
+    list(fn(iter([batch])))
     return time.time() - t0
 
 
@@ -180,129 +183,9 @@ def real_ceiling() -> dict:
                 best = rec
         res[workers] = best
     return {
-        "kernel": "REAL _invert_partition (regex+factorize+lexsort+varint)",
+        "kernel": "REAL _invert_partition (regex+factorize+lexsort+lists)",
         "mode": f"strong scaling: {REAL_FILES} files / {REAL_PARTS} parts, "
                 f"best of {REPS}, cores pinned",
-        "workers": res,
-        "eff_2_to_8": round(
-            res[8]["files_per_s"] / res[2]["files_per_s"] / 4.0, 3),
-        "eff_8_to_32": round(
-            res[32]["files_per_s"] / res[8]["files_per_s"] / 4.0, 3),
-        "cpu_inflation_2_to_8": round(
-            res[8]["task_sum_s"] / res[2]["task_sum_s"], 2),
-        "cpu_inflation_8_to_32": round(
-            res[32]["task_sum_s"] / res[8]["task_sum_s"], 2),
-    }
-
-
-# ---- merge kernel ---------------------------------------------------
-
-MERGE_CACHE = os.path.join(CACHE_DIR, "merge")
-
-
-def _gen_merge_part(i: int) -> str:
-    """Invert partition i and scatter its segment rows into 64 key-hashed
-    merge-input buckets (bucket files written per (invert part, bucket);
-    _merge_prep concatenates them afterwards)."""
-    import zlib
-
-    import pandas as pd
-
-    import pyspark
-
-    class _FakeCtx:
-        def partitionId(self):
-            return i
-
-    pyspark.TaskContext.get = staticmethod(lambda: _FakeCtx())
-    from lucenenet_spark.index.segments import _invert_partition
-
-    done = os.path.join(MERGE_CACHE, f"scatter_{i}.done")
-    if os.path.exists(done):
-        return done
-    with open(os.path.join(CACHE_DIR, f"part_{i}.pkl"), "rb") as f:
-        pdf = pickle.load(f)
-    fn = _invert_partition("content", "doc_id", "content", "lang", True)
-    seg = pd.concat(list(fn(iter([pdf]))), ignore_index=True)
-    seg["merge_group"] = 0
-    bucket = seg["term"].map(lambda t: zlib.crc32(t.encode()) % REAL_PARTS)
-    for b, grp in seg.groupby(bucket):
-        grp.to_pickle(os.path.join(MERGE_CACHE, f"b{b:02d}_from{i:02d}.pkl"))
-    with open(done, "w") as f:
-        f.write("ok")
-    return done
-
-
-def _merge_prep(b: int) -> str:
-    """Concatenate bucket b's scattered pieces into ONE key-sorted
-    merge-input frame — byte-identical shape to what one engine shuffle
-    partition hands _merge_partition."""
-    import glob
-
-    import pandas as pd
-
-    path = os.path.join(MERGE_CACHE, f"merged_in_{b:02d}.pkl")
-    if os.path.exists(path):
-        return path
-    pieces = sorted(glob.glob(os.path.join(MERGE_CACHE, f"b{b:02d}_from*")))
-    pdf = pd.concat([pd.read_pickle(p) for p in pieces], ignore_index=True)
-    pdf = pdf.sort_values(
-        ["field", "term", "merge_group", "seg_id"], kind="stable",
-        ignore_index=True)
-    pdf.to_pickle(path + ".tmp")
-    os.replace(path + ".tmp", path)
-    return path
-
-
-def _merge_work(b: int) -> float:
-    """One merge-input bucket through the REAL _merge_partition kernel;
-    returns kernel sec (excludes the pickle read)."""
-    import pandas as pd
-
-    from lucenenet_spark.index.segments import _merge_partition
-
-    pdf = pd.read_pickle(os.path.join(MERGE_CACHE, f"merged_in_{b:02d}.pkl"))
-    t0 = time.time()
-    list(_merge_partition(iter([pdf])))
-    return time.time() - t0
-
-
-def merge_ceiling() -> dict:
-    """Strong-scaling control for the OTHER half of the build: the
-    byte-concat merge kernel (memcpy-dense, low compute per byte) — its
-    bandwidth ceiling is what bounds the merge wave's scaling, just as
-    `real` bounds the invert stage's."""
-    os.makedirs(MERGE_CACHE, exist_ok=True)
-    with mp.Pool(os.cpu_count()) as p:  # untimed, full box
-        p.map(_gen_merge_part, range(REAL_PARTS))
-        p.map(_merge_prep, range(REAL_PARTS))
-
-    res = {}
-    for workers in LEVELS:
-        best = None
-        for _ in range(REPS):
-            load0 = _loadavg1()
-            _pin(workers)
-            t0 = time.time()
-            with mp.Pool(workers) as p:
-                durs = p.map(_merge_work, range(REAL_PARTS))
-            wall = time.time() - t0
-            _unpin()
-            rec = {
-                "wall_s": round(wall, 2),
-                "files_per_s": round(REAL_FILES / wall, 1),
-                "task_sum_s": round(sum(durs), 1),
-                "task_p50_s": round(sorted(durs)[len(durs) // 2], 2),
-                "task_max_s": round(max(durs), 2),
-                "loadavg_before": load0,
-            }
-            if best is None or rec["wall_s"] < best["wall_s"]:
-                best = rec
-        res[workers] = best
-    return {
-        "kernel": "REAL _merge_partition (byte-concat bulk merge)",
-        "mode": f"strong scaling: {REAL_FILES} files / {REAL_PARTS} "
-                f"key-hashed buckets, best of {REPS}, cores pinned",
         "workers": res,
         "eff_2_to_8": round(
             res[8]["files_per_s"] / res[2]["files_per_s"] / 4.0, 3),
@@ -318,19 +201,16 @@ def merge_ceiling() -> dict:
 def main() -> None:
     light = light_ceiling()
     real = real_ceiling()
-    merge = merge_ceiling()
     out = {
         "light": light,
         "real": real,
-        "merge": merge,
-        "note": ("`real` and `merge` are the honest ceilings for the "
-                 "engine's two build stages: the identical kernels with "
-                 "zero framework overhead collapse the same way at rising "
-                 "occupancy (shared memory bandwidth), so "
-                 "engine-vs-ceiling — not the raw pair ratio — is the "
-                 "meaningful number on this box.  The composite build "
-                 "ceiling at a level is the stage-time-weighted harmonic "
-                 "combination of the two."),
+        "note": ("`real` is the honest ceiling for the engine's invert "
+                 "stage: the identical kernel with zero framework "
+                 "overhead collapses the same way at rising occupancy "
+                 "(shared memory bandwidth), so engine-vs-ceiling — not "
+                 "the raw pair ratio — is the meaningful number on this "
+                 "box.  The merge runs in the JVM and has no Spark-free "
+                 "twin."),
     }
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/hw_ceiling.json", "w") as f:
