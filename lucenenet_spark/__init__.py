@@ -4,10 +4,10 @@ A from-scratch re-expression of the capabilities of Lucene.Net 3.0.3
 (reference surveyed in SURVEY.md) on the Spark DataFrame engine:
 
 - analysis/   : StandardAnalyzer-equivalent + code-aware tokenizers
-                (JVM column expressions AND Arrow pandas_udfs, proven equal)
-- index/      : inverted-index build (postings, doc stats), columnar
-                segments (posting lists as array columns) with block-max
-                metadata, salted JVM merge waves with lineage + resume
+                (pure-Python spec AND JVM column expressions, proven equal)
+- index/      : inverted-index build into columnar segments (posting
+                lists as array columns) with block-max metadata, salted
+                JVM merge waves with lineage + resume
 - plans/      : Query AST + lowering to DataFrame plans (the "Weight/Scorer"
                 layer re-expressed as joins/aggregations)
 - functions/  : BM25 scoring kernel (column expressions), text statistics

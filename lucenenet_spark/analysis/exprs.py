@@ -62,13 +62,3 @@ def is_indexed_token(tok: Column) -> Column:
 def indexed_tokens(text: Column) -> Column:
     """SURFACE tokens after stop/length removal (textstats spec)."""
     return F.filter(raw_tokens(text), is_indexed_token)
-
-
-def indexed_std_tokens(text: Column) -> Column:
-    """INDEX-spec tokens after stop/length removal (positions dropped)."""
-    return F.filter(standard_tokens(text), is_indexed_token)
-
-
-def doc_len(text: Column) -> Column:
-    """BM25 doc length = emitted-token count under the INDEX spec."""
-    return F.size(indexed_std_tokens(text))

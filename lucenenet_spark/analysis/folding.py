@@ -3,13 +3,12 @@
 ISOLatin1AccentFilter.cs).
 
 An explicit char map (the Latin-1 Supplement + Latin Extended-A subset the
-ISOLatin1 filter covers, single-char foldings) shared verbatim by four
+ISOLatin1 filter covers, single-char foldings) shared verbatim by three
 implementations so they fold identically:
 
   1. pure-Python str.translate (query-side + invert kernels)
-  2. Spark F.translate (JVM logical-build path)
+  2. Spark F.translate (the folded TermRange collation's term predicate)
   3. DuckDB translate(...) (oracle SQL, when a folded entry is wired)
-  4. pandas .str.translate (Arrow UDF path)
 
 Multi-char foldings of the reference (AE->AE ligature, ss for eszett,
 TH/th for thorn, OE/oe) are folded to their FIRST letter here — a
@@ -42,7 +41,7 @@ def fold_ascii_py(text: str) -> str:
 
 
 def fold_ascii_col(text: Column) -> Column:
-    """JVM-expression fold (logical build path, codegen-friendly)."""
+    """JVM-expression fold (term-dictionary predicates, codegen-friendly)."""
     return F.translate(text, FOLD_SRC, FOLD_DST)
 
 

@@ -1,8 +1,8 @@
 """Shingle (word n-gram) and NGram (char n-gram) analyzers.
 
 Re-creates contrib ShingleFilter and NGramTokenizer as `analyzer=`
-callables for build_segmented_index / build_inverted_index (the Analyzer
-extension point, SURVEY §2.12):
+callables for build_segmented_index (the Analyzer extension point,
+SURVEY §2.12):
 
 - shingle_analyzer: word n-grams over the standard chain
   (src/contrib/Analyzers/Shingle/ShingleFilter.cs). Faithful semantics:

@@ -3,13 +3,14 @@
 Re-creates the reference analysis chain (StandardTokenizer -> StandardFilter
 -> LowerCaseFilter -> StopFilter; reference:
 src/Lucene.Net/Analysis/Standard/StandardAnalyzer.cs:107-115) with
-simplified-but-exactly-specified token rules so that FOUR independent
+simplified-but-exactly-specified token rules so that THREE independent
 implementations agree token-for-token:
 
-  1. pure-Python (this module)                      -- oracle / tests
-  2. pandas vectorized (analysis/udfs.py)           -- Arrow UDF build path
-  3. Spark JVM column expressions (analysis/exprs.py) -- codegen query path
-  4. DuckDB SQL fragments (oracle/sqlgen.py)        -- driver correctness gate
+  1. pure-Python (this module)        -- oracle, tests, and the segment
+                                         invert kernel (index/segments.py)
+  2. Spark JVM column expressions     -- highlight / percolate / textstats
+     (analysis/exprs.py)
+  3. DuckDB SQL fragments (oracle/sqlgen.py) -- driver correctness gate
 
 Semantics (the spec):
 - standard analyzer: lowercase the text, tokens = maximal runs of [a-z0-9],
@@ -20,7 +21,7 @@ Semantics (the spec):
   removal KEEPS position holes (StopFilter with enablePositionIncrements,
   src/Lucene.Net/Analysis/StopFilter.cs:128-140) so phrase queries cannot
   match across a removed stopword.
-- doc_len (the BM25 norm, analogue of .nrm byte counts,
+- doc length (the BM25 norm, analogue of .nrm byte counts,
   src/Lucene.Net/Index/NormsWriter.cs:159-186) counts tokens EMITTED by the
   chain, i.e. after stop removal.
 - code analyzer (lang-keyed, the north-rule "code-aware tokenizer"):

@@ -26,9 +26,9 @@ Parquet's encoding and compression replace the reference's delta + VInt
 .frq/.prx streams, at rest and in the columnar cache; only the block-max
 skip metadata is format-specific (index/codec.py).
 
-Query-time: `postings` is an explode(arrays_zip(...)) view with the same
-schema as the logical path (field, term, doc_id, tf, dl, positions), so
-plans/lowering.Searcher runs unchanged; the (field, term) filter lands
+Query-time: `postings` is an explode(arrays_zip(...)) view with one row
+per posting (field, term, doc_id, tf, dl, positions), which
+plans/lowering.Searcher scores; the (field, term) filter lands
 BELOW the explode (term-dictionary seek analogue, TermInfosReader.cs:
 243-308 — only matching posting lists are expanded) and no Python worker
 runs on the read path.
@@ -38,8 +38,8 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
-from dataclasses import dataclass, field as dc_field
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field as dc_field, replace
 
 import numpy as np
 import pandas as pd
@@ -51,7 +51,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..analysis.tokenizers import tokenize
 from . import codec
-from .builder import IndexStats
 
 _BLOCK = T.StructType([
     T.StructField("last_doc", T.LongType(), False),
@@ -83,6 +82,33 @@ _ARROW_SCHEMA = to_arrow_schema(SEGMENT_SCHEMA)
 MERGE_FACTOR = 10  # LogMergePolicy.cs:56
 
 
+@dataclass
+class IndexStats:
+    n_docs: int
+    total_tokens: int
+
+    @property
+    def avgdl(self) -> float:
+        # total emitted tokens / total docs (docs with 0 tokens count in N)
+        return self.total_tokens / self.n_docs if self.n_docs else 0.0
+
+
+#: analyzer of a loaded index that was built with analyzer=: the callable
+#: is not saved, so the chain cannot be re-run
+_UNSAVED = object()
+
+
+@dataclass(frozen=True)
+class _Chain:
+    """The analysis chain a build ran its text field through, kept on the
+    index so update_documents inverts new documents the same way (an
+    updated index must equal a rebuild).  analyzer: the callable, None
+    for the built-in chain, or _UNSAVED."""
+    fold: bool = False
+    analyzer: Callable | object | None = None
+    gap: int = 0
+
+
 def _invert_partition(field_name: str, id_col: str, text_col: str,
                       lang_col: str | None, positions: bool,
                       keyword: bool = False, fold: bool = False,
@@ -111,8 +137,8 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
 
     keyword=True indexes the whole column value as ONE term with tf=1,
     dl=1, position 0 (KeywordAnalyzer, src/Lucene.Net/Analysis/
-    KeywordAnalyzer.cs) — identical semantics to the logical path's
-    keyword_cols."""
+    KeywordAnalyzer.cs) — what build_segmented_index's keyword_cols
+    index."""
 
     def _slow_accumulate(pdf, acc):
         term_chunks, doc_chunks, pos_chunks, tok_counts, pay_chunks = acc
@@ -345,6 +371,30 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
     return fn
 
 
+def _invert_frames(docs: DataFrame, field_name: str, id_col: str,
+                   text_col: str, lang_col: str | None, positions: bool,
+                   keyword_cols: dict[str, str] | None = None,
+                   chain: _Chain = _Chain()) -> DataFrame:
+    """Segment rows of `docs`, one segment per input partition: the text
+    field inverted through `chain`, unioned with one keyword invert per
+    keyword field over the SAME partitioning, so every field's segment s
+    covers the same doc range."""
+    cols = [id_col, text_col] + ([lang_col] if lang_col else [])
+    seg = docs.select(*cols).mapInArrow(
+        _invert_partition(field_name, id_col, text_col, lang_col, positions,
+                          fold=chain.fold, analyzer=chain.analyzer,
+                          position_increment_gap=chain.gap),
+        SEGMENT_SCHEMA,
+    )
+    for kfld, ksrc in (keyword_cols or {}).items():
+        seg = seg.unionByName(docs.select(id_col, ksrc).mapInArrow(
+            _invert_partition(kfld, id_col, ksrc, None, positions,
+                              keyword=True),
+            SEGMENT_SCHEMA,
+        ))
+    return seg
+
+
 # A merge group's parts, sorted by first doc.  Their doc ranges are
 # disjoint in the common case (doc ids come from range-partitioned bases
 # and each doc lives in one segment), and the merged list is then the
@@ -407,12 +457,18 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
           for c in ("docs", "tfs", "dls", "pos", "pay", "blocks")])
 
 
+#: SegmentedIndex fields derived from one generation's segment rows or
+#: tombstones; a new generation starts with all of them unset
+_DERIVED = ("_del_frames", "_postings", "_postings_nopos", "_postings_pay",
+            "_term_stats")
+
+
 @dataclass
 class SegmentedIndex:
-    """Columnar-postings index, drop-in queryable via plans/lowering.
+    """Columnar-postings index, queried through plans/lowering.Searcher.
 
-    Exposes the same surface as builder.InvertedIndex (postings / n_docs /
-    avgdl / stored / id_col / fields / term_stats / cache)."""
+    `stored` is the source table itself (the .fdt/.fdx analogue — in
+    Spark the doc store IS the source table, SURVEY.md §1.4)."""
 
     spark: SparkSession
     segments: DataFrame
@@ -426,6 +482,7 @@ class SegmentedIndex:
     _postings_nopos: DataFrame | None = dc_field(default=None, repr=False)
     _postings_pay: DataFrame | None = dc_field(default=None, repr=False)
     _term_stats: DataFrame | None = dc_field(default=None, repr=False)
+    _chain: _Chain = dc_field(default=_Chain(), repr=False)
 
     @property
     def n_docs(self) -> int:
@@ -578,7 +635,6 @@ class SegmentedIndex:
                               else F.col("doc_id"))
         if self.tombstones is not None:
             t = self.tombstones.unionByName(t).distinct()
-        from dataclasses import replace
         return replace(self, tombstones=t, _del_frames=None)
 
     def delete_frames(self) -> DataFrame | None:
@@ -614,6 +670,12 @@ class SegmentedIndex:
             self._del_frames = None
         return self
 
+    def _derive(self, **changes) -> "SegmentedIndex":
+        """The next index generation: `changes` applied and every cache
+        of this one (delete bitmaps, posting views, term stats) unset, to
+        be rebuilt on demand."""
+        return replace(self, **changes, **dict.fromkeys(_DERIVED))
+
     def n_segments(self) -> int:
         return self.segments.select("seg_id").distinct().count()
 
@@ -629,7 +691,10 @@ class SegmentedIndex:
             json.dump({"n_docs": self.stats.n_docs,
                        "total_tokens": self.stats.total_tokens,
                        "fields": list(self.fields),
-                       "id_col": self.id_col}, f)
+                       "id_col": self.id_col,
+                       "fold_ascii": self._chain.fold,
+                       "position_increment_gap": self._chain.gap,
+                       "analyzer": self._chain.analyzer is not None}, f)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
@@ -642,7 +707,11 @@ class SegmentedIndex:
                    segments=seg,
                    stats=IndexStats(meta["n_docs"], meta["total_tokens"]),
                    stored=stored, id_col=meta["id_col"],
-                   fields=tuple(meta["fields"]))
+                   fields=tuple(meta["fields"]),
+                   _chain=_Chain(
+                       fold=meta.get("fold_ascii", False),
+                       analyzer=_UNSAVED if meta.get("analyzer") else None,
+                       gap=meta.get("position_increment_gap", 0)))
 
 
 _POS = (("pos", "positions"),)
@@ -725,7 +794,6 @@ def build_segmented_index(
     (SnapshotDeletionPolicy-style keep-all).
     """
     field_name = field_name or text_col
-    cols = [id_col, text_col] + ([lang_col] if lang_col else [])
 
     # Fan narrow inputs out: a single-file parquet source would otherwise
     # serialize the invert onto one core AND produce one giant segment.
@@ -739,19 +807,10 @@ def build_segmented_index(
     # analyzer: a callable text -> [(term, pos)] overriding the standard
     # chain (the Analyzer extension point, SURVEY §2.12 — Whitespace /
     # Letter / LowerCase tokenizers in analysis.tokenizers plug in here).
-    seg = docs.select(*cols).mapInArrow(
-        _invert_partition(field_name, id_col, text_col, lang_col, positions,
-                          fold=fold_ascii, analyzer=analyzer,
-                          position_increment_gap=position_increment_gap),
-        SEGMENT_SCHEMA,
-    )
-    for kfld, ksrc in (keyword_cols or {}).items():
-        kw = docs.select(id_col, ksrc).mapInArrow(
-            _invert_partition(kfld, id_col, ksrc, None, positions,
-                              keyword=True),
-            SEGMENT_SCHEMA,
-        )
-        seg = seg.unionByName(kw)
+    chain = _Chain(fold=fold_ascii, analyzer=analyzer,
+                   gap=position_increment_gap)
+    seg = _invert_frames(docs, field_name, id_col, text_col, lang_col,
+                         positions, keyword_cols, chain)
 
     lineage = []
     wave = 0
@@ -815,7 +874,8 @@ def build_segmented_index(
 
     return SegmentedIndex(spark=spark, segments=seg, stats=stats,
                           stored=docs, id_col=id_col,
-                          fields=(field_name, *(keyword_cols or {})))
+                          fields=(field_name, *(keyword_cols or {})),
+                          _chain=chain)
 
 
 def update_documents(
@@ -842,8 +902,17 @@ def update_documents(
     `build_segmented_index(old_corpus ∪ new_rows).with_deletes(old_ids)`,
     which is what the test asserts.  Tombstoned postings stay in the
     segment rows until an explicit expunge rewrite (merge waves
-    concatenate and do not filter)."""
-    spark = index.spark
+    concatenate and do not filter).
+
+    New rows go through the build's analysis chain (fold_ascii, analyzer,
+    position_increment_gap).  A loaded index built with analyzer= cannot
+    be updated: the callable is not saved, and the default chain would
+    index the new rows differently — a ValueError, not a quiet mismatch."""
+    if index._chain.analyzer is _UNSAVED:
+        raise ValueError(
+            "this index was built with a custom analyzer= and loaded from "
+            "disk; the analyzer is not saved, so new documents cannot be "
+            "analyzed like the indexed ones — rebuild the index instead")
     id_col = index.id_col
     field_name = index.fields[0]
 
@@ -871,18 +940,8 @@ def update_documents(
     fresh = fresh.select(*keep)
 
     max_seg = (index.segments.agg(F.max("seg_id")).collect()[0][0] or 0)
-    cols = [id_col, text_col] + ([lang_col] if lang_col else [])
-    seg2 = fresh.select(*cols).mapInArrow(
-        _invert_partition(field_name, id_col, text_col, lang_col, positions),
-        SEGMENT_SCHEMA,
-    )
-    for kfld, ksrc in (keyword_cols or {}).items():
-        kw = fresh.select(id_col, ksrc).mapInArrow(
-            _invert_partition(kfld, id_col, ksrc, None, positions,
-                              keyword=True),
-            SEGMENT_SCHEMA,
-        )
-        seg2 = seg2.unionByName(kw)
+    seg2 = _invert_frames(fresh, field_name, id_col, text_col, lang_col,
+                          positions, keyword_cols, index._chain)
     seg2 = seg2.withColumn(
         "seg_id", F.col("seg_id") + F.lit(int(max_seg) + 1)).cache()
 
@@ -902,12 +961,9 @@ def update_documents(
     tomb = dead if index.tombstones is None else (
         index.tombstones.unionByName(dead).distinct())
 
-    from dataclasses import replace
     index.unpersist_derived()
-    return replace(index, segments=index.segments.unionByName(seg2),
-                   stats=stats, stored=stored_new, tombstones=tomb,
-                   _del_frames=None, _postings=None, _postings_nopos=None,
-                   _postings_pay=None, _term_stats=None)
+    return index._derive(segments=index.segments.unionByName(seg2),
+                         stats=stats, stored=stored_new, tombstones=tomb)
 
 
 def _latest_committed_wave(ckpt: str) -> int | None:
@@ -980,14 +1036,11 @@ def add_indexes(base: SegmentedIndex, *others: SegmentedIndex) -> SegmentedIndex
                     else tomb.unionByName(o.tombstones).distinct())
         n_docs += o.stats.n_docs
         total += o.stats.total_tokens
-    from dataclasses import replace
     base.unpersist_derived()
     for o in others:
         o.unpersist_derived()
-    return replace(base, segments=seg, stored=stored, tombstones=tomb,
-                   stats=IndexStats(n_docs=n_docs, total_tokens=total),
-                   _del_frames=None, _postings=None, _postings_nopos=None,
-                   _postings_pay=None, _term_stats=None)
+    return base._derive(segments=seg, stored=stored, tombstones=tomb,
+                        stats=IndexStats(n_docs=n_docs, total_tokens=total))
 
 
 def parallel_reader(*parts: SegmentedIndex,
@@ -1038,11 +1091,8 @@ def parallel_reader(*parts: SegmentedIndex,
                 stored = stored.join(
                     o.stored.select(base.id_col, *extra), base.id_col,
                     "left")
-    from dataclasses import replace
-    return replace(base, segments=seg, stored=stored, tombstones=tomb,
-                   fields=tuple(fields),
-                   _del_frames=None, _postings=None, _postings_nopos=None,
-                   _postings_pay=None, _term_stats=None)
+    return base._derive(segments=seg, stored=stored, tombstones=tomb,
+                        fields=tuple(fields))
 
 
 def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
@@ -1062,7 +1112,6 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
         return index
     n_dead = index.tombstones.count()  # scalar aggregate, never the ids
     if n_dead == 0:
-        from dataclasses import replace
         return replace(index, tombstones=None, _del_frames=None)
     field_name = index.fields[0]
     from .deletes import keep_mask
@@ -1104,12 +1153,9 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
         stored_new = stored_new.join(
             index.tombstones.withColumnRenamed("doc_id", index.id_col),
             index.id_col, "left_anti")
-    from dataclasses import replace
     index.unpersist_derived()
-    return replace(index, segments=seg2, stats=stats, stored=stored_new,
-                   tombstones=None, _del_frames=None, _postings=None,
-                   _postings_nopos=None, _postings_pay=None,
-                   _term_stats=None)
+    return index._derive(segments=seg2, stats=stats, stored=stored_new,
+                         tombstones=None)
 
 
 def _commit_wave(spark: SparkSession, seg: DataFrame, ckpt: str, wave: int,

@@ -204,12 +204,10 @@ class ShardedIndex:
                         else tomb.unionByName(o.tombstones))
             n_docs += o.stats.n_docs
             total += o.stats.total_tokens
-        self._union = replace(
-            base, segments=seg, stored=stored,
+        self._union = base._derive(
+            segments=seg, stored=stored,
             tombstones=None if tomb is None else tomb.distinct(),
-            stats=IndexStats(n_docs=n_docs, total_tokens=total),
-            _del_frames=None, _postings=None, _postings_nopos=None,
-            _postings_pay=None, _term_stats=None)
+            stats=IndexStats(n_docs=n_docs, total_tokens=total))
         return self._union
 
     def searcher(self, similarity=None):

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..functions.bm25 import B, K1, SCORE_DECIMALS
+from .segments import SegmentedIndex
 
 
 def _idf(df: int, n: int) -> float:
@@ -150,8 +151,8 @@ def _segment_kernel(term_weights: dict[str, float], avgdl: float, k: int):
     return fn
 
 
-def wand_topk(index, term_boosts: list[tuple[str, float]], k: int = 10,
-              field: str | None = None) -> DataFrame:
+def wand_topk(index: SegmentedIndex, term_boosts: list[tuple[str, float]],
+              k: int = 10, field: str | None = None) -> DataFrame:
     """Disjunctive (pure-SHOULD) BM25 top-k with block-max pruning over a
     SegmentedIndex. Rank-identical to Searcher.search(Bool(should=...)),
     including deletes: each segment's delete bitmap (index/deletes.py,
@@ -178,7 +179,7 @@ def wand_topk(index, term_boosts: list[tuple[str, float]], k: int = 10,
     seg = index.segments.where(
         (F.col("field") == field) & F.col("term").isin(sorted(weights))
     ).select("seg_id", "term", "docs", "tfs", "dls", "blocks")
-    del_t = index.delete_frames() if hasattr(index, "delete_frames") else None
+    del_t = index.delete_frames()
     if del_t is not None:
         seg = seg.join(del_t, "seg_id", "left")
     per_segment = (

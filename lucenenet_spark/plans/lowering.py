@@ -46,8 +46,8 @@ from pyspark.sql import types as T
 
 from ..functions import bm25
 from ..functions.similarity import BM25Similarity
-from ..index.builder import InvertedIndex
 from ..index.cache import SegmentCache
+from ..index.segments import SegmentedIndex
 from . import ast
 
 #: CachingSpanFilter backing store (CachingSpanFilter.cs `cache` keyed by
@@ -76,10 +76,10 @@ class TimeExceededError(RuntimeError):
 
 
 class Searcher:
-    """IndexSearcher analogue over an InvertedIndex
+    """IndexSearcher analogue over a SegmentedIndex
     (src/Lucene.Net/Search/IndexSearcher.cs)."""
 
-    def __init__(self, index: InvertedIndex, similarity=None):
+    def __init__(self, index: SegmentedIndex, similarity=None):
         """similarity: a functions.similarity strategy object
         (Searcher.SetSimilarity analogue, src/Lucene.Net/Search/
         Searcher.cs / Similarity.cs:560,644).  Default BM25; pass
@@ -92,21 +92,13 @@ class Searcher:
         self._filter_cache: dict = {}
         self._df_memo: dict[tuple[str, str], int] = {}
 
-    @property
-    def _postings_nopos(self) -> DataFrame:
-        """Positions-free postings view when the index offers one (the
-        segmented path never reads positions for term/boolean/range
-        scoring); falls back to the full view."""
-        p = getattr(self.index, "postings_nopos", None)
-        return p if p is not None else self.index.postings
-
     # ------------------------------------------------------------------ api
 
     def _live(self, frame: DataFrame) -> DataFrame:
         """Apply the deletes bitmap (anti-join on tombstones — the
         query-time .del check, src/Lucene.Net/Index/SegmentTermDocs.cs
         deletedDocs.Get)."""
-        t = getattr(self.index, "tombstones", None)
+        t = self.index.tombstones
         if t is None:
             return frame
         return frame.join(t, "doc_id", "left_anti")
@@ -298,7 +290,7 @@ class Searcher:
             )
         else:
             doc_terms = (
-                self._postings_nopos
+                self.index.postings_nopos
                 .where((F.col("field") == field)
                        & (F.col("doc_id") == doc_id))
                 .select("term", "tf").collect()
@@ -342,7 +334,7 @@ class Searcher:
 
         if isinstance(q, ast.Term):
             row = (
-                self._postings_nopos
+                self.index.postings_nopos
                 .where((F.col("field") == q.field)
                        & (F.col("term") == q.term)
                        & (F.col("doc_id") == doc_id))
@@ -444,47 +436,10 @@ class Searcher:
 
     def score_frame(self, q: ast.Query) -> DataFrame:
         """(doc_id, score) for every matching doc."""
-        if isinstance(q, ast.Term):
-            return self._term_frame(q)
-        if isinstance(q, ast.Bool):
-            return self._bool_frame(q)
-        if isinstance(q, ast.Phrase):
-            return self._phrase_frame(q)
-        if isinstance(q, ast.MultiPhrase):
-            return self._multiphrase_frame(q)
-        if isinstance(q, ast.NumericRange):
-            return self._numeric_range_frame(q)
-        if isinstance(q, ast.Boosting):
-            return self._boosting_frame(q)
-        if isinstance(q, ast.DedupByKey):
-            return self._dedup_frame(q)
-        if isinstance(q, ast.DisMax):
-            return self._dismax_frame(q)
-        if isinstance(q, ast.MatchAll):
-            return self._matchall_frame(q)
-        if isinstance(q, ast.ConstantScore):
-            return self._constant_frame(q.query, q.boost)
-        if isinstance(q, ast.Filtered):
-            return self._filtered_frame(q)
-        if isinstance(q, (ast.Prefix, ast.Wildcard, ast.TermRange, ast.Regex)):
-            return self._constant_frame(q, q.boost)
-        if isinstance(q, ast.Fuzzy):
-            return self._fuzzy_frame(q)
-        if isinstance(q, ast.FieldScore):
-            return self._field_score_frame(q)
-        if isinstance(q, ast.OrdFieldScore):
-            return self._ord_score_frame(q)
-        if isinstance(q, ast.CustomScore):
-            return self._custom_score_frame(q)
-        if isinstance(q, ast.SPAN_NODES):
-            return self._span_score_frame(q)
-        if isinstance(q, ast.PayloadTerm):
-            return self._payload_term_frame(q)
-        if isinstance(q, ast.PayloadNear):
-            return self._payload_near_frame(q)
-        if isinstance(q, ast.BooleanFilter):
-            return self._constant_frame(q, q.boost)
-        raise NotImplementedError(type(q).__name__)
+        build = _FRAME_BUILDERS.get(type(q))
+        if build is None:
+            raise NotImplementedError(type(q).__name__)
+        return build(self, q)
 
     def match_frame(self, q: ast.Query) -> DataFrame:
         """doc_id set only (Filter/DocIdSet analogue) — skips scoring where
@@ -535,7 +490,7 @@ class Searcher:
         df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
         if df == 0:
             return self._empty_frame()
-        p = self._postings_nopos.where(
+        p = self.index.postings_nopos.where(
             (F.col("field") == q.field) & (F.col("term") == q.term))
         score = self.sim.term_score(
             F.col("tf"), F.col("dl"), F.lit(df),
@@ -548,7 +503,7 @@ class Searcher:
         if stored is not None:
             ids = stored.select(F.col(self.index.id_col).alias("doc_id"))
         else:
-            ids = self._postings_nopos.select("doc_id").distinct()
+            ids = self.index.postings_nopos.select("doc_id").distinct()
         return ids.select("doc_id", F.lit(float(q.boost)).alias("score"))
 
     # ---- boolean composition: ONE groupBy(doc_id) over tagged clause rows
@@ -615,7 +570,7 @@ class Searcher:
         score = self.sim.term_score(
             F.col("tf"), F.col("dl"), meta["df"],
             self.index.n_docs, self.index.avgdl, meta["boost"])
-        return self._postings_nopos.where(pred).select(
+        return self.index.postings_nopos.where(pred).select(
             "doc_id", score.alias("score"), meta["m"].alias("m"),
             meta["s"].alias("s"))
 
@@ -878,7 +833,7 @@ class Searcher:
         """CONSTANT_SCORE_FILTER rewrite: no term enumeration, direct
         predicate on the postings term column -> distinct doc set."""
         return (
-            self._postings_nopos.where(
+            self.index.postings_nopos.where(
                 (F.col("field") == q.field) & self._term_predicate(q)
             )
             .select("doc_id")
@@ -965,7 +920,7 @@ class Searcher:
                        & (inc["s"] < exc["xe"]) & (inc["e"] > exc["xs"]))
             return inc.join(exc, overlap, "left_anti")
         if isinstance(q, ast.SpanNear):
-            if q.in_order and getattr(q, "spec", "lucene") == "lucene":
+            if q.in_order and q.spec == "lucene":
                 return self._span_near_walk(q)
             n = len(q.clauses)
             frames = []
@@ -1065,14 +1020,8 @@ class Searcher:
         return F.when(pay_cnt > 0, agg).otherwise(F.lit(1.0))
 
     def _payload_postings(self, field: str, term: str) -> DataFrame:
-        pview = getattr(self.index, "postings_payloads", None)
-        if pview is None:
-            raise TypeError(
-                "payload queries need a payload-carrying SegmentedIndex "
-                "(build with a payload-emitting analyzer, e.g. "
-                "analysis.payloads.delimited_payload_analyzer)")
-        return pview.where((F.col("field") == field)
-                           & (F.col("term") == term))
+        return self.index.postings_payloads.where(
+            (F.col("field") == field) & (F.col("term") == term))
 
     def _payload_positions(self, field: str, term: str) -> DataFrame:
         """(doc_id, dl, pos, pay) per occurrence of a term."""
@@ -1328,3 +1277,29 @@ class Searcher:
         return self.spark.range(1).select(
             F.lit(None).cast("long").alias("doc_id"),
             F.lit(None).cast("double").alias("score")).where(F.lit(False))
+
+
+#: score_frame's dispatch: AST node type -> builder(searcher, node)
+_FRAME_BUILDERS = {
+    ast.Term: Searcher._term_frame,
+    ast.Bool: Searcher._bool_frame,
+    ast.Phrase: Searcher._phrase_frame,
+    ast.MultiPhrase: Searcher._multiphrase_frame,
+    ast.NumericRange: Searcher._numeric_range_frame,
+    ast.Boosting: Searcher._boosting_frame,
+    ast.DedupByKey: Searcher._dedup_frame,
+    ast.DisMax: Searcher._dismax_frame,
+    ast.MatchAll: Searcher._matchall_frame,
+    ast.ConstantScore: lambda s, q: s._constant_frame(q.query, q.boost),
+    ast.Filtered: Searcher._filtered_frame,
+    ast.Fuzzy: Searcher._fuzzy_frame,
+    ast.FieldScore: Searcher._field_score_frame,
+    ast.OrdFieldScore: Searcher._ord_score_frame,
+    ast.CustomScore: Searcher._custom_score_frame,
+    ast.PayloadTerm: Searcher._payload_term_frame,
+    ast.PayloadNear: Searcher._payload_near_frame,
+    **dict.fromkeys((ast.Prefix, ast.Wildcard, ast.TermRange, ast.Regex,
+                     ast.BooleanFilter),
+                    lambda s, q: s._constant_frame(q, q.boost)),
+    **dict.fromkeys(ast.SPAN_NODES, Searcher._span_score_frame),
+}

@@ -28,11 +28,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..index.builder import IndexStats
 from ..index.segments import (
-    SEGMENT_SCHEMA,
+    IndexStats,
     SegmentedIndex,
-    _invert_partition,
+    _invert_frames,
     _require_columnar,
     merge_wave,
 )
@@ -56,10 +55,8 @@ def index_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
         raise RuntimeError(
             f"batch id {batch_id} would overwrite compacted generation "
             f"{target}; compaction dirs must not share the stream id space")
-    cols = [id_col, text_col] + ([lang_col] if lang_col else [])
-    seg = batch_df.select(*cols).mapInArrow(
-        _invert_partition(field_name, id_col, text_col, lang_col, positions),
-        SEGMENT_SCHEMA,
+    seg = _invert_frames(
+        batch_df, field_name, id_col, text_col, lang_col, positions,
     ).withColumn("seg_id", F.col("seg_id") + F.lit(batch_id * SEG_STRIDE))
 
     (seg.write.mode("overwrite")

@@ -10,7 +10,8 @@ import math
 
 import pytest
 
-from lucenenet_spark.index.builder import build_inverted_index
+from lucenenet_spark.index.segments import (build_segmented_index,
+                                            parallel_reader)
 from lucenenet_spark.oracle.pybm25 import OracleIndex
 from lucenenet_spark.plans import ast
 from lucenenet_spark.plans.lowering import Searcher
@@ -101,7 +102,7 @@ def engine(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(DOCS)], "doc_id long, text string"
     )
-    idx = build_inverted_index(spark, docs, text_cols="text").cache()
+    idx = build_segmented_index(spark, docs, text_col="text").cache()
     return Searcher(idx)
 
 
@@ -141,13 +142,16 @@ def test_field_masking_span(spark):
     """FieldMaskingSpanQuery (Search/Spans/FieldMaskingSpanQuery.cs:30-67):
     spans from a PARALLEL field (same positions, separately indexed)
     compose inside a text-field SpanNear.  `alias` indexes the same source
-    column, so masking its spans as 'text' must reproduce the
+    column (a second build, joined to the `text` build by
+    parallel_reader), so masking its spans as 'text' must reproduce the
     single-field result exactly — scores included (leaf stats come from
     the real field, which is statistically identical here)."""
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(DOCS)], "doc_id long, text string")
-    idx = build_inverted_index(
-        spark, docs, text_cols={"text": "text", "alias": "text"}).cache()
+    idx = parallel_reader(
+        build_segmented_index(spark, docs, text_col="text"),
+        build_segmented_index(spark, docs, text_col="text",
+                              field_name="alias")).cache()
     s = Searcher(idx)
     masked = ast.SpanNear(
         (ast.SpanTerm("b"),
@@ -170,7 +174,7 @@ def test_partitioning_invariance(spark, oracle):
         docs = spark.createDataFrame(
             [(i, t) for i, t in enumerate(DOCS)], "doc_id long, text string"
         ).repartition(parts)
-        s = Searcher(build_inverted_index(spark, docs, text_cols="text"))
+        s = Searcher(build_segmented_index(spark, docs, text_col="text"))
         got = [(r["doc_id"], r["score"]) for r in s.search(q, 10).collect()]
         assert got == want, f"partitions={parts}"
 
@@ -184,7 +188,7 @@ def engine2(spark):
     rows = [(i, t, f"src{i % 3}", len(t)) for i, t in enumerate(DOCS)]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, source string, n_chars long")
-    idx = build_inverted_index(spark, docs, text_cols="text").cache()
+    idx = build_segmented_index(spark, docs, text_col="text").cache()
     return Searcher(idx)
 
 
@@ -221,6 +225,11 @@ def test_contrib_ops_match_oracle(engine2, oracle2, name, q, k):
     got = [(r["doc_id"], r["score"]) for r in engine2.search(q, k).collect()]
     want = oracle2.top_k(q, k)
     assert got == want, f"{name}: {got} != {want}"
+
+
+def test_unknown_node_raises(engine):
+    with pytest.raises(NotImplementedError, match="^Query$"):
+        engine.score_frame(ast.Query())
 
 
 def test_multiphrase_rewrites_to_phrase():

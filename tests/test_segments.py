@@ -1,4 +1,4 @@
-"""Columnar-segment path: block metadata, segmented==logical parity,
+"""Columnar-segment path: block metadata, segmented==oracle parity,
 merge waves, checkpoint/resume, deterministic doc_ids.
 
 Mirrors the reference's index-format tests
@@ -50,21 +50,22 @@ def test_doc_ids_dense_and_deterministic(spark, corpus):
     assert a == b
 
 
-def test_segmented_matches_logical(spark, corpus):
-    from lucenenet_spark.index.builder import build_inverted_index
+def test_segmented_matches_oracle(spark, corpus):
     from lucenenet_spark.index.segments import build_segmented_index
+    from lucenenet_spark.oracle.pybm25 import OracleIndex
     from lucenenet_spark.plans import ast
     from lucenenet_spark.plans.lowering import Searcher
 
     seg = build_segmented_index(spark, corpus, text_col="content",
                                 lang_col="lang", fan_in=3)
-    log = build_inverted_index(
-        spark, corpus, text_cols={"content": "content"}, lang_col="lang"
-    ).cache()
-    assert seg.n_docs == log.n_docs
-    assert seg.avgdl == pytest.approx(log.avgdl)
+    oracle = OracleIndex()
+    oracle.primary_field = "content"
+    for r in corpus.select("doc_id", "content", "lang").collect():
+        oracle.add(r["doc_id"], {"content": r["content"]}, lang=r["lang"])
+    assert seg.n_docs == oracle.n_docs
+    assert seg.avgdl == pytest.approx(oracle.avgdl)
 
-    s1, s2 = Searcher(seg), Searcher(log)
+    s = Searcher(seg)
     queries = [
         ast.Term("index", field="content"),
         ast.Term("camelcasename", field="content"),  # code-split token
@@ -78,13 +79,11 @@ def test_segmented_matches_logical(spark, corpus):
         ast.Fuzzy("mereg", field="content"),
     ]
     for q in queries:
-        a = [(r["doc_id"], r["score"]) for r in s1.search(q, 10).collect()]
-        b = [(r["doc_id"], r["score"]) for r in s2.search(q, 10).collect()]
-        assert a == b, f"{q}: {a} != {b}"
-    assert len(
-        [(r["doc_id"], r["score"]) for r in
-         s1.search(ast.Term("index", field="content"), 10).collect()]
-    ) == 10
+        got = [(r["doc_id"], r["score"]) for r in s.search(q, 10).collect()]
+        want = oracle.top_k(q, 10)
+        assert got == want, f"{q}: {got} != {want}"
+    assert len(s.search(ast.Term("index", field="content"), 10)
+               .collect()) == 10
 
 
 def test_merge_wave_counts(spark, corpus):
@@ -344,6 +343,88 @@ def test_load_rejects_blob_layout(spark, tmp_path):
     docs = spark.createDataFrame([(0, "x")], "doc_id long, content string")
     with pytest.raises(ValueError, match="blob layout.*rebuild"):
         build_segmented_index(spark, docs, checkpoint_dir=ck)
+
+
+CHAIN_ROWS = [(0, "k0", "plain cafe words"), (1, "k1", "more words"),
+              (2, "k2", "old text")]
+
+
+def _update_and_rebuild(spark, idx, schema, new_text, **chain):
+    """(idx updated so key k2 holds new_text, a fresh build with `chain`
+    of CHAIN_ROWS' keys plus that row as doc 3)."""
+    from lucenenet_spark.index.segments import (build_segmented_index,
+                                                update_documents)
+
+    new = spark.createDataFrame([("k2", new_text)],
+                                schema.split(", ", 1)[1])
+    updated = update_documents(idx, new, ["key"], text_col="text")
+    rows = [tuple(r) for r in
+            idx.stored.select("doc_id", "key", "text").collect()]
+    rebuilt = build_segmented_index(
+        spark, spark.createDataFrame(rows + [(3, "k2", new_text)], schema),
+        text_col="text", **chain)
+    return updated, rebuilt
+
+
+def test_update_runs_the_build_chain(spark, tmp_path):
+    """update_documents inverts new rows through the build's analysis
+    chain: a folded build plus an update has the postings of a fresh
+    folded build, also after save/load (stats.json keeps the fold)."""
+    from lucenenet_spark.index.segments import (SegmentedIndex,
+                                                build_segmented_index)
+
+    schema = "doc_id long, key string, text string"
+    docs = spark.createDataFrame(CHAIN_ROWS, schema)
+    idx = build_segmented_index(spark, docs, text_col="text",
+                                fold_ascii=True)
+    idx.save(str(tmp_path / "idx"))
+    back = SegmentedIndex.load(spark, str(tmp_path / "idx"), stored=docs)
+    for base in (idx, back):
+        updated, rebuilt = _update_and_rebuild(
+            spark, base, schema, "café résumé", fold_ascii=True)
+        got = _exploded(updated)
+        assert {("text", "cafe", 3), ("text", "resume", 3)} <= {
+            r[:3] for r in got}
+        assert got == _exploded(rebuilt)
+
+
+def test_update_keeps_gap_and_refuses_unsaved_analyzer(spark, tmp_path):
+    """The position gap survives save/load into an update; an index built
+    with analyzer= updates through it in memory, but once loaded (the
+    callable is not saved) an update raises instead of falling back to
+    the default chain."""
+    from lucenenet_spark.analysis.tokenizers import tokenize_whitespace
+    from lucenenet_spark.index.segments import (SegmentedIndex,
+                                                build_segmented_index,
+                                                update_documents)
+
+    schema = "doc_id long, key string, text array<string>"
+    docs = spark.createDataFrame(
+        [(i, k, [t, "tail words"]) for i, k, t in CHAIN_ROWS], schema)
+    idx = build_segmented_index(spark, docs, text_col="text",
+                                position_increment_gap=100)
+    idx.save(str(tmp_path / "gap"))
+    back = SegmentedIndex.load(spark, str(tmp_path / "gap"), stored=docs)
+    updated, rebuilt = _update_and_rebuild(
+        spark, back, schema, ["red fox", "lazy dog"],
+        position_increment_gap=100)
+    got = _exploded(updated)
+    assert ("text", "lazy", 3, 1, 4, [102]) in got
+    assert got == _exploded(rebuilt)
+
+    schema = "doc_id long, key string, text string"
+    docs = spark.createDataFrame(CHAIN_ROWS, schema)
+    ws = build_segmented_index(spark, docs, text_col="text",
+                               analyzer=tokenize_whitespace)
+    updated, rebuilt = _update_and_rebuild(
+        spark, ws, schema, "The Café", analyzer=tokenize_whitespace)
+    assert ("text", "The", 3, 1, 2, [0]) in _exploded(updated)
+    assert _exploded(updated) == _exploded(rebuilt)
+    ws.save(str(tmp_path / "ws"))
+    back = SegmentedIndex.load(spark, str(tmp_path / "ws"), stored=docs)
+    new = spark.createDataFrame([("k2", "x")], "key string, text string")
+    with pytest.raises(ValueError, match="analyzer"):
+        update_documents(back, new, ["key"], text_col="text")
 
 
 def test_merge_shuffle_balanced_under_zipf(spark, corpus):

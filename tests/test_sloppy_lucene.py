@@ -101,11 +101,11 @@ DOCS = [
 
 @pytest.fixture(scope="module")
 def engines(spark):
-    from lucenenet_spark.index.builder import build_inverted_index
+    from lucenenet_spark.index.segments import build_segmented_index
     from lucenenet_spark.plans.lowering import Searcher
 
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    idx = build_inverted_index(spark, docs, text_cols="text").cache()
+    idx = build_segmented_index(spark, docs, text_col="text").cache()
     oi = OracleIndex()
     for i, t in DOCS:
         oi.add(i, {"text": t})

@@ -1,9 +1,8 @@
-"""Analyzer parity: pure-Python spec == Spark JVM exprs == Arrow pandas_udf.
+"""Analyzer parity: pure-Python spec == Spark JVM exprs.
 
 Mirrors the reference analyzer golden tests
 (test/Lucene.Net.Test/Analysis/TestStandardAnalyzer.cs style)."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -56,19 +55,6 @@ def test_jvm_exprs_match_python_spec(spark):
         spark_toks.setdefault(r["i"], []).append((r["term"], r["pos"]))
     for i, t in enumerate(texts):
         assert spark_toks.get(i, []) == tk.tokenize_standard(t), f"mismatch on row {i}"
-
-
-def test_pandas_udf_matches_python_spec(spark):
-    from lucenenet_spark.analysis.udfs import analyze_per_lang
-
-    rows = gen_corpus_rows(60, seed=11)
-    df = spark.createDataFrame(
-        [(i, r[3], r[4]) for i, r in enumerate(rows)], "i int, lang string, text string"
-    )
-    got = df.select("i", analyze_per_lang(F.col("text"), F.col("lang")).alias("tp")).collect()
-    for r in got:
-        expected = tk.tokenize(rows[r["i"]][4], rows[r["i"]][3])
-        assert [(x["term"], x["pos"]) for x in r["tp"]] == expected
 
 
 # ---- full StandardTokenizer token classes (round 3) -------------------
