@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from lucenenet_spark.functions import textstats as ts
 from lucenenet_spark.index.segments import build_segmented_index
-from lucenenet_spark.index.wand import wand_topk
 from lucenenet_spark.operators import ann, dedup, multimodal
 from lucenenet_spark.oracle import sqlgen
 from lucenenet_spark.plans import ast
@@ -949,13 +948,14 @@ def _parsed(text: str, k: int = K):
     return run
 
 
+_WAND_OR = ast.Bool(should=(ast.Term("spark"), ast.Term("merge"),
+                             ast.Term("batch")))
+
+
 def _ft_wand(spark, sf_dir):
-    """Block-max WAND top-k over the compressed-segment index; results
-    rank-identical to the exact disjunctive scorer (same DuckDB oracle)."""
-    return wand_topk(
-        _seg_index(spark, sf_dir),
-        [("spark", 1.0), ("merge", 1.0), ("batch", 1.0)], k=K, field="text",
-    )
+    """Disjunctive (pure-SHOULD) BM25 top-k over the segmented index —
+    the query Block-Max WAND answers, scored exactly by Searcher."""
+    return Searcher(_seg_index(spark, sf_dir)).search(_WAND_OR, K)
 
 
 def _ft_seg_term(spark, sf_dir):
@@ -972,16 +972,11 @@ def _ft_deleted(spark, sf_dir):
 
 
 def _ft_wand_deleted(spark, sf_dir):
-    """Block-max WAND over a tombstoned index: deletes applied as
-    per-segment bitmaps INSIDE the segment kernel (index/deletes.py, the
-    .del check of SegmentTermDocs.cs) — exact k, no over-fetch, no global
-    tombstone count in the plan."""
+    """The ft_wand disjunction over a tombstoned index: deletes leave the
+    hit set by the tombstone anti-join, df/N keep counting them."""
     s = _searcher(spark, sf_dir)
     dead = s.index.stored.where("lang = 'de'").select("doc_id")
-    return wand_topk(
-        s.index.with_deletes(dead),
-        [("spark", 1.0), ("merge", 1.0), ("batch", 1.0)], k=K, field="text",
-    )
+    return Searcher(s.index.with_deletes(dead)).search(_WAND_OR, K)
 
 
 def _geo_docs(spark, sf_dir):
@@ -1287,7 +1282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # DateTools date-range parse (QueryParser.cs:743-798)
         "qp_date_range": _qp_date_range,
         "qp_multifield": _parsed_multifield("spark src0"),
-        # --- compressed segments + block-max WAND (SURVEY.md §2.3/§4.2) ---
+        # --- segments, disjunctive top-k, deletes (SURVEY.md §2.3/§4.2) ---
         "ft_wand": _ft_wand,
         "ft_deleted": _ft_deleted,
         "ft_mlt": _ft_mlt,
@@ -1396,8 +1391,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_seg_term": _ft_seg_term,
         # contrib EdgeNGram analyzer (sibling of ft_ngram_term above)
         "ft_edge_ngram": _ft_edge_ngram,
-        # WAND + per-segment delete bitmaps (round 4; wand/deleted
-        # families are driver-covered by ft_wand and ft_deleted above)
+        # disjunction over a tombstoned index (ft_wand and ft_deleted
+        # above represent the wand/deleted families in the first section)
         "ft_wand_deleted": _ft_wand_deleted,
         # contrib language analyzers (round 4: analysis/intl.py) —
         # deterministic in-plan transliteration, full SQL oracles

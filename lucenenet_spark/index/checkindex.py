@@ -104,7 +104,7 @@ def check_index(index, source: DataFrame | None = None,
         issues.append(("*", "*", -1, f"I6:{dup}_duplicate_rows"))
 
     # I7: every doc lives in exactly one segment (the invariant that makes
-    # per-segment top-k complete — see wand.py)
+    # a per-segment top-k complete)
     cross = (
         seg.select("seg_id", F.explode("docs").alias("doc_id"))
         .distinct()

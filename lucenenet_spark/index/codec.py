@@ -6,12 +6,13 @@ columnar cache replace the reference's delta + VInt .frq/.prx streams.
 What remains format-specific is the skip-list metadata
 (src/Lucene.Net/Index/DefaultSkipListWriter.cs:90-130, every 16th doc),
 kept as per-block (last_doc, max_tf, min_dl) rows that serve both
-skipping (Advance -> block pruning) and Block-Max-WAND upper bounds.
+skipping (Advance -> block pruning) and block-max score upper bounds.
 
 The block layout is computed in two forms — numpy over the flat posting
-vectors (the invert kernel, all terms of a segment at once; the expunge
-rewrite) and a Spark SQL expression (the doc-ordered merge of overlapping
-segments) — and both live here so they cannot drift apart.
+vectors (the invert kernel, all terms of a segment at once) and a Spark
+SQL expression (lists rebuilt in the JVM: the doc-ordered merge of
+overlapping segments and the expunge rewrite) — and both live here so
+they cannot drift apart.
 """
 
 from __future__ import annotations

@@ -99,14 +99,20 @@ _UNSAVED = object()
 
 
 @dataclass(frozen=True)
-class _Chain:
-    """The analysis chain a build ran its text field through, kept on the
-    index so update_documents inverts new documents the same way (an
-    updated index must equal a rebuild).  analyzer: the callable, None
-    for the built-in chain, or _UNSAVED."""
+class _Spec:
+    """How a build inverted its documents, kept on the index so
+    update_documents inverts new ones the same way (an updated index must
+    equal a rebuild): the analysis chain (fold, analyzer, gap) and the
+    columns it read.  analyzer: the callable, None for the built-in
+    chain, or _UNSAVED.  text_col None: the columns were not recorded (an
+    index loaded from an older stats.json, or an NRT index)."""
     fold: bool = False
     analyzer: Callable | object | None = None
     gap: int = 0
+    text_col: str | None = None
+    lang_col: str | None = None
+    positions: bool = True
+    keyword_cols: dict[str, str] | None = None
 
 
 def _invert_partition(field_name: str, id_col: str, text_col: str,
@@ -372,23 +378,23 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
 
 
 def _invert_frames(docs: DataFrame, field_name: str, id_col: str,
-                   text_col: str, lang_col: str | None, positions: bool,
-                   keyword_cols: dict[str, str] | None = None,
-                   chain: _Chain = _Chain()) -> DataFrame:
+                   spec: _Spec) -> DataFrame:
     """Segment rows of `docs`, one segment per input partition: the text
-    field inverted through `chain`, unioned with one keyword invert per
+    field inverted as `spec` says, unioned with one keyword invert per
     keyword field over the SAME partitioning, so every field's segment s
     covers the same doc range."""
+    text_col, lang_col = spec.text_col, spec.lang_col
     cols = [id_col, text_col] + ([lang_col] if lang_col else [])
     seg = docs.select(*cols).mapInArrow(
-        _invert_partition(field_name, id_col, text_col, lang_col, positions,
-                          fold=chain.fold, analyzer=chain.analyzer,
-                          position_increment_gap=chain.gap),
+        _invert_partition(field_name, id_col, text_col, lang_col,
+                          spec.positions, fold=spec.fold,
+                          analyzer=spec.analyzer,
+                          position_increment_gap=spec.gap),
         SEGMENT_SCHEMA,
     )
-    for kfld, ksrc in (keyword_cols or {}).items():
+    for kfld, ksrc in (spec.keyword_cols or {}).items():
         seg = seg.unionByName(docs.select(id_col, ksrc).mapInArrow(
-            _invert_partition(kfld, id_col, ksrc, None, positions,
+            _invert_partition(kfld, id_col, ksrc, None, spec.positions,
                               keyword=True),
             SEGMENT_SCHEMA,
         ))
@@ -407,6 +413,23 @@ _CONCAT = ("named_struct('docs', flatten(parts.docs), "
            "'tfs', flatten(parts.tfs), 'dls', flatten(parts.dls), "
            "'pos', flatten(parts.pos), 'pay', flatten(parts.pay), "
            "'blocks', flatten(parts.blocks))")
+
+
+def _rebuilt_sql(z: str, pos: str, pay: str) -> str:
+    """A posting list's columns rebuilt in the JVM from `z`, an array of
+    (doc, tf, dl, pos, pay) structs sorted by doc, with its blocks
+    recomputed by codec.block_maxes_sql.  pos (pay) is kept where the SQL
+    condition `pos` (`pay`) holds, else NULL.  The doc/tf/dl arrays are
+    extracted once and bound to w by a one-element transform, so each
+    block reads a slice of them instead of re-extracting the list."""
+    return (
+        f"element_at(transform(array(named_struct('d', {z}.doc, "
+        f"'t', {z}.tf, 'l', {z}.dl)), w -> named_struct("
+        f"'docs', w.d, 'tfs', w.t, 'dls', w.l, "
+        f"'pos', if({pos}, {z}.pos, NULL), 'pay', if({pay}, {z}.pay, NULL), "
+        f"'blocks', {codec.block_maxes_sql('w.d', 'w.t', 'w.l')})), 1)")
+
+
 # one struct per posting, sorted by doc; bound once to z by a one-element
 # transform so the sort runs once per row.  A part without positions
 # (payloads) makes the merged pos (pay) NULL, as flatten does above.
@@ -414,10 +437,10 @@ _INTERLEAVE = (
     "element_at(transform(array(array_sort(flatten(transform(parts, p -> "
     "transform(p.docs, (d, j) -> named_struct('doc', d, 'tf', p.tfs[j], "
     "'dl', p.dls[j], 'pos', p.pos[j], 'pay', p.pay[j])))))), z -> "
-    "named_struct('docs', z.doc, 'tfs', z.tf, 'dls', z.dl, "
-    "'pos', if(forall(parts, p -> p.pos IS NOT NULL), z.pos, NULL), "
-    "'pay', if(forall(parts, p -> p.pay IS NOT NULL), z.pay, NULL), "
-    "'blocks', " + codec.block_maxes_sql("z.doc", "z.tf", "z.dl") + ")), 1)")
+    + _rebuilt_sql("z", "forall(parts, p -> p.pos IS NOT NULL)",
+                   "forall(parts, p -> p.pay IS NOT NULL)") + "), 1)")
+
+_LIST_COLS = ("docs", "tfs", "dls", "pos", "pay", "blocks")
 
 
 def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
@@ -453,14 +476,12 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
     )
     return grouped.select(
         "field", "term", F.col("merge_group").alias("seg_id"), "df", "ttf",
-        *[F.col(f"m.{c}").alias(c)
-          for c in ("docs", "tfs", "dls", "pos", "pay", "blocks")])
+        *[F.col(f"m.{c}").alias(c) for c in _LIST_COLS])
 
 
 #: SegmentedIndex fields derived from one generation's segment rows or
 #: tombstones; a new generation starts with all of them unset
-_DERIVED = ("_del_frames", "_postings", "_postings_nopos", "_postings_pay",
-            "_term_stats")
+_DERIVED = ("_postings", "_postings_nopos", "_postings_pay", "_term_stats")
 
 
 @dataclass
@@ -477,12 +498,11 @@ class SegmentedIndex:
     id_col: str = "doc_id"
     fields: tuple[str, ...] = ("content",)
     tombstones: DataFrame | None = None
-    _del_frames: DataFrame | None = dc_field(default=None, repr=False)
     _postings: DataFrame | None = dc_field(default=None, repr=False)
     _postings_nopos: DataFrame | None = dc_field(default=None, repr=False)
     _postings_pay: DataFrame | None = dc_field(default=None, repr=False)
     _term_stats: DataFrame | None = dc_field(default=None, repr=False)
-    _chain: _Chain = dc_field(default=_Chain(), repr=False)
+    _spec: _Spec = dc_field(default=_Spec(), repr=False)
 
     @property
     def n_docs(self) -> int:
@@ -627,28 +647,17 @@ class SegmentedIndex:
             "vec", F.coalesce(F.col("vec"), F.array()))
 
     def with_deletes(self, tombstones: DataFrame) -> "SegmentedIndex":
-        """Register deletes: the relational paths anti-join the tombstone
-        frame; the Python kernels (WAND, expunge) consume the per-segment
-        delete bitmaps from delete_frames() — the .del file analogue."""
+        """Register deletes: `tombstones` (doc ids) joins this
+        generation's tombstone frame, the index's one delete
+        representation.  Every read path anti-joins it (Searcher._live,
+        the query-time .del check) and expunge_deletes rewrites the
+        segment rows against it."""
         t = tombstones.select(F.col(self.id_col).alias("doc_id")
                               if self.id_col in tombstones.columns
                               else F.col("doc_id"))
         if self.tombstones is not None:
             t = self.tombstones.unionByName(t).distinct()
-        return replace(self, tombstones=t, _del_frames=None)
-
-    def delete_frames(self) -> DataFrame | None:
-        """Per-segment delete bitmaps (seg_id, del_lo, del_kind, n_del,
-        del_blob) built distributed from the tombstone frame — cached per
-        tombstone generation (BitVector .del analogue; index/deletes.py).
-        None when the index has no deletes."""
-        if self.tombstones is None:
-            return None
-        if self._del_frames is None:
-            from .deletes import delete_frames
-            self._del_frames = delete_frames(
-                self.segments, self.tombstones).cache()
-        return self._del_frames
+        return replace(self, tombstones=t)
 
     def cache(self) -> "SegmentedIndex":
         self.segments = self.segments.cache()
@@ -665,15 +674,12 @@ class SegmentedIndex:
         if self._term_stats is not None:
             self._term_stats.unpersist()
             self._term_stats = None
-        if self._del_frames is not None:
-            self._del_frames.unpersist()
-            self._del_frames = None
         return self
 
     def _derive(self, **changes) -> "SegmentedIndex":
         """The next index generation: `changes` applied and every cache
-        of this one (delete bitmaps, posting views, term stats) unset, to
-        be rebuilt on demand."""
+        of this one (posting views, term stats) unset, to be rebuilt on
+        demand."""
         return replace(self, **changes, **dict.fromkeys(_DERIVED))
 
     def n_segments(self) -> int:
@@ -692,9 +698,13 @@ class SegmentedIndex:
                        "total_tokens": self.stats.total_tokens,
                        "fields": list(self.fields),
                        "id_col": self.id_col,
-                       "fold_ascii": self._chain.fold,
-                       "position_increment_gap": self._chain.gap,
-                       "analyzer": self._chain.analyzer is not None}, f)
+                       "fold_ascii": self._spec.fold,
+                       "position_increment_gap": self._spec.gap,
+                       "analyzer": self._spec.analyzer is not None,
+                       "text_col": self._spec.text_col,
+                       "lang_col": self._spec.lang_col,
+                       "positions": self._spec.positions,
+                       "keyword_cols": self._spec.keyword_cols}, f)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
@@ -708,10 +718,14 @@ class SegmentedIndex:
                    stats=IndexStats(meta["n_docs"], meta["total_tokens"]),
                    stored=stored, id_col=meta["id_col"],
                    fields=tuple(meta["fields"]),
-                   _chain=_Chain(
+                   _spec=_Spec(
                        fold=meta.get("fold_ascii", False),
                        analyzer=_UNSAVED if meta.get("analyzer") else None,
-                       gap=meta.get("position_increment_gap", 0)))
+                       gap=meta.get("position_increment_gap", 0),
+                       text_col=meta.get("text_col"),
+                       lang_col=meta.get("lang_col"),
+                       positions=meta.get("positions", True),
+                       keyword_cols=meta.get("keyword_cols")))
 
 
 _POS = (("pos", "positions"),)
@@ -807,10 +821,11 @@ def build_segmented_index(
     # analyzer: a callable text -> [(term, pos)] overriding the standard
     # chain (the Analyzer extension point, SURVEY §2.12 — Whitespace /
     # Letter / LowerCase tokenizers in analysis.tokenizers plug in here).
-    chain = _Chain(fold=fold_ascii, analyzer=analyzer,
-                   gap=position_increment_gap)
-    seg = _invert_frames(docs, field_name, id_col, text_col, lang_col,
-                         positions, keyword_cols, chain)
+    spec = _Spec(fold=fold_ascii, analyzer=analyzer,
+                 gap=position_increment_gap, text_col=text_col,
+                 lang_col=lang_col, positions=positions,
+                 keyword_cols=keyword_cols or None)
+    seg = _invert_frames(docs, field_name, id_col, spec)
 
     lineage = []
     wave = 0
@@ -875,16 +890,16 @@ def build_segmented_index(
     return SegmentedIndex(spark=spark, segments=seg, stats=stats,
                           stored=docs, id_col=id_col,
                           fields=(field_name, *(keyword_cols or {})),
-                          _chain=chain)
+                          _spec=spec)
 
 
 def update_documents(
     index: SegmentedIndex,
     new_docs: DataFrame,
     key_cols: list[str],
-    text_col: str,
+    text_col: str | None = None,
     lang_col: str | None = None,
-    positions: bool = True,
+    positions: bool | None = None,
     keyword_cols: dict[str, str] | None = None,
     id_base: int | None = None,
 ) -> SegmentedIndex:
@@ -904,15 +919,22 @@ def update_documents(
     segment rows until an explicit expunge rewrite (merge waves
     concatenate and do not filter).
 
-    New rows go through the build's analysis chain (fold_ascii, analyzer,
-    position_increment_gap).  A loaded index built with analyzer= cannot
-    be updated: the callable is not saved, and the default chain would
+    New rows are inverted as the build inverted its documents: through
+    its analysis chain (fold_ascii, analyzer, position_increment_gap) and
+    from its columns.  text_col, lang_col, positions and keyword_cols
+    default to the build's; a value that contradicts the build raises
+    ValueError.  An index that does not record its columns (loaded from
+    an older stats.json, or an NRT index) takes them from the arguments,
+    and needs text_col.  A loaded index built with analyzer= cannot be
+    updated: the callable is not saved, and the default chain would
     index the new rows differently — a ValueError, not a quiet mismatch."""
-    if index._chain.analyzer is _UNSAVED:
+    if index._spec.analyzer is _UNSAVED:
         raise ValueError(
             "this index was built with a custom analyzer= and loaded from "
             "disk; the analyzer is not saved, so new documents cannot be "
             "analyzed like the indexed ones — rebuild the index instead")
+    spec = _update_spec(index._spec, text_col=text_col, lang_col=lang_col,
+                        positions=positions, keyword_cols=keyword_cols)
     id_col = index.id_col
     field_name = index.fields[0]
 
@@ -940,8 +962,7 @@ def update_documents(
     fresh = fresh.select(*keep)
 
     max_seg = (index.segments.agg(F.max("seg_id")).collect()[0][0] or 0)
-    seg2 = _invert_frames(fresh, field_name, id_col, text_col, lang_col,
-                          positions, keyword_cols, index._chain)
+    seg2 = _invert_frames(fresh, field_name, id_col, spec)
     seg2 = seg2.withColumn(
         "seg_id", F.col("seg_id") + F.lit(int(max_seg) + 1)).cache()
 
@@ -964,6 +985,28 @@ def update_documents(
     index.unpersist_derived()
     return index._derive(segments=index.segments.unionByName(seg2),
                          stats=stats, stored=stored_new, tombstones=tomb)
+
+
+def _update_spec(spec: _Spec, **given) -> _Spec:
+    """The spec update_documents inverts with: the build's recorded
+    columns, which `given` (None = not given) may repeat but not
+    contradict; without a record, `given` as passed."""
+    given = {k: v for k, v in given.items() if v is not None}
+    if "keyword_cols" in given:
+        given["keyword_cols"] = given["keyword_cols"] or None
+    if spec.text_col is None:
+        if "text_col" not in given:
+            raise ValueError(
+                "this index does not record the column its text field was "
+                "built from; pass text_col")
+        return replace(spec, **given)
+    for k, v in given.items():
+        if v != getattr(spec, k):
+            raise ValueError(
+                f"update_documents({k}={v!r}) conflicts with the index's "
+                f"build ({k}={getattr(spec, k)!r}): new documents must be "
+                f"inverted like the indexed ones")
+    return spec
 
 
 def _latest_committed_wave(ckpt: str) -> int | None:
@@ -1102,57 +1145,76 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
     tombstoned doc_ids removed, drop posting lists that become empty,
     clear the tombstone set, and recompute stats over the LIVE set — df
     and N reflect the deletes only after this point, exactly like the
-    reference.  Deletes reach the rewrite kernel as PER-SEGMENT bitmaps
-    joined on seg_id (index/deletes.py — the .del design of
-    src/Lucene.Net/Util/BitVector.cs:37-192); no tombstone id ever
-    touches the driver.  Rows whose posting list contains no dead doc
-    pass through unchanged; rows of delete-free segments never leave the
-    JVM."""
+    reference.
+
+    A relational rewrite, all in the JVM: each segment's doc bounds
+    (n_segments rows) are broadcast-joined to the distinct tombstones, so
+    a dead id reaches every segment whose range holds it (the parts of a
+    parallel_reader cover the same docs).  Rows whose posting list
+    overlaps no dead id of their segment pass through unchanged; touched
+    rows are exploded, anti-joined to the tombstones and re-collected per
+    (field, term, seg_id) with their blocks recomputed, as merge_wave's
+    interleave does.  No tombstone id touches the driver."""
     if index.tombstones is None:
         return index
-    n_dead = index.tombstones.count()  # scalar aggregate, never the ids
-    if n_dead == 0:
-        return replace(index, tombstones=None, _del_frames=None)
     field_name = index.fields[0]
-    from .deletes import keep_mask
-    names = [f.name for f in SEGMENT_SCHEMA]
+    # the rewrite and the live count read the dead ids several times:
+    # evaluate the tombstone lineage (one union per update generation)
+    # once, into executor blocks; small, the ids only
+    dead = (index.tombstones.select(F.col("doc_id").cast("long"))
+            .distinct().localCheckpoint())
+    bounds = index.segments.groupBy("seg_id").agg(
+        F.min(F.col("docs")[0]).alias("lo"),
+        F.max(F.element_at("docs", -1)).alias("hi"))
+    seg_dead = (dead.join(F.broadcast(bounds),
+                          F.col("doc_id").between(F.col("lo"), F.col("hi")))
+                .groupBy("seg_id")
+                .agg(F.collect_list("doc_id").alias("dead")))
+    tagged = index.segments.join(F.broadcast(seg_dead), "seg_id", "left")
+    hit = F.coalesce(F.arrays_overlap("docs", "dead"), F.lit(False))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                docs = np.asarray(row.docs, np.int64)
-                keep = keep_mask(docs, row.del_lo, row.del_kind,
-                                 row.del_blob)
-                if keep.all():
-                    rows.append(tuple(getattr(row, c) for c in names))
-                    continue
-                if not keep.any():
-                    continue  # whole posting list was deleted docs
-                tfs = np.asarray(row.tfs, np.int32)[keep]
-                dls = np.asarray(row.dls, np.int32)[keep]
-                pos, pay = (None if v is None else list(np.asarray(
-                    v, object)[keep]) for v in (row.pos, row.pay))
-                rows.append((row.field, row.term, row.seg_id,
-                             int(keep.sum()), int(tfs.sum()), docs[keep],
-                             tfs, dls, pos, pay,
-                             codec.block_maxes(docs[keep], tfs, dls)))
-            yield pd.DataFrame(rows, columns=names)
-
-    joined = index.segments.join(index.delete_frames(), "seg_id", "left")
-    seg2 = (joined.where(F.col("del_blob").isNull()).select(*names)
-            .unionByName(joined.where(F.col("del_blob").isNotNull())
-                         .mapInPandas(kernel, SEGMENT_SCHEMA))
+    # touched rows are partitioned by their group key before the explode
+    # (no exchange when they already are: merge_wave's output) and the
+    # broadcast anti-join keeps that, so the re-collect never shuffles
+    # one row per posting
+    touched = (tagged.where(hit)
+               .repartition(index.spark.sparkContext.defaultParallelism,
+                            "field", "term", "seg_id")
+               .select("field", "term", "seg_id", "docs", "tfs", "dls",
+                       "pos", "pay",
+                       F.col("pos").isNotNull().alias("has_pos"),
+                       F.col("pay").isNotNull().alias("has_pay")))
+    live = (_exploded(touched, _POS + _PAY,
+                      keep=["seg_id", "has_pos", "has_pay"])
+            .join(F.broadcast(dead), "doc_id", "left_anti"))
+    rebuilt = (
+        live.groupBy("field", "term", "seg_id", "has_pos", "has_pay")
+        .agg(F.sort_array(F.collect_list(F.struct(
+            F.col("doc_id").alias("doc"), "tf", "dl",
+            F.col("positions").alias("pos"),
+            F.col("payloads").alias("pay")))).alias("z"),
+            F.count("*").cast("int").alias("df"),
+            F.sum("tf").alias("ttf"))
+        .withColumn("m", F.expr(_rebuilt_sql("z", "has_pos", "has_pay")))
+        .select("field", "term", "seg_id", "df", "ttf",
+                *[F.col(f"m.{c}").alias(c) for c in _LIST_COLS]))
+    seg2 = (tagged.where(~hit).select(*[f.name for f in SEGMENT_SCHEMA])
+            .unionByName(rebuilt)
             .cache())
     tt = (seg2.where(F.col("field") == field_name)
           .agg(F.sum("ttf")).collect()[0][0])
-    stats = IndexStats(n_docs=index.stats.n_docs - int(n_dead),
-                       total_tokens=int(tt or 0))
+    # the live documents: `stored` minus the tombstones (an update has
+    # already dropped the rows it replaced from `stored`, so this holds
+    # for with_deletes and update_documents alike)
     stored_new = index.stored
     if stored_new is not None:
         stored_new = stored_new.join(
-            index.tombstones.withColumnRenamed("doc_id", index.id_col),
+            dead.withColumnRenamed("doc_id", index.id_col),
             index.id_col, "left_anti")
+        n_docs = stored_new.count()
+    else:
+        n_docs = index.stats.n_docs - dead.count()
+    stats = IndexStats(n_docs=int(n_docs), total_tokens=int(tt or 0))
     index.unpersist_derived()
     return index._derive(segments=seg2, stats=stats, stored=stored_new,
                          tombstones=None)

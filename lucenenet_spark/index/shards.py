@@ -101,7 +101,8 @@ class ShardedIndex:
         return replace(self, shards=new_shards, _union=None)
 
     def update_documents(self, new_docs: DataFrame, key_cols: list[str],
-                         text_col: str, **kwargs) -> "ShardedIndex":
+                         text_col: str | None = None,
+                         **kwargs) -> "ShardedIndex":
         """Keyed update across the set list: key-owning rows are
         tombstoned in EVERY shard that holds them (the reference replaces
         the record inside its owning set, IndexSets.cs:174-184; keys here

@@ -736,7 +736,7 @@ SELECT doc_id, round(s, 6) AS score FROM keyed WHERE rn = 1
 def deleted_term(term: str, delete_pred: str, k: int = 10,
                  table: str = "documents") -> str:
     """Term query over an index with tombstoned docs (delete_pred selects
-    the deleted rows) — the .del-bitmap anti-join."""
+    the deleted rows) — the tombstone anti-join."""
     return f"""WITH {base_ctes(table)}
 SELECT p.doc_id, round({_bm25()}, 6) AS score
 FROM post p JOIN dfs f USING (term) CROSS JOIN st
@@ -748,8 +748,9 @@ WHERE p.term = '{term}'
 def deleted_bool_or(terms: list[tuple[str, float]], delete_pred: str,
                     k: int = 10, table: str = "documents") -> str:
     """Disjunctive BM25 over an index with tombstoned docs: deleted rows
-    leave the hit set but df/N keep counting them (reference .del-bitmap
-    semantics before a purge) — the WAND-with-deletes oracle."""
+    leave the hit set but df/N keep counting them (the reference's
+    semantics before a purge) — the oracle of an OR over a tombstoned
+    index."""
     rows = [f"('{t}', {bst}::DOUBLE)" for t, bst in terms]
     return f"""WITH {base_ctes(table)},
 qt AS (SELECT * FROM (VALUES {", ".join(rows)}) v(term, bst)),

@@ -95,9 +95,9 @@ class Searcher:
     # ------------------------------------------------------------------ api
 
     def _live(self, frame: DataFrame) -> DataFrame:
-        """Apply the deletes bitmap (anti-join on tombstones — the
-        query-time .del check, src/Lucene.Net/Index/SegmentTermDocs.cs
-        deletedDocs.Get)."""
+        """Apply deletes: anti-join the index's tombstone frame, its one
+        delete representation (the query-time .del check,
+        src/Lucene.Net/Index/SegmentTermDocs.cs deletedDocs.Get)."""
         t = self.index.tombstones
         if t is None:
             return frame

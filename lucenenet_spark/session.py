@@ -54,8 +54,11 @@ _MALLOC_ENV = {
 
 def get_spark(app: str = "lucenenet_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """A local[cpus] session; cpus defaults to SPARK_GRAFT_CPUS, else the
+    cores this process may run on."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     for k, v in _MALLOC_ENV.items():

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..index.segments import (
     IndexStats,
     SegmentedIndex,
+    _Spec,
     _invert_frames,
     _require_columnar,
     merge_wave,
@@ -56,7 +57,8 @@ def index_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
             f"batch id {batch_id} would overwrite compacted generation "
             f"{target}; compaction dirs must not share the stream id space")
     seg = _invert_frames(
-        batch_df, field_name, id_col, text_col, lang_col, positions,
+        batch_df, field_name, id_col,
+        _Spec(text_col=text_col, lang_col=lang_col, positions=positions),
     ).withColumn("seg_id", F.col("seg_id") + F.lit(batch_id * SEG_STRIDE))
 
     (seg.write.mode("overwrite")

@@ -181,3 +181,93 @@ def test_expunge_deletes_matches_fresh_build(spark, corpus_index):
         assert a == b, qq
     assert not ({r[0] for r in
                  Searcher(purged).search(q, 50).collect()} & set(victims))
+
+
+def test_expunge_counts_deleted_documents(spark):
+    """expunge_deletes subtracts deleted documents, not tombstone rows: a
+    repeated id counts once, an id that is not in the index not at all,
+    and an updated document's old row once.  n_docs, avgdl and postings
+    equal a fresh build of the live documents."""
+    from lucenenet_spark.index.segments import (
+        build_segmented_index, expunge_deletes, update_documents)
+
+    schema = "doc_id long, key string, text string"
+    rows = [(i, f"k{i}", f"alpha w{i % 5} " + "beta " * (i % 4))
+            for i in range(40)]
+    idx = build_segmented_index(spark, spark.createDataFrame(rows, schema),
+                                text_col="text")
+
+    def postings(i):
+        return sorted(tuple(r) for r in i.postings.select(
+            "field", "term", "doc_id", "tf", "dl", "positions").collect())
+
+    def assert_fresh(purged, live_rows):
+        fresh = build_segmented_index(
+            spark, spark.createDataFrame(live_rows, schema), text_col="text")
+        assert purged.n_docs == fresh.n_docs == len(live_rows)
+        assert purged.avgdl == pytest.approx(fresh.avgdl)
+        assert postings(purged) == postings(fresh)
+
+    for dead in ([3, 3], [99999]):
+        purged = expunge_deletes(idx.with_deletes(spark.createDataFrame(
+            [(d,) for d in dead], "doc_id long")))
+        assert_fresh(purged, [r for r in rows if r[0] not in dead])
+
+    new = spark.createDataFrame([("k7", "gamma alpha")],
+                                "key string, text string")
+    purged = expunge_deletes(update_documents(idx, new, ["key"],
+                                              text_col="text"))
+    assert_fresh(purged,
+                 [r for r in rows if r[0] != 7] + [(40, "k7", "gamma alpha")])
+
+
+def test_expunge_million_docs_no_id_collect(spark):
+    """The round-3 scale gate: 10^6 docs, >10^4 deletes, expunge succeeds
+    while every driver collect stays metadata-scale (bounded by the
+    segment count + a constant) — the tombstone id array NEVER ships."""
+    from lucenenet_spark.index.segments import (
+        build_segmented_index, expunge_deletes)
+
+    n = 1_000_000
+    docs = (
+        spark.range(n).withColumnRenamed("id", "doc_id")
+        .withColumn("text", F.concat(
+            F.lit("alpha w"), (F.col("doc_id") % 997).cast("string"),
+            F.lit(" beta")))
+    )
+    idx = build_segmented_index(spark, docs, text_col="text",
+                                id_col="doc_id", positions=False)
+    n_seg = idx.n_segments()
+    dead = (spark.range(0, n, 37).withColumnRenamed("id", "doc_id"))
+    n_dead = dead.count()
+    assert n_dead > 10_000
+    idx = idx.with_deletes(dead)
+
+    sizes: list[int] = []
+    cls = type(idx.segments)  # the concrete (classic) DataFrame class
+    orig = cls.collect
+
+    def spy(self):
+        out = orig(self)
+        sizes.append(len(out))
+        return out
+
+    cls.collect = spy
+    try:
+        purged = expunge_deletes(idx)
+        live_df = purged.term_stats().where(
+            (F.col("field") == "text") & (F.col("term") == "alpha")
+        ).collect()
+    finally:
+        cls.collect = orig
+    # every collect during expunge is metadata-scale: the largest is the
+    # per-segment bounds table (n_segments rows)
+    assert max(sizes) <= n_seg + 2, sizes
+    assert purged.n_docs == n - n_dead
+    assert int(live_df[0]["df"]) == n - n_dead
+    # a surviving doc keeps its postings; a dead one is gone
+    s = Searcher(purged)
+    hits = {r["doc_id"] for r in
+            s.search(ast.Term("w0", field="text"), 2000).collect()}
+    assert hits and not any(h % 37 == 0 for h in hits)
+    assert all(h % 997 == 0 for h in hits)

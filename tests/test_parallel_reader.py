@@ -84,3 +84,33 @@ def test_parallel_term_enum(spark, combined, composed):
          combined.enumerate_terms().collect()]
     assert a == b
     assert {f for f, _ in a} == {"content", "repo"}
+
+
+def test_expunge_reaches_every_part(spark):
+    """Both parts of a parallel_reader cover the same documents, so a
+    dead id lives in a segment of each: after expunge_deletes no field's
+    postings hold a dead doc, and both fields answer like a fresh
+    parallel build over the live documents."""
+    from lucenenet_spark.index.segments import expunge_deletes
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha w{i % 5} beta", f"name{i % 3} alias") for i in range(40)],
+        "doc_id long, text string, alias string")
+
+    def parts(frame):
+        return parallel_reader(
+            build_segmented_index(spark, frame, text_col="text"),
+            build_segmented_index(spark, frame, text_col="alias"))
+
+    dead = spark.createDataFrame([(3,), (4,)], "doc_id long")
+    purged = expunge_deletes(parts(docs).with_deletes(dead))
+    assert not purged.postings.where("doc_id IN (3, 4)").count()
+    fresh = parts(docs.where("doc_id NOT IN (3, 4)"))
+    assert purged.n_docs == fresh.n_docs == 38
+    assert purged.avgdl == pytest.approx(fresh.avgdl)
+    for q in (ast.Term("alpha"), ast.Term("w3"),
+              ast.Term("alias", field="alias"),
+              ast.Term("name0", field="alias"),
+              ast.Bool(should=(ast.Term("w4"),
+                               ast.Term("name1", field="alias")))):
+        assert _hits(purged, q, 50) == _hits(fresh, q, 50), q

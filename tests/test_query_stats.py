@@ -164,6 +164,45 @@ def test_read_path_runs_no_python(index, oracle, name, q):
                    for s in below), below
 
 
+def _fill_nodes(node, filled):
+    """_plan_nodes, continued into the plans that filled cached relations,
+    except relations built by the cache builders in `filled`."""
+    for n in _plan_nodes(node):
+        yield n
+        if n.nodeName() == "InMemoryTableScan":
+            rel = n.relation()
+            if not any(rel.cacheBuilder().equals(b) for b in filled):
+                yield from _fill_nodes(rel.cachedPlan(), filled)
+
+
+def test_expunge_runs_no_python(spark):
+    """expunge_deletes rewrites the segment rows in the JVM: the plans
+    that fill the expunged generation — walked into every cache they
+    fill, not into the index's own segment rows, filled at build time —
+    have no Python-worker node, and the result answers like the
+    OracleIndex over the live documents."""
+    from lucenenet_spark.index.segments import expunge_deletes
+
+    index = build(spark)  # expunge releases its term_stats cache
+    built = [n.relation().cacheBuilder() for n in _plan_nodes(
+        index.segments._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "InMemoryTableScan"]
+    assert built
+    dead = {0, 4, 9}
+    purged = expunge_deletes(index.with_deletes(spark.createDataFrame(
+        [(d,) for d in dead], "doc_id long")))
+    names = [n.nodeName() for n in _fill_nodes(
+        purged.segments._jdf.queryExecution().executedPlan(), built)]
+    assert not [n for n in names
+                if any(p in n for p in PYTHON_NODES)], names
+    assert "Generate" in names, names  # the touched lists were rebuilt
+    live = oracle_over((i, s, t) for i, (s, t) in enumerate(DOCS)
+                       if i not in dead)
+    for q in (T("alpha"), ast.Bool(should=(T("alpha"), T("beta"))),
+              ast.Phrase(("alpha", "beta"), field="content")):
+        assert top(Searcher(purged), q) == live.top_k(q, 20), q
+
+
 # ------------------------------------------------- fused Boolean path
 
 def _spy_fused(searcher):

@@ -427,6 +427,60 @@ def test_update_keeps_gap_and_refuses_unsaved_analyzer(spark, tmp_path):
         update_documents(back, new, ["key"], text_col="text")
 
 
+def test_update_takes_the_build_columns(spark, tmp_path):
+    """update_documents inverts new rows from the build's columns: a
+    lang_col build updated without lang_col still splits a code file's
+    identifiers, in memory and after save/load; a conflicting column
+    raises; an index whose stats.json predates the record takes the
+    columns from the arguments, as before."""
+    import json
+    import os
+
+    from lucenenet_spark.index.segments import (SegmentedIndex,
+                                                build_segmented_index,
+                                                update_documents)
+
+    docs = spark.createDataFrame(
+        [(0, "k0", "python", "def fooBar(): pass"),
+         (1, "k1", "text", "plain words")],
+        "doc_id long, key string, lang string, text string")
+    idx = build_segmented_index(spark, docs, text_col="text",
+                                lang_col="lang")
+    new = spark.createDataFrame([("k1", "python", "def bazQux(): pass")],
+                                "key string, lang string, text string")
+
+    def fresh_terms(updated):
+        return {r["term"] for r in
+                updated.postings.where("doc_id = 2").collect()}
+
+    path = str(tmp_path / "idx")
+    idx.save(path)
+    back = SegmentedIndex.load(spark, path, stored=docs)
+    code = {"def", "baz", "qux", "pass"}
+    for base in (idx, back):
+        assert fresh_terms(update_documents(base, new, ["key"],
+                                            text_col="text")) == code
+        assert fresh_terms(update_documents(base, new, ["key"])) == code
+        with pytest.raises(ValueError, match="lang_col"):
+            update_documents(base, new, ["key"], text_col="text",
+                             lang_col="other")
+
+    with open(os.path.join(path, "stats.json")) as f:
+        meta = json.load(f)
+    for k in ("text_col", "lang_col", "positions", "keyword_cols"):
+        del meta[k]
+    with open(os.path.join(path, "stats.json"), "w") as f:
+        json.dump(meta, f)
+    old = SegmentedIndex.load(spark, path, stored=docs)
+    assert fresh_terms(update_documents(old, new, ["key"],
+                                        text_col="text")) == {
+        "def", "bazqux", "pass"}
+    assert fresh_terms(update_documents(old, new, ["key"], text_col="text",
+                                        lang_col="lang")) == code
+    with pytest.raises(ValueError, match="text_col"):
+        update_documents(old, new, ["key"])
+
+
 def test_merge_shuffle_balanced_under_zipf(spark, corpus):
     """Skew validation (SURVEY §7 Phase 6): the corpus vocabulary is
     Zipfian, yet the merge shuffle keys on (field, term, merge_group), so
@@ -483,35 +537,6 @@ def test_merge_wave_fallback_out_of_order_segments(spark, corpus):
            .collect()]
     assert got == want
     assert idx.segments.select("seg_id").distinct().count() == 1
-
-
-def test_wand_applies_tombstones(spark, corpus):
-    """wand_topk honors with_deletes: rank-identical to the exact scorer
-    over the live set (the ADVICE.md deleted-docs gap)."""
-    from pyspark.sql import functions as F
-
-    from lucenenet_spark.index.segments import build_segmented_index
-    from lucenenet_spark.index.wand import wand_topk
-    from lucenenet_spark.plans import ast
-    from lucenenet_spark.plans.lowering import Searcher
-
-    base = build_segmented_index(spark, corpus, text_col="content",
-                                 lang_col="lang")
-    terms = [("index", 1.0), ("merge", 1.0), ("segment", 1.0)]
-    top = [r["doc_id"] for r in
-           wand_topk(base, terms, k=5, field="content").collect()]
-    assert top, "need non-empty baseline hits"
-    dead = spark.createDataFrame([(int(d),) for d in top[:3]], "doc_id long")
-    idx = base.with_deletes(dead)
-
-    got = [tuple(r) for r in
-           wand_topk(idx, terms, k=10, field="content").collect()]
-    want = [tuple(r) for r in
-            Searcher(idx).search(
-                ast.Bool(should=tuple(ast.Term(t, field="content")
-                                      for t, _ in terms)), 10).collect()]
-    assert got == want
-    assert not set(top[:3]) & {d for d, _ in got}
 
 
 def test_wave_retention_policy(spark, corpus, tmp_path):

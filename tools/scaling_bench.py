@@ -70,7 +70,6 @@ def _tree_cpu_sec() -> float:
 
 def single_run(cpus: int, n_files: int, reps: int = 3) -> None:
     from lucenenet_spark.index.segments import build_segmented_index
-    from lucenenet_spark.index.wand import wand_topk
     from lucenenet_spark.plans import ast
     from lucenenet_spark.plans.lowering import Searcher
     from lucenenet_spark.session import get_spark
@@ -124,8 +123,9 @@ def single_run(cpus: int, n_files: int, reps: int = 3) -> None:
         ("bool_and", lambda: s.search(ast.Bool(must=(
             ast.Term("index", field="content"),
             ast.Term("merge", field="content"))), 10)),
-        ("wand_or", lambda: wand_topk(seg, [("spark", 1.0), ("segment", 1.0),
-                                            ("query", 1.0)], 10, "content")),
+        ("wand_or", lambda: s.search(ast.Bool(should=tuple(
+            ast.Term(t, field="content")
+            for t in ("spark", "segment", "query"))), 10)),
         ("phrase", lambda: s.search(ast.Phrase(("doc", "id"),
                                                field="content"), 10)),
     ]
