@@ -10,7 +10,7 @@ A from-scratch re-expression of the capabilities of Lucene.Net 3.0.3
                 JVM merge waves with lineage + resume
 - plans/      : Query AST + lowering to DataFrame plans (the "Weight/Scorer"
                 layer re-expressed as joins/aggregations)
-- functions/  : BM25 scoring kernel (column expressions), text statistics
+- functions/  : BM25 scoring kernel (SQL expression text), text statistics
 - operators/  : dedup (exact/minhash/simhash/jaccard), ANN, top-k helpers
 - queryparser/: Lucene-style query-string parser -> AST
 - streaming/  : incremental (NRT-style) index maintenance via foreachBatch

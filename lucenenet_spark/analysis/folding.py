@@ -7,8 +7,8 @@ ISOLatin1 filter covers, single-char foldings) shared verbatim by three
 implementations so they fold identically:
 
   1. pure-Python str.translate (query-side + invert kernels)
-  2. Spark F.translate (the folded TermRange collation's term predicate)
-  3. DuckDB translate(...) (oracle SQL, when a folded entry is wired)
+  2. SQL translate(...) text, the same in Spark SQL (the folded TermRange
+     collation's term predicate) and DuckDB (oracle SQL)
 
 Multi-char foldings of the reference (AE->AE ligature, ss for eszett,
 TH/th for thorn, OE/oe) are folded to their FIRST letter here — a
@@ -19,9 +19,6 @@ cases are mapped.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 FOLD_SRC = (
     "ÀÁÂÃÄÅàáâãäåÇçÈÉÊËèéêëÌÍÎÏìíîïÑñÒÓÔÕÖØòóôõöøÙÚÛÜùúûüÝŸýÿ"
     "ÆæĐđŒœÞþßŠšŽžČčĆćĀāĒēĪīŌōŪūĂăĄąĖėĘęĞğİıŁłŃńŞşŢţŰűŻżŹź"
@@ -31,6 +28,7 @@ FOLD_DST = (
     "AaDdOoTtsSsZzCcCcAaEeIiOoUuAaAaEeEeGgIiLlNnSsTtUuZzZz"
 )
 assert len(FOLD_SRC) == len(FOLD_DST)
+assert not set("'\\") & set(FOLD_SRC + FOLD_DST)  # fold_sql quotes verbatim
 
 _PY_TABLE = str.maketrans(FOLD_SRC, FOLD_DST)
 
@@ -40,11 +38,7 @@ def fold_ascii_py(text: str) -> str:
     return text.translate(_PY_TABLE) if text is not None else text
 
 
-def fold_ascii_col(text: Column) -> Column:
-    """JVM-expression fold (term-dictionary predicates, codegen-friendly)."""
-    return F.translate(text, FOLD_SRC, FOLD_DST)
-
-
 def fold_sql(expr: str) -> str:
-    """DuckDB fold of a SQL expression (oracle parity)."""
+    """SQL fold of a SQL expression, valid in Spark SQL and DuckDB: the
+    maps hold no quote or backslash, so both read them verbatim."""
     return f"translate({expr}, '{FOLD_SRC}', '{FOLD_DST}')"

@@ -1,4 +1,4 @@
-"""BM25 scoring kernel as Spark column expressions.
+"""BM25 scoring kernel as Spark SQL expression text.
 
 Lucene's published BM25Similarity formulas (public Apache Lucene docs),
 swapped into the reference's pluggable Similarity seam
@@ -12,47 +12,31 @@ BM25 drops the reference TF-IDF's queryNorm and coord factors; kept from the
 reference: per-term boost multiplication and the collector tie-break
 (equal score -> LOWER doc_id wins, src/Lucene.Net/Search/HitQueue.cs:87-93).
 
-All math is double precision; callers round to SCORE_DECIMALS before
-ordering so that rank order is stable across summation orders and across
-engines (Spark vs DuckDB vs the pure-Python oracle).
+The kernels take SQL operands (column names or expressions) and return
+parenthesized SQL text with N, avgdl and the constants inlined as DOUBLE
+literals; plans parse them once (selectExpr / F.expr).  All math is double
+precision; callers round to SCORE_DECIMALS before ordering so that rank
+order is stable across summation orders and across engines (Spark vs
+DuckDB vs the pure-Python oracle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .sqltext import lit
 
 K1 = 1.2
 B = 0.75
 SCORE_DECIMALS = 6
 
 
-def idf(df_col: Column, n_docs: Column | float) -> Column:
-    n = F.lit(float(n_docs)) if not isinstance(n_docs, Column) else n_docs
-    d = df_col.cast("double")
-    return F.log(F.lit(1.0) + (n - d + F.lit(0.5)) / (d + F.lit(0.5)))
+def idf_sql(df: str, n_docs: float) -> str:
+    d = f"CAST({df} AS DOUBLE)"
+    return (f"ln({lit(1.0)} + ({lit(float(n_docs))} - {d} + {lit(0.5)})"
+            f" / ({d} + {lit(0.5)}))")
 
 
-def tf_norm(tf_col: Column, dl_col: Column, avgdl: Column | float,
-            k1: float = K1, b: float = B) -> Column:
-    a = F.lit(float(avgdl)) if not isinstance(avgdl, Column) else avgdl
-    tf = tf_col.cast("double")
-    dl = dl_col.cast("double")
-    return (tf * F.lit(k1 + 1.0)) / (
-        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / a)
-    )
-
-
-def term_score(tf_col: Column, dl_col: Column, df_col: Column,
-               n_docs: float, avgdl: float,
-               boost: Column | float = 1.0) -> Column:
-    s = idf(df_col, n_docs) * tf_norm(tf_col, dl_col, avgdl)
-    if isinstance(boost, Column):
-        s = s * boost
-    elif boost != 1.0:
-        s = s * F.lit(float(boost))
-    return s
-
-
-def rounded(score: Column, decimals: int = SCORE_DECIMALS) -> Column:
-    return F.round(score, decimals)
+def tf_norm_sql(tf: str, dl: str, avgdl: float,
+                k1: float = K1, b: float = B) -> str:
+    t, d = f"CAST({tf} AS DOUBLE)", f"CAST({dl} AS DOUBLE)"
+    return (f"(({t} * {lit(k1 + 1.0)}) / ({t} + {lit(k1)} * ({lit(1.0 - b)}"
+            f" + {lit(b)} * {d} / {lit(float(avgdl))})))")

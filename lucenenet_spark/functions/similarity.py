@@ -17,11 +17,13 @@ Two strategies, same Weight/Scorer lifecycle:
   available bit-for-bit via ClassicSimilarity(quantize_norms=True)
   (functions/smallfloat.py); coord is omitted as in the BM25 path.
 
-A Similarity provides two column-expression kernels:
-  term_score(tf, dl, df, n, avgdl, boost)   -- per (term, doc) posting row
-  freq_score(freq, dl, idf_terms, avgdl, boost)
-      -- phrase/span scoring from an accumulated freq; idf_terms is the
-      list of per-term idf inputs (df values) resolved via .idf()
+A Similarity provides two kernels as SQL expression text (operands are
+SQL text too: column names or expressions; n, avgdl, boost and idf_sum
+are inlined as literals, a str boost is an operand):
+  term_score_sql(tf, dl, df, n, avgdl, boost)   -- per (term, doc) posting row
+  freq_score_sql(freq, dl, idf_sum, avgdl, boost)
+      -- phrase/span scoring from an accumulated freq; idf_sum is the sum
+      of the per-term .idf() values
 and a scalar .idf(df, n) used when the plan folds idf in as a literal.
 """
 
@@ -30,10 +32,19 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import bm25
+from .sqltext import lit
+
+
+def _boosted(score: str, boost: str | float) -> str:
+    if isinstance(boost, str):
+        return f"({score} * ({boost}))"
+    if boost != 1.0:
+        return f"({score} * {lit(float(boost))})"
+    return f"({score})"
 
 
 class BM25Similarity:
@@ -42,17 +53,19 @@ class BM25Similarity:
     def idf(self, df: int, n: int) -> float:
         return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
-    def term_score(self, tf_col: Column, dl_col: Column, df_col: Column,
-                   n: float, avgdl: float,
-                   boost: Column | float = 1.0) -> Column:
-        return bm25.term_score(tf_col, dl_col, df_col, n, avgdl, boost)
+    def term_score_sql(self, tf: str, dl: str, df: str, n: float,
+                       avgdl: float, boost: str | float = 1.0) -> str:
+        return _boosted(f"{bm25.idf_sql(df, n)} * "
+                        f"{bm25.tf_norm_sql(tf, dl, avgdl)}", boost)
 
-    def freq_score(self, freq_col: Column, dl_col: Column,
-                   idf_sum: Column | float, avgdl: float,
-                   boost: float = 1.0) -> Column:
-        i = idf_sum if isinstance(idf_sum, Column) else F.lit(float(idf_sum))
-        return (F.lit(float(boost)) * i
-                * bm25.tf_norm(freq_col, dl_col, avgdl))
+    def freq_score_sql(self, freq: str, dl: str, idf_sum: float,
+                       avgdl: float, boost: float = 1.0) -> str:
+        return (f"({lit(float(boost))} * {lit(float(idf_sum))} * "
+                f"{bm25.tf_norm_sql(freq, dl, avgdl)})")
+
+
+#: session function name of the quantized-norm kernel
+_QNORM = "_ft_quantize_norm"
 
 
 class ClassicSimilarity:
@@ -70,42 +83,34 @@ class ClassicSimilarity:
     def __init__(self, quantize_norms: bool = False):
         self.quantize_norms = quantize_norms
 
-    def _norm(self, dl_col: Column) -> Column:
+    def _norm(self, dl: str) -> str:
         if not self.quantize_norms:
-            return F.lit(1.0) / F.sqrt(dl_col.cast("double"))
-
-        # Arrow-batched kernel — only in the opt-in parity mode
+            return f"({lit(1.0)} / sqrt(CAST({dl} AS DOUBLE)))"
+        # Arrow-batched kernel — only in the opt-in parity mode, called
+        # from the SQL text by its session function name
         @F.pandas_udf("double")
         def qnorm(dl: pd.Series) -> pd.Series:
             from .smallfloat import quantize_norm_np
             return pd.Series(
                 quantize_norm_np(dl.to_numpy()).astype("float64"))
 
-        return qnorm(dl_col)
+        SparkSession.active().udf.register(_QNORM, qnorm)
+        return f"{_QNORM}({dl})"
 
     def idf(self, df: int, n: int) -> float:
         return math.log(n / (df + 1.0)) + 1.0
 
-    def term_score(self, tf_col: Column, dl_col: Column, df_col: Column,
-                   n: float, avgdl: float,
-                   boost: Column | float = 1.0) -> Column:
-        d = df_col.cast("double")
-        idf = F.log(F.lit(float(n)) / (d + F.lit(1.0))) + F.lit(1.0)
-        s = (idf * idf * F.sqrt(tf_col.cast("double"))
-             * self._norm(dl_col))
-        if isinstance(boost, Column):
-            return s * boost
-        return s * F.lit(float(boost)) if boost != 1.0 else s
+    def term_score_sql(self, tf: str, dl: str, df: str, n: float,
+                       avgdl: float, boost: str | float = 1.0) -> str:
+        d = f"CAST({df} AS DOUBLE)"
+        idf = f"(ln({lit(float(n))} / ({d} + {lit(1.0)})) + {lit(1.0)})"
+        return _boosted(f"{idf} * {idf} * sqrt(CAST({tf} AS DOUBLE)) * "
+                        f"{self._norm(dl)}", boost)
 
-    def freq_score(self, freq_col: Column, dl_col: Column,
-                   idf_sum: Column | float, avgdl: float,
-                   boost: float = 1.0) -> Column:
+    def freq_score_sql(self, freq: str, dl: str, idf_sum: float,
+                       avgdl: float, boost: float = 1.0) -> str:
         # phrase weight assembly: (sum of idfs)^2 * sqrt(freq) * norm
         # (PhraseWeight mirrors TermWeight's queryWeight*value = idf^2)
-        i = idf_sum if isinstance(idf_sum, Column) else F.lit(float(idf_sum))
-        return (F.lit(float(boost)) * i * i
-                * F.sqrt(freq_col.cast("double"))
-                * self._norm(dl_col))
-
-
-DEFAULT_SIMILARITY = BM25Similarity()
+        i = lit(float(idf_sum))
+        return (f"({lit(float(boost))} * {i} * {i} * "
+                f"sqrt(CAST({freq} AS DOUBLE)) * {self._norm(dl)})")

@@ -32,6 +32,25 @@ set-oriented:
 
 Scores are doubles rounded to SCORE_DECIMALS before ordering so rank order
 is reproducible across partitionings and engines (float-sum associativity).
+
+Plans are SQL text.  Each plan node of the query paths is one
+``where(str)``, ``selectExpr(...)`` or ``F.expr(...)`` over SQL expression
+text with the query's values (terms, df, N, avgdl, boosts, offsets)
+inlined as literals, and the similarity kernels (functions/bm25.py,
+functions/similarity.py) emit their formulas as text too: a plan costs a
+few parses in the JVM, not one gateway round trip per Column operator.
+Every inlined value goes through functions/sqltext.lit:
+
+- strings are quoted with backslash-escaped ``\\`` and ``'``, so a term
+  is always one literal, never SQL syntax;
+- doubles are ``repr(x) + "D"`` (exact, and DOUBLE, not DECIMAL); NaN and
+  ±inf raise ValueError;
+- a prefix matches with ``startswith``, never ``LIKE``, so ``%`` and
+  ``_`` stay literal.
+
+Column code remains only where a node runs a Python kernel (the
+lucene-spec sloppy phrase and ordered-span walks) or is off the query
+hot path.
 """
 
 from __future__ import annotations
@@ -44,8 +63,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..functions import bm25
+from ..functions.bm25 import B, K1, SCORE_DECIMALS
 from ..functions.similarity import BM25Similarity
+from ..functions.sqltext import lit
 from ..index.cache import SegmentCache
 from ..index.segments import SegmentedIndex
 from . import ast
@@ -55,8 +75,22 @@ from . import ast
 _SPAN_FILTER_CACHE: SegmentCache = SegmentCache()
 
 
-def _idf(df: int, n: int) -> float:
-    return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+#: the rounded score column every top-k orders by
+_ROUNDED_SCORE = f"round(score, {SCORE_DECIMALS}) AS score"
+
+
+def _in(values) -> str:
+    return ", ".join(map(lit, sorted(values)))
+
+
+def _term_filter(field: str, term: str) -> str:
+    return f"field = {lit(field)} AND term = {lit(term)}"
+
+
+def _top(frame: DataFrame, k: int) -> DataFrame:
+    """TopDocs order (HitQueue.cs:87-93): score desc, ties by ascending
+    doc_id."""
+    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def wildcard_to_regex(pattern: str) -> str:
@@ -115,9 +149,9 @@ class Searcher:
         missing = pairs - self._df_memo.keys()
         if missing:
             rows = (self.index.term_stats()
-                    .where(F.col("field").isin(sorted({f for f, _ in missing}))
-                           & F.col("term").isin(sorted({t for _, t in missing})))
-                    .select("field", "term", "df").collect())
+                    .where(f"field IN ({_in({f for f, _ in missing})}) AND "
+                           f"term IN ({_in({t for _, t in missing})})")
+                    .collect())
             got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
             self._df_memo.update({p: got.get(p, 0) for p in missing})
         return {p: self._df_memo[p] for p in pairs}
@@ -136,15 +170,10 @@ class Searcher:
         ascending doc_id (HitQueue.cs:87-93).  positive_only drops
         score <= 0 hits (PositiveScoresOnlyCollector,
         src/Lucene.Net/Search/PositiveScoresOnlyCollector.cs)."""
-        frame = self._hits(q)
-        s = bm25.rounded(F.col("score"))
-        out = frame.select(F.col("doc_id"), s.alias("score"))
+        out = self._hits(q).selectExpr("doc_id", _ROUNDED_SCORE)
         if positive_only:
-            out = out.where(F.col("score") > 0)
-        return (
-            out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+            out = out.where("score > 0")
+        return _top(out, k)
 
     def span_filter_result(self, q: ast.Query) -> DataFrame:
         """SpanQueryFilter.BitSpans (src/Lucene.Net/Search/
@@ -183,11 +212,9 @@ class Searcher:
                  .select("doc_id", "s", "e"))
         leaves = ast.span_leaves(sq)
         pp = self.index.postings_payloads
-        cond = None
-        for t in {(le.field, le.term) for le in leaves}:
-            c = (F.col("field") == t[0]) & (F.col("term") == t[1])
-            cond = c if cond is None else (cond | c)
-        if cond is None:
+        cond = " OR ".join(f"({_term_filter(f, t)})" for f, t in
+                           sorted({(le.field, le.term) for le in leaves}))
+        if not cond:
             # no convertible span leaves (e.g. all clauses prohibited):
             # the reference finds no spans -> no payloads
             return self.index.spark.createDataFrame(
@@ -281,8 +308,8 @@ class Searcher:
         if term_vectors is not None:
             doc_terms = (
                 term_vectors
-                .where((F.col("field") == field)
-                       & (F.col("doc_id") == doc_id))
+                .where(f"field = {lit(field)} AND "
+                       f"doc_id = {lit(int(doc_id))}")
                 .select(F.explode("vec").alias("tv"))
                 .select(F.col("tv.term").alias("term"),
                         F.col("tv.tf").alias("tf"))
@@ -291,28 +318,24 @@ class Searcher:
         else:
             doc_terms = (
                 self.index.postings_nopos
-                .where((F.col("field") == field)
-                       & (F.col("doc_id") == doc_id))
-                .select("term", "tf").collect()
+                .where(f"field = {lit(field)} AND "
+                       f"doc_id = {lit(int(doc_id))}")
+                .selectExpr("term", "tf").collect()
             )
         if not doc_terms:
             return self._empty_frame()
         dfs = self.term_dfs([(field, r["term"]) for r in doc_terms])
+        idf = BM25Similarity().idf
         ranked = sorted(
-            ((r["tf"] * _idf(dfs[(field, r["term"])], n), r["term"])
+            ((r["tf"] * idf(dfs[(field, r["term"])], n), r["term"])
              for r in doc_terms),
             key=lambda x: (-x[0], x[1]),
         )[:max_terms]
         q = ast.Bool(should=tuple(
             ast.Term(t, field=field) for _, t in ranked))
         hits = self.score_frame(ast.rewrite(q)).where(
-            F.col("doc_id") != doc_id)
-        s = bm25.rounded(F.col("score"))
-        return (
-            self._live(hits).select("doc_id", s.alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+            f"doc_id != {lit(int(doc_id))}")
+        return _top(self._live(hits).selectExpr("doc_id", _ROUNDED_SCORE), k)
 
     def explain(self, q: ast.Query, doc_id: int) -> dict:
         """Explanation tree for one (query, doc) — the reference's
@@ -322,12 +345,10 @@ class Searcher:
         search score (rounded to SCORE_DECIMALS)."""
         q = ast.rewrite(q)
         node = self._explain(q, doc_id)
-        node["value"] = round(node["value"], bm25.SCORE_DECIMALS)
+        node["value"] = round(node["value"], SCORE_DECIMALS)
         return node
 
     def _explain(self, q: ast.Query, doc_id: int) -> dict:
-        import math as _m
-
         def leaf(value, desc, details=()):
             return {"value": float(value), "description": desc,
                     "details": list(details)}
@@ -335,9 +356,8 @@ class Searcher:
         if isinstance(q, ast.Term):
             row = (
                 self.index.postings_nopos
-                .where((F.col("field") == q.field)
-                       & (F.col("term") == q.term)
-                       & (F.col("doc_id") == doc_id))
+                .where(f"{_term_filter(q.field, q.term)} AND "
+                       f"doc_id = {lit(int(doc_id))}")
                 .collect()
             )
             if not row:
@@ -352,8 +372,8 @@ class Searcher:
                 # with queryWeight = idf * boost (queryNorm omitted, a
                 # per-query constant) and fieldWeight = tf * idf * norm
                 idf = self.sim.idf(df, n)
-                tfv = _m.sqrt(tf)
-                norm = 1.0 / _m.sqrt(dl)
+                tfv = math.sqrt(tf)
+                norm = 1.0 / math.sqrt(dl)
                 return leaf(
                     q.boost * idf * idf * tfv * norm,
                     f"weight({q.field}:{q.term} in {doc_id}) [Classic], "
@@ -365,9 +385,8 @@ class Searcher:
                           [leaf(tfv, f"tf(termFreq={tf})=sqrt(freq)"),
                            leaf(idf, f"idf(docFreq={df}, maxDocs={n})"),
                            leaf(norm, f"fieldNorm(dl={dl})=1/sqrt(dl)")])])
-            idf = _m.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            tfn = tf * (bm25.K1 + 1.0) / (
-                tf + bm25.K1 * (1.0 - bm25.B + bm25.B * dl / avgdl))
+            idf = BM25Similarity().idf(df, n)
+            tfn = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
             return leaf(
                 q.boost * idf * tfn,
                 f"weight({q.field}:{q.term} in {doc_id}) [BM25]",
@@ -406,15 +425,15 @@ class Searcher:
         if isinstance(q, ast.MatchAll):
             return leaf(q.boost, "MatchAllDocsQuery")
         # generic fallback: pull the doc's score from the lowered frame
-        row = (
-            self.score_frame(q).where(F.col("doc_id") == doc_id).collect())
+        row = (self.score_frame(q).where(f"doc_id = {lit(int(doc_id))}")
+               .collect())
         v = float(row[0]["score"]) if row else 0.0
         return leaf(v, f"{type(q).__name__} (score via plan)")
 
     def facet_counts(self, q: ast.Query, facet_col: str) -> DataFrame:
         """SimpleFacetedSearch analogue: facet counts over matching docs
         (src/contrib/SimpleFacetedSearch/SimpleFacetedSearch.cs)."""
-        hits = self._hits(q).select("doc_id")
+        hits = self._hits(q).selectExpr("doc_id")
         stored = self.index.stored
         return (
             stored.join(hits, stored[self.index.id_col] == hits["doc_id"], "left_semi")
@@ -425,7 +444,7 @@ class Searcher:
     def search_sorted(self, q: ast.Query, sort_exprs: list, k: int = 10) -> DataFrame:
         """TopFieldCollector analogue: sort hits by stored-field expressions
         (src/Lucene.Net/Search/TopFieldCollector.cs)."""
-        hits = self._hits(q).select("doc_id")
+        hits = self._hits(q).selectExpr("doc_id")
         stored = self.index.stored
         joined = stored.join(
             hits, stored[self.index.id_col] == hits["doc_id"], "left_semi"
@@ -450,7 +469,7 @@ class Searcher:
             return self._boolean_filter_ids(q)
         if isinstance(q, ast.ChainedFilter):
             return self._chained_filter_ids(q)
-        return self.score_frame(q).select("doc_id")
+        return self.score_frame(q).selectExpr("doc_id")
 
     def _chained_filter_ids(self, q: "ast.ChainedFilter") -> DataFrame:
         """ChainedFilter.GetDocIdSet as DataFrame set algebra (see
@@ -459,7 +478,7 @@ class Searcher:
         seed complements over the stored-doc universe (the MaxDoc bitset
         flip, ChainedFilter.cs:137-140)."""
         ops = q.resolved_ops()
-        sets = [self.match_frame(f).select("doc_id").distinct()
+        sets = [self.match_frame(f).selectExpr("doc_id").distinct()
                 for f in q.filters]
         if ops[0] == "ANDNOT":
             universe = self.index.stored.select(
@@ -490,20 +509,19 @@ class Searcher:
         df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
         if df == 0:
             return self._empty_frame()
-        p = self.index.postings_nopos.where(
-            (F.col("field") == q.field) & (F.col("term") == q.term))
-        score = self.sim.term_score(
-            F.col("tf"), F.col("dl"), F.lit(df),
-            self.index.n_docs, self.index.avgdl, q.boost,
-        )
-        return p.select(F.col("doc_id"), score.alias("score"))
+        score = self.sim.term_score_sql(
+            "tf", "dl", lit(df), self.index.n_docs, self.index.avgdl,
+            q.boost)
+        return (self.index.postings_nopos
+                .where(_term_filter(q.field, q.term))
+                .selectExpr("doc_id", f"{score} AS score"))
 
     def _matchall_frame(self, q: ast.MatchAll) -> DataFrame:
         stored = self.index.stored
         if stored is not None:
             ids = stored.select(F.col(self.index.id_col).alias("doc_id"))
         else:
-            ids = self.index.postings_nopos.select("doc_id").distinct()
+            ids = self.index.postings_nopos.selectExpr("doc_id").distinct()
         return ids.select("doc_id", F.lit(float(q.boost)).alias("score"))
 
     # ---- boolean composition: ONE groupBy(doc_id) over tagged clause rows
@@ -519,26 +537,25 @@ class Searcher:
             if u is None:
                 return self._empty_frame()
         else:
-            u = reduce(DataFrame.unionByName, [self.score_frame(c).select(
-                "doc_id", "score", F.lit(m).alias("m"), F.lit(s).alias("s"))
+            u = reduce(DataFrame.unionByName, [self.score_frame(c).selectExpr(
+                "doc_id", "score", f"{m} AS m", f"{s} AS s")
                 for c, m, s in clauses])
-        g = u.groupBy("doc_id").agg(
-            F.sum("score").alias("score"),
-            F.sum("m").alias("n_must"),
-            F.sum("s").alias("n_should"),
-        )
-        if q.must:
-            g = g.where(F.col("n_must") == len(q.must))
+        g = u.groupBy("doc_id").agg(F.expr("sum(score) AS score"),
+                                    F.expr("sum(m) AS n_must"),
+                                    F.expr("sum(s) AS n_should"))
+        having = [f"n_must = {len(q.must)}"] if q.must else []
         msm = q.min_should_match
         if q.should and not q.must and msm < 1:
             msm = 1  # pure-disjunction: at least one SHOULD must match
         if msm > 0:
-            g = g.where(F.col("n_should") >= msm)
-        out = g.select("doc_id", (F.col("score") * F.lit(float(q.boost))).alias("score"))
+            having.append(f"n_should >= {lit(msm)}")
+        if having:
+            g = g.where(" AND ".join(having))
+        out = g.selectExpr("doc_id", f"score * {lit(float(q.boost))} AS score")
         for c in q.must_not:
             out = out.join(
-                self.match_frame(c).select("doc_id"), "doc_id", "left_anti"
-            )
+                self.match_frame(c).selectExpr("doc_id"), "doc_id",
+                "left_anti")
         return out
 
     def _term_clause_rows(self, clauses: list) -> DataFrame | None:
@@ -549,45 +566,38 @@ class Searcher:
         posting row its clause's df, boost and MUST/SHOULD tag.  None when a MUST
         term is absent (nothing can match); absent SHOULD terms drop out."""
         dfs = self.term_dfs([(c.field, c.term) for c, _, _ in clauses])
-        entries, pred = [], None
+        entries, preds = [], []
         for c, m, s in clauses:
             df = dfs[(c.field, c.term)]
             if df == 0:
                 if m:
                     return None
                 continue
-            entries += [
-                F.struct(F.lit(c.field).alias("field"),
-                         F.lit(c.term).alias("term")),
-                F.struct(F.lit(float(df)).alias("df"),
-                         F.lit(float(c.boost)).alias("boost"),
-                         F.lit(m).alias("m"), F.lit(s).alias("s"))]
-            hit = (F.col("field") == c.field) & (F.col("term") == c.term)
-            pred = hit if pred is None else pred | hit
-        if pred is None:
+            entries.append(
+                f"named_struct('field', {lit(c.field)}, 'term', "
+                f"{lit(c.term)}), named_struct('df', {lit(float(df))}, "
+                f"'boost', {lit(float(c.boost))}, 'm', {m}, 's', {s})")
+            preds.append(f"({_term_filter(c.field, c.term)})")
+        if not preds:
             return None
-        meta = F.create_map(*entries)[F.struct("field", "term")]
-        score = self.sim.term_score(
-            F.col("tf"), F.col("dl"), meta["df"],
-            self.index.n_docs, self.index.avgdl, meta["boost"])
-        return self.index.postings_nopos.where(pred).select(
-            "doc_id", score.alias("score"), meta["m"].alias("m"),
-            meta["s"].alias("s"))
+        meta = f"map({', '.join(entries)})[struct(field, term)]"
+        score = self.sim.term_score_sql(
+            "tf", "dl", f"{meta}.df", self.index.n_docs, self.index.avgdl,
+            f"{meta}.boost")
+        return (self.index.postings_nopos.where(" OR ".join(preds))
+                .selectExpr("doc_id", f"{score} AS score", f"{meta}.m AS m",
+                            f"{meta}.s AS s"))
 
     def _dismax_frame(self, q: ast.DisMax) -> DataFrame:
-        frames = [self.score_frame(c).select("doc_id", "score") for c in q.queries]
+        frames = [self.score_frame(c).selectExpr("doc_id", "score")
+                  for c in q.queries]
         if not frames:
             return self._empty_frame()
-        u = frames[0]
-        for t in frames[1:]:
-            u = u.unionByName(t)
-        g = u.groupBy("doc_id").agg(
-            F.max("score").alias("mx"), F.sum("score").alias("sm")
-        )
-        score = (F.col("mx") + F.lit(float(q.tie)) * (F.col("sm") - F.col("mx"))) * F.lit(
-            float(q.boost)
-        )
-        return g.select("doc_id", score.alias("score"))
+        g = reduce(DataFrame.unionByName, frames).groupBy("doc_id").agg(
+            F.expr("max(score) AS mx"), F.expr("sum(score) AS sm"))
+        return g.selectExpr(
+            "doc_id", f"(mx + {lit(float(q.tie))} * (sm - mx)) * "
+                      f"{lit(float(q.boost))} AS score")
 
     # ---- phrase
 
@@ -614,12 +624,11 @@ class Searcher:
         qoffs: dict[str, list[int]] = {}
         for t, o in pairs:
             qoffs.setdefault(t, []).append(int(o))
-        m = F.create_map(*[x for t, os in sorted(qoffs.items())
-                           for x in (F.lit(t), F.array(*map(F.lit, os)))])
+        m = ", ".join(f"{lit(t)}, array({', '.join(map(lit, os))})"
+                      for t, os in sorted(qoffs.items()))
         return (self.index.postings
-                .where((F.col("field") == field)
-                       & F.col("term").isin(sorted(qoffs)))
-                .withColumn("qoff", F.explode(m[F.col("term")])))
+                .where(f"field = {lit(field)} AND term IN ({_in(qoffs)})")
+                .selectExpr("*", f"explode(map({m})[term]) AS qoff"))
 
     def _phrase_frame(self, q: ast.Phrase) -> DataFrame:
         """PhraseScorer: the query terms' positions aligned by their query
@@ -637,9 +646,8 @@ class Searcher:
         # countDistinct, whose distinct-aggregate rewrite adds a shuffle
         per_doc = (
             p.groupBy("doc_id", "dl")
-            .agg(F.collect_list(F.struct("qoff", "positions")).alias("plists"))
-            .where(F.size(F.array_distinct(F.col("plists.qoff")))
-                   == len(pairs))
+            .agg(F.expr("collect_list(struct(qoff, positions)) AS plists"))
+            .where(f"size(array_distinct(plists.qoff)) = {len(pairs)}")
         )
         shifted, exact = self._aligned(len(pairs))
         if q.slop == 0:
@@ -666,7 +674,9 @@ class Searcher:
                     vals.append(lucene_sloppy_freq(plists, offs, slop))
                 return pd.Series(vals, dtype="float64")
 
-            freq = _lucene_freq(F.sort_array(F.col("plists")))
+            per_doc = per_doc.withColumn(
+                "freq", _lucene_freq(F.sort_array(F.col("plists"))))
+            freq = "freq"
         else:
             # slop_spec="all_tuples": every tuple of shifted positions
             # (one per query position) with spread d = max - min <= slop
@@ -678,47 +688,43 @@ class Searcher:
             # folds over the n position arrays — tuple enumeration happens
             # inside one JVM expression per doc row, no extra join or
             # explode (tuple count = Π tf_i, query-term-bounded).
-            arrays = [F.element_at(shifted, i + 1)
-                      for i in range(len(pairs))]
-
             def fold(i, mn, mx):
-                if i == len(arrays):
-                    d = (mx - mn).cast("double")
-                    return F.when(mx - mn <= q.slop,
-                                  1.0 / (1.0 + d)).otherwise(0.0)
-                return F.aggregate(
-                    arrays[i], F.lit(0.0),
-                    lambda acc, p: acc + fold(i + 1, F.least(mn, p),
-                                              F.greatest(mx, p)))
+                if i == len(pairs):
+                    d = f"{mx} - {mn}"
+                    return (f"CASE WHEN {d} <= {lit(q.slop)} THEN {lit(1.0)}"
+                            f" / ({lit(1.0)} + CAST({d} AS DOUBLE))"
+                            f" ELSE {lit(0.0)} END")
+                p = f"p{i}"
+                lo, hi = ((f"least({mn}, {p})", f"greatest({mx}, {p})")
+                          if i else (p, p))
+                return (f"aggregate(element_at({shifted}, {i + 1}), "
+                        f"{lit(0.0)}, (acc{i}, {p}) -> acc{i} + "
+                        f"{fold(i + 1, lo, hi)})")
 
-            freq = F.aggregate(
-                arrays[0], F.lit(0.0),
-                lambda acc, p: acc + fold(1, p, p))
+            freq = fold(0, None, None)
         return self._freq_scored(per_doc, freq, idf_sum, q.boost)
 
     @staticmethod
-    def _aligned(n: int):
+    def _aligned(n: int) -> tuple[str, str]:
         """(shifted, exact freq) over a doc's `plists`: the struct list
         sorted by qoff with each positions list shifted by its offset, and
         the count of positions common to all n shifted lists."""
-        shifted = F.transform(
-            F.sort_array(F.col("plists")),
-            lambda s: F.transform(s["positions"], lambda x: x - s["qoff"]))
-        inter = F.aggregate(
-            F.slice(shifted, 2, n - 1) if n > 1 else F.array(),
-            F.element_at(shifted, 1),
-            lambda acc, xs: F.array_intersect(acc, xs))
-        return shifted, F.size(inter).cast("double")
+        shifted = ("transform(sort_array(plists), "
+                   "e -> transform(e.positions, x -> x - e.qoff))")
+        inter = (f"aggregate(slice({shifted}, 2, {n - 1}), "
+                 f"element_at({shifted}, 1), "
+                 f"(acc, xs) -> array_intersect(acc, xs))"
+                 if n > 1 else f"element_at({shifted}, 1)")
+        return shifted, f"CAST(size({inter}) AS DOUBLE)"
 
-    def _freq_scored(self, per_doc: DataFrame, freq, idf_sum: float,
+    def _freq_scored(self, per_doc: DataFrame, freq: str, idf_sum: float,
                      boost: float) -> DataFrame:
-        """(doc_id, score) of the candidate docs with freq > 0."""
-        return per_doc.select(
-            "doc_id",
-            self.sim.freq_score(freq, F.col("dl"), idf_sum,
-                                self.index.avgdl, boost).alias("score"),
-            freq.alias("freq"),
-        ).where(F.col("freq") > 0).select("doc_id", "score")
+        """(doc_id, score) of the candidate docs with freq > 0; freq is
+        SQL text over per_doc's columns."""
+        score = self.sim.freq_score_sql(f"({freq})", "dl", idf_sum,
+                                        self.index.avgdl, boost)
+        return (per_doc.where(f"({freq}) > 0")
+                .selectExpr("doc_id", f"{score} AS score"))
 
     def _multiphrase_frame(self, q: ast.MultiPhrase) -> DataFrame:
         """MultiPhraseQuery (src/Lucene.Net/Search/MultiPhraseQuery.cs):
@@ -738,14 +744,14 @@ class Searcher:
         # union the alternatives' positions per (doc, qoff) first
         per_off = (
             p.groupBy("doc_id", "dl", "qoff")
-            .agg(F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("positions")))).alias("positions"))
+            .agg(F.expr("array_sort(array_distinct(flatten("
+                        "collect_list(positions)))) AS positions"))
         )
         per_doc = (
             per_off.groupBy("doc_id", "dl")
-            .agg(F.count("*").alias("n_off"),
-                 F.collect_list(F.struct("qoff", "positions")).alias("plists"))
-            .where(F.col("n_off") == len(offsets))
+            .agg(F.expr("count(*) AS n_off"),
+                 F.expr("collect_list(struct(qoff, positions)) AS plists"))
+            .where(f"n_off = {len(offsets)}")
         )
         _, freq = self._aligned(len(offsets))
         return self._freq_scored(per_doc, freq, idf_sum, q.boost)
@@ -797,22 +803,24 @@ class Searcher:
 
     # ---- multi-term expansion
 
-    def _term_predicate(self, q: ast.Query):
-        t = F.col("term")
+    def _term_predicate(self, q: ast.Query) -> str:
+        """The multi-term query's predicate on the term column, as SQL
+        text.  A prefix is `startswith`, never LIKE: `%` and `_` in it
+        stay literal."""
         if isinstance(q, ast.Prefix):
-            return t.startswith(q.prefix)
+            return f"startswith(term, {lit(q.prefix)})"
         if isinstance(q, ast.Wildcard):
-            return t.rlike(wildcard_to_regex(q.pattern))
+            return f"term RLIKE {lit(wildcard_to_regex(q.pattern))}"
         if isinstance(q, ast.Regex):
-            return t.rlike(q.pattern)
+            return f"term RLIKE {lit(q.pattern)}"
         if isinstance(q, ast.TermRange):
-            lo, hi = q.lower, q.upper
+            t, lo, hi = "term", q.lower, q.upper
             if q.collation == "folded":
                 # collated compare (TermRangeTermEnum.cs:35-41): both the
                 # dictionary term and the bounds map through the collation
                 # key — still one JVM predicate on the term dictionary
-                from ..analysis.folding import fold_ascii_col, fold_ascii_py
-                t = F.lower(fold_ascii_col(t))
+                from ..analysis.folding import fold_ascii_py, fold_sql
+                t = f"lower({fold_sql(t)})"
                 lo = fold_ascii_py(lo).lower() if lo is not None else None
                 hi = fold_ascii_py(hi).lower() if hi is not None else None
             elif q.collation is not None:
@@ -820,29 +828,27 @@ class Searcher:
                     f"collation {q.collation!r} (supported: 'folded')")
             conds = []
             if lo is not None:
-                conds.append(t >= lo if q.include_lower else t > lo)
+                conds.append(f"{t} {'>=' if q.include_lower else '>'} "
+                             f"{lit(lo)}")
             if hi is not None:
-                conds.append(t <= hi if q.include_upper else t < hi)
-            pred = F.lit(True)
-            for c in conds:
-                pred = pred & c
-            return pred
+                conds.append(f"{t} {'<=' if q.include_upper else '<'} "
+                             f"{lit(hi)}")
+            return " AND ".join(conds) or "true"
         raise NotImplementedError(type(q).__name__)
 
     def _expand_match_ids(self, q: ast.Query) -> DataFrame:
         """CONSTANT_SCORE_FILTER rewrite: no term enumeration, direct
         predicate on the postings term column -> distinct doc set."""
         return (
-            self.index.postings_nopos.where(
-                (F.col("field") == q.field) & self._term_predicate(q)
-            )
-            .select("doc_id")
+            self.index.postings_nopos
+            .where(f"field = {lit(q.field)} AND ({self._term_predicate(q)})")
+            .selectExpr("doc_id")
             .distinct()
         )
 
     def _constant_frame(self, q: ast.Query, boost: float) -> DataFrame:
         ids = self.match_frame(q)
-        return ids.select("doc_id", F.lit(float(boost)).alias("score"))
+        return ids.selectExpr("doc_id", f"{lit(float(boost))} AS score")
 
     def _fuzzy_frame(self, q: ast.Fuzzy) -> DataFrame:
         """SCORING_BOOLEAN rewrite, fully in-plan: the candidate
@@ -853,31 +859,29 @@ class Searcher:
         the join lands below the posting explode so only candidate lists
         are expanded (FuzzyTermEnum.cs:135-183 semantics, MultiTermQuery
         SCORING_BOOLEAN rewrite at plan scale)."""
-        t = F.col("term")
-        cand = self.index.term_stats().where(F.col("field") == q.field)
+        cand = self.index.term_stats().where(f"field = {lit(q.field)}")
         if q.prefix_length > 0:
-            cand = cand.where(t.startswith(q.term[: q.prefix_length]))
-        sim = 1.0 - F.levenshtein(t, F.lit(q.term)).cast("double") / F.least(
-            F.length(t), F.lit(len(q.term))
-        ).cast("double")
-        tboost = (
-            (F.col("sim") - q.min_similarity) / (1.0 - q.min_similarity)
-        ) * F.lit(float(q.boost))
+            cand = cand.where(
+                f"startswith(term, {lit(q.term[: q.prefix_length])})")
+        sim = (f"{lit(1.0)} - CAST(levenshtein(term, {lit(q.term)}) AS "
+               f"DOUBLE) / CAST(least(length(term), {len(q.term)}) AS "
+               f"DOUBLE)")
+        ms = float(q.min_similarity)
+        tboost = (f"((sim - {lit(ms)}) / {lit(1.0 - ms)}) * "
+                  f"{lit(float(q.boost))}")
         cand = (
-            cand.select("field", "term", "df", sim.alias("sim"))
-            .where(F.col("sim") >= q.min_similarity)
-            .orderBy(F.col("sim").desc(), F.col("term").asc())
+            cand.selectExpr("field", "term", "df", f"{sim} AS sim")
+            .where(f"sim >= {lit(ms)}")
+            .orderBy(F.desc("sim"), F.asc("term"))
             .limit(ast.MAX_CLAUSE_COUNT)  # FuzzyQuery top-1024 expansion
-            .select("field", "term", "df", tboost.alias("tboost"))
+            .selectExpr("field", "term", "df", f"{tboost} AS tboost")
         )
-        p = self.index.postings_for_terms(cand)
-        score = self.sim.term_score(
-            F.col("tf"), F.col("dl"), F.col("df"),
-            self.index.n_docs, self.index.avgdl, F.col("tboost"),
-        )
+        score = self.sim.term_score_sql(
+            "tf", "dl", "df", self.index.n_docs, self.index.avgdl, "tboost")
         return (
-            p.select("doc_id", score.alias("score"))
-            .groupBy("doc_id").agg(F.sum("score").alias("score"))
+            self.index.postings_for_terms(cand)
+            .selectExpr("doc_id", f"{score} AS score")
+            .groupBy("doc_id").agg(F.expr("sum(score) AS score"))
         )
 
     # ---- span queries (SURVEY §2.4, src/Lucene.Net/Search/Spans/)
@@ -888,11 +892,10 @@ class Searcher:
         path only the leaf terms' position lists are read; composites
         are joins/unions over those already-tiny frames."""
         if isinstance(q, ast.SpanTerm):
-            p = self.index.postings.where(
-                (F.col("field") == q.field) & (F.col("term") == q.term))
-            return (p.select("doc_id", "dl",
-                             F.explode("positions").alias("s"))
-                    .withColumn("e", F.col("s") + F.lit(1)))
+            return (self.index.postings
+                    .where(_term_filter(q.field, q.term))
+                    .selectExpr("doc_id", "dl", "explode(positions) AS s")
+                    .selectExpr("*", "s + 1 AS e"))
         if isinstance(q, ast.SpanOr):
             if not q.clauses:
                 # a Bool of only prohibited/unconvertible clauses converts
@@ -1002,26 +1005,36 @@ class Searcher:
         idf sums over the leaf terms (SpanWeight.ExtractTerms)."""
         idf_sum, _ = self._leaf_stats(
             [(t.field, t.term, i) for i, t in enumerate(ast.span_leaves(q))])
-        contrib = 1.0 / (1.0 + (F.col("e") - F.col("s")).cast("double"))
         per_doc = (self._spans(q).groupBy("doc_id", "dl")
-                   .agg(F.sum(contrib).alias("freq")))
-        return self._freq_scored(per_doc, F.col("freq"), idf_sum, q.boost)
+                   .agg(F.expr(f"sum({lit(1.0)} / ({lit(1.0)} + "
+                               f"CAST(e - s AS DOUBLE))) AS freq")))
+        return self._freq_scored(per_doc, "freq", idf_sum, q.boost)
 
     # ---- payload queries (SURVEY §2.4, Search/Payloads/)
 
     @staticmethod
-    def _payload_doc_score(fn: str, pay_sum, pay_min, pay_max, pay_cnt):
+    def _payload_doc_score(fn: str, pay_sum: str, pay_min: str,
+                           pay_max: str, pay_cnt: str) -> str:
         """PayloadFunction.DocScore (Search/Payloads/{Average,Min,Max}
-        PayloadFunction.cs): aggregate over every payload seen in the doc;
-        1.0 when none were seen (all three concrete functions guard on
-        numPayloadsSeen > 0)."""
-        agg = {"avg": pay_sum / pay_cnt, "min": pay_min,
+        PayloadFunction.cs) as SQL text: aggregate over every payload seen
+        in the doc; 1.0 when none were seen (all three concrete functions
+        guard on numPayloadsSeen > 0)."""
+        agg = {"avg": f"({pay_sum}) / ({pay_cnt})", "min": pay_min,
                "max": pay_max}[fn]
-        return F.when(pay_cnt > 0, agg).otherwise(F.lit(1.0))
+        return f"CASE WHEN {pay_cnt} > 0 THEN {agg} ELSE {lit(1.0)} END"
+
+    def _payload_score(self, q, freq: str, idf_sum: float,
+                       pay_score: str) -> str:
+        """span score x payload DocScore, or the DocScore alone when the
+        query excludes the span score — both boosted."""
+        if not q.include_span_score:
+            return f"{pay_score} * {lit(float(q.boost))}"
+        span = self.sim.freq_score_sql(freq, "dl", idf_sum,
+                                       self.index.avgdl, q.boost)
+        return f"{span} * {pay_score}"
 
     def _payload_postings(self, field: str, term: str) -> DataFrame:
-        return self.index.postings_payloads.where(
-            (F.col("field") == field) & (F.col("term") == term))
+        return self.index.postings_payloads.where(_term_filter(field, term))
 
     def _payload_positions(self, field: str, term: str) -> DataFrame:
         """(doc_id, dl, pos, pay) per occurrence of a term."""
@@ -1041,21 +1054,17 @@ class Searcher:
         df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
         if df == 0:
             return self._empty_frame()
-        pays = F.col("payloads")
-        has = pays.isNotNull() & (F.size(pays) > 0)
-        pay_cnt = F.when(has, F.size(pays)).otherwise(F.lit(0))
-        pay_sum = F.when(has, F.aggregate(
-            pays, F.lit(0.0), lambda a, x: a + x.cast("double"))
-        ).otherwise(F.lit(0.0))
+        has = "payloads IS NOT NULL AND size(payloads) > 0"
+        pay_cnt = f"CASE WHEN {has} THEN size(payloads) ELSE 0 END"
+        pay_sum = (f"CASE WHEN {has} THEN aggregate(payloads, {lit(0.0)}, "
+                   f"(a, x) -> a + CAST(x AS DOUBLE)) ELSE {lit(0.0)} END")
         pay_score = self._payload_doc_score(
-            q.fn, pay_sum, F.array_min(pays).cast("double"),
-            F.array_max(pays).cast("double"), pay_cnt)
-        span_score = self.sim.freq_score(
-            F.col("tf").cast("double") * F.lit(0.5), F.col("dl"),
-            self.sim.idf(df, self.index.n_docs), self.index.avgdl, q.boost)
-        score = (span_score * pay_score if q.include_span_score
-                 else pay_score * F.lit(float(q.boost)))
-        return p.select("doc_id", score.alias("score"))
+            q.fn, pay_sum, "CAST(array_min(payloads) AS DOUBLE)",
+            "CAST(array_max(payloads) AS DOUBLE)", pay_cnt)
+        score = self._payload_score(
+            q, f"CAST(tf AS DOUBLE) * {lit(0.5)}",
+            self.sim.idf(df, self.index.n_docs), pay_score)
+        return p.selectExpr("doc_id", f"{score} AS score")
 
     def _payload_near_frame(self, q: ast.PayloadNear) -> DataFrame:
         """PayloadNearQuery (PayloadNearQuery.cs:38-52, scorer at
@@ -1106,13 +1115,9 @@ class Searcher:
         idf_sum, _ = self._leaf_stats(
             [(q.field, t, i) for i, t in enumerate(q.terms)])
         pay_score = self._payload_doc_score(
-            q.fn, F.col("pay_sum"), F.col("pay_min"), F.col("pay_max"),
-            F.col("pay_cnt"))
-        span_score = self.sim.freq_score(
-            F.col("freq"), F.col("dl"), idf_sum, self.index.avgdl, q.boost)
-        score = (span_score * pay_score if q.include_span_score
-                 else pay_score * F.lit(float(q.boost)))
-        return per_doc.select("doc_id", score.alias("score"))
+            q.fn, "pay_sum", "pay_min", "pay_max", "pay_cnt")
+        score = self._payload_score(q, "freq", idf_sum, pay_score)
+        return per_doc.selectExpr("doc_id", f"{score} AS score")
 
     def _payload_near_walk(self, q: ast.PayloadNear) -> DataFrame:
         """NearSpansOrdered-sourced PayloadNear: per doc, run the walk
@@ -1274,9 +1279,9 @@ class Searcher:
     def _empty_frame(self) -> DataFrame:
         """No hits, as a plan the optimizer folds to an empty local
         relation: collecting it (sorted, limited) runs no Spark job."""
-        return self.spark.range(1).select(
-            F.lit(None).cast("long").alias("doc_id"),
-            F.lit(None).cast("double").alias("score")).where(F.lit(False))
+        return self.spark.range(1).selectExpr(
+            "CAST(NULL AS BIGINT) AS doc_id",
+            "CAST(NULL AS DOUBLE) AS score").where("false")
 
 
 #: score_frame's dispatch: AST node type -> builder(searcher, node)

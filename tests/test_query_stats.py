@@ -4,14 +4,16 @@ Searcher.search resolves every (field, term) leaf's df with one lookup
 over the cached term dictionary (the CachedDfSource analogue,
 MultiSearcher.cs:87-118), memoized per Searcher; a Boolean query whose
 MUST/SHOULD clauses are all distinct Terms scores them in one posting
-scan.  These tests pin the Spark job budget of that plan, check every
-edge of the fused and driver-resolved paths against the OracleIndex, and
-check that the read path runs no Python worker."""
+scan.  These tests pin the Spark job and gateway round-trip budgets of
+that plan, check every edge of the fused and driver-resolved paths
+against the OracleIndex, check that the read path runs no Python worker,
+and check that values inlined into the SQL-text plans stay literals."""
 
 from __future__ import annotations
 
 import pytest
 
+from lucenenet_spark.functions.sqltext import lit
 from lucenenet_spark.index.segments import (build_segmented_index,
                                             update_documents)
 from lucenenet_spark.oracle.pybm25 import OracleIndex
@@ -82,20 +84,58 @@ def jobs_of(spark, fn, group):
 
 # ----------------------------------------------------------- job budget
 
-@pytest.mark.parametrize("name,q", [
+#: the query classes the search benchmark runs
+CLASSES = [
     ("or4", ast.Bool(should=(T("alpha"), T("beta"), T("gamma"),
                              T("delta")))),
     ("and2", ast.Bool(must=(T("alpha"), T("beta")))),
     ("phrase2", ast.Phrase(("alpha", "beta"), field="content")),
-])
+    ("term", T("alpha")),
+    ("prefix", ast.Prefix("al", field="content")),
+]
+
+
+@pytest.mark.parametrize("name,q", CLASSES)
 def test_jobs_per_query(spark, index, name, q):
     """At most 3 Spark jobs per query, the df lookup included; the same
-    query again on the same Searcher skips the lookup (memo hit)."""
+    query again on the same Searcher skips the lookup (memo hit).  A
+    prefix query has no term leaves, so it never looks a df up."""
     s = Searcher(index)
+    lookups = 1 if ast.term_leaves(ast.rewrite(q)) else 0
     first = jobs_of(spark, lambda: s.search(q, 10).collect(), f"qs-{name}-1")
     again = jobs_of(spark, lambda: s.search(q, 10).collect(), f"qs-{name}-2")
     assert first <= 3, (name, first)
-    assert again == first - 1, (name, first, again)
+    assert again == first - lookups, (name, first, again)
+
+
+#: py4j commands Searcher.search may send while it builds one plan.  The
+#: plans are SQL text (one parse per plan node): 29-64 for these classes.
+#: Plans built from Column operators, each costing several round trips,
+#: take 200-1,300.
+ROUND_TRIP_CEILING = 150
+
+
+@pytest.mark.parametrize("name,q", CLASSES, ids=[n for n, _ in CLASSES])
+def test_plan_round_trip_budget(spark, index, oracle, monkeypatch, name,
+                                q):
+    """With the df memo warm, building the plan costs a bounded number of
+    gateway round trips, whatever the query class, and the plan answers
+    like the OracleIndex."""
+    s = Searcher(index)
+    s.term_dfs(ast.term_leaves(ast.rewrite(q)))
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    hits = s.search(q, 10)
+    monkeypatch.undo()
+    assert len(sent) <= ROUND_TRIP_CEILING, (name, len(sent))
+    assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
+        == oracle.top_k(q, 10)
 
 
 def test_df_lookup_is_one_collect_and_memoized(spark, index, oracle):
@@ -333,3 +373,104 @@ def test_new_searcher_after_update_sees_new_df(spark):
                    if d not in dead), key=lambda x: (-x[1], x[0]))[:20]
     assert top(after, q) == want
     assert top(before, q) == old_top
+
+
+# ------------------------------------------------- SQL-literal safety
+
+#: keyword values (indexed verbatim, one term each) that are SQL syntax
+#: or escapes when pasted into a plan unquoted
+ODD = ["o'reilly", "back\\slash", "trailing\\", "50%", "50%_off",
+       "50xyoff", "a_b", "axb", 'say "hi"', "tick`tock", "café", "日本語",
+       "x' OR term <> '", "x\\' OR 1=1 --"]
+ODD_TEXT = ["o'reilly media books", "books by o'reilly", "media café books",
+            "plain words here"]
+
+
+@pytest.fixture(scope="module")
+def odd(spark):
+    rows = [(i, v, ODD_TEXT[i % len(ODD_TEXT)]) for i, v in enumerate(ODD)]
+    docs = spark.createDataFrame(rows, "doc_id long, tag string, "
+                                       "content string")
+    idx = build_segmented_index(spark, docs, text_col="content",
+                                keyword_cols={"tag": "tag"}).cache()
+    o = OracleIndex()
+    o.primary_field = "content"
+    for i, v, text in rows:
+        o.add(i, {"content": text}, keyword_fields={"tag": v})
+    return idx, o
+
+
+def G(term):
+    return ast.Term(term, field="tag")
+
+
+ODD_QUERIES = [
+    *[(f"term[{v}]", G(v)) for v in ODD],
+    ("term_text", T("o'reilly")),
+    ("or_terms", ast.Bool(should=(G("o'reilly"), G("x' OR term <> '"),
+                                  G("trailing\\"), T("o'reilly")))),
+    ("and_terms", ast.Bool(must=(T("o'reilly"),),
+                           should=(G("50%"), G("back\\slash")))),
+    ("phrase", ast.Phrase(("o'reilly", "media"), field="content")),
+    ("phrase_nonascii", ast.Phrase(("media", "café"), field="content")),
+    ("prefix_pct", ast.Prefix("50%", field="tag")),
+    ("prefix_underscore", ast.Prefix("a_", field="tag")),
+    ("prefix_quote", ast.Prefix("x'", field="tag")),
+    ("prefix_backslash", ast.Prefix("trailing\\", field="tag")),
+    ("prefix_text", ast.Prefix("o'", field="content")),
+    ("wildcard_quote", ast.Wildcard("*'*", field="tag")),
+    ("wildcard_pct", ast.Wildcard("50%?off", field="tag")),
+    ("wildcard_backslash", ast.Wildcard("*\\*", field="tag")),
+    ("range_quote", ast.TermRange("x'", "x\\", field="tag")),
+    ("range_exclusive", ast.TermRange("50%", "a_b", field="tag",
+                                      include_lower=False,
+                                      include_upper=False)),
+    ("range_nonascii", ast.TermRange("café", "日本語", field="tag")),
+]
+
+
+@pytest.mark.parametrize("name,q", ODD_QUERIES,
+                         ids=[n for n, _ in ODD_QUERIES])
+def test_odd_terms_stay_literals(odd, name, q):
+    """Quotes, backslashes, LIKE wildcards, backticks, non-ASCII text and
+    an injection string in terms are matched as themselves: the top-k
+    equals the OracleIndex's.  A prefix holding `%` or `_` matches only
+    terms that start with those characters."""
+    idx, o = odd
+    assert top(Searcher(idx), q, 20) == o.top_k(q, 20), name
+
+
+def test_odd_term_dfs(odd):
+    idx, o = odd
+    pairs = [("tag", v) for v in ODD] + [
+        ("content", "o'reilly"), ("tag", "nosuch'"), ("tag", "50_")]
+    assert Searcher(idx).term_dfs(pairs) == {
+        (f, t): len(o.post[f].get(t, {})) for f, t in pairs}
+
+
+@pytest.mark.parametrize("value", ODD + ["", "\n", "\\'", "--"])
+def test_string_literal_round_trips(spark, value):
+    assert spark.sql(f"SELECT {lit(value)} AS v").first()["v"] == value
+
+
+@pytest.mark.parametrize("value", [
+    0.0, -0.0, 1.0, -2.5, 0.1, 1 / 3, 1e-300, 5e-324, 1e16, -1e22,
+    1.7976931348623157e308, 2.2])
+def test_double_literal_is_exact(spark, value):
+    """A double is written as a DOUBLE literal (never DECIMAL) that parses
+    back to the same bits, sign of zero included; negatives are
+    parenthesized so `x - -1` cannot become a `--` comment."""
+    text = lit(value)
+    assert text.endswith("D") or text.endswith("D)"), text
+    row = spark.sql(f"SELECT {text} AS v, typeof({text}) AS t, "
+                    f"1 - {text} AS d").first()
+    assert row["t"] == "double"
+    assert row["v"] == value and str(row["v"]) == str(value)
+    assert row["d"] == 1 - value
+
+
+@pytest.mark.parametrize("value", [float("nan"), float("inf"),
+                                   float("-inf")])
+def test_nonfinite_double_literal_raises(value):
+    with pytest.raises(ValueError, match="no SQL literal"):
+        lit(value)
