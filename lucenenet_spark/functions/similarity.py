@@ -17,14 +17,19 @@ Two strategies, same Weight/Scorer lifecycle:
   available bit-for-bit via ClassicSimilarity(quantize_norms=True)
   (functions/smallfloat.py); coord is omitted as in the BM25 path.
 
-A Similarity provides two kernels as SQL expression text (operands are
-SQL text too: column names or expressions; n, avgdl, boost and idf_sum
-are inlined as literals, a str boost is an operand):
+A Similarity provides three kernels as SQL expression text (operands
+are SQL text too: column names or expressions; n and avgdl are inlined
+as literals, a float boost or idf_sum is inlined, a str one is an
+operand):
+  idf_sql(df, n)                                -- a term's idf
   term_score_sql(tf, dl, df, n, avgdl, boost)   -- per (term, doc) posting row
   freq_score_sql(freq, dl, idf_sum, avgdl, boost)
       -- phrase/span scoring from an accumulated freq; idf_sum is the sum
-      of the per-term .idf() values
-and a scalar .idf(df, n) used when the plan folds idf in as a literal.
+      of the per-term idfs
+and a scalar .idf(df, n) for the nodes that resolve df on the driver.
+Plans pass df as a column (the postings views' term_df), so the
+generated code holds no per-query number and is compiled once per
+query shape.
 """
 
 from __future__ import annotations
@@ -47,20 +52,27 @@ def _boosted(score: str, boost: str | float) -> str:
     return f"({score})"
 
 
+def _operand(x: str | float) -> str:
+    return f"({x})" if isinstance(x, str) else lit(float(x))
+
+
 class BM25Similarity:
     """Lucene BM25 (k1=1.2, b=0.75) — the default."""
 
     def idf(self, df: int, n: int) -> float:
         return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
+    def idf_sql(self, df: str, n: float) -> str:
+        return bm25.idf_sql(df, n)
+
     def term_score_sql(self, tf: str, dl: str, df: str, n: float,
                        avgdl: float, boost: str | float = 1.0) -> str:
-        return _boosted(f"{bm25.idf_sql(df, n)} * "
+        return _boosted(f"{self.idf_sql(df, n)} * "
                         f"{bm25.tf_norm_sql(tf, dl, avgdl)}", boost)
 
-    def freq_score_sql(self, freq: str, dl: str, idf_sum: float,
+    def freq_score_sql(self, freq: str, dl: str, idf_sum: str | float,
                        avgdl: float, boost: float = 1.0) -> str:
-        return (f"({lit(float(boost))} * {lit(float(idf_sum))} * "
+        return (f"({lit(float(boost))} * {_operand(idf_sum)} * "
                 f"{bm25.tf_norm_sql(freq, dl, avgdl)})")
 
 
@@ -100,17 +112,20 @@ class ClassicSimilarity:
     def idf(self, df: int, n: int) -> float:
         return math.log(n / (df + 1.0)) + 1.0
 
+    def idf_sql(self, df: str, n: float) -> str:
+        return (f"(ln({lit(float(n))} / (CAST({df} AS DOUBLE) + "
+                f"{lit(1.0)})) + {lit(1.0)})")
+
     def term_score_sql(self, tf: str, dl: str, df: str, n: float,
                        avgdl: float, boost: str | float = 1.0) -> str:
-        d = f"CAST({df} AS DOUBLE)"
-        idf = f"(ln({lit(float(n))} / ({d} + {lit(1.0)})) + {lit(1.0)})"
+        idf = self.idf_sql(df, n)
         return _boosted(f"{idf} * {idf} * sqrt(CAST({tf} AS DOUBLE)) * "
                         f"{self._norm(dl)}", boost)
 
-    def freq_score_sql(self, freq: str, dl: str, idf_sum: float,
+    def freq_score_sql(self, freq: str, dl: str, idf_sum: str | float,
                        avgdl: float, boost: float = 1.0) -> str:
         # phrase weight assembly: (sum of idfs)^2 * sqrt(freq) * norm
         # (PhraseWeight mirrors TermWeight's queryWeight*value = idf^2)
-        i = lit(float(idf_sum))
+        i = _operand(idf_sum)
         return (f"({lit(float(boost))} * {i} * {i} * "
                 f"sqrt(CAST({freq} AS DOUBLE)) * {self._norm(dl)})")

@@ -30,7 +30,7 @@ def float_to_byte315(f: float) -> int:
     """SmallFloat.FloatToByte315 (SmallFloat.cs:92-105); returns 0-255."""
     bits = struct.unpack("<i", struct.pack("<f", f))[0]
     smallfloat = bits >> (24 - 3)
-    if smallfloat < _FZERO_315:
+    if smallfloat <= _FZERO_315:
         return 0 if bits <= 0 else 1
     if smallfloat >= _FZERO_315 + 0x100:
         return 255  # the reference's (sbyte)-1, i.e. unsigned 255
@@ -58,7 +58,7 @@ def float_to_byte315_np(f: np.ndarray) -> np.ndarray:
     smallfloat = bits >> (24 - 3)
     out = (smallfloat - _FZERO_315).astype(np.int32)
     out = np.where(smallfloat >= _FZERO_315 + 0x100, 255, out)
-    under = smallfloat < _FZERO_315
+    under = smallfloat <= _FZERO_315
     out = np.where(under & (bits <= 0), 0, np.where(under, 1, out))
     return out.astype(np.uint8)
 

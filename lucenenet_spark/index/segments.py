@@ -11,12 +11,12 @@ stages:
      (docs / tfs / dls / pos / pay), built from offsets with no
      per-element Python.
   2. merge waves (groupBy in the JVM): geometric fan-in merge of segments,
-     mergeFactor=10 by default (LogMergePolicy.cs:51-76). The groupBy key
-     includes the wave's merge-group, so a term's postings shuffle only
-     between the segments being merged — hot terms are spread over merge
-     groups, which IS the salt (two-stage combine: wave k merges <=fan_in
-     sub-lists per term, never all of them at once).  Doc ids are global,
-     so disjoint segments merge by array concatenation.
+     mergeFactor=10 by default (LogMergePolicy.cs:51-76). The exchange is
+     keyed on (field, term), so a merged generation is hash-partitioned
+     by term; the groupBy key adds the wave's merge-group, so wave k
+     merges <=fan_in sub-lists per output row, never all of them at
+     once.  Doc ids are global, so disjoint segments merge by array
+     concatenation.
   3. each wave optionally checkpoints to parquet with a lineage row
      (wave, n_segments, rows, postings) — the segments_N manifest analogue
      (IndexFileNames.cs:29-37) — and a killed build resumes from the last
@@ -26,12 +26,15 @@ Parquet's encoding and compression replace the reference's delta + VInt
 .frq/.prx streams, at rest and in the columnar cache; only the block-max
 skip metadata is format-specific (index/codec.py).
 
-Query-time: `postings` is an explode(arrays_zip(...)) view with one row
-per posting (field, term, doc_id, tf, dl, positions), which
-plans/lowering.Searcher scores; the (field, term) filter lands
-BELOW the explode (term-dictionary seek analogue, TermInfosReader.cs:
-243-308 — only matching posting lists are expanded) and no Python worker
-runs on the read path.
+Query-time: `postings` is an inline(arrays_zip(...)) view with one row
+per posting (field, term, term_df, doc_id, tf, dl, positions), which
+plans/lowering.Searcher scores; term_df is the term's global df, a
+window sum over its segment rows (the TermInfo{df, freqPtr, proxPtr}
+entry, TermInfo.cs:28-32: df is read with the postings, not looked up
+first).  The (field, term) filter lands BELOW the window and the explode
+(term-dictionary seek analogue, TermInfosReader.cs:243-308 — only
+matching posting lists are expanded) and no Python worker runs on the
+read path.
 """
 
 from __future__ import annotations
@@ -447,13 +450,18 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
                num_partitions: int | None = None) -> DataFrame:
     """One geometric merge wave: segment s joins merge-group s // fan_in.
 
-    The shuffle key (field, term, merge_group) spreads every term's
-    postings across partitions AND merge groups — the salted two-stage
-    combine of SURVEY §4.2: no single reducer ever sees more than fan_in
-    sub-lists of a hot term.  The merge itself is a JVM aggregate: the
-    group's parts sorted by first doc, then concatenated (see _DISJOINT).
-    Block runs concatenate too, so block sizes become irregular; readers
-    locate blocks by last_doc, not by a fixed stride.
+    The exchange is keyed on (field, term) only, so a term's rows land in
+    one reducer partition and the merged generation reports
+    HashPartitioning(field, term): the per-term df window of the posting
+    views (and term_stats' aggregate) over it needs no exchange.
+    merge_group stays a grouping key, so a wave still merges at most
+    fan_in sub-lists per output row; a one-shot build has one merge
+    group, so the shorter key changes which reducer merges a term, not
+    how rows are grouped or spread.
+    The merge itself is a JVM aggregate: the group's parts sorted by
+    first doc, then concatenated (see _DISJOINT).  Block runs
+    concatenate too, so block sizes become irregular; readers locate
+    blocks by last_doc, not by a fixed stride.
 
     num_partitions is pinned EXPLICITLY: with a bare repartition(cols),
     AQE's partition coalescing sees a byte-small exchange and collapses
@@ -464,7 +472,7 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
     grouped = (
         segments.withColumn("merge_group",
                             (F.col("seg_id") / fan_in).cast("long"))
-        .repartition(num_partitions, "field", "term", "merge_group")
+        .repartition(num_partitions, "field", "term")
         .groupBy("field", "term", "merge_group")
         .agg(F.sort_array(F.collect_list(F.struct(
             F.col("docs")[0].alias("first"), "seg_id", "docs", "tfs", "dls",
@@ -514,25 +522,32 @@ class SegmentedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        """Relational view (field, term, doc_id, tf, dl, positions).
+        """Relational view (field, term, term_df, doc_id, tf, dl,
+        positions).
 
-        An explode over the segment rows' arrays, so Catalyst pushes
-        (field, term) predicates below the Generate — only matching
-        posting lists are expanded."""
+        term_df is the term's global df: sum(df) over its segment rows,
+        a window partitioned by (field, term), so a (field, term)
+        predicate lands below both the window and the explode — only the
+        matching posting lists are read and expanded, and their df comes
+        from the same scan.  A generation built by merge_wave is
+        hash-partitioned by (field, term), so the window adds no
+        exchange; column pruning drops it where term_df is unused."""
         if self._postings is None:
-            self._postings = _exploded(self.segments, _POS)
+            self._postings = _exploded(_with_term_df(self.segments), _POS,
+                                       keep=("term_df",))
         return self._postings
 
     @property
     def postings_nopos(self) -> DataFrame:
-        """Positions-free view (field, term, doc_id, tf, dl).
+        """Positions-free view (field, term, term_df, doc_id, tf, dl).
 
         Term/boolean/range scoring never reads positions; column pruning
         keeps the pos column out of the scan — the reference's
         omitTf/lazy-prox behavior (SegmentTermDocs vs SegmentTermPositions
-        split)."""
+        split).  term_df as in `postings`."""
         if self._postings_nopos is None:
-            self._postings_nopos = _exploded(self.segments, ())
+            self._postings_nopos = _exploded(_with_term_df(self.segments),
+                                             (), keep=("term_df",))
         return self._postings_nopos
 
     @property
@@ -553,7 +568,8 @@ class SegmentedIndex:
         i.e. BELOW the explode — so only the matching terms' lists are
         expanded (the term-dictionary seek, TermInfosReader.cs:243-308),
         no matter that the term set is data-dependent."""
-        extra = [c for c in term_frame.columns if c not in ("field", "term")]
+        extra = tuple(c for c in term_frame.columns
+                      if c not in ("field", "term"))
         # project segments down to the posting columns first: metadata
         # columns (df, ttf, blocks) would collide with term_frame extras
         seg = (self.segments
@@ -732,22 +748,29 @@ _POS = (("pos", "positions"),)
 _PAY = (("pay", "payloads"),)
 
 
+def _with_term_df(seg: DataFrame) -> DataFrame:
+    """Segment rows with term_df, the (field, term)'s df summed over
+    every segment row of the generation."""
+    return seg.selectExpr(
+        "*", "sum(df) OVER (PARTITION BY field, term) AS term_df")
+
+
 def _exploded(seg: DataFrame, extra: tuple = (),
-              keep: list[str] = ()) -> DataFrame:
-    """One row per posting: explode(arrays_zip(docs, tfs, dls, *extra)).
-    extra = (segment column, view name) pairs; a NULL one (a field
-    indexed without positions or payloads) is zipped as an empty array,
-    so its value is null per posting instead of the NULL zip dropping
-    the whole list."""
-    zipped = F.arrays_zip(
-        F.col("docs").alias("doc_id"), F.col("tfs").alias("tf"),
-        F.col("dls").alias("dl"),
-        *[F.coalesce(F.col(c), F.array().cast(SEGMENT_SCHEMA[c].dataType))
-          .alias(name) for c, name in extra])
+              keep: tuple = ()) -> DataFrame:
+    """One row per posting: inline(arrays_zip(docs, tfs, dls, *extra)),
+    as SQL text.  extra = (segment column, view name) pairs; a NULL one
+    (a field indexed without positions or payloads) is zipped as an empty
+    array, so its value is null per posting instead of the NULL zip
+    dropping the whole list.  keep: segment columns carried per
+    posting."""
+    zipped = ["docs", "tfs", "dls"] + [
+        f"coalesce({c}, CAST(array() AS "
+        f"{SEGMENT_SCHEMA[c].dataType.simpleString()}))" for c, _ in extra]
     names = ["doc_id", "tf", "dl"] + [name for _, name in extra]
-    return (seg.select("field", "term", *keep, F.explode(zipped).alias("_p"))
-            .select("field", "term", *keep,
-                    *[F.col(f"_p.{n}").alias(n) for n in names]))
+    return seg.selectExpr(
+        "field", "term", *(f"`{c}`" for c in keep),
+        f"inline(arrays_zip({', '.join(zipped)})) "
+        f"AS ({', '.join(names)})")
 
 
 def _require_columnar(seg: DataFrame, path: str) -> DataFrame:
@@ -1173,19 +1196,19 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
     tagged = index.segments.join(F.broadcast(seg_dead), "seg_id", "left")
     hit = F.coalesce(F.arrays_overlap("docs", "dead"), F.lit(False))
 
-    # touched rows are partitioned by their group key before the explode
+    # touched rows are partitioned by (field, term) before the explode
     # (no exchange when they already are: merge_wave's output) and the
     # broadcast anti-join keeps that, so the re-collect never shuffles
     # one row per posting
     touched = (tagged.where(hit)
                .repartition(index.spark.sparkContext.defaultParallelism,
-                            "field", "term", "seg_id")
+                            "field", "term")
                .select("field", "term", "seg_id", "docs", "tfs", "dls",
                        "pos", "pay",
                        F.col("pos").isNotNull().alias("has_pos"),
                        F.col("pay").isNotNull().alias("has_pay")))
     live = (_exploded(touched, _POS + _PAY,
-                      keep=["seg_id", "has_pos", "has_pay"])
+                      keep=("seg_id", "has_pos", "has_pay"))
             .join(F.broadcast(dead), "doc_id", "left_anti"))
     rebuilt = (
         live.groupBy("field", "term", "seg_id", "has_pos", "has_pay")

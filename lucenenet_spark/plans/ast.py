@@ -413,13 +413,15 @@ def span_leaves(q: Query) -> list[SpanTerm]:
     raise TypeError(f"not a span query: {type(q).__name__}")
 
 
-def term_leaves(q: Query) -> set[tuple[str, str]]:
-    """Every (field, term) whose df some node of the tree scores with —
-    the term gathering of MultiSearcher.CreateWeight (MultiSearcher.cs:
-    355-390), so a searcher can resolve them all in one lookup."""
-    if isinstance(q, (Term, SpanTerm, PayloadTerm)):
+def driver_df_leaves(q: Query) -> set[tuple[str, str]]:
+    """Every (field, term) whose df some node of the tree reads on the
+    driver — MultiPhrase, span and payload nodes; the term gathering of
+    MultiSearcher.CreateWeight (MultiSearcher.cs:355-390), so a searcher
+    can resolve them all in one lookup.  Term and Phrase leaves need
+    none: they score from the df their posting rows carry."""
+    if isinstance(q, (SpanTerm, PayloadTerm)):
         return {(q.field, q.term)}
-    if isinstance(q, (Phrase, PayloadNear)):
+    if isinstance(q, PayloadNear):
         return {(q.field, t) for t in q.terms}
     if isinstance(q, MultiPhrase):
         return {(q.field, t) for alts in q.terms_at for t in alts}
@@ -428,7 +430,7 @@ def term_leaves(q: Query) -> set[tuple[str, str]]:
         v = getattr(q, f.name)
         for c in (v if isinstance(v, tuple) else (v,)):
             if isinstance(c, Query):
-                out |= term_leaves(c)
+                out |= driver_df_leaves(c)
     return out
 
 

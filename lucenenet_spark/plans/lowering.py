@@ -4,22 +4,30 @@ The reference's doc-at-a-time scorer tree (SURVEY.md §3.2) re-expressed
 set-oriented:
 
 - TermQuery/TermScorer  -> postings filter on (field,term) [parquet pushdown]
-                           + literal (df, N, avgdl) folded into the score
-                           expression; every leaf's df comes from ONE
-                           driver lookup per query (Searcher.term_dfs, the
-                           CachedDfSource of MultiSearcher.cs:87-118,355-390)
+                           scored from the term_df column the matching
+                           segment rows carry (the TermInfo{df, freqPtr,
+                           proxPtr} entry, TermInfo.cs:28-32: global df,
+                           a window over the term's segment rows) with
+                           N and avgdl inlined — no df lookup job, and
+                           no per-query number in the generated code
 - BooleanScorer2        -> tagged clause rows + ONE groupBy(doc_id):
                            MUST = HAVING n_must == #musts (ConjunctionScorer),
                            SHOULD = sum + HAVING n_should >= minShouldMatch
                            (DisjunctionSumScorer), MUST_NOT = left_anti
                            (ReqExclScorer).  BM25 drops coord.  When every
                            MUST/SHOULD clause is a distinct Term the rows
-                           come from ONE posting scan; otherwise from the
+                           come from ONE posting scan, tagged by
+                           (field, term) IN (...); otherwise from the
                            union of the clause frames.
 - PhraseQuery           -> positions-array alignment with higher-order
                            functions (array_intersect of offset-shifted
-                           position lists) — all JVM-side; idf sum and the
-                           all-terms-present gate come from the driver.
+                           position lists) — all JVM-side; the idf sum
+                           is summed per doc from the rows' term_df, and
+                           a doc holding every query offset passes the
+                           all-terms-present gate.
+- MultiPhrase, span and -> idf from driver-resolved dfs: ONE lookup per
+  payload queries          query (Searcher.term_dfs, the CachedDfSource
+                           of MultiSearcher.cs:87-118,355-390).
 - MultiTermQuery family -> term-dictionary predicate; CONSTANT_SCORE
                            rewrite = semi-join (no term enumeration),
                            SCORING_BOOLEAN (fuzzy) = driver-collected
@@ -139,12 +147,16 @@ class Searcher:
 
     def term_dfs(self, pairs) -> dict[tuple[str, str], int]:
         """Global df per (field, term), 0 when absent — the CachedDfSource
-        analogue (MultiSearcher.cs:87-118).  Pairs not seen before are
-        fetched with ONE collect over the cached term dictionary
-        (index.term_stats(): segment-row metadata, no posting read) and
-        memoized.  The memo is safe because a Searcher is bound to one
-        index generation: update/add_indexes/expunge derive a new index
-        object, so a new Searcher sees the new df."""
+        analogue (MultiSearcher.cs:87-118), for the nodes that need df on
+        the driver: MultiPhrase (its idf sums over alternatives a doc may
+        lack), span and payload scorers, explain and more_like_this.
+        Term, Bool and Phrase score from the postings views' term_df
+        column instead.  Pairs not seen before are fetched with ONE
+        collect over the cached term dictionary (index.term_stats():
+        segment-row metadata, no posting read) and memoized.  The memo is
+        safe because a Searcher is bound to one index generation:
+        update/add_indexes/expunge derive a new index object, so a new
+        Searcher sees the new df."""
         pairs = set(pairs)
         missing = pairs - self._df_memo.keys()
         if missing:
@@ -157,11 +169,12 @@ class Searcher:
         return {p: self._df_memo[p] for p in pairs}
 
     def _hits(self, q: ast.Query) -> DataFrame:
-        """Live (doc_id, score) rows of a query: rewrite, resolve every
-        leaf df in one lookup (MultiSearcher.CreateWeight,
-        MultiSearcher.cs:355-390), lower, apply deletes."""
+        """Live (doc_id, score) rows of a query: rewrite, resolve in one
+        lookup the df of every leaf scored on the driver
+        (MultiSearcher.CreateWeight, MultiSearcher.cs:355-390; none for
+        Term, Bool and Phrase), lower, apply deletes."""
         q = ast.rewrite(q)
-        self.term_dfs(ast.term_leaves(q))
+        self.term_dfs(ast.driver_df_leaves(q))
         return self._live(self.score_frame(q))
 
     def search(self, q: ast.Query, k: int = 10,
@@ -503,14 +516,12 @@ class Searcher:
 
     def _term_frame(self, q: ast.Term) -> DataFrame:
         """TermScorer: postings filter on (field, term), pushed below the
-        posting explode, with the df from the once-per-query driver lookup
-        (term_dfs) folded in as a literal.  An absent term (df 0) is the
-        empty result, built without a scan."""
-        df = self.term_dfs([(q.field, q.term)])[(q.field, q.term)]
-        if df == 0:
-            return self._empty_frame()
+        df window and the posting explode, scored from the term_df the
+        rows carry.  The score text holds only N, avgdl and the boost, so
+        a term query of a seen shape reuses its compiled code; an absent
+        term scans no rows."""
         score = self.sim.term_score_sql(
-            "tf", "dl", lit(df), self.index.n_docs, self.index.avgdl,
+            "tf", "dl", "term_df", self.index.n_docs, self.index.avgdl,
             q.boost)
         return (self.index.postings_nopos
                 .where(_term_filter(q.field, q.term))
@@ -534,8 +545,6 @@ class Searcher:
                 if isinstance(c, ast.Term)}
         if len(keys) == len(clauses):
             u = self._term_clause_rows(clauses)
-            if u is None:
-                return self._empty_frame()
         else:
             u = reduce(DataFrame.unionByName, [self.score_frame(c).selectExpr(
                 "doc_id", "score", f"{m} AS m", f"{s} AS s")
@@ -558,35 +567,44 @@ class Searcher:
                 "left_anti")
         return out
 
-    def _term_clause_rows(self, clauses: list) -> DataFrame | None:
+    def _term_clause_rows(self, clauses: list) -> DataFrame:
         """Tagged (doc_id, score, m, s) rows for MUST/SHOULD clauses that
         are all distinct Terms, from ONE postings scan: the OR'd
-        (field, term) predicate still lands below the posting explode, and
-        a literal (field, term) -> (df, boost, m, s) map gives each
-        posting row its clause's df, boost and MUST/SHOULD tag.  None when a MUST
-        term is absent (nothing can match); absent SHOULD terms drop out."""
-        dfs = self.term_dfs([(c.field, c.term) for c, _, _ in clauses])
-        entries, preds = [], []
-        for c, m, s in clauses:
-            df = dfs[(c.field, c.term)]
-            if df == 0:
-                if m:
-                    return None
-                continue
-            entries.append(
-                f"named_struct('field', {lit(c.field)}, 'term', "
-                f"{lit(c.term)}), named_struct('df', {lit(float(df))}, "
-                f"'boost', {lit(float(c.boost))}, 'm', {m}, 's', {s})")
-            preds.append(f"({_term_filter(c.field, c.term)})")
-        if not preds:
-            return None
-        meta = f"map({', '.join(entries)})[struct(field, term)]"
+        (field, term) predicate lands below the df window and the posting
+        explode, each row scores with the term_df it carries, and
+        `(field, term) IN (...)` tags it MUST or SHOULD.  The boost is one
+        literal, or a CASE when the clauses' boosts differ; each
+        expression is read once per row.  An absent term scans no rows:
+        an absent SHOULD term drops out, an absent MUST term leaves n_must
+        short, so nothing matches."""
+        def among(cs) -> str:
+            keys = ", ".join(f"({lit(c.field)}, {lit(c.term)})" for c in cs)
+            return f"(field, term) IN ({keys})"
+
+        def tag(cs) -> str:
+            if len(cs) == len(clauses):
+                return "1"
+            return f"CAST({among(cs)} AS INT)" if cs else "0"
+
+        by_boost: dict[float, list] = {}
+        for c, _, _ in clauses:
+            by_boost.setdefault(float(c.boost), []).append(c)
+        if len(by_boost) == 1:
+            boost: str | float = next(iter(by_boost))
+        else:
+            *cases, (last, _) = by_boost.items()
+            boost = ("CASE " + " ".join(
+                f"WHEN {among(cs)} THEN {lit(b)}" for b, cs in cases)
+                + f" ELSE {lit(last)} END")
         score = self.sim.term_score_sql(
-            "tf", "dl", f"{meta}.df", self.index.n_docs, self.index.avgdl,
-            f"{meta}.boost")
-        return (self.index.postings_nopos.where(" OR ".join(preds))
-                .selectExpr("doc_id", f"{score} AS score", f"{meta}.m AS m",
-                            f"{meta}.s AS s"))
+            "tf", "dl", "term_df", self.index.n_docs, self.index.avgdl,
+            boost)
+        preds = " OR ".join(f"({_term_filter(c.field, c.term)})"
+                            for c, _, _ in clauses)
+        return (self.index.postings_nopos.where(preds)
+                .selectExpr("doc_id", f"{score} AS score",
+                            f"{tag([c for c, m, _ in clauses if m])} AS m",
+                            f"{tag([c for c, _, s in clauses if s])} AS s"))
 
     def _dismax_frame(self, q: ast.DisMax) -> DataFrame:
         frames = [self.score_frame(c).selectExpr("doc_id", "score")
@@ -604,7 +622,8 @@ class Searcher:
     def _leaf_stats(self, leaves: list[tuple[str, str, int]]
                     ) -> tuple[float, int]:
         """(idf_sum, n_present) of a query's (field, term, qoff) leaves
-        from the driver-resolved dfs: idf sums over every present leaf
+        from the driver-resolved dfs (MultiPhrase, span and payload
+        scorers): idf sums over every present leaf
         (a term repeated at two offsets counts twice; PhraseWeight /
         MultiPhraseWeight / SpanWeight.ExtractTerms), n_present counts the
         query positions holding at least one present term."""
@@ -632,23 +651,24 @@ class Searcher:
 
     def _phrase_frame(self, q: ast.Phrase) -> DataFrame:
         """PhraseScorer: the query terms' positions aligned by their query
-        offsets in one positional scan + one groupBy(doc_id).  idf_sum and
-        the all-terms-present gate come from the driver-resolved dfs, so a
-        phrase with an absent term is the empty result without a scan."""
+        offsets in one positional scan + one groupBy(doc_id).  A doc
+        passes the all-terms-present gate when it holds every query
+        offset, and its idf sum adds the idf of each offset's term_df in
+        qoff order (a term at two offsets counts twice), so a phrase with
+        an absent term matches nothing."""
         offsets = q.resolved_offsets()
         pairs = list(zip(q.terms, offsets))
-        idf_sum, n_present = self._leaf_stats(
-            [(q.field, t, o) for t, o in pairs])
-        if n_present != len(offsets):
-            return self._empty_frame()
         p = self._with_qoff(q.field, pairs)
         # distinct offsets counted from the collected list, not with
         # countDistinct, whose distinct-aggregate rewrite adds a shuffle
         per_doc = (
             p.groupBy("doc_id", "dl")
-            .agg(F.expr("collect_list(struct(qoff, positions)) AS plists"))
+            .agg(F.expr("collect_list(struct(qoff, positions, term_df)) "
+                        "AS plists"))
             .where(f"size(array_distinct(plists.qoff)) = {len(pairs)}")
         )
+        idf_sum = (f"aggregate(sort_array(plists), {lit(0.0)}, (a, e) -> "
+                   f"a + {self.sim.idf_sql('e.term_df', self.index.n_docs)})")
         shifted, exact = self._aligned(len(pairs))
         if q.slop == 0:
             freq = exact
@@ -717,10 +737,10 @@ class Searcher:
                  if n > 1 else f"element_at({shifted}, 1)")
         return shifted, f"CAST(size({inter}) AS DOUBLE)"
 
-    def _freq_scored(self, per_doc: DataFrame, freq: str, idf_sum: float,
-                     boost: float) -> DataFrame:
-        """(doc_id, score) of the candidate docs with freq > 0; freq is
-        SQL text over per_doc's columns."""
+    def _freq_scored(self, per_doc: DataFrame, freq: str,
+                     idf_sum: str | float, boost: float) -> DataFrame:
+        """(doc_id, score) of the candidate docs with freq > 0; freq (and
+        a str idf_sum) is SQL text over per_doc's columns."""
         score = self.sim.freq_score_sql(f"({freq})", "dl", idf_sum,
                                         self.index.avgdl, boost)
         return (per_doc.where(f"({freq}) > 0")

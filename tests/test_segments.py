@@ -483,28 +483,30 @@ def test_update_takes_the_build_columns(spark, tmp_path):
 
 def test_merge_shuffle_balanced_under_zipf(spark, corpus):
     """Skew validation (SURVEY §7 Phase 6): the corpus vocabulary is
-    Zipfian, yet the merge shuffle keys on (field, term, merge_group), so
-    a hot term's sub-lists spread across merge groups and no reducer
-    partition degenerates. Assert the post-shuffle row distribution is
-    within a sane imbalance factor of the mean."""
+    Zipfian, yet merge_wave's exchange, keyed on (field, term), spreads
+    its output rows — one per (field, term, merge group) — evenly over
+    the reducer partitions: a hot term is one row per merge group like
+    any other term, so no reducer partition degenerates.  Drives a real
+    merge_wave (fan_in=2) and counts the rows each reducer partition of
+    that plan emits; the total is one row per (field, term, group)."""
     from pyspark.sql import functions as F
 
     from lucenenet_spark.index.segments import (
-        SEGMENT_SCHEMA, _invert_partition)
+        SEGMENT_SCHEMA, _invert_partition, merge_wave)
 
     seg = corpus.select("doc_id", "content", "lang").mapInArrow(
         _invert_partition("content", "doc_id", "content", "lang", True),
         SEGMENT_SCHEMA)
     n_parts = 8
-    shuffled = (
-        seg.withColumn("merge_group", (F.col("seg_id") / 2).cast("long"))
-        .repartition(n_parts, "field", "term", "merge_group")
-    )
-    counts = (
-        shuffled.groupBy(F.spark_partition_id().alias("p")).count().collect()
-    )
+    merged = merge_wave(seg, fan_in=2, num_partitions=n_parts)
+    counts = (merged.groupBy(F.spark_partition_id().alias("p")).count()
+              .collect())
     rows = [r["count"] for r in counts]
     assert len(rows) >= 2
+    groups = (seg.select("field", "term",
+                         (F.col("seg_id") / 2).cast("long"))
+              .distinct().count())
+    assert sum(rows) == groups
     mean = sum(rows) / len(rows)
     assert max(rows) <= 3.0 * mean, (rows, mean)
 

@@ -24,6 +24,11 @@ def test_golden_points():
     assert byte315_to_float(0) == 0.0
     assert float_to_byte315(-3.5) == 0          # bits <= 0 -> 0
     assert float_to_byte315(1e-30) == 1         # underflow -> smallest
+    # the step just below the smallest positive value (smallfloat ==
+    # fzero) underflows too, to byte 1, not to 0
+    assert float_to_byte315(4.929490730586417e-10) == 1
+    assert float_to_byte315_np(
+        np.array([4.929490730586417e-10], dtype=np.float32)).tolist() == [1]
     assert float_to_byte315(1e30) == 255        # overflow -> largest
 
 
