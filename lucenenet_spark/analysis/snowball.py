@@ -342,48 +342,23 @@ def _german_steps(w: str) -> str:
 # ------------------------------------------------------------- analyzers
 
 def english_snowball_analyzer():
-    """SnowballAnalyzer('English'): standard chain + Porter2 on every
-    emitted term (SnowballAnalyzer.cs TokenStream)."""
-    from .tokenizers import tokenize_standard
-
-    def analyze(text: str) -> list[tuple[str, int]]:
-        return [(porter2_stem(t), p) for t, p in tokenize_standard(text)]
-    return analyze
+    """SnowballAnalyzer('English'): the standard chain (English stop set,
+    holes kept) + Porter2 on every emitted term (SnowballAnalyzer.cs
+    TokenStream).  A tokenizers.Analyzer: the invert kernel stems each
+    unique raw token of a partition once, not every token."""
+    from .tokenizers import standard_analyzer
+    return standard_analyzer(stem=porter2_stem)
 
 
 def german2_snowball_analyzer():
     """SnowballAnalyzer('German2', GERMAN_STOP_WORDS): the German chain
     with the ae/oe/ue/ß prelude substitutions."""
-    from .tokenizers import (
-        MAX_TOKEN_LENGTH, STANDARD_TOKEN_RE, _std_transform)
-
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in GERMAN_STOP_WORDS:
-                continue
-            out.append((german2_stem(tok), pos))
-        return out
-    return analyze
+    from .tokenizers import standard_analyzer
+    return standard_analyzer(GERMAN_STOP_WORDS, german2_stem)
 
 
 def german_snowball_analyzer():
     """SnowballAnalyzer('German', GERMAN_STOP_WORDS): standard tokenizer
     + lowercase + German stop set (holes kept) + German stemmer."""
-    from .tokenizers import (
-        MAX_TOKEN_LENGTH, STANDARD_TOKEN_RE, _std_transform)
-
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in GERMAN_STOP_WORDS:
-                continue
-            out.append((german_stem(tok), pos))
-        return out
-    return analyze
+    from .tokenizers import standard_analyzer
+    return standard_analyzer(GERMAN_STOP_WORDS, german_stem)

@@ -1495,21 +1495,10 @@ def _plain_snowball_analyzer(stem_fn):
     StandardFilter + lowercase + length filter + Snowball stem
     (SnowballAnalyzer.cs TokenStream; stop set is the optional ctor
     arg, omitted here — the contrib ships no stop lists for these
-    languages)."""
-    from .tokenizers import (
-        MAX_TOKEN_LENGTH, STANDARD_TOKEN_RE, _std_transform)
-
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH:
-                continue
-            out.append((stem_fn(tok), pos))
-        return out
-    return analyze
+    languages).  A tokenizers.Analyzer, so the invert kernel stems each
+    unique raw token once."""
+    from .tokenizers import standard_analyzer
+    return standard_analyzer(frozenset(), stem_fn)
 
 
 def swedish_snowball_analyzer():

@@ -7,7 +7,9 @@ simplified-but-exactly-specified token rules so that THREE independent
 implementations agree token-for-token:
 
   1. pure-Python (this module)        -- oracle, tests, and the segment
-                                         invert kernel (index/segments.py)
+                                         invert kernel (index/segments.py),
+                                         which runs an Analyzer's two
+                                         parts apart
   2. Spark JVM column expressions     -- highlight / percolate / textstats
      (analysis/exprs.py)
   3. DuckDB SQL fragments (oracle/sqlgen.py) -- driver correctness gate
@@ -34,6 +36,8 @@ Semantics (the spec):
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
+from dataclasses import dataclass
 
 # The exact 33-word English stop set of the reference
 # (src/Lucene.Net/Analysis/StopAnalyzer.cs:134).
@@ -125,6 +129,58 @@ CODE_LANGS: frozenset[str] = frozenset(
 )
 
 
+@dataclass(frozen=True)
+class Analyzer:
+    """An analysis chain in its two parts: `tokens`, the tokenizer
+    (text -> raw tokens; a token's position is its index), and `term`,
+    the term->term chain (raw token -> indexed term, or None to drop it
+    and keep its position as a hole).
+
+    Called, it is the text -> [(term, position)] stream every caller
+    reads (query side, oracle, tests).  The segment invert kernel
+    (index/segments._invert_partition) runs the same two parts apart:
+    `tokens` per document and `term` once per unique raw token of a
+    partition, so the two forms cannot drift."""
+    tokens: Callable[[str], list[str]]
+    term: Callable[[str], str | None]
+
+    def __call__(self, text: str) -> list[tuple[str, int]]:
+        if text is None:
+            return []
+        return [(t, p) for p, t in enumerate(map(self.term, self.tokens(text)))
+                if t is not None]
+
+
+def _standard_tokens(text: str) -> list[str]:
+    """StandardTokenizer over the lowercased text (LowerCaseFilter folded
+    into the pre-pass): the raw token classes, before StandardFilter."""
+    return STANDARD_TOKEN_RE.findall(text.lower())
+
+
+def standard_analyzer(stop: frozenset[str] = ENGLISH_STOP_WORDS,
+                      stem: Callable[[str], str] | None = None) -> Analyzer:
+    """StandardTokenizer -> StandardFilter -> LowerCase -> length filter
+    -> StopFilter(stop, holes kept) -> optional stemmer: the chain of
+    StandardAnalyzer and, with `stem`, of SnowballAnalyzer
+    (SnowballAnalyzer.cs TokenStream)."""
+    def term(tok: str) -> str | None:
+        tok = _std_transform(tok)
+        if len(tok) > MAX_TOKEN_LENGTH or tok in stop:
+            return None
+        return stem(tok) if stem is not None else tok
+    return Analyzer(_standard_tokens, term)
+
+
+def _code_term(sub: str) -> str | None:
+    # length test on the RAW sub-token, lowercase on emit
+    return sub.lower() if len(sub) <= MAX_TOKEN_LENGTH else None
+
+
+#: the built-in chains the lang-keyed dispatch picks from
+STANDARD = standard_analyzer()
+CODE = Analyzer(CODE_SUBTOKEN_RE.findall, _code_term)
+
+
 def tokenize_standard(text: str) -> list[tuple[str, int]]:
     """(term, position) pairs after the standard chain; holes preserved.
 
@@ -132,15 +188,7 @@ def tokenize_standard(text: str) -> list[tuple[str, int]]:
     NUM/HOST/ACRONYM/ALPHANUM) -> StandardFilter ('s strip, acronym dot
     removal) -> LowerCaseFilter (folded into the lower() pre-pass) ->
     length filter -> StopFilter with position holes."""
-    if text is None:
-        return []
-    out: list[tuple[str, int]] = []
-    for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-        tok = _std_transform(tok)
-        if len(tok) > MAX_TOKEN_LENGTH or tok in ENGLISH_STOP_WORDS:
-            continue
-        out.append((tok, pos))
-    return out
+    return STANDARD(text)
 
 
 def _len_preserving_lower(text: str) -> str:
@@ -167,10 +215,9 @@ def tokenize_standard_offsets(
     low = _len_preserving_lower(text)
     out: list[tuple[str, int, int, int]] = []
     for pos, m in enumerate(STANDARD_TOKEN_RE.finditer(low)):
-        tok = _std_transform(m.group(0))
-        if len(tok) > MAX_TOKEN_LENGTH or tok in ENGLISH_STOP_WORDS:
-            continue
-        out.append((tok, pos, m.start(), m.end()))
+        tok = STANDARD.term(m.group(0))
+        if tok is not None:
+            out.append((tok, pos, m.start(), m.end()))
     return out
 
 
@@ -181,9 +228,9 @@ def tokenize_code_offsets(text: str) -> list[tuple[str, int, int, int]]:
         return []
     out: list[tuple[str, int, int, int]] = []
     for pos, m in enumerate(CODE_SUBTOKEN_RE.finditer(text)):
-        sub = m.group(0)
-        if len(sub) <= MAX_TOKEN_LENGTH:
-            out.append((sub.lower(), pos, m.start(), m.end()))
+        tok = CODE.term(m.group(0))
+        if tok is not None:
+            out.append((tok, pos, m.start(), m.end()))
     return out
 
 
@@ -196,13 +243,7 @@ def tokenize_code(text: str) -> list[tuple[str, int]]:
     matches under both the two-pass (identifier, then sub-split) and the
     one-pass formulation, and positions increment once per sub-token
     either way. One findall per doc instead of one per identifier."""
-    if text is None:
-        return []
-    out: list[tuple[str, int]] = []
-    for pos, sub in enumerate(CODE_SUBTOKEN_RE.findall(text)):
-        if len(sub) <= MAX_TOKEN_LENGTH:
-            out.append((sub.lower(), pos))
-    return out
+    return CODE(text)
 
 
 _WS_RE = re.compile(r"\S+")
@@ -232,11 +273,17 @@ def tokenize_lowercase(text: str) -> list[tuple[str, int]]:
     return [(t.lower(), p) for t, p in tokenize_letter(text)]
 
 
+def analyzer_for(lang: str | None) -> Analyzer:
+    """The lang-keyed chain (PerFieldAnalyzerWrapper analogue): CODE for
+    CODE_LANGS (case-insensitive), STANDARD otherwise."""
+    if lang is not None and lang.lower() in CODE_LANGS:
+        return CODE
+    return STANDARD
+
+
 def tokenize(text: str, lang: str | None = None) -> list[tuple[str, int]]:
     """Analyzer dispatch keyed on lang (PerFieldAnalyzerWrapper analogue)."""
-    if lang is not None and lang.lower() in CODE_LANGS:
-        return tokenize_code(text)
-    return tokenize_standard(text)
+    return analyzer_for(lang)(text)
 
 
 def doc_length(text: str, lang: str | None = None) -> int:
@@ -258,15 +305,14 @@ def tokenize_values(values, lang: str | None = None,
     position counter drops increments pending at stream end) — only
     observable for cross-boundary sloppy phrases over trailing
     stopwords, and only at gap=0."""
+    a = analyzer_for(lang)
     out: list[tuple[str, int]] = []
     base = 0
     for v in values or []:
         if v is None:
             continue
-        toks = tokenize(v, lang)
-        out.extend((t, base + p) for t, p in toks)
-        raw_n = len(STANDARD_TOKEN_RE.findall(v.lower())) if lang is None \
-            or lang.lower() not in CODE_LANGS else len(
-                CODE_SUBTOKEN_RE.findall(v))
-        base += raw_n + gap
+        raw = a.tokens(v)
+        out.extend((t, base + p) for p, t in enumerate(map(a.term, raw))
+                   if t is not None)
+        base += len(raw) + gap
     return out

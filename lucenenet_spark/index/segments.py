@@ -4,12 +4,17 @@ The write-side dataflow of the reference (IndexWriter -> DocumentsWriter ->
 TermsHash -> FormatPostings -> SegmentMerger; SURVEY.md §2.3/§3.1) as Spark
 stages:
 
-  1. partition invert (mapInArrow): tokenize + local hash-invert one
+  1. partition invert (mapInArrow): analyze + local hash-invert one
      SEGMENT per input partition — the per-thread RAM buffer + flush of
-     DocumentsWriter.cs:120-138 (partition size = flush unit).  A segment
-     row holds one (field, term)'s posting list as native array columns
-     (docs / tfs / dls / pos / pay), built from offsets with no
-     per-element Python.
+     DocumentsWriter.cs:120-138 (partition size = flush unit).  An
+     analyzer that is a tokenizer + term chain (tokenizers.Analyzer: the
+     built-in chains, Snowball, German, Lovins) goes through one
+     vocabulary routine — the tokenizer per document, the term chain
+     once per unique raw token of the partition; any other analyzer
+     through a per-document stream hook feeding the same
+     post-accumulation.  A segment row holds one (field, term)'s posting
+     list as native array columns (docs / tfs / dls / pos / pay), built
+     from offsets with no per-element Python.
   2. merge waves (groupBy in the JVM): geometric fan-in merge of segments,
      mergeFactor=10 by default (LogMergePolicy.cs:51-76). The exchange is
      keyed on (field, term), so a merged generation is hash-partitioned
@@ -21,6 +26,8 @@ stages:
      (wave, n_segments, rows, postings) — the segments_N manifest analogue
      (IndexFileNames.cs:29-37) — and a killed build resumes from the last
      committed wave.
+
+SegmentedIndex.save writes one term-range parquet file per core.
 
 Parquet's encoding and compression replace the reference's delta + VInt
 .frq/.prx streams, at rest and in the columnar cache; only the block-max
@@ -52,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..analysis.tokenizers import tokenize
+from ..analysis.tokenizers import Analyzer, analyzer_for
 from . import codec
 
 _BLOCK = T.StructType([
@@ -118,6 +125,90 @@ class _Spec:
     keyword_cols: dict[str, str] | None = None
 
 
+class _Vocab:
+    """Accumulates the documents of one tokenizers.Analyzer: raw tokens
+    per value, inverted through its term chain once per unique raw
+    token of the partition."""
+
+    def __init__(self, analyzer):
+        self.a = analyzer
+        self.raw, self.n, self.doc, self.base = [], [], [], []
+
+    def add(self, d: int, text: str, base: int) -> int:
+        """Value `text` of local doc `d`, its positions from `base`; the
+        next value's base before the gap: base + its RAW token count, so
+        stopword holes survive the boundary (tokenize_values)."""
+        raw = self.a.tokens(text)
+        if raw:
+            self.raw.append(raw)
+            self.n.append(len(raw))
+            self.doc.append(d)
+            self.base.append(base)
+        return base + len(raw)
+
+    def finish(self):
+        """(vocab, tid, doc, pos, pay) over the EMITTED tokens: vocab the
+        transformed unique raw tokens (None where the chain drops one),
+        tid each token's index into it, pay None."""
+        import itertools
+        flat = np.asarray(list(itertools.chain.from_iterable(self.raw)),
+                          dtype=object)
+        tid, uniq = pd.factorize(flat, sort=False)
+        vocab = np.asarray([self.a.term(u) for u in uniq], dtype=object)
+        keep = np.not_equal(vocab, None)[tid]
+        n = np.asarray(self.n, np.int64)
+        # position = index within the value + the value's base
+        shift = np.repeat(np.cumsum(n) - n - np.asarray(self.base, np.int64),
+                          n)
+        pos = np.arange(len(flat), dtype=np.int64) - shift
+        doc = np.repeat(np.asarray(self.doc, np.int64), n)
+        return (vocab, tid.astype(np.int64)[keep], doc[keep], pos[keep],
+                None)
+
+
+class _Stream:
+    """The stream hook: accumulates the documents of an analyzer that is
+    not a tokenizer + term chain (shingle, synonym, compound, CJK,
+    payload, ...) by calling it per value — and, with force_slow, of
+    any analyzer, as the reference the vocabulary routine is tested
+    against."""
+
+    def __init__(self, analyzer):
+        self.a = analyzer
+        self.terms, self.pos, self.doc, self.pay = [], [], [], []
+
+    def add(self, d: int, text: str, base: int) -> int:
+        """As _Vocab.add; without a tokenizer to count raw tokens, the
+        next base is past the value's highest emitted position."""
+        toks = self.a(text)
+        if toks:
+            self.terms.extend(t[0] for t in toks)
+            self.pos.extend(base + t[1] for t in toks)
+            self.doc.extend([d] * len(toks))
+            # analyzers may emit (term, pos, payload) triples
+            # (analysis/payloads.py; PayloadAttribute.cs)
+            self.pay.append([t[2] for t in toks] if len(toks[0]) == 3
+                            else None)
+        if isinstance(self.a, Analyzer):
+            return base + len(self.a.tokens(text))
+        return base + (max(t[1] for t in toks) + 1 if toks else 0)
+
+    def finish(self):
+        tid, vocab = pd.factorize(np.asarray(self.terms, dtype=object),
+                                  sort=False)
+        pay = (np.concatenate(self.pay).astype(np.float32)
+               if self.pay and all(p is not None for p in self.pay)
+               else None)
+        return (np.asarray(vocab, dtype=object), tid.astype(np.int64),
+                np.asarray(self.doc, np.int64),
+                np.asarray(self.pos, np.int64), pay)
+
+
+#: KeywordAnalyzer (src/Lucene.Net/Analysis/KeywordAnalyzer.cs): the whole
+#: value is one term
+_KEYWORD = Analyzer(lambda v: [str(v)], lambda t: t)
+
+
 def _invert_partition(field_name: str, id_col: str, text_col: str,
                       lang_col: str | None, positions: bool,
                       keyword: bool = False, fold: bool = False,
@@ -132,201 +223,85 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
     offsets are those boundaries (one list per term, nested per doc for
     positions and payloads).
 
-    FAST PATH (plain string column, built-in analyzers): the ONLY per-doc
-    Python is one regex findall; the StandardFilter/length/stop transforms
-    run over the factorized UNIQUE terms (vocabulary-sized, 10-30x fewer
-    than tokens), positions come from arange arithmetic, per-doc lengths
-    from one add.reduceat. This cuts per-token object allocation ~5x —
-    the invert kernel is memory-bandwidth-bound at high core counts
-    (BENCH/hw_ceiling.json), so allocation traffic is what scaling buys.
+    Each document goes to one analyzer: `analyzer` when given, else the
+    lang-keyed built-in chain (tokenizers.analyzer_for); fold_ascii
+    folds each value before it.  VOCABULARY ROUTINE (_Vocab), for every
+    tokenizers.Analyzer — the built-in standard and code chains, the
+    Snowball/German/Lovins family, keyword fields: the ONLY per-doc
+    Python is the tokenizer; the term chain (StandardFilter, length,
+    stop set, stem) runs once per UNIQUE raw token of the partition
+    (vocabulary-sized, 10-30x fewer than tokens), positions come from
+    arange arithmetic.  STREAM HOOK (_Stream), for any other callable
+    text -> [(term, pos[, payload])]: called per value.  Both feed one
+    post-accumulation, where dl (the .nrm norm) is the doc's emitted
+    token count; force_slow=True sends every analyzer through the
+    stream hook — the per-document reference the tests compare with.
 
-    SLOW PATH (keyword fields, custom analyzer=, multi-valued
-    array<string> columns, or force_slow=True for equivalence tests):
-    the original per-doc tokenize loop; bit-identical output.
+    A multi-valued field (array<string> column) analyzes each value with
+    the document's analyzer; value i+1's positions start
+    position_increment_gap past value i's position space
+    (Analyzer.cs:108-126; see _Vocab.add and _Stream.add).
 
     keyword=True indexes the whole column value as ONE term with tf=1,
     dl=1, position 0 (KeywordAnalyzer, src/Lucene.Net/Analysis/
     KeywordAnalyzer.cs) — what build_segmented_index's keyword_cols
     index."""
-
-    def _slow_accumulate(pdf, acc):
-        term_chunks, doc_chunks, pos_chunks, tok_counts, pay_chunks = acc
-        langs = pdf[lang_col] if lang_col else [None] * len(pdf)
-        for doc_id, text, lg in zip(pdf[id_col], pdf[text_col], langs):
-            if keyword:
-                toks = [] if text is None else [(str(text), 0)]
-            elif (not isinstance(text, str) and text is not None
-                    and hasattr(text, "__iter__")):
-                # multi-valued field (array<string> column):
-                # positionIncrementGap between instances
-                # (Analyzer.cs:108-126)
-                from ..analysis.tokenizers import tokenize_values
-                vals = list(text)
-                if fold:
-                    from ..analysis.folding import fold_ascii_py
-                    vals = [fold_ascii_py(v) if v is not None else None
-                            for v in vals]
-                toks = tokenize_values(vals, lg,
-                                       gap=position_increment_gap)
-            else:
-                if fold and text is not None:
-                    from ..analysis.folding import fold_ascii_py
-                    text = fold_ascii_py(text)
-                toks = (analyzer(text) if analyzer is not None
-                        else tokenize(text, lg))
-            n = len(toks)
-            if n == 0:
-                continue
-            term_chunks.append([t[0] for t in toks])
-            pos_chunks.append(
-                np.fromiter((t[1] for t in toks), np.int64, n))
-            doc_chunks.append(np.full(n, int(doc_id), np.int64))
-            tok_counts.append(n)
-            # analyzers may emit (term, pos, payload) triples
-            # (analysis/payloads.py; PayloadAttribute.cs)
-            pay_chunks.append(
-                np.fromiter((t[2] for t in toks), np.float32, n)
-                if len(toks[0]) == 3 else None)
-
-    def _fast_accumulate(pdf, std, cod):
-        from ..analysis.tokenizers import (
-            CODE_LANGS, CODE_SUBTOKEN_RE, STANDARD_TOKEN_RE)
-        if fold:
-            from ..analysis.folding import fold_ascii_py
-        if lang_col:
-            is_code = (pdf[lang_col].astype(str).str.lower()
-                       .isin(CODE_LANGS).to_numpy())
-        else:
-            is_code = np.zeros(len(pdf), bool)
-        code_find = CODE_SUBTOKEN_RE.findall
-        std_find = STANDARD_TOKEN_RE.findall
-        for i, (doc_id, text) in enumerate(zip(pdf[id_col], pdf[text_col])):
-            if not isinstance(text, str):
-                continue  # null (None/NaN); arrays ruled out by mode probe
-            if fold:
-                text = fold_ascii_py(text)
-            if is_code[i]:
-                raw = code_find(text)
-                tgt = cod
-            else:
-                raw = std_find(text.lower())
-                tgt = std
-            if raw:
-                tgt[0].append(raw)
-                tgt[1].append(len(raw))
-                tgt[2].append(int(doc_id))
-
-    def _fast_stream(stream, transform_unique):
-        """(chunks, counts, docs) -> (tid, terms, keep_tok, doc, pos, dl)
-        flat per-RAW-token arrays; terms = transformed unique vocabulary."""
-        chunks, counts, docs = stream
-        import itertools
-        flat = np.asarray(
-            list(itertools.chain.from_iterable(chunks)), dtype=object)
-        tid, uniq = pd.factorize(flat, sort=False)
-        tid = tid.astype(np.int64)
-        terms = np.empty(len(uniq), object)
-        keep_u = np.empty(len(uniq), bool)
-        for j, u in enumerate(uniq):
-            terms[j], keep_u[j] = transform_unique(u)
-        counts = np.asarray(counts, np.int64)
-        starts = np.zeros(len(counts), np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        posv = np.arange(len(flat), dtype=np.int64) - np.repeat(starts,
-                                                                counts)
-        docv = np.repeat(np.asarray(docs, np.int64), counts)
-        keep_tok = keep_u[tid]
-        # dl = EMITTED tokens per doc (post stop/length filter) -> the norm
-        dl_doc = np.add.reduceat(keep_tok.astype(np.int64), starts)
-        dlv = np.repeat(dl_doc, counts)
-        return tid, terms, keep_tok, docv, posv, dlv
+    if fold:
+        from ..analysis.folding import fold_ascii_py
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
         seg_id = TaskContext.get().partitionId()
 
-        slow_only = force_slow or keyword or analyzer is not None
-        mode = "slow" if slow_only else None
-        slow_acc = ([], [], [], [], [])  # terms, docs, pos, counts, payloads
-        std = ([], [], [])           # raw chunks, counts, doc_ids
-        cod = ([], [], [])
-
+        accs = {}      # analyzer -> its _Vocab / _Stream
+        doc_ids = []   # local doc index -> doc id
         for batch in batches:
             pdf = batch.to_pandas()
-            if mode is None:
-                # decide once from the first non-null value; Spark column
-                # types are uniform, so one probe settles str vs array
-                for v in pdf[text_col]:
-                    if v is None or (isinstance(v, float) and v != v):
-                        continue
-                    mode = ("slow" if not isinstance(v, str) else "fast")
-                    break
-                if mode is None:
-                    continue  # all-null batch: contributes nothing
-            if mode == "slow":
-                _slow_accumulate(pdf, slow_acc)
-            else:
-                _fast_accumulate(pdf, std, cod)
+            langs = pdf[lang_col] if lang_col else [None] * len(pdf)
+            for doc_id, text, lg in zip(pdf[id_col], pdf[text_col], langs):
+                if text is None or (isinstance(text, float) and not keyword):
+                    continue  # null (None, or NaN in a string column)
+                if keyword:
+                    a, values = _KEYWORD, [text]
+                else:
+                    # an array<string> column is a multi-valued field
+                    values = ([text] if isinstance(text, str)
+                              else [v for v in text if v is not None])
+                    if fold:
+                        values = [fold_ascii_py(v) for v in values]
+                    a = analyzer if analyzer is not None else analyzer_for(lg)
+                acc = accs.get(a)
+                if acc is None:
+                    acc = accs[a] = (
+                        _Vocab(a) if isinstance(a, Analyzer)
+                        and not force_slow else _Stream(a))
+                d = len(doc_ids)
+                doc_ids.append(int(doc_id))
+                base = 0
+                for v in values:
+                    base = acc.add(d, v, base) + position_increment_gap
 
-        payv = None
-        if mode == "slow" and slow_acc[0]:
-            import itertools
-            term_chunks, doc_chunks, pos_chunks, tok_counts, pay_chunks = \
-                slow_acc
-            tid, uniq_terms = pd.factorize(
-                pd.Series(list(itertools.chain.from_iterable(term_chunks))),
-                sort=False)
-            tid = tid.astype(np.int64)
-            uniq_terms = np.asarray(uniq_terms, object)
-            docv = np.concatenate(doc_chunks)
-            posv = np.concatenate(pos_chunks)
-            if all(c is not None for c in pay_chunks):
-                payv = np.concatenate(pay_chunks)
-            # dl per token = emitted-token count of its doc (the .nrm norm)
-            ns = np.asarray(tok_counts, np.int64)
-            dlv = np.repeat(ns, ns)
-        elif mode == "fast" and (std[0] or cod[0]):
-            from ..analysis.tokenizers import (
-                ENGLISH_STOP_WORDS, MAX_TOKEN_LENGTH, _std_transform)
-
-            def _tx_std(u):
-                t = _std_transform(u)
-                return t, (len(t) <= MAX_TOKEN_LENGTH
-                           and t not in ENGLISH_STOP_WORDS)
-
-            def _tx_code(u):
-                # tokenize_code: length test on the RAW sub-token,
-                # lowercase on emit
-                return u.lower(), len(u) <= MAX_TOKEN_LENGTH
-
-            parts = []
-            if std[0]:
-                parts.append(_fast_stream(std, _tx_std))
-            if cod[0]:
-                parts.append(_fast_stream(cod, _tx_code))
-            # merge the two vocabularies into one id space (the same term
-            # can appear under both analyzers within a partition)
-            vocabs = [p[1] for p in parts]
-            gid, uniq_terms = pd.factorize(np.concatenate(vocabs)
-                                           if len(vocabs) > 1 else vocabs[0],
-                                           sort=False)
-            gid = gid.astype(np.int64)
-            uniq_terms = np.asarray(uniq_terms, object)
-            off, remapped = 0, []
-            for p in parts:
-                remapped.append(gid[off:off + len(p[1])][p[0]])
-                off += len(p[1])
-            keep = np.concatenate([p[2] for p in parts])
-            tid = np.concatenate(remapped)[keep]
-            docv = np.concatenate([p[3] for p in parts])[keep]
-            posv = np.concatenate([p[4] for p in parts])[keep]
-            dlv = np.concatenate([p[5] for p in parts])[keep]
-            if len(tid) == 0:
-                yield pa.RecordBatch.from_pylist([], schema=_ARROW_SCHEMA)
-                return
-        else:
+        parts = [acc.finish() for acc in accs.values()]
+        if not any(len(p[1]) for p in parts):
             yield pa.RecordBatch.from_pylist([], schema=_ARROW_SCHEMA)
             return
+        # merge the vocabularies into one id space (the same term can come
+        # from more than one analyzer within a partition)
+        gid, uniq_terms = pd.factorize(
+            np.concatenate([p[0] for p in parts]), sort=False)
+        uniq_terms = np.asarray(uniq_terms, object)
+        off, tids = 0, []
+        for p in parts:
+            tids.append(gid[off:off + len(p[0])][p[1]])
+            off += len(p[0])
+        tid = np.concatenate(tids).astype(np.int64)
+        dix = np.concatenate([p[2] for p in parts])
+        posv = np.concatenate([p[3] for p in parts])
+        payv = (np.concatenate([p[4] for p in parts])
+                if all(p[4] is not None for p in parts) else None)
+        docv = np.asarray(doc_ids, np.int64)[dix]
+        # dl per token = emitted-token count of its doc (the .nrm norm)
+        dlv = np.bincount(dix, minlength=len(doc_ids))[dix]
 
         order = np.lexsort((posv, docv, tid))
         tid, docv, posv, dlv = tid[order], docv[order], posv[order], dlv[order]
@@ -703,9 +678,21 @@ class SegmentedIndex:
 
     # ---- persistence: segments_N manifest analogue ----
 
-    def save(self, path: str, term_buckets: int = 32) -> None:
+    def save(self, path: str) -> None:
+        """Write the segment rows under path/segments and the index
+        metadata to path/stats.json.
+
+        The rows are range-partitioned on (field, term) and sorted within
+        each partition, so every file holds one ordered term range,
+        disjoint from the others and ascending in file order — the .tii
+        seek analogue (TermInfosReader.cs:243-308): a term's rows sit in
+        one file, whose footer bounds let a reader skip the rest.  That
+        needs ordered, disjoint ranges, not a particular file count; one
+        file per core (defaultParallelism) writes in a single wave of
+        tasks instead of many waves of tiny parquet writers."""
         (
-            self.segments.repartitionByRange(term_buckets, "field", "term")
+            self.segments.repartitionByRange(
+                self.spark.sparkContext.defaultParallelism, "field", "term")
             .sortWithinPartitions("field", "term", "seg_id")
             .write.mode("overwrite").parquet(os.path.join(path, "segments"))
         )

@@ -32,3 +32,34 @@ def documents_index(spark):
     return build_segmented_index(
         spark, docs, text_col="text", keyword_cols={"source": "source"},
     ).cache()
+
+
+@pytest.fixture(scope="session")
+def check_saved_layout(spark):
+    """check(index, path): `index` saved at `path` (SegmentedIndex.save)
+    wrote at most one parquet file per core under path/segments, the
+    files hold disjoint (field, term) ranges ascending in file order, and
+    every segment row survives."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def check(index, path):
+        files = sorted(glob.glob(os.path.join(path, "segments",
+                                              "*.parquet")))
+        assert 0 < len(files) <= spark.sparkContext.defaultParallelism
+        ranges, rows = [], []
+        for f in files:
+            keys = list(zip(*pq.read_table(
+                f, columns=["field", "term", "seg_id"]).to_pydict()
+                .values()))
+            assert keys == sorted(keys), f  # sorted within the file
+            ranges.append((keys[0][:2], keys[-1][:2]))
+            rows.extend(keys)
+        for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+            assert hi < lo, (hi, lo)
+        assert sorted(rows) == sorted(
+            tuple(r) for r in
+            index.segments.select("field", "term", "seg_id").collect())
+
+    return check

@@ -1,11 +1,13 @@
-"""Fast-path invert kernel == slow-path (per-doc tokenize) equivalence.
+"""Invert kernel: vocabulary routine == per-document stream equivalence.
 
-The fast path (factorize raw tokens, transform the unique vocabulary,
-arange/reduceat positions+norms; segments._invert_partition) must be
-bit-identical to the original per-doc loop on every analyzer corner:
-emails, acronyms, possessives, stopword holes, >255-char tokens,
-mixed code/standard languages in one partition, folding, terms shared
-between the two analyzer vocabularies."""
+The vocabulary routine (factorize raw tokens, run the term chain over the
+unique vocabulary, arange positions, bincount norms;
+segments._invert_partition) must be bit-identical to the per-document
+analyzer loop (force_slow=True) on every analyzer corner: emails,
+acronyms, possessives, stopword holes, >255-char tokens, mixed
+code/standard languages in one partition, folding, terms shared between
+the two built-in vocabularies — for the built-in chains and for every
+stemming analyzer built as a tokenizer + term chain."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from lucenenet_spark.analysis import lovins, snowball, snowball_ext
 from lucenenet_spark.index.segments import _invert_partition
 
 
@@ -29,9 +32,10 @@ class _FakeTC:
 
 
 def _run(pdf, *, positions=True, fold=False, force_slow=False,
-         lang_col="lang", batches=None):
+         lang_col="lang", batches=None, analyzer=None):
     fn = _invert_partition("content", "doc_id", "content", lang_col,
-                           positions, fold=fold, force_slow=force_slow)
+                           positions, fold=fold, analyzer=analyzer,
+                           force_slow=force_slow)
     chunks = batches if batches is not None else [pdf]
     with um.patch("pyspark.TaskContext", _FakeTC):
         out = pa.Table.from_batches(list(fn(iter(
@@ -71,12 +75,35 @@ def _pdf(docs):
     })
 
 
-@pytest.mark.parametrize("positions", [True, False])
-@pytest.mark.parametrize("fold", [True, False])
-def test_fast_equals_slow_tricky(positions, fold):
+#: analyzer= under test; None is the lang-keyed built-in chain.  With
+#: analyzer= every document goes through it, whatever its lang.
+ANALYZERS = {
+    None: None,
+    "english": snowball.english_snowball_analyzer(),
+    "german": snowball.german_snowball_analyzer(),
+    "german2": snowball.german2_snowball_analyzer(),
+    "lovins": lovins.lovins_analyzer(),
+    "romanian": snowball_ext.romanian_snowball_analyzer(),
+}
+
+
+def _tricky_cases():
+    for name in ANALYZERS:
+        for fold in (True, False):
+            for positions in (True, False):
+                ids = [name] if name else []
+                yield pytest.param(name, fold, positions,
+                                   id="-".join(ids + [str(fold),
+                                                      str(positions)]))
+
+
+@pytest.mark.parametrize("analyzer, fold, positions", _tricky_cases())
+def test_fast_equals_slow_tricky(analyzer, fold, positions):
     pdf = _pdf(TRICKY_DOCS)
-    fast = _run(pdf, positions=positions, fold=fold)
-    slow = _run(pdf, positions=positions, fold=fold, force_slow=True)
+    a = ANALYZERS[analyzer]
+    fast = _run(pdf, positions=positions, fold=fold, analyzer=a)
+    slow = _run(pdf, positions=positions, fold=fold, analyzer=a,
+                force_slow=True)
     pd.testing.assert_frame_equal(fast, slow)
     assert len(fast) > 0
 
@@ -111,15 +138,18 @@ def test_fast_equals_slow_random_corpus():
 
 
 def test_multivalued_column_takes_slow_path():
-    """array<string> columns must still produce multi-value gap semantics
-    (the mode probe routes them to the slow path)."""
+    """array<string> columns must still produce multi-value gap semantics,
+    equal to the per-document reference (a trailing stopword's hole
+    survives the value boundary)."""
     pdf = pd.DataFrame({
-        "doc_id": np.array([1, 2], dtype=np.int64),
-        "lang": [None, None],
-        "content": [["alpha beta", "gamma"], None],
+        "doc_id": np.array([1, 2, 3], dtype=np.int64),
+        "lang": [None, None, None],
+        "content": [["alpha beta", "gamma"], None, ["delta the", "eps"]],
     })
     out = _run(pdf)
-    assert set(out["term"]) == {"alpha", "beta", "gamma"}
+    assert set(out["term"]) == {"alpha", "beta", "gamma", "delta", "eps"}
     # positions continue across values (gap=0 default)
     row = out[out["term"] == "gamma"].iloc[0]
     assert row["docs"] == [1] and row["pos"] == [[2]]
+    assert out[out["term"] == "eps"].iloc[0]["pos"] == [[2]]
+    pd.testing.assert_frame_equal(out, _run(pdf, force_slow=True))

@@ -75,3 +75,49 @@ def test_trailing_stopword_hole_survives_boundary():
     # a non-trailing stopword hole behaves identically on both sides
     toks2 = tokenize_values(["big the red", "fox"], gap=0)
     assert toks2 == [("big", 0), ("red", 2), ("fox", 3)]
+
+
+def test_analyzer_runs_on_every_value(spark):
+    """With analyzer=, each value of an array<string> column goes
+    through the analyzer, not the built-in chain — also for the rows an
+    update adds.  A tokenizer + term chain analyzer advances the next
+    value's base by the value's RAW token count (trailing stopword holes
+    survive, as in tokenize_values); a stream analyzer by its highest
+    emitted position + 1."""
+    from lucenenet_spark.analysis.snowball import english_snowball_analyzer
+    from lucenenet_spark.index.segments import update_documents
+
+    def postings(idx):
+        return sorted((r["term"], r["doc_id"], tuple(r["positions"]))
+                      for r in idx.postings.collect())
+
+    stem = english_snowball_analyzer()
+    schema = "doc_id long, key string, text array<string>"
+    rows = [(0, "k0", ["running dogs the", "jumping"]),
+            (1, "k1", ["plain words"])]
+    idx = build_segmented_index(
+        spark, spark.createDataFrame(rows, schema), text_col="text",
+        field_name="text", analyzer=stem, position_increment_gap=10)
+    assert ("run", 0, (0,)) in postings(idx)
+    assert ("jump", 0, (13,)) in postings(idx)   # 3 raw tokens + gap 10
+
+    new = spark.createDataFrame([("k1", ["cats running"])],
+                                "key string, text array<string>")
+    updated = update_documents(idx, new, ["key"])
+    rebuilt = build_segmented_index(
+        spark, spark.createDataFrame(
+            rows[:1] + [(2, "k1", ["cats running"])], schema),
+        text_col="text", field_name="text", analyzer=stem,
+        position_increment_gap=10)
+    assert ("cat", 2, (0,)) in postings(updated)
+    # the replaced doc 1 keeps its postings until an expunge
+    assert postings(updated) == sorted(postings(rebuilt) + [
+        ("plain", 1, (0,)), ("word", 1, (1,))])
+
+    def no_the(text):  # a stream analyzer: no tokenizer to count with
+        return [(w, i) for i, w in enumerate(text.split()) if w != "the"]
+
+    ws = build_segmented_index(
+        spark, spark.createDataFrame(rows, schema), text_col="text",
+        field_name="text", analyzer=no_the, position_increment_gap=10)
+    assert ("jumping", 0, (12,)) in postings(ws)  # highest pos 1 + 1 + 10

@@ -124,18 +124,21 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     assert rows_a == rows_b
 
 
-def test_save_load_roundtrip(spark, corpus, tmp_path):
+def test_save_load_roundtrip(spark, corpus, tmp_path, check_saved_layout):
     from lucenenet_spark.index.segments import SegmentedIndex, build_segmented_index
     from lucenenet_spark.plans import ast
     from lucenenet_spark.plans.lowering import Searcher
 
     seg = build_segmented_index(spark, corpus, text_col="content", lang_col="lang")
     seg.save(str(tmp_path / "idx"))
+    check_saved_layout(seg, str(tmp_path / "idx"))
     back = SegmentedIndex.load(spark, str(tmp_path / "idx"), stored=corpus)
-    q = ast.Term("index", field="content")
-    a = [tuple(r) for r in Searcher(seg).search(q, 10).collect()]
-    b = [tuple(r) for r in Searcher(back).search(q, 10).collect()]
-    assert a == b
+    for q in (ast.Term("index", field="content"),
+              ast.Phrase(("doc", "id"), field="content"),
+              ast.Prefix("se", field="content")):
+        a = [tuple(r) for r in Searcher(seg).search(q, 10).collect()]
+        b = [tuple(r) for r in Searcher(back).search(q, 10).collect()]
+        assert a == b and a, q
 
 
 def test_content_sha_rollup(spark, corpus):

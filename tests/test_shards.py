@@ -174,14 +174,17 @@ def test_expunge_routed_isolation(spark, sharded):
     assert lo0 not in live and (lo0 + 1) not in live
 
 
-def test_save_load_roundtrip(spark, corpus, sharded, tmp_path):
+def test_save_load_roundtrip(spark, corpus, sharded, tmp_path,
+                            check_saved_layout):
     from lucenenet_spark.index.shards import ShardedIndex
 
     p = str(tmp_path / "sharded_idx")
     sharded.save(p)
+    for i, shard in enumerate(sharded.shards):
+        check_saved_layout(shard, f"{p}/shard_{i:03d}")
     back = ShardedIndex.load(spark, p, stored=corpus)
     assert back.bounds == sharded.bounds
-    for q in QUERIES[:3]:
+    for q in QUERIES:
         assert _hits(back.searcher(), q) == _hits(sharded.searcher(), q), q
 
 
