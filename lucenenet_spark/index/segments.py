@@ -38,10 +38,11 @@ per posting (field, term, term_df, doc_id, tf, dl, positions), which
 plans/lowering.Searcher scores; term_df is the term's global df, a
 window sum over its segment rows (the TermInfo{df, freqPtr, proxPtr}
 entry, TermInfo.cs:28-32: df is read with the postings, not looked up
-first).  The (field, term) filter lands BELOW the window and the explode
-(term-dictionary seek analogue, TermInfosReader.cs:243-308 — only
-matching posting lists are expanded) and no Python worker runs on the
-read path.
+first).  The (field, term) filter lands on the segment scan, BELOW a
+coalesce(1), the window and the explode (term-dictionary seek analogue,
+TermInfosReader.cs:243-308 — only matching posting lists are expanded),
+so a query scores in one task, and no Python worker runs on the read
+path.
 """
 
 from __future__ import annotations
@@ -427,8 +428,8 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
 
     The exchange is keyed on (field, term) only, so a term's rows land in
     one reducer partition and the merged generation reports
-    HashPartitioning(field, term): the per-term df window of the posting
-    views (and term_stats' aggregate) over it needs no exchange.
+    HashPartitioning(field, term): term_stats' per-term aggregate over it
+    needs no exchange.
     merge_group stays a grouping key, so a wave still merges at most
     fan_in sub-lists per output row; a one-shot build has one merge
     group, so the shorter key changes which reducer merges a term, not
@@ -444,22 +445,19 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
     cluster-wide."""
     if num_partitions is None:
         num_partitions = segments.sparkSession.sparkContext.defaultParallelism
-    grouped = (
-        segments.withColumn("merge_group",
-                            (F.col("seg_id") / fan_in).cast("long"))
+    return (
+        segments.selectExpr(
+            "*", f"CAST(seg_id / {int(fan_in)} AS BIGINT) AS merge_group")
         .repartition(num_partitions, "field", "term")
         .groupBy("field", "term", "merge_group")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            F.col("docs")[0].alias("first"), "seg_id", "docs", "tfs", "dls",
-            "pos", "pay", "blocks"))).alias("parts"),
-            F.sum("df").cast("int").alias("df"),
-            F.sum("ttf").alias("ttf"))
-        .withColumn("m", F.expr(
-            f"if({_DISJOINT}, {_CONCAT}, {_INTERLEAVE})"))
-    )
-    return grouped.select(
-        "field", "term", F.col("merge_group").alias("seg_id"), "df", "ttf",
-        *[F.col(f"m.{c}").alias(c) for c in _LIST_COLS])
+        .agg(F.expr("sort_array(collect_list(struct(docs[0] AS first, "
+                    "seg_id, docs, tfs, dls, pos, pay, blocks))) AS parts"),
+             F.expr("CAST(sum(df) AS INT) AS df"),
+             F.expr("sum(ttf) AS ttf"))
+        .selectExpr("field", "term", "merge_group AS seg_id", "df", "ttf",
+                    f"if({_DISJOINT}, {_CONCAT}, {_INTERLEAVE}) AS m")
+        .selectExpr("field", "term", "seg_id", "df", "ttf",
+                    *(f"m.{c} AS {c}" for c in _LIST_COLS)))
 
 
 #: SegmentedIndex fields derived from one generation's segment rows or
@@ -497,43 +495,54 @@ class SegmentedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        """Relational view (field, term, term_df, doc_id, tf, dl,
-        positions).
+        """Query view (field, term, term_df, doc_id, tf, dl, positions).
 
-        term_df is the term's global df: sum(df) over its segment rows,
-        a window partitioned by (field, term), so a (field, term)
-        predicate lands below both the window and the explode — only the
-        matching posting lists are read and expanded, and their df comes
-        from the same scan.  A generation built by merge_wave is
-        hash-partitioned by (field, term), so the window adds no
-        exchange; column pruning drops it where term_df is unused."""
+        term_df is the term's global df: sum(df) over its segment rows, a
+        window partitioned by (field, term).  A (field, term) predicate
+        lands on the cached segment scan, below a coalesce(1) (narrow, no
+        exchange), the window and the explode: only the matching lists
+        are read, in one task that needs no exchange for the rest of the
+        query on any generation (plans/lowering.py, "One stage per
+        query"); column pruning drops the window where term_df is
+        unused.  Whole-index reads use `all_postings`."""
         if self._postings is None:
-            self._postings = _exploded(_with_term_df(self.segments), _POS,
-                                       keep=("term_df",))
+            self._postings = _exploded(
+                _with_term_df(self.segments.coalesce(1)), _POS,
+                keep=("term_df",))
         return self._postings
 
     @property
     def postings_nopos(self) -> DataFrame:
-        """Positions-free view (field, term, term_df, doc_id, tf, dl).
+        """Positions-free query view (field, term, term_df, doc_id, tf,
+        dl).
 
         Term/boolean/range scoring never reads positions; column pruning
         keeps the pos column out of the scan — the reference's
         omitTf/lazy-prox behavior (SegmentTermDocs vs SegmentTermPositions
-        split).  term_df as in `postings`."""
+        split).  Funnel and term_df as in `postings`."""
         if self._postings_nopos is None:
-            self._postings_nopos = _exploded(_with_term_df(self.segments),
-                                             (), keep=("term_df",))
+            self._postings_nopos = _exploded(
+                _with_term_df(self.segments.coalesce(1)), (),
+                keep=("term_df",))
         return self._postings_nopos
 
     @property
+    def all_postings(self) -> DataFrame:
+        """Whole-index view (field, term, doc_id, tf, dl), one task per
+        cached partition: for reads of every posting list, which one task
+        would serialize."""
+        return _exploded(self.segments)
+
+    @property
     def postings_payloads(self) -> DataFrame:
-        """View WITH per-position payloads
+        """Query view WITH per-position payloads
         (field, term, doc_id, tf, dl, positions, payloads) — the
         Payload*Query read path (TermPositions.GetPayload,
         SegmentTermPositions.cs:213-236).  payloads is null for terms
-        indexed without them."""
+        indexed without them.  Funnel as in `postings`."""
         if self._postings_pay is None:
-            self._postings_pay = _exploded(self.segments, _POS + _PAY)
+            self._postings_pay = _exploded(self.segments.coalesce(1),
+                                           _POS + _PAY)
         return self._postings_pay
 
     def postings_for_terms(self, term_frame: DataFrame,
@@ -559,7 +568,7 @@ class SegmentedIndex:
         (TermVectorsWriter.cs analogue; serves MoreLikeThis without a
         per-query posting-table scan)."""
         return (
-            self.postings_nopos.groupBy("doc_id", "field")
+            self.all_postings.groupBy("doc_id", "field")
             .agg(F.collect_list(F.struct("term", "tf")).alias("vec"))
         )
 
@@ -595,12 +604,12 @@ class SegmentedIndex:
         max_bucket_size): terms hotter than max_df keep their stats row
         but carry doc_ids = NULL instead of a row-sized array; pass
         max_df=None to opt out explicitly.  For bulk per-doc processing
-        prefer the postings_nopos view (stays relational)."""
+        prefer the all_postings view (stays relational)."""
         t = self.term_stats()
         if field is not None:
             t = t.where(F.col("field") == field)
         if include_docs:
-            p = self.postings_nopos
+            p = self.all_postings
             if field is not None:
                 p = p.where(F.col("field") == field)
             if max_df is not None:
@@ -629,7 +638,7 @@ class SegmentedIndex:
         if self.stored is not None:
             base = self.stored.select(F.col(self.id_col).alias("doc_id"))
         else:
-            base = self.postings_nopos.select("doc_id").distinct()
+            base = self.all_postings.select("doc_id").distinct()
         if doc_ids is not None:
             base = base.where(F.col("doc_id").isin(list(doc_ids)))
         tv = self.term_vectors()

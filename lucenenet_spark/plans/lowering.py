@@ -18,7 +18,8 @@ set-oriented:
                            MUST/SHOULD clause is a distinct Term the rows
                            come from ONE posting scan, tagged by
                            (field, term) IN (...); otherwise from the
-                           union of the clause frames.
+                           union of the clause frames; all in the scan's
+                           one task, no exchange.
 - PhraseQuery           -> positions-array alignment with higher-order
                            functions (array_intersect of offset-shifted
                            position lists) — all JVM-side; the idf sum
@@ -34,12 +35,37 @@ set-oriented:
                            expansion capped at 1024 clauses
                            (src/Lucene.Net/Search/MultiTermQuery.cs:79-118).
 - top-k                 -> orderBy(score desc, doc_id asc).limit(k) ==
-                           TakeOrderedAndProject (per-partition heaps +
-                           driver merge), tie-break identical to
+                           TakeOrderedAndProject: one heap in the query's
+                           one task (TopScoreDocCollector.cs:47-66),
+                           tie-break identical to
                            src/Lucene.Net/Search/HitQueue.cs:87-93.
 
 Scores are doubles rounded to SCORE_DECIMALS before ordering so rank order
 is reproducible across partitionings and engines (float-sum associativity).
+
+One stage per query.  The query views (SegmentedIndex.postings,
+postings_nopos, postings_payloads) coalesce the segment rows a query's
+(field, term) predicate selects into one partition, which satisfies
+every distribution the rest of the plan asks for: Term, Bool, Phrase,
+MultiPhrase, span leaves and the multi-term match sets each run as one
+Spark job of one task, with no exchange, on every index generation —
+IndexSearcher scoring on the calling thread into one top-k heap
+(IndexSearcher.cs:218-243).  Fuzzy keeps its candidate and broadcast
+jobs; reads of every posting list use SegmentedIndex.all_postings, one
+task per cached partition.  A very heavy query loses parallelism.
+Measured warm on 4 cores over the benchmark's synthetic corpus (about
+12k segment rows at every size, so posting lists grow with the files),
+two processes per side, parallel plan -> one task:
+
+  files    mean of class p50s, ms    phrase p50, ms
+  2,000    121, 115 -> 100, 93       166, 146 -> 131, 134
+  20,000   125, 129 -> 102, 107      193, 199 -> 161, 165
+  100,000  160, 168 -> 136, 136      292, 314 -> 272, 274
+  100,000  143, 143 -> 122, 121      268, 258 -> 263, 252  (10 rounds)
+
+and/or/prefix gain 20-30 % at every size and term holds; phrase, whose
+one task aligns the most positions, gains least and is at parity by
+100,000 files, so a heavier phrase query would run slower in one task.
 
 Plans are SQL text.  Each plan node of the query paths is one
 ``where(str)``, ``selectExpr(...)`` or ``F.expr(...)`` over SQL expression
@@ -330,7 +356,7 @@ class Searcher:
             )
         else:
             doc_terms = (
-                self.index.postings_nopos
+                self.index.all_postings
                 .where(f"field = {lit(field)} AND "
                        f"doc_id = {lit(int(doc_id))}")
                 .selectExpr("term", "tf").collect()
@@ -532,7 +558,7 @@ class Searcher:
         if stored is not None:
             ids = stored.select(F.col(self.index.id_col).alias("doc_id"))
         else:
-            ids = self.index.postings_nopos.selectExpr("doc_id").distinct()
+            ids = self.index.all_postings.selectExpr("doc_id").distinct()
         return ids.select("doc_id", F.lit(float(q.boost)).alias("score"))
 
     # ---- boolean composition: ONE groupBy(doc_id) over tagged clause rows

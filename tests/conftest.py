@@ -63,3 +63,29 @@ def check_saved_layout(spark):
             index.segments.select("field", "term", "seg_id").collect())
 
     return check
+
+
+@pytest.fixture
+def gateway_commands(spark, monkeypatch):
+    """count(fn) -> (py4j commands fn() sent, fn's result), counted by
+    wrapping the gateway client's send_command.  py4j's release of a
+    garbage-collected proxy (``m``/``d``) is not counted: it is sent
+    whenever Python's GC frees one, not by what fn builds."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn):
+        send, sent = client.send_command, []
+
+        def counting(command, *args, **kwargs):
+            if not command.startswith("m\nd\n"):
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", counting)
+        try:
+            out = fn()
+        finally:
+            monkeypatch.undo()
+        return len(sent), out
+
+    return count

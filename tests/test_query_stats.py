@@ -7,8 +7,11 @@ generated code holds no per-query number; the nodes that need df on the
 driver resolve it with one lookup over the cached term dictionary (the
 CachedDfSource analogue, MultiSearcher.cs:87-118), memoized per
 Searcher.  A Boolean query whose MUST/SHOULD clauses are all distinct
-Terms scores them in one posting scan.  These tests pin the Spark job,
-gateway round-trip and code-compile budgets of those plans, check that
+Terms scores them in one posting scan.  A query's matched segment rows
+meet in one partition, so it runs as one Spark stage of one task on
+any generation, while the reads of every posting list keep one task per
+cached partition.  These tests pin the Spark job, task, gateway
+round-trip and code-compile budgets of those plans, check that
 df is global across segments, generations and shards, check every edge
 of the fused and phrase paths against the OracleIndex, check that the
 read path runs no Python worker, and check that values inlined into the
@@ -107,21 +110,90 @@ CLASSES = [
 ]
 
 
-#: Spark jobs a query may run: the posting scan, plus the stage after
-#: the groupBy(doc_id) shuffle; no df-lookup job
-JOB_BUDGET = {"term": 1, "or4": 2, "and2": 2, "phrase2": 2, "prefix": 2}
+#: Spark jobs a query may run.  Every class scores in one stage: its
+#: matched segment rows are funneled into one partition, which satisfies
+#: the df window, groupBy(doc_id), distinct and the top-k without an
+#: exchange.  Fuzzy also runs its candidate top-1024 and the broadcast of
+#: the candidates it joins, each a job of its own.
+JOB_BUDGET = {"term": 1, "or4": 1, "and2": 1, "phrase2": 1, "prefix": 1,
+              "fuzzy": 3}
+
+BUDGETED = CLASSES + [("fuzzy", ast.Fuzzy("alpah", field="content"))]
 
 
-@pytest.mark.parametrize("name,q", CLASSES)
-def test_jobs_per_query(spark, index, name, q):
-    """df comes with the scanned segment rows, so a fresh query runs no
-    df-lookup job: a term query takes 1 Spark job, the others at most 2,
-    and the same query again on the same Searcher costs the same."""
-    s = Searcher(index)
-    first = jobs_of(spark, lambda: s.search(q, 10).collect(), f"qs-{name}-1")
-    again = jobs_of(spark, lambda: s.search(q, 10).collect(), f"qs-{name}-2")
+def stages_of(spark, fn, group) -> tuple[int, list[int]]:
+    """(Spark jobs, tasks run per stage in submission order) of fn(), by
+    job group; a stage skipped because its shuffle output was reused runs
+    no task."""
+    sc = spark.sparkContext
+    jobs = jobs_of(spark, fn, group)
+    st = sc.statusTracker()
+    tasks = [st.getStageInfo(sid).numCompletedTasks
+             for j in sorted(st.getJobIdsForGroup(group))
+             for sid in sorted(st.getJobInfo(j).stageIds)]
+    return jobs, [n for n in tasks if n]
+
+
+def assert_one_stage(spark, searcher, name, q, group):
+    """A fresh query runs JOB_BUDGET[name] jobs, one task each for the
+    one-stage classes, and the same query again on the same Searcher
+    costs the same."""
+    first, tasks = stages_of(
+        spark, lambda: searcher.search(q, 10).collect(), f"{group}-1")
+    again, _ = stages_of(
+        spark, lambda: searcher.search(q, 10).collect(), f"{group}-2")
     assert 1 <= first <= JOB_BUDGET[name], (name, first)
     assert again == first, (name, first, again)
+    if JOB_BUDGET[name] == 1:
+        assert tasks == [1], (name, tasks)
+
+
+@pytest.mark.parametrize("name,q", BUDGETED)
+def test_jobs_per_query(spark, index, name, q):
+    """df comes with the scanned segment rows and the matched rows meet
+    in one partition, so a fresh query runs one Spark job of one task:
+    no df-lookup job, and no second job after a groupBy(doc_id) or
+    distinct exchange."""
+    assert_one_stage(spark, Searcher(index), name, q, f"qs-{name}")
+
+
+@pytest.fixture(scope="module")
+def loaded(spark, tmp_path_factory):
+    """The shared index saved and loaded back: its rows are
+    range-partitioned by (field, term) into term-range files, not
+    hash-partitioned as merge_wave leaves them."""
+    from lucenenet_spark.index.segments import SegmentedIndex
+
+    path = str(tmp_path_factory.mktemp("qs") / "index")
+    build(spark).save(path)
+    idx = SegmentedIndex.load(spark, path).cache()
+    idx.term_stats().count()
+    return idx
+
+
+@pytest.fixture(scope="module")
+def added(spark):
+    """Two halves of DOCS built apart and joined by add_indexes: the
+    segment rows are a union of two cached generations."""
+    from lucenenet_spark.index.segments import add_indexes
+
+    docs = docs_frame(spark)
+    return add_indexes(build(spark, docs.where(f"doc_id < {len(DOCS) // 2}")),
+                       build(spark, docs.where(f"doc_id >= {len(DOCS) // 2}")))
+
+
+@pytest.mark.parametrize("gen", ["loaded", "added"])
+@pytest.mark.parametrize("name,q", BUDGETED, ids=[n for n, _ in BUDGETED])
+def test_jobs_per_query_on_derived_generations(spark, oracle, request, gen,
+                                               name, q):
+    """A loaded or add_indexes generation is not hash-partitioned by
+    (field, term), and the one-partition funnel needs no exchange for the
+    df window either: the same one-job budget as a built generation, and
+    the same answers as the OracleIndex."""
+    idx = request.getfixturevalue(gen)
+    s = Searcher(idx)
+    assert top(s, q) == oracle.top_k(q, 20), (gen, name)
+    assert_one_stage(spark, s, name, q, f"qs-{gen}-{name}")
 
 
 #: py4j commands Searcher.search may send while it builds one plan.  The
@@ -131,15 +203,8 @@ def test_jobs_per_query(spark, index, name, q):
 ROUND_TRIP_CEILING = 150
 
 
-def _is_memory_delete(command: str) -> bool:
-    """py4j's release of a garbage-collected proxy (``m``/``d``): sent
-    whenever Python's GC frees one, not by the plan being built."""
-    return command.startswith("m\nd\n")
-
-
 @pytest.mark.parametrize("name,q", CLASSES, ids=[n for n, _ in CLASSES])
-def test_plan_round_trip_budget(spark, index, oracle, monkeypatch, name,
-                                q):
+def test_plan_round_trip_budget(index, oracle, gateway_commands, name, q):
     """With the df memo and the index's posting views warm, building the
     plan costs a bounded number of gateway round trips, whatever the
     query class, and the plan answers like the OracleIndex.  Proxy
@@ -148,18 +213,8 @@ def test_plan_round_trip_budget(spark, index, oracle, monkeypatch, name,
     s = Searcher(index)
     s.term_dfs(ast.driver_df_leaves(ast.rewrite(q)))
     _ = index.postings, index.postings_nopos  # built once per index
-    client = spark.sparkContext._gateway._gateway_client
-    send, sent = client.send_command, []
-
-    def counting(command, *args, **kwargs):
-        if not _is_memory_delete(command):
-            sent.append(command)
-        return send(command, *args, **kwargs)
-
-    monkeypatch.setattr(client, "send_command", counting)
-    hits = s.search(q, 10)
-    monkeypatch.undo()
-    assert len(sent) <= ROUND_TRIP_CEILING, (name, len(sent))
+    sent, hits = gateway_commands(lambda: s.search(q, 10))
+    assert sent <= ROUND_TRIP_CEILING, (name, sent)
     assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
         == oracle.top_k(q, 10)
 
@@ -276,9 +331,9 @@ def test_read_path_runs_no_python(index, oracle, name, q):
 
 def assert_df_window_on_cache_scan(hits):
     """The executed plan reads term_df from a Window over the cached
-    segment rows with no Exchange in between (merge_wave's output is
-    hash-partitioned by (field, term)), and the (field, term) Filter sits
-    below that Window."""
+    segment rows with no Exchange in between (the rows are funneled into
+    one partition, whatever the generation's partitioning), and the
+    (field, term) Filter sits below that Window."""
     windows = [n for n in _plan_nodes(
         hits._jdf.queryExecution().executedPlan())
         if n.nodeName() == "Window"]
@@ -292,6 +347,77 @@ def assert_df_window_on_cache_scan(hits):
                    and "term#" in n.simpleString(1000)
                    and "field#" in n.simpleString(1000)
                    for n in below), names
+
+
+#: the classes that read term_df (prefix does not: no window)
+WINDOWED = [(n, q) for n, q in CLASSES if n != "prefix"]
+
+
+@pytest.mark.parametrize("name,q", WINDOWED, ids=[n for n, _ in WINDOWED])
+def test_df_window_on_loaded_generation(loaded, oracle, name, q):
+    """A loaded generation is range-partitioned by its term-range files,
+    so a Window clustered by (field, term) would add an Exchange over
+    it; the funnel leaves none, and df is still the global df."""
+    hits = Searcher(loaded).search(q, 20)
+    assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
+        == oracle.top_k(q, 20), name
+    assert_df_window_on_cache_scan(hits)
+
+
+# ------------------------------------ whole-index reads stay parallel
+
+#: the reads that expand every posting list: name -> frame builder
+WHOLE_INDEX_READS = {
+    "term_vectors": lambda idx: idx.term_vectors(),
+    "enumerate_terms": lambda idx: idx.enumerate_terms(
+        field="content", include_docs=True),
+    "term_vector_enumerator": lambda idx: idx.term_vector_enumerator(),
+    # reads the source document's terms when called, then plans the
+    # (funneled) query over them
+    "more_like_this": lambda idx: Searcher(idx).more_like_this(
+        4, max_terms=3, k=10, field="content", term_vectors=None),
+}
+
+
+@pytest.mark.parametrize("name", list(WHOLE_INDEX_READS))
+def test_whole_index_reads_stay_parallel(spark, index, oracle, name):
+    """The reads that expand every posting list are not funneled: their
+    plan holds no single-partition Coalesce, the posting scan runs one
+    task per core (the built generation's cached partitions; for
+    more_like_this, its first job, the read of the source document's
+    terms), and the results equal the OracleIndex's."""
+    read = WHOLE_INDEX_READS[name]
+    if name != "more_like_this":
+        names = [n.nodeName() for n in _plan_nodes(
+            read(index)._jdf.queryExecution().executedPlan())]
+        assert "InMemoryTableScan" in names, names
+        assert not [n for n in names if "Coalesce" in n], names
+    got = {}
+    _, tasks = stages_of(spark, lambda: got.update(rows=read(index).collect()),
+                         f"qs-whole-{name}")
+    cores = spark.sparkContext.defaultParallelism
+    assert max(tasks) == cores, tasks
+    rows = got["rows"]
+    vec = {(d, f): sorted((t, p[d]) for t, p in oracle.post[f].items()
+                          if d in p)
+           for d in range(len(DOCS)) for f in ("content", "source")}
+    if name == "enumerate_terms":
+        assert {r["term"]: (r["df"], sorted(r["doc_ids"])) for r in rows} \
+            == {t: (len(p), sorted(p))
+                for t, p in oracle.post["content"].items()}
+    elif name == "more_like_this":
+        assert tasks[0] == cores, tasks
+        src = [t for t, _ in sorted(
+            ((t, tf * oracle.idf("content", t))
+             for t, tf in vec[(4, "content")]),
+            key=lambda x: (-x[1], x[0]))[:3]]
+        q = ast.Bool(should=tuple(T(t) for t in src))
+        assert [(r["doc_id"], r["score"]) for r in rows] \
+            == [(d, v) for d, v in oracle.top_k(q, 20) if d != 4][:10]
+    else:  # term vectors, per (doc, field)
+        assert {(r["doc_id"], r["field"]):
+                sorted((v["term"], v["tf"]) for v in r["vec"])
+                for r in rows} == vec
 
 
 def _fill_nodes(node, filled):
@@ -431,11 +557,11 @@ def test_absent_required_term_finds_nothing(spark, index, oracle, q):
     """A phrase or MUST term absent from the index is not short-cut on
     the driver (that would need its df first): the scan runs, finds no
     document holding every required term and returns nothing, like the
-    OracleIndex, in at most 2 Spark jobs."""
+    OracleIndex, in one Spark job."""
     s = Searcher(index)
     assert oracle.top_k(q, 10) == []
     assert jobs_of(spark, lambda: s.search(q, 10).collect(),
-                   f"qs-absent-{type(q).__name__}") <= 2
+                   f"qs-absent-{type(q).__name__}") == 1
     assert top(s, q, 10) == []
 
 

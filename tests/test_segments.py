@@ -172,6 +172,30 @@ def _run_merge(spark, rows, fan_in=8):
             for r in merge_wave(seg, fan_in=fan_in).collect()}
 
 
+#: py4j commands merge_wave may send while it builds its plan.  The plan
+#: is SQL text: about 80.  Built from Column operators it took about 400.
+MERGE_ROUND_TRIP_CEILING = 150
+
+
+def test_merge_wave_round_trip_budget(spark, gateway_commands):
+    """Building a merge wave's plan costs a bounded number of gateway
+    round trips, and the wave merges as before: a disjoint pair
+    concatenates, an overlapping pair interleaves by doc."""
+    from lucenenet_spark.index.segments import SEGMENT_SCHEMA, merge_wave
+
+    rows = [_seg_row("t", 0, [1, 2], [1, 1], [3, 3]),
+            _seg_row("t", 1, [5, 9], [2, 1], [4, 4]),
+            _seg_row("u", 0, [1, 7], [1, 2], [3, 5]),
+            _seg_row("u", 1, [4, 8], [1, 1], [4, 6])]
+    seg = spark.createDataFrame(rows, SEGMENT_SCHEMA)
+    sent, merged = gateway_commands(lambda: merge_wave(seg, fan_in=8))
+    assert sent <= MERGE_ROUND_TRIP_CEILING, sent
+    got = {r["term"]: (r["seg_id"], r["df"], r["ttf"], r["docs"], r["tfs"])
+           for r in merged.collect()}
+    assert got == {"t": (0, 4, 5, [1, 2, 5, 9], [1, 1, 2, 1]),
+                   "u": (0, 4, 5, [1, 4, 7, 8], [1, 1, 2, 1])}
+
+
 def _by_doc(rows):
     """Reference merge: every part's postings re-sorted by doc."""
     post = sorted((d, t, l, None if r["pos"] is None else r["pos"][i])
