@@ -27,8 +27,8 @@ BrazilianStemFilter.
 
 from __future__ import annotations
 
-from .tokenizers import MAX_TOKEN_LENGTH, _std_transform
-from .intl import INTL_TOKEN_RE
+from .intl import intl_tokens
+from .tokenizers import Analyzer, guarded_stem, standard_analyzer
 
 # BRAZILIAN_STOP_WORDS (BrazilianAnalyzer.cs:54-77), transcribed
 # verbatim (the source lists "nas"/"pelas" twice; set semantics).
@@ -293,18 +293,5 @@ def brazilian_analyzer(stopwords: frozenset[str] = BRAZILIAN_STOP_WORDS,
     """StandardTokenizer -> LowerCase -> StandardFilter ->
     Stop (holes) -> BrazilianStemFilter
     (BrazilianAnalyzer.cs TokenStream)."""
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            if tok not in exclusions:
-                s = brazilian_stem(tok)
-                if s is not None and s != tok:
-                    tok = s
-            out.append((tok, pos))
-        return out
-    return analyze
+    return Analyzer(intl_tokens, standard_analyzer(
+        stopwords, guarded_stem(brazilian_stem, exclusions)).term)

@@ -27,8 +27,8 @@ reference's case-sensitive stop set would keep them.
 
 from __future__ import annotations
 
-from .tokenizers import MAX_TOKEN_LENGTH, _std_transform
-from .intl import INTL_TOKEN_RE
+from .intl import intl_tokens
+from .tokenizers import Analyzer, guarded_stem, standard_analyzer
 
 # DUTCH_STOP_WORDS (DutchAnalyzer.cs:58-70), transcribed verbatim.
 DUTCH_STOP_WORDS: frozenset[str] = frozenset("""
@@ -254,18 +254,5 @@ def dutch_analyzer(stopwords: frozenset[str] = DUTCH_STOP_WORDS,
     if stem_dict is None:
         stem_dict = DEFAULT_STEM_DICT
 
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            if tok not in exclusions:
-                s = dutch_stem(tok, stem_dict)
-                if s is not None and s != tok:
-                    tok = s
-            out.append((tok, pos))
-        return out
-    return analyze
+    stem = guarded_stem(lambda tok: dutch_stem(tok, stem_dict), exclusions)
+    return Analyzer(intl_tokens, standard_analyzer(stopwords, stem).term)

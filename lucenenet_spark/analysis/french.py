@@ -29,8 +29,8 @@ reference.
 
 from __future__ import annotations
 
-from .tokenizers import MAX_TOKEN_LENGTH, _std_transform
-from .intl import INTL_TOKEN_RE
+from .intl import intl_tokens
+from .tokenizers import Analyzer, guarded_stem, standard_analyzer
 
 # FRENCH_STOP_WORDS (FrenchAnalyzer.cs:50-77), transcribed verbatim.
 FRENCH_STOP_WORDS: frozenset[str] = frozenset("""
@@ -404,20 +404,10 @@ def french_analyzer(stopwords: frozenset[str] = FRENCH_STOP_WORDS,
     The engine lowercases before tokenizing (shared contract); the
     reference lowercases LAST, so only ALL-CAPS inputs (unstemmable
     there, stemmed here) and upper-case stopword forms differ."""
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            if tok not in exclusions:
-                s = french_stem(tok)
-                if s is not None and s != tok:
-                    tok = s
-            # trailing LowerCaseFilter folds the U/I/Y treat-vowel
-            # markers the stemmer may leave (e.g. "abdiqU" -> "abdiqu")
-            out.append((tok.lower(), pos))
-        return out
-    return analyze
+    stem = guarded_stem(french_stem, exclusions)
+
+    def lowered(tok: str) -> str:
+        # trailing LowerCaseFilter folds the U/I/Y treat-vowel markers
+        # the stemmer may leave (e.g. "abdiqU" -> "abdiqu")
+        return stem(tok).lower()
+    return Analyzer(intl_tokens, standard_analyzer(stopwords, lowered).term)

@@ -172,19 +172,8 @@ def german_legacy_analyzer(din2: bool = False,
     (GERMAN_ANALYZER_STOP_WORDS) -> GermanStemFilter (exclusion set
     passes through unstemmed)."""
     from .tokenizers import (
-        MAX_TOKEN_LENGTH, STANDARD_TOKEN_RE, _std_transform)
-
-    def analyze(text):
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH \
-                    or tok in GERMAN_ANALYZER_STOP_WORDS:
-                continue
-            if tok not in exclusions:
-                tok = german_legacy_stem(tok, din2=din2)
-            out.append((tok, pos))
-        return out
-    return analyze
+        Analyzer, _standard_tokens, guarded_stem, standard_analyzer)
+    stem = guarded_stem(german_din2_stem if din2 else german_legacy_stem,
+                        exclusions)
+    return Analyzer(_standard_tokens, standard_analyzer(
+        GERMAN_ANALYZER_STOP_WORDS, stem).term)

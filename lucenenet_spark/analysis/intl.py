@@ -27,9 +27,13 @@ mixed ASCII/non-ASCII tokens that the JFlex longest-match would join
 through an EMAIL/NUM class may segment differently; no such token class
 carries non-ASCII letters in the reference grammar either.
 
-All chains keep StopFilter position holes (positions assigned over the
-raw token stream) exactly like tokenizers.tokenize_standard, and apply
-the 255-char max token length of the shared analysis contract.
+Each of the five chains is a tokenizers.Analyzer (tokenizer + term
+chain), so it keeps StopFilter position holes (positions assigned over
+the raw token stream) exactly like tokenizers.tokenize_standard, applies
+the 255-char max token length of the shared analysis contract, and
+builds through the invert kernel's vocabulary routine.  The Thai chain
+below splits one raw token into several words, so it stays a plain
+text -> [(term, pos)] callable.
 
 Every public analyzer here is mirrored by a DuckDB SQL generator in
 oracle/sqlgen.py (russian_term_query / greek_term_query /
@@ -42,7 +46,8 @@ from __future__ import annotations
 import unicodedata
 
 from .tokenizers import (
-    MAX_TOKEN_LENGTH, STANDARD_ALTERNATION, _std_transform)
+    MAX_TOKEN_LENGTH, STANDARD_ALTERNATION, Analyzer, _std_transform,
+    standard_analyzer)
 
 import re
 
@@ -60,6 +65,12 @@ assert STANDARD_ALTERNATION.endswith("|[a-z0-9]+")
 INTL_TOKEN_RE = re.compile(
     r"[a-z0-9]*[^\W\d_a-z][^\W_]*|"
     + STANDARD_ALTERNATION[: -len("[a-z0-9]+")] + r"[^\W_]+")
+
+
+def intl_tokens(text: str) -> list[str]:
+    """The Unicode StandardTokenizer over the lowercased text: the raw
+    tokens of the Czech, French, Dutch and Brazilian chains."""
+    return INTL_TOKEN_RE.findall(text.lower())
 
 
 # ================================================================ Greek
@@ -136,16 +147,11 @@ def greek_analyzer(stopwords: frozenset[str] = GREEK_STOP_WORDS):
     runs as a length-preserving pre-pass (all mappings are
     letter->letter, so token boundaries are unchanged).
     """
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(greek_lower(text))):
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            out.append((tok, pos))
-        return out
-    return analyze
+    def term(tok: str) -> str | None:
+        return (None if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords
+                else tok)
+    return Analyzer(lambda text: INTL_TOKEN_RE.findall(greek_lower(text)),
+                    term)
 
 
 # ================================================================ Czech
@@ -181,17 +187,7 @@ def czech_analyzer(stopwords: frozenset[str] = CZECH_STOP_WORDS):
     ASCII corpus it tokenizes bit-identically to tokenize_standard, so
     the sqlgen.base_ctes SQL mirror applies with the stop set swapped.
     """
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            out.append((tok, pos))
-        return out
-    return analyze
+    return Analyzer(intl_tokens, standard_analyzer(stopwords).term)
 
 
 # =============================================================== Arabic
@@ -347,19 +343,12 @@ def arabic_analyzer(stopwords: frozenset[str] = ARABIC_STOP_WORDS):
     normalization (pure harakat/tatweel runs) is dropped rather than
     emitted as a zero-length term; the oracle SQL applies the same rule.
     """
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(_letter_or_mark_tokens(text)):
-            tok = tok.lower()
-            if tok in stopwords:
-                continue
-            tok = arabic_stem(arabic_normalize(tok))
-            if tok:
-                out.append((tok, pos))
-        return out
-    return analyze
+    def term(tok: str) -> str | None:
+        tok = tok.lower()
+        if tok in stopwords:
+            return None
+        return arabic_stem(arabic_normalize(tok)) or None
+    return Analyzer(_letter_or_mark_tokens, term)
 
 
 def persian_analyzer(stopwords: frozenset[str] = frozenset()):
@@ -371,17 +360,10 @@ def persian_analyzer(stopwords: frozenset[str] = frozenset()):
     caller-supplied (already-normalized forms, as the reference
     normalizes the list it loads).
     """
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(_letter_or_mark_tokens(text)):
-            tok = persian_normalize(arabic_normalize(tok.lower()))
-            if not tok or tok in stopwords:
-                continue
-            out.append((tok, pos))
-        return out
-    return analyze
+    def term(tok: str) -> str | None:
+        tok = persian_normalize(arabic_normalize(tok.lower()))
+        return None if not tok or tok in stopwords else tok
+    return Analyzer(_letter_or_mark_tokens, term)
 
 
 # =============================================================== Russian
@@ -585,16 +567,10 @@ def russian_stem(word: str) -> str:
 def russian_analyzer(stopwords: frozenset[str] = RUSSIAN_STOP_WORDS):
     """RussianLetterTokenizer (letters + ASCII digits) -> LowerCase ->
     Stop (holes) -> RussianStemFilter (RussianAnalyzer.cs:136-144)."""
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(_RU_LETTER_RE.findall(text.lower())):
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            out.append((russian_stem(tok), pos))
-        return out
-    return analyze
+    def term(tok: str) -> str | None:
+        return (None if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords
+                else russian_stem(tok))
+    return Analyzer(lambda text: _RU_LETTER_RE.findall(text.lower()), term)
 
 
 # ================================================================== Thai

@@ -36,15 +36,22 @@ import re
 
 from pyspark.sql import functions as F
 
-from .tokenizers import ENGLISH_STOP_WORDS, MAX_TOKEN_LENGTH, tokenize_standard
+from .tokenizers import (
+    ENGLISH_STOP_WORDS, MAX_TOKEN_LENGTH, STANDARD, Analyzer, _keep,
+    _standard_tokens, standard_analyzer)
 
 DEFAULT_MAX_DOC_FREQ_PERCENT = 0.4  # QueryAutoStopWordAnalyzer.cs:19
 
 
 # ---- ReverseStringFilter + leading-wildcard acceleration ----
 
-def reverse_tokens(text: str | None) -> list[tuple[str, int]]:
-    return [(t[::-1], p) for t, p in tokenize_standard(text)]
+def _reversed_term(tok: str) -> str | None:
+    t = STANDARD.term(tok)
+    return None if t is None else t[::-1]
+
+
+#: the standard chain with every term reversed
+reverse_tokens = Analyzer(_standard_tokens, _reversed_term)
 
 
 def reverse_analyzer():
@@ -67,31 +74,26 @@ def leading_wildcard_query(pattern: str, reversed_field: str):
 
 # ---- PatternAnalyzer ----
 
+def pattern_analyzer(pattern: str = r"\W+", lowercase: bool = True,
+                     stopwords: set[str] | None = ENGLISH_STOP_WORDS):
+    """The pattern splits the (optionally lowercased) text; empty
+    splits take no position, removed tokens leave holes."""
+    split = re.compile(pattern).split
+    stop = stopwords or frozenset()
+
+    def tokens(text: str) -> list[str]:
+        return [t for t in split(text.lower() if lowercase else text) if t]
+
+    def term(tok: str) -> str | None:
+        return None if len(tok) > MAX_TOKEN_LENGTH or tok in stop else tok
+    return Analyzer(tokens, term)
+
+
 def pattern_tokens(text: str | None, pattern: str = r"\W+",
                    lowercase: bool = True,
                    stopwords: set[str] | None = ENGLISH_STOP_WORDS
                    ) -> list[tuple[str, int]]:
-    if not text:
-        return []
-    if lowercase:
-        text = text.lower()
-    out: list[tuple[str, int]] = []
-    pos = 0
-    for tok in re.split(pattern, text):
-        if not tok:
-            continue
-        if len(tok) <= MAX_TOKEN_LENGTH and (
-                not stopwords or tok not in stopwords):
-            out.append((tok, pos))
-        pos += 1  # removed tokens leave holes, like StopFilter
-    return out
-
-
-def pattern_analyzer(pattern: str = r"\W+", lowercase: bool = True,
-                     stopwords: set[str] | None = ENGLISH_STOP_WORDS):
-    def analyze(text):
-        return pattern_tokens(text, pattern, lowercase, stopwords)
-    return analyze
+    return pattern_analyzer(pattern, lowercase, stopwords)(text)
 
 
 # ---- PositionFilter ----
@@ -124,33 +126,25 @@ def auto_stopwords(index, field: str = "text",
 
 def auto_stop_analyzer(stop_terms: set[str]):
     """Standard chain minus the derived stop set (holes preserved)."""
-    def analyze(text):
-        return [(t, p) for t, p in tokenize_standard(text)
-                if t not in stop_terms]
-    return analyze
+    return standard_analyzer(ENGLISH_STOP_WORDS | frozenset(stop_terms))
 
 
 # ---- contrib/Core Analysis.Ext (src/contrib/Core/Analysis/Ext/
 # Analysis.Ext.cs) --------------------------------------------------
 
-def letter_or_digit_tokens(text: str | None) -> list[tuple[str, int]]:
-    """LetterOrDigitTokenizer: maximal runs of char.IsLetterOrDigit
-    (Unicode letters + digits), one position each."""
-    if text is None:
-        return []
-    return [(m.group(0), pos) for pos, m in
-            enumerate(re.finditer(r"[^\W_]+", text))]
+_LETTER_OR_DIGIT_RE = re.compile(r"[^\W_]+")
+
+#: LetterOrDigitTokenizer: maximal runs of char.IsLetterOrDigit
+#: (Unicode letters + digits), one position each
+letter_or_digit_tokens = Analyzer(_LETTER_OR_DIGIT_RE.findall, _keep)
 
 
 def unaccented_word_analyzer():
     """UnaccentedWordAnalyzer: LetterOrDigitTokenizer -> LowerCase ->
     ASCIIFoldingFilter — accent-insensitive whole-word terms."""
     from .folding import fold_ascii_py
-
-    def analyze(text: str) -> list[tuple[str, int]]:
-        return [(fold_ascii_py(t.lower()), p)
-                for t, p in letter_or_digit_tokens(text)]
-    return analyze
+    return Analyzer(_LETTER_OR_DIGIT_RE.findall,
+                    lambda tok: fold_ascii_py(tok.lower()))
 
 
 def single_char_token_analyzer():

@@ -14,6 +14,15 @@ implementations agree token-for-token:
      (analysis/exprs.py)
   3. DuckDB SQL fragments (oracle/sqlgen.py) -- driver correctness gate
 
+One chain type: every analysis chain that emits one term (or a dropped
+token's hole) per raw token is an `Analyzer` — a tokenizer plus a pure
+raw-token -> term function.  That covers the chains here, the Snowball
+and Lovins chains, the contrib language chains (german, french, dutch,
+brazilian, intl) and the reverse/pattern/auto-stop/unaccented chains of
+misc.  Only chains that emit something else (shingles, n-grams,
+synonyms, compounds, CJK, Thai, single chars, hunspell, payloads, char
+filter mappings) stay plain text -> [(term, pos)] callables.
+
 Semantics (the spec):
 - standard analyzer: lowercase the text, tokens = maximal runs of [a-z0-9],
   positions assigned over ALL tokens (0-based), then drop tokens longer than
@@ -110,15 +119,9 @@ def _std_transform(tok: str) -> str:
 # ---- surface tokens: the simple [a-z0-9]+ spec, used by the DEDUP and
 # TEXTSTATS operators (they analyze surface text, not index terms) and
 # mirrored by oracle/sqlgen._raw_tok_cte.
-SURFACE_TOKEN_RE = re.compile(r"[a-z0-9]+")
 SURFACE_SPLIT_PATTERN = "[^a-z0-9]+"         # for Spark F.split(lower(x), ...)
-SURFACE_EXTRACT_PATTERN = "[a-z0-9]+"        # for duckdb regexp_extract_all
-# Back-compat aliases (pre-round-3 names)
-STANDARD_SPLIT_PATTERN = SURFACE_SPLIT_PATTERN
-STANDARD_EXTRACT_PATTERN = SURFACE_EXTRACT_PATTERN
 
-# Code identifiers, then camel/snake/digit sub-splitting.
-CODE_IDENT_RE = re.compile(r"[A-Za-z0-9_]+")
+# Code camel/snake/digit sub-tokens (see tokenize_code).
 CODE_SUBTOKEN_RE = re.compile(r"[A-Z]+(?![a-z])|[A-Z][a-z0-9]*|[a-z0-9]+")
 
 # Languages routed to the code analyzer (PerFieldAnalyzerWrapper analogue,
@@ -246,31 +249,35 @@ def tokenize_code(text: str) -> list[tuple[str, int]]:
     return CODE(text)
 
 
-_WS_RE = re.compile(r"\S+")
+def _keep(tok: str) -> str:
+    return tok
+
+
 _LETTER_RE = re.compile(r"[^\W\d_]+", re.UNICODE)
 
-
-def tokenize_whitespace(text: str) -> list[tuple[str, int]]:
-    """WhitespaceTokenizer (src/Lucene.Net/Analysis/WhitespaceTokenizer.cs):
-    maximal non-whitespace runs, case preserved, no filtering."""
-    if text is None:
-        return []
-    return [(t, i) for i, t in enumerate(_WS_RE.findall(text))]
-
-
-def tokenize_letter(text: str) -> list[tuple[str, int]]:
-    """LetterTokenizer (CharTokenizer on IsLetter,
-    src/Lucene.Net/Analysis/LetterTokenizer.cs): maximal letter runs,
-    case preserved."""
-    if text is None:
-        return []
-    return [(t, i) for i, t in enumerate(_LETTER_RE.findall(text))]
+#: WhitespaceTokenizer (src/Lucene.Net/Analysis/WhitespaceTokenizer.cs):
+#: maximal non-whitespace runs, case preserved, no filtering
+tokenize_whitespace = Analyzer(re.compile(r"\S+").findall, _keep)
+#: LetterTokenizer (CharTokenizer on IsLetter,
+#: src/Lucene.Net/Analysis/LetterTokenizer.cs): maximal letter runs,
+#: case preserved
+tokenize_letter = Analyzer(_LETTER_RE.findall, _keep)
+#: LowerCaseTokenizer = LetterTokenizer + LowerCaseFilter
+#: (src/Lucene.Net/Analysis/LowerCaseTokenizer.cs)
+tokenize_lowercase = Analyzer(_LETTER_RE.findall, str.lower)
 
 
-def tokenize_lowercase(text: str) -> list[tuple[str, int]]:
-    """LowerCaseTokenizer = LetterTokenizer + LowerCaseFilter
-    (src/Lucene.Net/Analysis/LowerCaseTokenizer.cs)."""
-    return [(t.lower(), p) for t, p in tokenize_letter(text)]
+def guarded_stem(stem: Callable[[str], str | None],
+                 exclusions: frozenset[str]) -> Callable[[str], str]:
+    """The stem filter of the contrib language chains: a token in
+    `exclusions` passes unstemmed, and so does one the stemmer declines
+    (returns None for)."""
+    def run(tok: str) -> str:
+        if tok in exclusions:
+            return tok
+        s = stem(tok)
+        return tok if s is None else s
+    return run
 
 
 def analyzer_for(lang: str | None) -> Analyzer:

@@ -178,10 +178,6 @@ _mark_ysA = _mk(TR_YSA, harmony=False, opt="y")
 _mark_ymUs = _mk(TR_YMUS, opt="y")
 
 
-def _mark_ki(w, p):
-    return p - 2 if w[:p].endswith("ki") else None
-
-
 def _mark_yken(w, p):
     if w[:p].endswith("ken"):
         return _opt_cons(w, p - 3, "y")

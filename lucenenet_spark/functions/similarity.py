@@ -36,11 +36,8 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
 from . import bm25
+from .smallfloat import NORM_STEPS
 from .sqltext import lit
 
 
@@ -76,10 +73,6 @@ class BM25Similarity:
                 f"{bm25.tf_norm_sql(freq, dl, avgdl)})")
 
 
-#: session function name of the quantized-norm kernel
-_QNORM = "_ft_quantize_norm"
-
-
 class ClassicSimilarity:
     """Reference TF-IDF (DefaultSimilarity.cs), per-term score
     idf^2 * sqrt(tf) * 1/sqrt(dl) * boost.
@@ -98,16 +91,12 @@ class ClassicSimilarity:
     def _norm(self, dl: str) -> str:
         if not self.quantize_norms:
             return f"({lit(1.0)} / sqrt(CAST({dl} AS DOUBLE)))"
-        # Arrow-batched kernel — only in the opt-in parity mode, called
-        # from the SQL text by its session function name
-        @F.pandas_udf("double")
-        def qnorm(dl: pd.Series) -> pd.Series:
-            from .smallfloat import quantize_norm_np
-            return pd.Series(
-                quantize_norm_np(dl.to_numpy()).astype("float64"))
-
-        SparkSession.active().udf.register(_QNORM, qnorm)
-        return f"{_QNORM}({dl})"
+        # the quantized norm is a step function of the int dl: pick its
+        # step by counting the thresholds at or below dl
+        thresholds, values = NORM_STEPS
+        return (f"element_at(array({', '.join(map(lit, values))}), "
+                f"size(filter(array({', '.join(map(lit, thresholds))}), "
+                f"step -> step <= {dl})) + 1)")
 
     def idf(self, df: int, n: int) -> float:
         return math.log(n / (df + 1.0)) + 1.0

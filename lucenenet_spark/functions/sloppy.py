@@ -26,10 +26,6 @@ doc comments.
 
 from __future__ import annotations
 
-SLOP_LUCENE = "lucene"
-SLOP_ALL_TUPLES = "all_tuples"
-
-
 class _PP:
     """PhrasePositions: one normalized position stream (PhrasePositions.cs).
 

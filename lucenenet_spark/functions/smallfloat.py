@@ -10,18 +10,16 @@ small round UP to the smallest positive representable value, zero and
 negatives encode to 0 (SmallFloat.cs underflow branch: ``bits <= 0 ->
 0 else 1``).
 
-Scalar forms for query-time math and goldens; numpy vector forms for
-the Arrow-batched scoring kernel (norm quantization is the one piece of
-ClassicSimilarity that genuinely needs float bit-twiddling, which Spark
-SQL has no builtin for — the kernel runs only when the opt-in
-``quantize_norms`` parity mode is on).
+The scalar forms are the reference.  ClassicSimilarity's opt-in
+``quantize_norms`` parity mode scores with NORM_STEPS, the quantized
+norm of an integer doc length tabulated once from them, so its SQL text
+is a literal lookup and runs no Python worker.
 """
 
 from __future__ import annotations
 
+import math
 import struct
-
-import numpy as np
 
 _FZERO_315 = (63 - 15) << 3
 
@@ -52,28 +50,35 @@ NORM_TABLE: tuple[float, ...] = tuple(byte315_to_float(b)
                                       for b in range(256))
 
 
-def float_to_byte315_np(f: np.ndarray) -> np.ndarray:
-    """Vectorized FloatToByte315 over a float32 array."""
-    bits = np.ascontiguousarray(f, dtype=np.float32).view(np.int32)
-    smallfloat = bits >> (24 - 3)
-    out = (smallfloat - _FZERO_315).astype(np.int32)
-    out = np.where(smallfloat >= _FZERO_315 + 0x100, 255, out)
-    under = smallfloat <= _FZERO_315
-    out = np.where(under & (bits <= 0), 0, np.where(under, 1, out))
-    return out.astype(np.uint8)
-
-
-def byte315_to_float_np(b: np.ndarray) -> np.ndarray:
-    """Vectorized Byte315ToFloat (the NORM_TABLE lookup)."""
-    table = np.array(NORM_TABLE, dtype=np.float32)
-    return table[np.asarray(b, dtype=np.uint8)]
-
-
-def quantize_norm_np(dl: np.ndarray) -> np.ndarray:
+def quantized_norm(dl: int) -> float:
     """EncodeNorm(LengthNorm(dl)) decoded back — the lossy
     1/sqrt(dl) -> byte -> float round-trip every classic-similarity
     score in the reference actually uses (DefaultSimilarity.cs:53 +
     Similarity.cs:502-504 + TermScorer's norm_decoder lookup)."""
-    norms = (1.0 / np.sqrt(np.asarray(dl, dtype=np.float64))).astype(
-        np.float32)
-    return byte315_to_float_np(float_to_byte315_np(norms))
+    return byte315_to_float(float_to_byte315(1.0 / math.sqrt(dl)))
+
+
+def _norm_steps() -> tuple[tuple[int, ...], tuple[float, ...]]:
+    """quantized_norm over dl in [1, 2^31 - 1] as a step function:
+    (thresholds, values), values[0] from dl 1 and values[i] from
+    thresholds[i-1].  The norm falls with dl, so each step's end is a
+    binary search."""
+    max_dl = 2**31 - 1
+    thresholds, values = [], [quantized_norm(1)]
+    lo = 1
+    while quantized_norm(max_dl) != values[-1]:
+        hi = max_dl  # quantized_norm(lo) == values[-1] != at hi
+        while hi - lo > 1:
+            mid = (lo + hi) // 2
+            if quantized_norm(mid) == values[-1]:
+                lo = mid
+            else:
+                hi = mid
+        thresholds.append(hi)
+        values.append(quantized_norm(hi))
+        lo = hi
+    return tuple(thresholds), tuple(values)
+
+
+#: the quantized norm of every int32 doc length: 61 thresholds, 62 values
+NORM_STEPS = _norm_steps()

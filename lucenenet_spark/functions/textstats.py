@@ -7,7 +7,7 @@ mirrors in oracle/sqlgen.py:
 - quality scoring: length/punctuation/stopword-ratio components
 - language ID: stopword-list ratio heuristic over small public word lists
 - document fingerprinting: md5 over the sorted distinct token set
-  (normalized fingerprint) + min-token-hash (1-gram minhash)
+  (normalized fingerprint)
 """
 
 from __future__ import annotations
@@ -57,12 +57,6 @@ def stop_ratio(text: Column) -> Column:
     return stops.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def mean_token_len(text: Column) -> Column:
-    toks = raw_tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic:
     0.4 * length component (saturates at 100 tokens)
@@ -105,13 +99,3 @@ def fingerprint(text: Column) -> Column:
     (stop-filtered) — whitespace/punct/dup insensitive."""
     toks = F.array_sort(F.array_distinct(indexed_tokens(text)))
     return F.md5(F.concat_ws(" ", toks))
-
-
-def min_token_hash(text: Column) -> Column:
-    """1-gram minhash (min md5-60bit over distinct raw tokens)."""
-    toks = F.array_distinct(raw_tokens(text))
-    return F.array_min(
-        F.transform(
-            toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-        )
-    )

@@ -127,9 +127,12 @@ class _Spec:
 
 
 class _Vocab:
-    """Accumulates the documents of one tokenizers.Analyzer: raw tokens
-    per value, inverted through its term chain once per unique raw
-    token of the partition."""
+    """Accumulates the documents of one tokenizers.Analyzer — every
+    chain that emits one term (or a hole) per raw token: the built-in,
+    Snowball, Lovins and contrib language chains, the reverse, pattern,
+    auto-stop and unaccented chains, the letter/whitespace tokenizers,
+    keyword fields.  Raw tokens per value, inverted through its term
+    chain once per unique raw token of the partition."""
 
     def __init__(self, analyzer):
         self.a = analyzer
@@ -168,11 +171,12 @@ class _Vocab:
 
 
 class _Stream:
-    """The stream hook: accumulates the documents of an analyzer that is
-    not a tokenizer + term chain (shingle, synonym, compound, CJK,
-    payload, ...) by calling it per value — and, with force_slow, of
-    any analyzer, as the reference the vocabulary routine is tested
-    against."""
+    """The stream hook: accumulates the documents of an analyzer that
+    emits something other than one term per raw token (shingle/n-gram,
+    synonym, compound, CJK/Chinese, Thai, single-char, hunspell,
+    delimited payload, char-filter mapping, or any plain callable) by
+    calling it per value — and, with force_slow, of any analyzer, as
+    the reference the vocabulary routine is tested against."""
 
     def __init__(self, analyzer):
         self.a = analyzer
@@ -227,16 +231,18 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
     Each document goes to one analyzer: `analyzer` when given, else the
     lang-keyed built-in chain (tokenizers.analyzer_for); fold_ascii
     folds each value before it.  VOCABULARY ROUTINE (_Vocab), for every
-    tokenizers.Analyzer — the built-in standard and code chains, the
-    Snowball/German/Lovins family, keyword fields: the ONLY per-doc
-    Python is the tokenizer; the term chain (StandardFilter, length,
-    stop set, stem) runs once per UNIQUE raw token of the partition
-    (vocabulary-sized, 10-30x fewer than tokens), positions come from
-    arange arithmetic.  STREAM HOOK (_Stream), for any other callable
-    text -> [(term, pos[, payload])]: called per value.  Both feed one
-    post-accumulation, where dl (the .nrm norm) is the doc's emitted
-    token count; force_slow=True sends every analyzer through the
-    stream hook — the per-document reference the tests compare with.
+    tokenizers.Analyzer — each one-term-per-raw-token chain (built-in,
+    Snowball, Lovins, contrib language, reverse, pattern, ...; see
+    _Vocab) and keyword fields: the ONLY per-doc Python is the
+    tokenizer; the term chain (StandardFilter, length, stop set, stem)
+    runs once per UNIQUE raw token of the partition (vocabulary-sized,
+    10-30x fewer than tokens), positions come from arange arithmetic.
+    STREAM HOOK (_Stream), for any other callable text -> [(term,
+    pos[, payload])] (shingle, synonym, CJK, ...): called per value.
+    Both feed one post-accumulation, where dl (the .nrm norm) is the
+    doc's emitted token count; force_slow=True sends every analyzer
+    through the stream hook — the per-document reference the tests
+    compare with.
 
     A multi-valued field (array<string> column) analyzes each value with
     the document's analyzer; value i+1's positions start
@@ -545,8 +551,7 @@ class SegmentedIndex:
                                            _POS + _PAY)
         return self._postings_pay
 
-    def postings_for_terms(self, term_frame: DataFrame,
-                           positions: bool = False) -> DataFrame:
+    def postings_for_terms(self, term_frame: DataFrame) -> DataFrame:
         """Postings for a dynamic term set with term_frame's extra columns
         riding along.  The broadcast join lands on the SEGMENT rows —
         i.e. BELOW the explode — so only the matching terms' lists are
@@ -557,10 +562,9 @@ class SegmentedIndex:
         # project segments down to the posting columns first: metadata
         # columns (df, ttf, blocks) would collide with term_frame extras
         seg = (self.segments
-               .select("field", "term", "docs", "tfs", "dls",
-                       *(["pos"] if positions else []))
+               .select("field", "term", "docs", "tfs", "dls")
                .join(F.broadcast(term_frame), ["field", "term"]))
-        return _exploded(seg, _POS if positions else (), keep=extra)
+        return _exploded(seg, keep=extra)
 
     def term_vectors(self) -> DataFrame:
         """Forward index (doc_id, field, vec: array<struct<term, tf>>) —

@@ -136,27 +136,6 @@ def mh_consts(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 16) -> DataFrame:
-    """(doc_id, sig: array<long>) — sig[i] = min over tokens of h_i(tok).
-    All array higher-order functions; the md5 token hashes are materialized
-    once per doc (a real column, not re-evaluated per hash function)."""
-    toks = F.array_distinct(_tok_array(text_col))
-    hashed = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(toks).alias("n_tok"),
-        F.transform(toks, lambda t: _hash60(t).bitwiseAND(F.lit(M30))).alias("hm"),
-    ).where(F.col("n_tok") > 0)
-    def _affine_min(a: int, b: int):
-        return F.array_min(F.transform(
-            F.col("hm"),
-            lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MH_PRIME),
-        ))
-
-    sig = F.array(*[_affine_min(a, b) for a, b in mh_consts(num_hashes)])
-    return hashed.select("doc_id", "n_tok", sig.alias("sig"))
-
-
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 16,
                       bands: int = 2, threshold: float = 0.9,

@@ -27,13 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-MM_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType(), False),
-    T.StructField("modality", T.StringType(), False),   # image|audio|video
-    T.StructField("mime", T.StringType(), False),
-    T.StructField("payload", T.BinaryType(), False),
-])
-
 _MODALITIES = ("image", "audio", "video")
 _MIMES = {"image": "image/jpeg", "audio": "audio/wav", "video": "video/mp4"}
 

@@ -35,8 +35,6 @@ from dataclasses import dataclass
 from ..analysis.tokenizers import tokenize_standard
 from ..plans import ast
 
-_ESCAPABLE = set('+-&|!(){}[]^"~*?:\\ ')
-
 _TOKEN_RE = re.compile(
     r"""
     (?P<ws>\s+)

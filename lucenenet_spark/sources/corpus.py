@@ -9,7 +9,6 @@ same bytes.  No external data.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -205,15 +204,3 @@ def with_doc_ids(docs: DataFrame, order_cols: tuple[str, ...] = ("repo", "path")
             yield pdf[cols]
 
     return part.mapInPandas(assign, schema)
-
-
-# ---- testdata loaders -------------------------------------------------------
-
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -7,7 +7,9 @@ analyzer loop (force_slow=True) on every analyzer corner: emails,
 acronyms, possessives, stopword holes, >255-char tokens, mixed
 code/standard languages in one partition, folding, terms shared between
 the two built-in vocabularies — for the built-in chains and for every
-stemming analyzer built as a tokenizer + term chain."""
+analysis chain built as a tokenizer + term chain (tokenizers.Analyzer):
+the stemming chains, the contrib language chains, the misc chains and
+the letter/whitespace tokenizers."""
 
 from __future__ import annotations
 
@@ -18,7 +20,10 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from lucenenet_spark.analysis import lovins, snowball, snowball_ext
+from lucenenet_spark.analysis import (brazilian, dutch, french, german,
+                                      intl, lovins, misc, snowball,
+                                      snowball_ext, tokenizers)
+from lucenenet_spark.analysis.tokenizers import Analyzer
 from lucenenet_spark.index.segments import _invert_partition
 
 
@@ -64,6 +69,7 @@ TRICKY_DOCS = [
     ("PYTHON", "Dispatch_on_lowercased_LANG value"),    # lang case
     ("latin", "lang not in CODE_LANGS goes standard"),  # non-code lang
     (None, "trailing.dot. host.name.tld. i.b.m. plain"),
+    (None, "Häuser Cafés les chevaux москва Москвы δοκιμές ΤΕΣΤ الكتاب"),
 ]
 
 
@@ -84,7 +90,33 @@ ANALYZERS = {
     "german2": snowball.german2_snowball_analyzer(),
     "lovins": lovins.lovins_analyzer(),
     "romanian": snowball_ext.romanian_snowball_analyzer(),
+    "german_legacy": german.german_legacy_analyzer(
+        exclusions=frozenset({"index"})),
+    "german_din2": german.german_legacy_analyzer(din2=True),
+    "french": french.french_analyzer(exclusions=frozenset({"merge"})),
+    "dutch": dutch.dutch_analyzer(),
+    "brazilian": brazilian.brazilian_analyzer(),
+    "greek": intl.greek_analyzer(),
+    "czech": intl.czech_analyzer(),
+    "arabic": intl.arabic_analyzer(),
+    "persian": intl.persian_analyzer(frozenset({"twice"})),
+    "russian": intl.russian_analyzer(),
+    "reverse": misc.reverse_analyzer(),
+    "pattern": misc.pattern_analyzer(),
+    "auto_stop": misc.auto_stop_analyzer({"merge", "index"}),
+    "unaccented": misc.unaccented_word_analyzer(),
+    "letter_or_digit": misc.letter_or_digit_tokens,
+    "whitespace": tokenizers.tokenize_whitespace,
+    "letter": tokenizers.tokenize_letter,
+    "lowercase": tokenizers.tokenize_lowercase,
 }
+
+
+@pytest.mark.parametrize("name", [n for n in ANALYZERS if n])
+def test_chain_is_an_analyzer(name):
+    """Every one-term-per-raw-token chain is a tokenizers.Analyzer, so
+    its build takes the vocabulary routine."""
+    assert isinstance(ANALYZERS[name], Analyzer)
 
 
 def _tricky_cases():

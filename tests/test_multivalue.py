@@ -121,3 +121,20 @@ def test_analyzer_runs_on_every_value(spark):
         spark, spark.createDataFrame(rows, schema), text_col="text",
         field_name="text", analyzer=no_the, position_increment_gap=10)
     assert ("jumping", 0, (12,)) in postings(ws)  # highest pos 1 + 1 + 10
+
+
+def test_converted_chain_advances_base_by_raw_count(spark):
+    """A contrib language chain is a tokenizer + term chain too, so a
+    value ending in a dropped stopword advances the next value's base
+    by its raw token count: "chien" lands at 3 + gap, not at the
+    highest emitted position + 1 (2 + gap)."""
+    from lucenenet_spark.analysis.french import french_analyzer
+
+    rows = [(0, ["chat noir le", "chien"])]
+    idx = build_segmented_index(
+        spark, spark.createDataFrame(rows, "doc_id long, text array<string>"),
+        text_col="text", field_name="text", analyzer=french_analyzer(),
+        position_increment_gap=10)
+    got = sorted((r["term"], tuple(r["positions"]))
+                 for r in idx.postings.collect())
+    assert got == [("chat", (0,)), ("chien", (13,)), ("noir", (1,))]

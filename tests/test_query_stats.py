@@ -124,14 +124,17 @@ BUDGETED = CLASSES + [("fuzzy", ast.Fuzzy("alpah", field="content"))]
 def stages_of(spark, fn, group) -> tuple[int, list[int]]:
     """(Spark jobs, tasks run per stage in submission order) of fn(), by
     job group; a stage skipped because its shuffle output was reused runs
-    no task."""
+    no task.  Once a session has run spark.ui.retainedStages stages, the
+    status store evicts skipped stages first (their completion time is
+    -1), so a stage whose info is gone is one of those."""
     sc = spark.sparkContext
     jobs = jobs_of(spark, fn, group)
     st = sc.statusTracker()
-    tasks = [st.getStageInfo(sid).numCompletedTasks
+    infos = [st.getStageInfo(sid)
              for j in sorted(st.getJobIdsForGroup(group))
              for sid in sorted(st.getJobInfo(j).stageIds)]
-    return jobs, [n for n in tasks if n]
+    return jobs, [i.numCompletedTasks for i in infos
+                  if i is not None and i.numCompletedTasks]
 
 
 def assert_one_stage(spark, searcher, name, q, group):
@@ -289,6 +292,24 @@ def _plan_nodes(node):
         yield from _plan_nodes(kids.apply(i))
 
 
+def quantized_classic_top(oracle, term, k=20):
+    """ClassicSimilarity(quantize_norms=True) term scores by hand:
+    idf^2 * sqrt(tf) * decode(encode(1/sqrt(dl)))."""
+    import math
+
+    from lucenenet_spark.functions.smallfloat import (byte315_to_float,
+                                                      float_to_byte315)
+
+    def norm(dl):
+        return byte315_to_float(float_to_byte315(1.0 / math.sqrt(dl)))
+    post = oracle.post["content"][term]
+    idf = math.log(oracle.n_docs / (len(post) + 1.0)) + 1.0
+    return sorted(((d, round(idf * idf * math.sqrt(tf)
+                             * norm(oracle.dl["content"][d]), 6))
+                   for d, tf in post.items()),
+                  key=lambda x: (-x[1], x[0]))[:k]
+
+
 @pytest.mark.parametrize("name,q", [
     ("term", T("alpha")),
     ("and2", ast.Bool(must=(T("alpha"), T("beta")))),
@@ -297,6 +318,7 @@ def _plan_nodes(node):
     ("phrase2", ast.Phrase(("alpha", "beta"), field="content")),
     ("prefix", ast.Prefix("al", field="content")),
     ("fuzzy", ast.Fuzzy("alpah", field="content")),
+    ("classic_quantized_term", T("alpha")),
 ])
 def test_read_path_runs_no_python(index, oracle, name, q):
     """Postings are array columns exploded in the JVM: the executed plan
@@ -305,10 +327,15 @@ def test_read_path_runs_no_python(index, oracle, name, q):
     query terms' posting lists are expanded.  Term, Bool and Phrase read
     df from the window over the built generation's cached rows, with no
     exchange; the others do not read it, and their plans have no
-    window."""
-    hits = Searcher(index).search(q, 20)
-    assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
-        == oracle.top_k(q, 20)
+    window.  ClassicSimilarity's quantized norm is a SQL lookup too."""
+    if name == "classic_quantized_term":
+        hits = Searcher(index, ClassicSimilarity(quantize_norms=True)) \
+            .search(q, 20)
+        want = quantized_classic_top(oracle, q.term)
+    else:
+        hits = Searcher(index).search(q, 20)
+        want = oracle.top_k(q, 20)
+    assert [(r["doc_id"], r["score"]) for r in hits.collect()] == want
     nodes = list(_plan_nodes(hits._jdf.queryExecution().executedPlan()))
     names = [n.nodeName() for n in nodes]
     assert "InMemoryTableScan" in names, names

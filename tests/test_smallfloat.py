@@ -1,6 +1,7 @@
 """SmallFloat 3.15 norm bytes (Util/SmallFloat.cs, Similarity.cs
 NORM_TABLE): golden encode/decode points, staircase and idempotence
-properties, vector==scalar parity, and the quantize_norms parity mode on
+properties, the tabulated norm steps and their SQL lookup against the
+scalar round trip, and the quantize_norms parity mode on
 ClassicSimilarity."""
 
 from __future__ import annotations
@@ -11,8 +12,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lucenenet_spark.functions.smallfloat import (
-    NORM_TABLE, byte315_to_float, byte315_to_float_np, float_to_byte315,
-    float_to_byte315_np, quantize_norm_np)
+    NORM_STEPS, NORM_TABLE, byte315_to_float, float_to_byte315,
+    quantized_norm)
 
 
 def test_golden_points():
@@ -27,8 +28,6 @@ def test_golden_points():
     # the step just below the smallest positive value (smallfloat ==
     # fzero) underflows too, to byte 1, not to 0
     assert float_to_byte315(4.929490730586417e-10) == 1
-    assert float_to_byte315_np(
-        np.array([4.929490730586417e-10], dtype=np.float32)).tolist() == [1]
     assert float_to_byte315(1e30) == 255        # overflow -> largest
 
 
@@ -58,21 +57,38 @@ def test_staircase_rounds_down(x):
                 v for v in NORM_TABLE if v <= np.float32(x))
 
 
-def test_vector_matches_scalar():
-    xs = np.array([0.0, -1.0, 1e-30, 1.0, 0.125, 7.5, 1e30, 0.0078125],
-                  dtype=np.float32)
-    enc = float_to_byte315_np(xs)
-    assert enc.tolist() == [float_to_byte315(float(x)) for x in xs]
-    dec = byte315_to_float_np(enc)
-    assert dec.tolist() == [byte315_to_float(int(b)) for b in enc]
+def scalar_norm(dl: int) -> float:
+    return byte315_to_float(float_to_byte315(
+        np.float32(1.0 / np.sqrt(float(dl)))))
 
 
-def test_quantize_norm_np():
-    dls = np.array([1, 2, 4, 100, 10000])
-    got = quantize_norm_np(dls)
-    want = [byte315_to_float(float_to_byte315(
-        np.float32(1.0 / np.sqrt(float(d))))) for d in dls]
-    assert got.tolist() == pytest.approx(want)
+def test_norm_steps_cover_every_int_dl():
+    """62 distinct values over dl in [1, 2^31 - 1], falling at each of
+    the 61 ascending thresholds and constant between them."""
+    thresholds, values = NORM_STEPS
+    assert len(thresholds) == 61 and len(values) == 62
+    assert list(thresholds) == sorted(set(thresholds)) and thresholds[0] > 1
+    assert list(values) == sorted(set(values), reverse=True)
+    assert values[0] == scalar_norm(1) == 1.0
+    assert values[-1] == scalar_norm(2**31 - 1)
+    for i, t in enumerate(thresholds):
+        assert scalar_norm(t - 1) == values[i]
+        assert scalar_norm(t) == quantized_norm(t) == values[i + 1]
+
+
+def test_norm_sql_matches_scalar(spark):
+    """The quantize_norms SQL lookup equals the scalar round trip for
+    dl 1..100,000 and at each threshold and its neighbours."""
+    from lucenenet_spark.functions.similarity import ClassicSimilarity
+    norm = ClassicSimilarity(quantize_norms=True)._norm("dl")
+    near = sorted({d for t in NORM_STEPS[0] for d in (t - 1, t, t + 1)
+                   if 1 <= d <= 2**31 - 1})
+    dls = spark.range(1, 100_001).selectExpr("CAST(id AS INT) AS dl") \
+        .union(spark.createDataFrame([(d,) for d in near], "dl int"))
+    got = {r["dl"]: r["q"] for r in
+           dls.selectExpr("dl", f"{norm} AS q").collect()}
+    assert len(got) == len(set(range(1, 100_001)) | set(near))
+    assert {d: scalar_norm(d) for d in got} == got
 
 
 def test_classic_similarity_parity_mode(spark):
