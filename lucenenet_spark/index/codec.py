@@ -1,8 +1,8 @@
 """Block-max metadata of a posting list — the skip-list datum.
 
 Postings themselves are native array columns of the segment rows
-(index/segments.py SEGMENT_SCHEMA); Parquet's own encoding and the
-columnar cache replace the reference's delta + VInt .frq/.prx streams.
+(index/segments.py SEGMENT_SCHEMA); Parquet's own encoding replaces the
+reference's delta + VInt .frq/.prx streams at rest.
 What remains format-specific is the skip-list metadata
 (src/Lucene.Net/Index/DefaultSkipListWriter.cs:90-130, every 16th doc),
 kept as per-block (last_doc, max_tf, min_dl) rows that serve both

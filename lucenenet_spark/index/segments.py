@@ -30,19 +30,26 @@ stages:
 SegmentedIndex.save writes one term-range parquet file per core.
 
 Parquet's encoding and compression replace the reference's delta + VInt
-.frq/.prx streams, at rest and in the columnar cache; only the block-max
-skip metadata is format-specific (index/codec.py).
+.frq/.prx streams at rest; only the block-max skip metadata is
+format-specific (index/codec.py).
+
+Each generation holds its segment rows, and its tombstone ids, as a
+leaf: evaluated once into executor blocks (`_materialize`, a local
+checkpoint), the committed segments and .del files a searcher opens
+instead of the writer it would replay.  A generation's rows are freed by
+Spark's ContextCleaner once nothing references them, not by unpersist().
 
 Query-time: `postings` is an inline(arrays_zip(...)) view with one row
 per posting (field, term, term_df, doc_id, tf, dl, positions), which
 plans/lowering.Searcher scores; term_df is the term's global df, a
 window sum over its segment rows (the TermInfo{df, freqPtr, proxPtr}
 entry, TermInfo.cs:28-32: df is read with the postings, not looked up
-first).  The (field, term) filter lands on the segment scan, BELOW a
-coalesce(1), the window and the explode (term-dictionary seek analogue,
-TermInfosReader.cs:243-308 — only matching posting lists are expanded),
-so a query scores in one task, and no Python worker runs on the read
-path.
+first).  The (field, term) filter lands on the Scan ExistingRDD of the
+generation's rows, BELOW a coalesce(1), the window and the explode
+(term-dictionary seek analogue, TermInfosReader.cs:243-308 — only
+matching posting lists are expanded), so a query scores in one task
+that reads the rows as they were materialized, and no Python worker
+runs on the read path.
 """
 
 from __future__ import annotations
@@ -471,6 +478,34 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
 _DERIVED = ("_postings", "_postings_nopos", "_postings_pay", "_term_stats")
 
 
+def _materialize(df: DataFrame | None) -> DataFrame | None:
+    """A generation's rows (segment rows or tombstone ids) as a leaf plan:
+    evaluated once into executor blocks (localCheckpoint(eager=True)), so
+    every later plan over them starts at a Scan ExistingRDD and never
+    re-analyzes, re-describes or re-decodes the build that made them — a
+    searcher opens committed segments and .del files, it does not replay
+    the writer.  A checkpointed leaf, or None, passes through unchanged.
+
+    Trade-offs:
+    - local-checkpoint blocks cannot be recomputed: losing an executor
+      fails the query with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of
+      quietly re-running the build; save() and checkpoint_dir are the
+      durable forms;
+    - DataFrame.unpersist() does nothing on a leaf: Spark's ContextCleaner
+      frees its blocks once nothing references the rows (the
+      IndexFileDeleter role);
+    - Spark does not know a leaf's partitioning, so an aggregate by
+      (field, term) over it (term_stats, expunge's touched rows) adds an
+      exchange."""
+    if df is None:
+        return None
+    plan = df._jdf.queryExecution().analyzed()
+    if (plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isCheckpointed()):
+        return df
+    return df.localCheckpoint(eager=True)
+
+
 @dataclass
 class SegmentedIndex:
     """Columnar-postings index, queried through plans/lowering.Searcher.
@@ -505,12 +540,12 @@ class SegmentedIndex:
 
         term_df is the term's global df: sum(df) over its segment rows, a
         window partitioned by (field, term).  A (field, term) predicate
-        lands on the cached segment scan, below a coalesce(1) (narrow, no
-        exchange), the window and the explode: only the matching lists
-        are read, in one task that needs no exchange for the rest of the
-        query on any generation (plans/lowering.py, "One stage per
-        query"); column pruning drops the window where term_df is
-        unused.  Whole-index reads use `all_postings`."""
+        lands on the scan of the generation's leaf, below a coalesce(1)
+        (narrow, no exchange), the window and the explode: only the
+        matching lists are read, in one task that needs no exchange for
+        the rest of the query on any generation (plans/lowering.py, "One
+        stage per query"); column pruning drops the window where term_df
+        is unused.  Whole-index reads use `all_postings`."""
         if self._postings is None:
             self._postings = _exploded(
                 _with_term_df(self.segments.coalesce(1)), _POS,
@@ -535,8 +570,8 @@ class SegmentedIndex:
     @property
     def all_postings(self) -> DataFrame:
         """Whole-index view (field, term, doc_id, tf, dl), one task per
-        cached partition: for reads of every posting list, which one task
-        would serialize."""
+        partition of the generation's leaf: for reads of every posting
+        list, which one task would serialize."""
         return _exploded(self.segments)
 
     @property
@@ -661,10 +696,15 @@ class SegmentedIndex:
                               else F.col("doc_id"))
         if self.tombstones is not None:
             t = self.tombstones.unionByName(t).distinct()
-        return replace(self, tombstones=t)
+        return replace(self, tombstones=_materialize(t))
 
     def cache(self) -> "SegmentedIndex":
-        self.segments = self.segments.cache()
+        """Hold this generation's segment rows as a leaf (`_materialize`):
+        a loaded index's parquet scan, or an updated generation's union
+        of leaves, becomes one set of executor blocks that every query
+        scans; a generation that already is a leaf (built, expunged)
+        stays as it is.  `stored` goes into Spark's columnar cache."""
+        self.segments = _materialize(self.segments)
         if self.stored is not None:
             self.stored = self.stored.cache()
         return self
@@ -674,7 +714,9 @@ class SegmentedIndex:
         generation-deriving op (update/add_indexes/expunge) so a
         long-running driver doesn't leak one cached vocabulary-scale
         DataFrame per index generation; term_stats() re-caches on demand
-        if this generation is still queried afterwards."""
+        if this generation is still queried afterwards.  The cached
+        aggregate's plan references the generation's rows, so a dropped
+        generation's leaf is freed only once this has run."""
         if self._term_stats is not None:
             self._term_stats.unpersist()
             self._term_stats = None
@@ -900,8 +942,8 @@ def build_segmented_index(
             _expire_waves(checkpoint_dir, wave, retain_waves)
 
     # Materialize the merged segments once — every query and the stats agg
-    # below reuse them (the committed-segment-set analogue).
-    seg = seg.cache()
+    # below read them as a leaf (the committed-segment-set analogue).
+    seg = _materialize(seg)
 
     # global stats WITHOUT re-tokenizing: sum(ttf) over the primary field
     # == total emitted tokens (ttf is exact in every segment row).
@@ -986,8 +1028,8 @@ def update_documents(
 
     max_seg = (index.segments.agg(F.max("seg_id")).collect()[0][0] or 0)
     seg2 = _invert_frames(fresh, field_name, id_col, spec)
-    seg2 = seg2.withColumn(
-        "seg_id", F.col("seg_id") + F.lit(int(max_seg) + 1)).cache()
+    seg2 = _materialize(seg2.withColumn(
+        "seg_id", F.col("seg_id") + F.lit(int(max_seg) + 1)))
 
     new_row = fresh.agg(F.count("*").alias("n")).collect()[0]
     new_tokens = int(
@@ -1002,8 +1044,8 @@ def update_documents(
     stored_new = (
         index.stored.join(keys, list(key_cols), "left_anti")
         .unionByName(fresh.select(*index.stored.columns)))
-    tomb = dead if index.tombstones is None else (
-        index.tombstones.unionByName(dead).distinct())
+    tomb = _materialize(dead if index.tombstones is None else (
+        index.tombstones.unionByName(dead).distinct()))
 
     index.unpersist_derived()
     return index._derive(segments=index.segments.unionByName(seg2),
@@ -1105,7 +1147,8 @@ def add_indexes(base: SegmentedIndex, *others: SegmentedIndex) -> SegmentedIndex
     base.unpersist_derived()
     for o in others:
         o.unpersist_derived()
-    return base._derive(segments=seg, stored=stored, tombstones=tomb,
+    return base._derive(segments=seg, stored=stored,
+                        tombstones=_materialize(tomb),
                         stats=IndexStats(n_docs=n_docs, total_tokens=total))
 
 
@@ -1157,8 +1200,8 @@ def parallel_reader(*parts: SegmentedIndex,
                 stored = stored.join(
                     o.stored.select(base.id_col, *extra), base.id_col,
                     "left")
-    return base._derive(segments=seg, stored=stored, tombstones=tomb,
-                        fields=tuple(fields))
+    return base._derive(segments=seg, stored=stored,
+                        tombstones=_materialize(tomb), fields=tuple(fields))
 
 
 def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
@@ -1182,10 +1225,9 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
         return index
     field_name = index.fields[0]
     # the rewrite and the live count read the dead ids several times:
-    # evaluate the tombstone lineage (one union per update generation)
-    # once, into executor blocks; small, the ids only
-    dead = (index.tombstones.select(F.col("doc_id").cast("long"))
-            .distinct().localCheckpoint())
+    # distinct long ids, once, into executor blocks; small, the ids only
+    dead = _materialize(index.tombstones.select(F.col("doc_id").cast("long"))
+                        .distinct())
     bounds = index.segments.groupBy("seg_id").agg(
         F.min(F.col("docs")[0]).alias("lo"),
         F.max(F.element_at("docs", -1)).alias("hi"))
@@ -1221,9 +1263,9 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
         .withColumn("m", F.expr(_rebuilt_sql("z", "has_pos", "has_pay")))
         .select("field", "term", "seg_id", "df", "ttf",
                 *[F.col(f"m.{c}").alias(c) for c in _LIST_COLS]))
-    seg2 = (tagged.where(~hit).select(*[f.name for f in SEGMENT_SCHEMA])
-            .unionByName(rebuilt)
-            .cache())
+    seg2 = _materialize(
+        tagged.where(~hit).select(*[f.name for f in SEGMENT_SCHEMA])
+        .unionByName(rebuilt))
     tt = (seg2.where(F.col("field") == field_name)
           .agg(F.sum("ttf")).collect()[0][0])
     # the live documents: `stored` minus the tombstones (an update has

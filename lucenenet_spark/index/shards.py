@@ -30,8 +30,8 @@ from dataclasses import dataclass, field as dc_field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .segments import (IndexStats, SegmentedIndex, build_segmented_index,
-                       update_documents)
+from .segments import (IndexStats, SegmentedIndex, _materialize,
+                       build_segmented_index, update_documents)
 
 #: seg_id rebase stride between shards in the union view.  A fixed stride
 #: keeps shard seg_id spaces disjoint WITHOUT a per-shard max(seg_id) job
@@ -207,7 +207,8 @@ class ShardedIndex:
             total += o.stats.total_tokens
         self._union = base._derive(
             segments=seg, stored=stored,
-            tombstones=None if tomb is None else tomb.distinct(),
+            tombstones=(None if tomb is None
+                        else _materialize(tomb.distinct())),
             stats=IndexStats(n_docs=n_docs, total_tokens=total))
         return self._union
 

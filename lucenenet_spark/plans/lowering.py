@@ -50,9 +50,13 @@ every distribution the rest of the plan asks for: Term, Bool, Phrase,
 MultiPhrase, span leaves and the multi-term match sets each run as one
 Spark job of one task, with no exchange, on every index generation —
 IndexSearcher scoring on the calling thread into one top-k heap
-(IndexSearcher.cs:218-243).  Fuzzy keeps its candidate and broadcast
-jobs; reads of every posting list use SegmentedIndex.all_postings, one
-task per cached partition.  A very heavy query loses parallelism.
+(IndexSearcher.cs:218-243).  The plan starts at a Scan ExistingRDD of
+the generation's materialized rows (a leaf, index/segments.py), so Spark
+neither re-analyzes the build's plan nor adds a table-cache query stage,
+and the task reads the rows as they were stored.  Fuzzy keeps its
+candidate and broadcast jobs; reads of every posting list use
+SegmentedIndex.all_postings, one task per partition of the generation's
+rows.  A very heavy query loses parallelism.
 Measured warm on 4 cores over the benchmark's synthetic corpus (about
 12k segment rows at every size, so posting lists grow with the files),
 two processes per side, parallel plan -> one task:

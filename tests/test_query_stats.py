@@ -276,9 +276,9 @@ PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
 
 def _plan_nodes(node):
     """Every physical operator a query runs, depth first.  Walks through
-    adaptive plans and query stages, but not into the plan that filled a
-    cached relation (InMemoryTableScan is a leaf): that ran once, at
-    build time."""
+    adaptive plans and query stages; a generation's rows are a Scan
+    ExistingRDD leaf, and the plan that filled it ran once, when the
+    generation was made."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
         yield from _plan_nodes(node.executedPlan())
@@ -338,7 +338,7 @@ def test_read_path_runs_no_python(index, oracle, name, q):
     assert [(r["doc_id"], r["score"]) for r in hits.collect()] == want
     nodes = list(_plan_nodes(hits._jdf.queryExecution().executedPlan()))
     names = [n.nodeName() for n in nodes]
-    assert "InMemoryTableScan" in names, names
+    assert_scans_leaf(nodes, index)
     assert not [n for n in names
                 if any(p in n for p in PYTHON_NODES)], names
     generates = [n for n in nodes if n.nodeName() == "Generate"]
@@ -353,13 +353,31 @@ def test_read_path_runs_no_python(index, oracle, name, q):
         # neither reads term_df: column pruning drops the df window
         assert "Window" not in names, names
     else:
-        assert_df_window_on_cache_scan(hits)
+        assert_df_window_on_leaf(hits, index)
 
 
-def assert_df_window_on_cache_scan(hits):
-    """The executed plan reads term_df from a Window over the cached
-    segment rows with no Exchange in between (the rows are funneled into
-    one partition, whatever the generation's partitioning), and the
+def leaf_rdd_id(index) -> int:
+    """The id of the RDD that holds the generation's materialized segment
+    rows: its segments frame is a checkpointed leaf."""
+    plan = index.segments._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD", plan.toString()
+    assert plan.rdd().isCheckpointed()
+    return plan.rdd().id()
+
+
+def assert_scans_leaf(nodes, index):
+    """Among the physical operators `nodes` is a scan of the generation's
+    leaf: its segment rows are read as materialized, not through a
+    cached relation over the build's plan."""
+    assert leaf_rdd_id(index) in [n.rdd().id() for n in nodes
+                                  if n.nodeName() == "Scan ExistingRDD"], \
+        [n.nodeName() for n in nodes]
+
+
+def assert_df_window_on_leaf(hits, index):
+    """The executed plan reads term_df from a Window over the
+    generation's leaf with no Exchange in between (the rows are funneled
+    into one partition, whatever the generation's partitioning), and the
     (field, term) Filter sits below that Window."""
     windows = [n for n in _plan_nodes(
         hits._jdf.queryExecution().executedPlan())
@@ -368,7 +386,7 @@ def assert_df_window_on_cache_scan(hits):
     for w in windows:
         below = list(_plan_nodes(w))[1:]
         names = [n.nodeName() for n in below]
-        assert "InMemoryTableScan" in names, names
+        assert_scans_leaf(below, index)
         assert "Exchange" not in names, names
         assert any(n.nodeName() == "Filter"
                    and "term#" in n.simpleString(1000)
@@ -388,7 +406,7 @@ def test_df_window_on_loaded_generation(loaded, oracle, name, q):
     hits = Searcher(loaded).search(q, 20)
     assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
         == oracle.top_k(q, 20), name
-    assert_df_window_on_cache_scan(hits)
+    assert_df_window_on_leaf(hits, loaded)
 
 
 # ------------------------------------ whole-index reads stay parallel
@@ -410,14 +428,15 @@ WHOLE_INDEX_READS = {
 def test_whole_index_reads_stay_parallel(spark, index, oracle, name):
     """The reads that expand every posting list are not funneled: their
     plan holds no single-partition Coalesce, the posting scan runs one
-    task per core (the built generation's cached partitions; for
+    task per core (the partitions of the built generation's leaf; for
     more_like_this, its first job, the read of the source document's
     terms), and the results equal the OracleIndex's."""
     read = WHOLE_INDEX_READS[name]
     if name != "more_like_this":
-        names = [n.nodeName() for n in _plan_nodes(
-            read(index)._jdf.queryExecution().executedPlan())]
-        assert "InMemoryTableScan" in names, names
+        nodes = list(_plan_nodes(
+            read(index)._jdf.queryExecution().executedPlan()))
+        names = [n.nodeName() for n in nodes]
+        assert_scans_leaf(nodes, index)
         assert not [n for n in names if "Coalesce" in n], names
     got = {}
     _, tasks = stages_of(spark, lambda: got.update(rows=read(index).collect()),
@@ -447,35 +466,29 @@ def test_whole_index_reads_stay_parallel(spark, index, oracle, name):
                 for r in rows} == vec
 
 
-def _fill_nodes(node, filled):
-    """_plan_nodes, continued into the plans that filled cached relations,
-    except relations built by the cache builders in `filled`."""
-    for n in _plan_nodes(node):
-        yield n
-        if n.nodeName() == "InMemoryTableScan":
-            rel = n.relation()
-            if not any(rel.cacheBuilder().equals(b) for b in filled):
-                yield from _fill_nodes(rel.cachedPlan(), filled)
-
-
-def test_expunge_runs_no_python(spark):
+def test_expunge_runs_no_python(spark, monkeypatch):
     """expunge_deletes rewrites the segment rows in the JVM: the plans
-    that fill the expunged generation — walked into every cache they
-    fill, not into the index's own segment rows, filled at build time —
-    have no Python-worker node, and the result answers like the
-    OracleIndex over the live documents."""
-    from lucenenet_spark.index.segments import expunge_deletes
+    of the frames it materializes (the dead ids and the expunged
+    generation's rows, both read from the leaves the build and the
+    deletes filled) have no Python-worker node, and the result answers
+    like the OracleIndex over the live documents."""
+    from lucenenet_spark.index import segments
 
     index = build(spark)  # expunge releases its term_stats cache
-    built = [n.relation().cacheBuilder() for n in _plan_nodes(
-        index.segments._jdf.queryExecution().executedPlan())
-        if n.nodeName() == "InMemoryTableScan"]
-    assert built
     dead = {0, 4, 9}
-    purged = expunge_deletes(index.with_deletes(spark.createDataFrame(
-        [(d,) for d in dead], "doc_id long")))
-    names = [n.nodeName() for n in _fill_nodes(
-        purged.segments._jdf.queryExecution().executedPlan(), built)]
+    deleted = index.with_deletes(spark.createDataFrame(
+        [(d,) for d in dead], "doc_id long"))
+    filled, materialize = [], segments._materialize
+
+    def spy(df):
+        filled.append(df)
+        return materialize(df)
+
+    monkeypatch.setattr(segments, "_materialize", spy)
+    purged = segments.expunge_deletes(deleted)
+    assert len(filled) == 2, filled
+    names = [n.nodeName() for df in filled for n in _plan_nodes(
+        df._jdf.queryExecution().executedPlan())]
     assert not [n for n in names
                 if any(p in n for p in PYTHON_NODES)], names
     assert "Generate" in names, names  # the touched lists were rebuilt
@@ -484,6 +497,113 @@ def test_expunge_runs_no_python(spark):
     for q in (T("alpha"), ast.Bool(should=(T("alpha"), T("beta"))),
               ast.Phrase(("alpha", "beta"), field="content")):
         assert top(Searcher(purged), q) == live.top_k(q, 20), q
+
+
+# ------------------------------------------- generations are leaves
+
+#: what a query plan shows when it reads a cache over the build's lineage
+#: instead of the generation's materialized rows: the cached relation and
+#: the invert and merge operators below it
+BUILD_NODES = ("InMemoryRelation", "MapInArrow", "ObjectHashAggregate")
+
+#: the documents update_documents writes over every red and blue one
+REPLACEMENTS = [("red", "alpha beta omega alpha"),
+                ("blue", "foo bar foo beta gamma")]
+
+
+def answers(rows, dead=()):
+    """q -> the OracleIndex top-20 over `rows`, the `dead` ids dropped
+    from the answer but still counted in df and N."""
+    o = oracle_over(rows)
+    return lambda q: sorted(
+        ((d, round(v, 6)) for d, v in o.score_map(q).items()
+         if d not in dead), key=lambda x: (-x[1], x[0]))[:20]
+
+
+@pytest.fixture(scope="module")
+def updated(spark):
+    """DOCS with its red and blue documents replaced by update_documents,
+    and the oracle answers for that generation."""
+    new_docs = spark.createDataFrame(REPLACEMENTS,
+                                     "source string, content string")
+    idx = update_documents(build(spark), new_docs, ["source"])
+    fresh = [tuple(r) for r in idx.stored.where(f"doc_id >= {len(DOCS)}")
+             .select("doc_id", "source", "content").collect()]
+    dead = {r["doc_id"] for r in idx.tombstones.collect()}
+    assert len(fresh) == 2 and len(dead) == 8, (fresh, dead)
+    every = [(i, s, t) for i, (s, t) in enumerate(DOCS)] + fresh
+    return idx, every, dead
+
+
+@pytest.fixture(scope="module")
+def expunged(updated):
+    """The updated generation with its deletes expunged."""
+    from lucenenet_spark.index.segments import expunge_deletes
+
+    idx, every, dead = updated
+    return expunge_deletes(idx), [r for r in every if r[0] not in dead]
+
+
+@pytest.fixture
+def generation(request, oracle):
+    """(index, q -> expected top-20) for one kind of generation."""
+    kind = request.param
+    if kind == "updated":
+        idx, every, dead = request.getfixturevalue(kind)
+        return idx, answers(every, dead)
+    if kind == "expunged":
+        idx, live = request.getfixturevalue(kind)
+        return idx, answers(live)
+    return request.getfixturevalue(kind), lambda q: oracle.top_k(q, 20)
+
+
+@pytest.mark.parametrize(
+    "generation", ["index", "loaded", "added", "updated", "expunged"],
+    indirect=True)
+@pytest.mark.parametrize("name,q", CLASSES, ids=[n for n, _ in CLASSES])
+def test_queries_read_the_generation_rows(generation, name, q):
+    """Every kind of generation holds its segment rows and tombstones as
+    leaves: a query's plans (parsed, analyzed, optimized and physical)
+    hold no cached relation over the build, none of the build's invert
+    or merge operators, and the answers equal the OracleIndex's.  (The
+    phrase scorer's own position collect is an ObjectHashAggregate.)"""
+    idx, want = generation
+    hits = Searcher(idx).search(q, 20)
+    plans = hits._jdf.queryExecution().toString()
+    build_nodes = [n for n in BUILD_NODES
+                   if not (name == "phrase2" and n == "ObjectHashAggregate")]
+    assert not [n for n in build_nodes if n in plans], (name, plans)
+    assert [(r["doc_id"], r["score"]) for r in hits.collect()] == want(q)
+
+
+def test_dropped_generation_frees_its_rows(spark, oracle):
+    """A generation's rows live as long as something references them:
+    once generation A is dropped and the JVM collects garbage, Spark's
+    ContextCleaner removes A's blocks, and generation B, built after A,
+    still answers like the OracleIndex."""
+    import gc
+    import time
+
+    def stored_rdds():
+        return {i.id() for i in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    a = build_segmented_index(spark, docs_frame(spark), text_col="content",
+                              keyword_cols={"source": "source"})
+    a_rows = leaf_rdd_id(a)
+    b = build(spark)
+    assert {a_rows, leaf_rdd_id(b)} <= stored_rdds()
+    del a
+    deadline = time.monotonic() + 10
+    while a_rows in stored_rdds() and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.2)
+    assert a_rows not in stored_rdds()
+    assert leaf_rdd_id(b) in stored_rdds()
+    s = Searcher(b)
+    for name, q in CLASSES:
+        assert top(s, q) == oracle.top_k(q, 20), name
 
 
 # ------------------------------------------------- fused Boolean path
@@ -622,7 +742,7 @@ def test_multi_segment_df_is_global(four_segments, oracle, name, q):
     hits = Searcher(four_segments).search(q, 20)
     assert [(r["doc_id"], r["score"]) for r in hits.collect()] \
         == oracle.top_k(q, 20), name
-    assert_df_window_on_cache_scan(hits)
+    assert_df_window_on_leaf(hits, four_segments)
 
 
 @pytest.fixture(scope="module")
